@@ -229,7 +229,9 @@ object Bench {
     // query in the top-N by current time whose min moved >HEAD_DRIFT_PCT
     // vs .prev ALSO gets the isolated rerun, and ships tagged if it stays
     // past the drift bound. Knobs: SPARK_GRAFT_BENCH_HEAD_N (default 40),
-    // SPARK_GRAFT_BENCH_HEAD_DRIFT_PCT (default 25, 0 disables).
+    // SPARK_GRAFT_BENCH_HEAD_DRIFT_PCT (default 25, 0 disables). The drift
+    // check rides the suspect pass, so SPARK_GRAFT_BENCH_SUSPECT=0 turns
+    // off BOTH reruns: no >2x check and no head-drift check.
     val suspectFactor = envInt("SPARK_GRAFT_BENCH_SUSPECT", 2)
     val headN = envInt("SPARK_GRAFT_BENCH_HEAD_N", 40)
     val headDriftPct = envInt("SPARK_GRAFT_BENCH_HEAD_DRIFT_PCT", 25)

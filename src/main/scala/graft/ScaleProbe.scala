@@ -87,6 +87,9 @@ object ScaleProbe {
     def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         dir: String): Double = {
       val runs = (1 to samples).map { _ =>
+        // a query's Tuning declaration (q65/q66's cpuDenseShuffles floor)
+        // must not leak into the next probed query's exponent
+        Tuning.reset(spark)
         val t0 = System.nanoTime()
         fn(spark, dir).write.format("noop").mode("overwrite").save()
         spark.sparkContext.getPersistentRDDs.values

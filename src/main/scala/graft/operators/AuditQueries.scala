@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Q, Tables}
 import graft.functions.TSql._
+import graft.functions.FixedPoint.{Duck, Spark, asDouble}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -994,23 +995,18 @@ object AuditQueries {
     */
   private def oneWayPanel(o: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
-    // Spark's DIV yields BIGINT, so quotients beyond 2^63 (these SS terms
-    // reach ~10^24) silently corrupt; exact floor-division for positive
-    // decimals is (a − a % b)/b — the division is of an exact multiple, so
-    // its result is integral and representation-exact
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val grp = o.groupBy(col("g")).agg(count(lit(1)).as("n_g"),
       sum(col("c").cast(dec)).as("s_g"),
       sum(col("c").cast(dec) * col("c")).as("q_g"))
     grp
       .select(col("n_g"), col("s_g"), col("q_g"),
-        expr(fdiv("s_g * s_g * 1000000", "n_g")).as("t_g"))
+        expr(Spark.truncDiv("s_g * s_g * 1000000", "n_g")).as("t_g"))
       .agg(count(lit(1)).as("k_groups"), sum(col("n_g")).as("n_total"),
         sum(col("s_g")).as("s_all"), sum(col("q_g")).as("q_all"),
         sum(col("t_g")).as("t_all"))
       .select(col("k_groups"), col("n_total"),
-        expr(s"CAST(t_all - ${fdiv("s_all * s_all * 1000000", "n_total")} AS DECIMAL(38,0))")
+        expr(s"CAST(t_all - " +
+          s"${Spark.truncDiv("s_all * s_all * 1000000", "n_total")} AS DECIMAL(38,0))")
           .as("ssb_e6"),
         expr("CAST(q_all * 1000000 - t_all AS DECIMAL(38,0))").as("ssw_e6"),
         col("n_total").as("n"), col("k_groups").as("k"))
@@ -1018,8 +1014,8 @@ object AuditQueries {
       // (overflows DECIMAL(38,0) past sf0.1); msb·10⁶ DIV msw keeps every
       // intermediate under ~10³⁷ through sf1
       .select(col("k_groups"), col("n_total"),
-        expr(fdiv("ssb_e6", "k - 1")).as("msb_e6"),
-        expr(fdiv("ssw_e6", "n - k")).as("msw_e6"),
+        expr(Spark.truncDiv("ssb_e6", "k - 1")).as("msb_e6"),
+        expr(Spark.truncDiv("ssw_e6", "n - k")).as("msw_e6"),
         col("ssb_e6"), col("ssw_e6"))
       .select(col("k_groups"), col("n_total"),
         expr("CAST(msb_e6 * 1000000 DIV msw_e6 AS BIGINT)").as("f_e6"),
@@ -1275,8 +1271,6 @@ object AuditQueries {
     */
   val q283WelchTest: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val l = Tables.lineitem(s, dir)
       .filter(col("l_returnflag").isin("R", "N"))
       .select(col("l_returnflag").as("g"), cents(col("l_extendedprice")).as("c"))
@@ -1292,21 +1286,26 @@ object AuditQueries {
         max(when(col("g") === "N", col("ss"))).as("ss2"))
       .select(col("n1").cast("long").as("n_returned"),
         col("n2").cast("long").as("n_kept"),
-        (expr(fdiv("s1 * 1000000", "n1")) - expr(fdiv("s2 * 1000000", "n2")))
+        (expr(Spark.truncDiv("s1 * 1000000", "n1")) -
+          expr(Spark.truncDiv("s2 * 1000000", "n2")))
           .as("dm_e6"),
-        expr(fdiv(fdiv("n1 * ss1 - s1 * s1", "n1 * (n1 - 1)") + " * 1000000000000",
+        expr(Spark.truncDiv(Spark.truncDiv("n1 * ss1 - s1 * s1",
+          "n1 * (n1 - 1)") + " * 1000000000000",
           "n1")).as("q1_e12"),
-        expr(fdiv(fdiv("n2 * ss2 - s2 * s2", "n2 * (n2 - 1)") + " * 1000000000000",
+        expr(Spark.truncDiv(Spark.truncDiv("n2 * ss2 - s2 * s2",
+          "n2 * (n2 - 1)") + " * 1000000000000",
           "n2")).as("q2_e12"))
       // df restaged through the e6 variance-share r = q1/(q1+q2):
       // df = 1/(r²/(n1−1) + (1−r)²/(n2−1)) — squaring the e12 q's directly
       // would pass 10⁴⁰
-      .withColumn("r_e6", expr(fdiv("q1_e12 * 1000000", "q1_e12 + q2_e12")))
+      .withColumn("r_e6", expr(Spark.truncDiv("q1_e12 * 1000000",
+        "q1_e12 + q2_e12")))
       .select(col("n_returned"), col("n_kept"),
         col("dm_e6").cast("long").as("mean_diff_e6"),
-        expr(fdiv("dm_e6 * dm_e6 * 1000000", "q1_e12 + q2_e12")).cast("long")
+        expr(Spark.truncDiv("dm_e6 * dm_e6 * 1000000", "q1_e12 + q2_e12"))
+          .cast("long")
           .as("t2_e6"),
-        expr(fdiv(
+        expr(Spark.truncDiv(
           // leading decimal cast keeps the 10¹⁵·n² product out of int64
           "CAST(1000000000000 AS DECIMAL(38,0)) * (n_returned - 1) * (n_kept - 1) * 1000",
           "r_e6 * r_e6 * (n_kept - 1) + " +
@@ -1486,8 +1485,6 @@ object AuditQueries {
     */
   val q272KruskalWallis: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir).select(col("o_orderpriority").as("g"),
       cents(col("o_totalprice")).as("c"))
     val gc = o.groupBy(col("g"), col("c")).agg(count(lit(1)).as("n_gc"))
@@ -1511,21 +1508,22 @@ object AuditQueries {
       // grand doubled mean (N+1, exact); Σ n_g·Δ²/(N(N+1)) staged so the
       // largest product is n_g·(dev²/(N+1)) ≲ 10³² at N = 10¹⁰
       .select(col("g"), col("n_g"), col("n_all"), col("ties"),
-        (expr(fdiv("r2_g * 1000000", "n_g")) -
+        (expr(Spark.truncDiv("r2_g * 1000000", "n_g")) -
           (col("n_all") + lit(1)) * lit(1000000L)).as("dev"))
       .select(col("g"), col("n_g"), col("n_all"), col("ties"),
-        expr(fdiv(fdiv("dev * dev", "n_all + 1") + " * n_g", "n_all"))
+        expr(Spark.truncDiv(Spark.truncDiv("dev * dev", "n_all + 1") + " * n_g",
+          "n_all"))
           .as("t2"))
       .agg(count(lit(1)).as("k_groups"), max(col("n_all")).as("n_all"),
         max(col("ties")).as("ties"), sum(col("t2")).as("t2_sum"))
       .select(col("k_groups"), col("n_all").cast("long").as("n_total"),
-        expr(fdiv("3 * t2_sum", "1000000")).as("h_raw_e6"),
-        expr(fdiv(
+        expr(Spark.truncDiv("3 * t2_sum", "1000000")).as("h_raw_e6"),
+        expr(Spark.truncDiv(
           "(n_all * n_all * n_all - n_all - ties) * 1000000",
           "n_all * n_all * n_all - n_all")).as("corr_e6"))
       .select(col("k_groups"), col("n_total"),
         col("h_raw_e6").cast("long").as("h_e6"),
-        expr(fdiv("h_raw_e6 * 1000000", "corr_e6")).cast("long")
+        expr(Spark.truncDiv("h_raw_e6 * 1000000", "corr_e6")).cast("long")
           .as("h_tied_e6"))
   }
 
@@ -1607,8 +1605,8 @@ object AuditQueries {
       row_number().over(Window.orderBy(col("freq").desc, col("word")))
         .cast("long"))
     val xy = ranked.select(
-      expr(Text.log2e6SparkSql("rnk")).cast(dec).as("x"),
-      expr(Text.log2e6SparkSql("freq")).cast(dec).as("y"))
+      expr(Spark.log2e6("rnk")).cast(dec).as("x"),
+      expr(Spark.log2e6("freq")).cast(dec).as("y"))
     xy.agg(count(lit(1)).cast(dec).as("n"), sum(col("x")).as("sx"),
         sum(col("y")).as("sy"), sum(col("x") * col("y")).as("sxy"),
         sum(col("x") * col("x")).as("sxx"), sum(col("y") * col("y")).as("syy"))
@@ -1627,8 +1625,7 @@ object AuditQueries {
           .as("r2"))
   }
 
-  val q294Sql: String = {
-    import graft.functions.Text
+  val q294Sql: String =
     s"""WITH words AS (
        |  SELECT UNNEST(STRING_SPLIT(text, ' ')) AS word FROM documents),
        |tf AS (SELECT word, COUNT(*) AS freq FROM words GROUP BY word),
@@ -1637,8 +1634,8 @@ object AuditQueries {
        |    ROW_NUMBER() OVER (ORDER BY freq DESC, word) AS rnk
        |  FROM tf),
        |xy AS (
-       |  SELECT CAST(${Text.log2e6DuckSql("rnk")} AS HUGEINT) AS x,
-       |    CAST(${Text.log2e6DuckSql("freq")} AS HUGEINT) AS y
+       |  SELECT CAST(${Duck.log2e6("rnk")} AS HUGEINT) AS x,
+       |    CAST(${Duck.log2e6("freq")} AS HUGEINT) AS y
        |  FROM ranked),
        |sums AS (
        |  SELECT CAST(COUNT(*) AS HUGEINT) AS n, SUM(x) AS sx, SUM(y) AS sy,
@@ -1658,7 +1655,6 @@ object AuditQueries {
        |    / (CAST(CAST(varx_n AS VARCHAR) AS DOUBLE)
        |       * CAST(CAST(vary_n AS VARCHAR) AS DOUBLE)) AS r2
        |FROM facs""".stripMargin
-  }
 
   // ------------------------------------------ q295: Mann–Whitney U test
 
@@ -1687,8 +1683,6 @@ object AuditQueries {
     */
   val q295MannWhitney: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir)
       .filter(col("o_orderpriority").isin(MwArmA, MwArmB))
       .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("c"))
@@ -1713,13 +1707,16 @@ object AuditQueries {
         (col("r2_1") - col("n1") * (col("n1") + 1)).as("u2"))
       .select(col("n1"), col("n2"), col("n_all"), col("ties"), col("u2"),
         abs(col("u2") - col("n1") * col("n2")).as("a2"),
-        expr(fdiv("((n_all + 1) * n_all * (n_all - 1) - ties) * 1000000",
+        expr(Spark.truncDiv(
+          "((n_all + 1) * n_all * (n_all - 1) - ties) * 1000000",
           "n_all * (n_all - 1)")).as("t1_e6"))
       .select(col("n1"), col("n2"), col("u2"), col("t1_e6"),
-        expr(fdiv(fdiv("a2 * 1000000", "n1") + " * a2", "n2")).as("s2_e6"))
+        expr(Spark.truncDiv(Spark.truncDiv("a2 * 1000000", "n1") + " * a2",
+          "n2")).as("s2_e6"))
       .select(col("n1").cast("long").as("n1"), col("n2").cast("long").as("n2"),
         col("u2").cast("long").as("u2"),
-        expr(fdiv("s2_e6 * 3 * 1000000", "t1_e6")).cast("long").as("z2_e6"))
+        expr(Spark.truncDiv("s2_e6 * 3 * 1000000", "t1_e6"))
+          .cast("long").as("z2_e6"))
   }
 
   val q295Sql: String =
@@ -1791,8 +1788,6 @@ object AuditQueries {
     */
   val q307Pettitt: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -1824,7 +1819,8 @@ object AuditQueries {
         col("k2").cast("long").as("u2_max"),
         // exponent argument 6K²/(n³+n²) with K = k2/2: 3·k2²/(2n²(n+1)),
         // staged k2²→/n²→·3e6→/2(n+1) so nothing tops ~10³⁰ at n = 10⁸
-        expr(fdiv(fdiv("CAST(k2 AS DECIMAL(38,0)) * k2", "n * n") +
+        expr(Spark.truncDiv(Spark.truncDiv("CAST(k2 AS DECIMAL(38,0)) * k2",
+          "n * n") +
           " * 3000000", "2 * (n + 1)")).cast("long").as("pettitt_arg_e6"))
   }
 
@@ -2094,13 +2090,12 @@ object AuditQueries {
     */
   val q338Friedman: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val cell = Tables.orders(s, dir)
       .select(year(col("o_orderdate")).as("yr"),
         col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("v"))
       .groupBy(col("yr"), col("g"))
-      .agg(expr(fdiv("CAST(SUM(v) AS DECIMAL(38,0)) * 1000000", "COUNT(1)"))
+      .agg(expr(Spark.truncDiv("CAST(SUM(v) AS DECIMAL(38,0)) * 1000000",
+        "COUNT(1)"))
         .cast("long").as("mv"))
     val compl = cell.groupBy(col("yr")).agg(count(lit(1)).as("kk"))
       .filter(col("kk") === 5L).select(col("yr"))
@@ -2127,7 +2122,7 @@ object AuditQueries {
         col("d3").cast("long").as("d_medium"),
         col("d4").cast("long").as("d_notspec"),
         col("d5").cast("long").as("d_low"),
-        (expr(fdiv("sd2 * 100000", "n")) -
+        (expr(Spark.truncDiv("sd2 * 100000", "n")) -
           lit(18000000).cast(dec) * col("n")).cast("long").as("chi2_e6"))
   }
 
@@ -2207,8 +2202,8 @@ object AuditQueries {
   }
 
   val q346Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    def c(ab: String, a: String, b: String) = d(s"n * $ab - $a * $b")
+    def c(ab: String, a: String, b: String) =
+      Duck.asDouble(s"n * $ab - $a * $b")
     val rxy = s"(${c("sxy", "sx", "sy")} / sqrt(${c("sxx", "sx", "sx")} * ${c("syy", "sy", "sy")}))"
     val rxz = s"(${c("sxz", "sx", "sz")} / sqrt(${c("sxx", "sx", "sx")} * ${c("szz", "sz", "sz")}))"
     val ryz = s"(${c("syz", "sy", "sz")} / sqrt(${c("syy", "sy", "sy")} * ${c("szz", "sz", "sz")}))"
@@ -2253,8 +2248,6 @@ object AuditQueries {
     */
   val q347MoodMedian: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir)
       .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("c"))
     val byV = o.groupBy(col("c")).agg(count(lit(1)).as("cnt"))
@@ -2270,11 +2263,13 @@ object AuditQueries {
     val tot = byG.agg(sum(col("n_g")).as("nn"), sum(col("a_g")).as("aa"))
     val terms = byG.crossJoin(broadcast(tot))
       .select(col("g"), col("n_g"), col("a_g"), col("nn"), col("aa"),
-        expr(fdiv("abs(nn * a_g - aa * n_g) * 1000", "n_g")).as("u_g"))
+        expr(Spark.truncDiv("abs(nn * a_g - aa * n_g) * 1000", "n_g"))
+          .as("u_g"))
     val chi = terms
       .agg(max(col("nn")).as("nn"), max(col("aa")).as("aa"),
         sum(col("u_g") * col("u_g") * col("n_g")).as("su"))
-      .select(expr(fdiv("su", "aa * (nn - aa)")).cast("long").as("chi2_e6"))
+      .select(expr(Spark.truncDiv("su", "aa * (nn - aa)")).cast("long").as(
+        "chi2_e6"))
     byG.crossJoin(broadcast(med)).crossJoin(broadcast(chi))
       .select(col("g").as("priority"),
         col("n_g").cast("long").as("n_g"),
@@ -2326,13 +2321,6 @@ object AuditQueries {
     */
   val q391TaylorsLaw: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val pp = Tables.lineitem(s, dir)
       .select(col("l_partkey"), expr("CAST(ROUND(l_quantity) AS BIGINT)")
         .as("q"))
@@ -2340,13 +2328,13 @@ object AuditQueries {
       .agg(count(lit(1)).cast(dec).as("n"), sum(col("q")).cast(dec).as("sq"),
         sum(col("q").cast(dec) * col("q")).as("sqq"))
       .filter(col("n") >= 2)
-      .select(expr(fdiv("sq * 1000000", "n")).as("m_e6"),
-        expr(fdiv("(n * sqq - sq * sq) * 1000000", "n * (n - 1)"))
+      .select(expr(Spark.truncDiv("sq * 1000000", "n")).as("m_e6"),
+        expr(Spark.truncDiv("(n * sqq - sq * sq) * 1000000", "n * (n - 1)"))
           .as("v_e6"))
       .filter(col("v_e6") >= 1L)
       .select(
-        expr(s"CAST(${l2("CAST(m_e6 AS BIGINT)")} AS DECIMAL(38,0))").as("x"),
-        expr(s"CAST(${l2("CAST(v_e6 AS BIGINT)")} AS DECIMAL(38,0))").as("y"))
+        expr(s"CAST(${Spark.log2e6("CAST(m_e6 AS BIGINT)")} AS DECIMAL(38,0))").as("x"),
+        expr(s"CAST(${Spark.log2e6("CAST(v_e6 AS BIGINT)")} AS DECIMAL(38,0))").as("y"))
     val sums = pp.agg(count(lit(1)).cast(dec).as("n"),
       sum(col("x")).as("sx"), sum(col("y")).as("sy"),
       sum(col("x") * col("x")).as("sxx"), sum(col("y") * col("y")).as("syy"),
@@ -2356,15 +2344,15 @@ object AuditQueries {
     val r2 = (c("sxy", "sx", "sy") * c("sxy", "sx", "sy")) /
       (c("sxx", "sx", "sx") * c("syy", "sy", "sy"))
     sums.select(col("n").cast("long").as("n_parts"),
-      expr(sdiv("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx"))
+      expr(Spark.truncDivLong("(n * sxy - sx * sy) * 1000000",
+        "n * sxx - sx * sx"))
         .as("taylor_b_e6"),
       r2.as("r2_d"))
   }
 
   val q391Sql: String = {
-    def l2(x: String) = graft.functions.Text.log2e6DuckSql(x)
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    def c(ab: String, a: String, b: String) = d(s"n * $ab - $a * $b")
+    def c(ab: String, a: String, b: String) =
+      Duck.asDouble(s"n * $ab - $a * $b")
     val r2 = s"((${c("sxy", "sx", "sy")} * ${c("sxy", "sx", "sy")}) / " +
       s"(${c("sxx", "sx", "sx")} * ${c("syy", "sy", "sy")}))"
     s"""WITH pp0 AS (
@@ -2379,17 +2367,16 @@ object AuditQueries {
       |      AS v_e6
       |  FROM pp0 WHERE n >= 2),
       |pts AS (
-      |  SELECT CAST(${l2("m_e6")} AS HUGEINT) AS x,
-      |    CAST(${l2("v_e6")} AS HUGEINT) AS y
+      |  SELECT CAST(${Duck.log2e6("m_e6")} AS HUGEINT) AS x,
+      |    CAST(${Duck.log2e6("v_e6")} AS HUGEINT) AS y
       |  FROM mv WHERE v_e6 >= 1),
       |sums AS (
       |  SELECT CAST(COUNT(*) AS HUGEINT) AS n, SUM(x) AS sx, SUM(y) AS sy,
       |    SUM(x * x) AS sxx, SUM(y * y) AS syy, SUM(x * y) AS sxy
       |  FROM pts)
       |SELECT CAST(n AS BIGINT) AS n_parts,
-      |  CAST(CASE WHEN n * sxy - sx * sy >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((n * sxy - sx * sy) * 1000000) // (n * sxx - sx * sx))
-      |    AS BIGINT) AS taylor_b_e6,
+      |  ${Duck.truncDivLong("(n * sxy - sx * sy) * 1000000",
+             "n * sxx - sx * sx")} AS taylor_b_e6,
       |  $r2 AS r2_d
       |FROM sums""".stripMargin
   }
@@ -2417,10 +2404,6 @@ object AuditQueries {
     */
   val q396HoeffdingsD: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val bm = Tables.orders(s, dir)
       .select(expr("year(o_orderdate) * 100 + month(o_orderdate)").as("mon"),
         cents(col("o_totalprice")).as("c"))
@@ -2451,13 +2434,14 @@ object AuditQueries {
       sum((col("r2") - 4L).cast(dec) * (col("s2") - 4L) *
         (col("q4") - 4L)).as("cc"))
       .select(col("n").cast("long").as("n_months"),
-        expr(sdiv("((n - 2) * (n - 3) * a + b - 2 * (n - 2) * cc) * 30000000",
+        expr(Spark.truncDivLong(
+          "((n - 2) * (n - 3) * a + b - 2 * (n - 2) * cc) * 30000000",
           "16 * n * (n - 1) * (n - 2) * (n - 3) * (n - 4)"))
           .as("hoeffding_d_e6"))
   }
 
   val q396Sql: String =
-    """WITH bm AS (
+    s"""WITH bm AS (
       |  SELECT year(o_orderdate) * 100 + month(o_orderdate) AS mon,
       |    CAST(COUNT(*) AS BIGINT) AS x,
       |    SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS y
@@ -2483,11 +2467,9 @@ object AuditQueries {
       |    SUM(CAST(r2 - 4 AS HUGEINT) * (s2 - 4) * (q4 - 4)) AS cc
       |  FROM rs)
       |SELECT CAST(n AS BIGINT) AS n_months,
-      |  CAST(CASE WHEN (n - 2) * (n - 3) * a + b - 2 * (n - 2) * cc >= 0
-      |      THEN 1 ELSE -1 END *
-      |    (ABS(((n - 2) * (n - 3) * a + b - 2 * (n - 2) * cc) * 30000000)
-      |      // (16 * n * (n - 1) * (n - 2) * (n - 3) * (n - 4)))
-      |    AS BIGINT) AS hoeffding_d_e6
+      |  ${Duck.truncDivLong(
+             "((n - 2) * (n - 3) * a + b - 2 * (n - 2) * cc) * 30000000",
+             "16 * n * (n - 1) * (n - 2) * (n - 3) * (n - 4)")} AS hoeffding_d_e6
       |FROM sums""".stripMargin
 
   // ------ q403: Mahalanobis outlier screen on (quantity, price)
@@ -2501,8 +2483,9 @@ object AuditQueries {
     *   D² = (B·dx² − 2C·dx·dy + A·dy²) / (AB − C²)
     *
     * with A/B/C the e4-staged covariance entries from exact n-cleared
-    * moments (the signed sdiv for C — covariance may be negative),
-    * deviations at centi resolution, and one signed e6 floor per row.
+    * moments (a signed truncating division for C — covariance may be
+    * negative), deviations at centi resolution, and one signed e6 floor
+    * per row.
     * Price is floored to whole dollars so every product stays inside
     * DECIMAL(38,0) through sf1 (bound documented at each stage). Top
     * 20 rows by D² with full deterministic tiebreak.
@@ -2513,12 +2496,6 @@ object AuditQueries {
     */
   val q403Mahalanobis: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     // parallelizedBy before the checkpoint: the single-row-group scan is one
     // split, and both passes (moment fold + the DECIMAL scoring pass) would
     // otherwise run on one core (guide §2.5 unsplittable input; measured
@@ -2536,24 +2513,25 @@ object AuditQueries {
       sum(col("y").cast(dec) * col("y")).as("syy"),
       sum(col("x").cast(dec) * col("y")).as("sxy"))
       .select(col("n"),
-        expr(fdiv("100 * sx", "n")).as("mx2"),
-        expr(fdiv("100 * sy", "n")).as("my2"),
-        expr(fdiv("10000 * (n * sxx - sx * sx)", "n * n")).as("a2"),
-        expr(fdiv("10000 * (n * syy - sy * sy)", "n * n")).as("b2"),
-        expr(sdiv("10000 * (n * sxy - sx * sy)", "n * n")).as("c2"))
+        expr(Spark.truncDiv("100 * sx", "n")).as("mx2"),
+        expr(Spark.truncDiv("100 * sy", "n")).as("my2"),
+        expr(Spark.truncDiv("10000 * (n * sxx - sx * sx)", "n * n")).as("a2"),
+        expr(Spark.truncDiv("10000 * (n * syy - sy * sy)", "n * n")).as("b2"),
+        expr(Spark.truncDiv("10000 * (n * sxy - sx * sy)", "n * n")).as("c2"))
     li.crossJoin(broadcast(m))
       .withColumn("dx2", lit(100L) * col("x") - col("mx2"))
       .withColumn("dy2", lit(100L) * col("y") - col("my2"))
       .select(col("l_orderkey"), col("l_linenumber"), col("x").as("qty"),
         col("y").as("price_dollars"),
-        expr(sdiv("(b2 * dx2 * dx2 - 2 * c2 * dx2 * dy2 + a2 * dy2 * dy2)" +
+        expr(Spark.truncDiv(
+          "(b2 * dx2 * dx2 - 2 * c2 * dx2 * dy2 + a2 * dy2 * dy2)" +
           " * 1000000", "a2 * b2 - c2 * c2")).cast("long").as("d2_e6"))
       .orderBy(col("d2_e6").desc, col("l_orderkey"), col("l_linenumber"))
       .limit(20)
   }
 
   val q403Sql: String =
-    """WITH li AS (
+    s"""WITH li AS (
       |  SELECT l_orderkey, l_linenumber,
       |    CAST(ROUND(l_quantity) AS BIGINT) AS x,
       |    CAST(ROUND(l_extendedprice * 100) AS BIGINT) // 100 AS y
@@ -2569,15 +2547,14 @@ object AuditQueries {
       |  SELECT n, 100 * sx // n AS mx2, 100 * sy // n AS my2,
       |    10000 * (n * sxx - sx * sx) // (n * n) AS a2,
       |    10000 * (n * syy - sy * sy) // (n * n) AS b2,
-      |    CASE WHEN n * sxy - sx * sy >= 0 THEN 1 ELSE -1 END *
-      |      (ABS(10000 * (n * sxy - sx * sy)) // (n * n)) AS c2
+      |    ${Duck.truncDiv("10000 * (n * sxy - sx * sy)", "n * n")} AS c2
       |  FROM m0),
       |scored AS (
       |  SELECT l_orderkey, l_linenumber, x AS qty, y AS price_dollars,
-      |    CAST(CASE WHEN b2 * dx2 * dx2 - 2 * c2 * dx2 * dy2
-      |        + a2 * dy2 * dy2 >= 0 THEN 1 ELSE -1 END *
-      |      (ABS((b2 * dx2 * dx2 - 2 * c2 * dx2 * dy2 + a2 * dy2 * dy2)
-      |        * 1000000) // (a2 * b2 - c2 * c2)) AS BIGINT) AS d2_e6
+      |    ${Duck.truncDivLong(
+               "(b2 * dx2 * dx2 - 2 * c2 * dx2 * dy2 + a2 * dy2 * dy2) * " +
+                 "1000000",
+               "a2 * b2 - c2 * c2")} AS d2_e6
       |  FROM (SELECT li.*, m.*, 100 * x - mx2 AS dx2, 100 * y - my2 AS dy2
       |        FROM li CROSS JOIN m))
       |SELECT * FROM scored
@@ -2611,10 +2588,6 @@ object AuditQueries {
     */
   val q404Grubbs: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val o = Tables.orders(s, dir)
       .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("c"))
     val m = o.groupBy(col("g"))
@@ -2626,7 +2599,7 @@ object AuditQueries {
         first(col("q")).as("q"),
         max(abs(col("n") * col("c") - col("s"))).as("maxdev"))
       .select(col("g").as("priority"), col("n").cast("long").as("n_orders"),
-        expr(sdiv("maxdev * maxdev * (n - 1) * 1000000",
+        expr(Spark.truncDivLong("maxdev * maxdev * (n - 1) * 1000000",
           "n * (n * q - s * s)")).as("g2_e6"))
       .withColumn("is_outlier",
         when(col("g2_e6") > GrubbsG2E6, 1L).otherwise(0L))
@@ -2761,8 +2734,6 @@ object AuditQueries {
     */
   val q409AndersonDarling: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir)
       .filter(col("o_orderpriority").isin(MwArmA, MwArmB))
       .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("c"))
@@ -2786,7 +2757,7 @@ object AuditQueries {
         (lit(2L) * col("m1b") + col("m1")).cast(dec).as("m21"),
         (lit(2L) * col("m2b") + col("m2")).cast(dec).as("m22"))
       .select(col("n1"), col("n2"),
-        expr(fdiv(
+        expr(Spark.truncDiv(
           """l * (n2 * ((n1 + n2) * m21 - n1 * b2)
             |       * ((n1 + n2) * m21 - n1 * b2)
             |   + n1 * ((n1 + n2) * m22 - n2 * b2)
@@ -2798,7 +2769,7 @@ object AuditQueries {
       .agg(count(lit(1)).as("n_cells"), sum(col("term_e6")).as("s"))
       .select(col("n1").cast("long").as("n1"), col("n2").cast("long").as("n2"),
         col("n_cells"),
-        expr(fdiv("s * (n1 + n2 - 1)", "(n1 + n2) * (n1 + n2)"))
+        expr(Spark.truncDiv("s * (n1 + n2 - 1)", "(n1 + n2) * (n1 + n2)"))
           .cast("long").as("a2kn_e6"))
   }
 
@@ -2863,8 +2834,6 @@ object AuditQueries {
     */
   val q413PriceIndices: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val li = Tables.lineitem(s, dir)
       .select(col("l_partkey"),
         expr("year(l_shipdate) * 12 + month(l_shipdate)").as("m"),
@@ -2879,7 +2848,8 @@ object AuditQueries {
       .withColumn("per", when(col("m") < col("mid"), 0L).otherwise(1L))
       .groupBy(col("p_brand"), col("per"))
       .agg(sum(col("q")).as("qty"), sum(col("c")).as("rev"))
-      .withColumn("u_e4", expr(fdiv("rev * 10000", "qty")).cast("long"))
+      .withColumn("u_e4", expr(Spark.truncDiv("rev * 10000", "qty"))
+        .cast("long"))
     val matched = bp.filter(col("per") === 0L)
       .select(col("p_brand"), col("qty").as("q0"), col("u_e4").as("u0"))
       .join(bp.filter(col("per") === 1L)
@@ -2891,9 +2861,10 @@ object AuditQueries {
       sum(col("u1").cast(dec) * col("q1")).as("p_num"),
       sum(col("u0").cast(dec) * col("q1")).as("p_den"))
       .select(col("n_brands"),
-        expr(fdiv("l_num * 1000000", "l_den")).cast("long")
+        expr(Spark.truncDiv("l_num * 1000000", "l_den")).cast("long")
           .as("laspeyres_e6"),
-        expr(fdiv("p_num * 1000000", "p_den")).cast("long").as("paasche_e6"))
+        expr(Spark.truncDiv("p_num * 1000000", "p_den"))
+          .cast("long").as("paasche_e6"))
       .withColumn("fisher_e6",
         expr("""CAST(FLOOR(SQRT(CAST(laspeyres_e6 * paasche_e6 AS DOUBLE)))
                | AS BIGINT)""".stripMargin.replace("\n", " ")))
@@ -2956,9 +2927,6 @@ object AuditQueries {
     * TakeOrdered(k+1) fold (broadcast) → one streaming excess pass.
     */
   val q414HillTail: Q = (s, dir) => {
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS BIGINT)"
     val cust = Tables.orders(s, dir)
       .groupBy(col("o_custkey"))
       .agg(sum(cents(col("o_totalprice"))).as("rev"))
@@ -2967,26 +2935,27 @@ object AuditQueries {
       .limit((HillK + 1L).toInt)
     val thr = top.agg(min(col("rev")).as("u"))
     val hill = top.crossJoin(broadcast(thr))
-      .select((expr(s"CAST(${l2("rev")} AS BIGINT)") -
-        expr(s"CAST(${l2("u")} AS BIGINT)")).as("dl2"))
+      .select((expr(s"CAST(${Spark.log2e6("rev")} AS BIGINT)") -
+        expr(s"CAST(${Spark.log2e6("u")} AS BIGINT)")).as("dl2"))
       .agg(sum(col("dl2")).as("sdl2"))
-      .select(expr(fdiv("sdl2", HillK.toString)).as("h_l2_e6"))
-      .withColumn("h_ln_e6", expr(fdiv("h_l2_e6 * 693147", "1000000")))
+      .select(expr(Spark.truncDivLong("sdl2", HillK.toString)).as("h_l2_e6"))
+      .withColumn("h_ln_e6", expr(Spark.truncDivLong("h_l2_e6 * 693147",
+        "1000000")))
       .withColumn("alpha_e6",
-        expr(fdiv("1000000000000", "GREATEST(h_ln_e6, 1)")))
+        expr(Spark.truncDivLong("1000000000000", "GREATEST(h_ln_e6, 1)")))
     val excess = cust.crossJoin(broadcast(thr))
       .filter(col("rev") > col("u"))
       .agg(count(lit(1)).as("n_exceed"), sum(col("rev") - col("u")).as("se"))
       .select(col("n_exceed"),
-        expr(fdiv("se", "GREATEST(n_exceed, 1)")).as("mean_excess_cents"))
+        expr(Spark.truncDivLong("se", "GREATEST(n_exceed, 1)")).as(
+          "mean_excess_cents"))
     thr.crossJoin(broadcast(hill)).crossJoin(broadcast(excess))
       .select(lit(HillK).as("k"), col("u").as("threshold_cents"),
         col("n_exceed"), col("mean_excess_cents"), col("h_l2_e6"),
         col("alpha_e6"))
   }
 
-  val q414Sql: String = {
-    def l2(x: String) = graft.functions.Text.log2e6DuckSql(x)
+  val q414Sql: String =
     s"""WITH cust AS (
       |  SELECT o_custkey,
       |    CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
@@ -2997,7 +2966,8 @@ object AuditQueries {
       |  LIMIT ${HillK + 1}),
       |thr AS (SELECT MIN(rev) AS u FROM top),
       |hill0 AS (
-      |  SELECT CAST(SUM(${l2("rev")} - ${l2("u")}) AS BIGINT) // $HillK
+      |  SELECT CAST(SUM(${Duck.log2e6("rev")} - ${Duck.log2e6("u")}) AS BIGINT)
+      |    // $HillK
       |    AS h_l2_e6
       |  FROM top CROSS JOIN thr),
       |hill AS (
@@ -3016,7 +2986,6 @@ object AuditQueries {
       |  CAST(mean_excess_cents AS BIGINT) AS mean_excess_cents,
       |  h_l2_e6, CAST(alpha_e6 AS BIGINT) AS alpha_e6
       |FROM thr CROSS JOIN hill2 CROSS JOIN excess""".stripMargin
-  }
 
   // -------- q418: chain-ladder development backtest on the ship flow
 
@@ -3046,12 +3015,6 @@ object AuditQueries {
     */
   val q418ChainLadder: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val cells = Tables.lineitem(s, dir)
       .join(Tables.orders(s, dir).select(col("o_orderkey"),
         year(col("o_orderdate")).as("oy")),
@@ -3081,7 +3044,8 @@ object AuditQueries {
       .groupBy(col("dev"))
       .agg(sum(col("cn").cast("decimal(38,0)")).as("num"),
         sum(col("c").cast("decimal(38,0)")).as("den"))
-      .select(col("dev"), expr(fdiv("num * 1000000", "den")).cast("long")
+      .select(col("dev"), expr(Spark.truncDiv("num * 1000000", "den"))
+        .cast("long")
         .as("f_e6"))
     val fArm = (0 until ClMaxDev).map { k =>
       max(when(col("dev") === k, col("f_e6"))).as(s"f_$k")
@@ -3097,14 +3061,14 @@ object AuditQueries {
     for (k <- 0 until ClMaxDev) {
       proj = proj.withColumn("ult",
         when(col("latest_dev") <= k,
-          expr(fdiv(s"ult * f_$k", "1000000"))).otherwise(col("ult")))
+          expr(Spark.truncDiv(s"ult * f_$k", "1000000"))).otherwise(col("ult")))
     }
     proj.join(actual, Seq("oy"))
       .select(col("oy").as("order_year"), col("latest_dev"),
         col("latest_c").cast("long").as("latest_cum_cents"),
         col("ult").cast("long").as("projected_ult_cents"),
         col("actual_ult").cast("long").as("actual_ult_cents"),
-        expr(sdiv("(ult - actual_ult) * 1000000", "actual_ult"))
+        expr(Spark.truncDivLong("(ult - actual_ult) * 1000000", "actual_ult"))
           .as("err_e6"))
       .orderBy(col("order_year"))
   }
@@ -3166,9 +3130,8 @@ object AuditQueries {
       |  CAST(p.latest_c AS BIGINT) AS latest_cum_cents,
       |  CAST(p.ult AS BIGINT) AS projected_ult_cents,
       |  CAST(a.actual_ult AS BIGINT) AS actual_ult_cents,
-      |  CAST(CASE WHEN p.ult - a.actual_ult >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((p.ult - a.actual_ult) * 1000000) // a.actual_ult)
-      |    AS BIGINT) AS err_e6
+      |  ${Duck.truncDivLong("(p.ult - a.actual_ult) * 1000000",
+             "a.actual_ult")} AS err_e6
       |FROM p${ClMaxDev - 1} p JOIN actual a ON a.oy = p.oy
       |ORDER BY order_year""".stripMargin
   }
@@ -3191,8 +3154,6 @@ object AuditQueries {
     */
   val q422Influence: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val bm = Tables.orders(s, dir)
       .select(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"),
         cents(col("o_totalprice")).as("c"))
@@ -3217,11 +3178,12 @@ object AuditQueries {
       .localCheckpoint()
     val sse = scored.agg(sum(col("ei") * col("ei")).as("sse_s"))
     scored.crossJoin(broadcast(sse))
-      .withColumn("q", expr(fdiv("ei * ei * 1000000", "sse_s")))
+      .withColumn("q", expr(Spark.truncDiv("ei * ei * 1000000", "sse_s")))
       .select(col("m").as("month"), col("t").cast("long").as("t"),
         col("y").cast("long").as("rev_kusd"),
-        expr(fdiv("hi * 1000000", "n * d")).cast("long").as("leverage_e6"),
-        expr(fdiv("q * hi * (n * d) * (n - 2)",
+        expr(Spark.truncDiv("hi * 1000000", "n * d"))
+          .cast("long").as("leverage_e6"),
+        expr(Spark.truncDiv("q * hi * (n * d) * (n - 2)",
           "2 * (n * d - hi) * (n * d - hi)")).cast("long").as("cook_e6"))
       .orderBy(col("cook_e6").desc, col("month"))
       .limit(5)
@@ -3281,12 +3243,6 @@ object AuditQueries {
   val q423Segmented: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val bm = Tables.orders(s, dir)
       .select(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"),
         cents(col("o_totalprice")).as("c"))
@@ -3310,7 +3266,7 @@ object AuditQueries {
     def sseExpr(kk: String, a: String, b: String, c: String) =
       // (A·B − C²)·10⁶ / (m·B) with A = mΣy²−(Σy)², B = mΣt²−(Σt)²,
       // C = mΣty−ΣtΣy — all exact integers from the prefix moments
-      fdiv(s"(($a) * ($b) - ($c) * ($c)) * 1000000", s"($kk) * ($b)")
+      Spark.truncDiv(s"(($a) * ($b) - ($c) * ($c)) * 1000000", s"($kk) * ($b)")
     val cand = pref.crossJoin(broadcast(tot))
       .filter(col("k") >= SegMinSide &&
         col("nn") - col("k") >= SegMinSide)
@@ -3336,11 +3292,12 @@ object AuditQueries {
       "nn * tty - tt * ty")).cast(dec).as("sse1"))
     best.crossJoin(broadcast(single))
       .select(col("m").as("break_month"), col("k").cast("long").as("n_left"),
-        expr(sdiv("cl * 1000000", "bl")).as("slope_left_e6"),
-        expr(sdiv("cr * 1000000", "br")).as("slope_right_e6"),
+        expr(Spark.truncDivLong("cl * 1000000", "bl")).as("slope_left_e6"),
+        expr(Spark.truncDivLong("cr * 1000000", "br")).as("slope_right_e6"),
         col("sse1").cast("long").as("sse_single_e6"),
         col("sse2").cast("long").as("sse_segmented_e6"),
-        expr(sdiv("(sse1 - sse2) * 1000000", "sse1")).as("reduction_e6"))
+        expr(Spark.truncDivLong("(sse1 - sse2) * 1000000", "sse1"))
+          .as("reduction_e6"))
   }
 
   val q423Sql: String =
@@ -3390,14 +3347,11 @@ object AuditQueries {
       |    // (nn * (nn * ttt - tt * tt)) AS sse1
       |  FROM tot)
       |SELECT m AS break_month, CAST(k AS BIGINT) AS n_left,
-      |  CAST(CASE WHEN cl >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(cl * 1000000) // bl) AS BIGINT) AS slope_left_e6,
-      |  CAST(CASE WHEN cr >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(cr * 1000000) // br) AS BIGINT) AS slope_right_e6,
+      |  ${Duck.truncDivLong("cl * 1000000", "bl")} AS slope_left_e6,
+      |  ${Duck.truncDivLong("cr * 1000000", "br")} AS slope_right_e6,
       |  CAST(sse1 AS BIGINT) AS sse_single_e6,
       |  CAST(sse2 AS BIGINT) AS sse_segmented_e6,
-      |  CAST(CASE WHEN sse1 - sse2 >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((sse1 - sse2) * 1000000) // sse1) AS BIGINT) AS reduction_e6
+      |  ${Duck.truncDivLong("(sse1 - sse2) * 1000000", "sse1")} AS reduction_e6
       |FROM best CROSS JOIN single""".stripMargin
 
   // ------ q427: empirical tail-dependence of (quantity, price)
@@ -3421,8 +3375,6 @@ object AuditQueries {
     * selection (broadcast) → one counting pass. Two shuffles.
     */
   val q427TailDependence: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS BIGINT)"
     val li = Tables.lineitem(s, dir)
       .select(expr("CAST(ROUND(l_quantity) AS BIGINT)").as("x"),
         cents(col("l_extendedprice")).as("y"))
@@ -3457,9 +3409,10 @@ object AuditQueries {
           .otherwise(0L)).as("n_joint_l"))
       .select(col("lvl").as("level_pm"), col("thr_x").as("x_threshold"),
         col("thr_y").as("y_threshold_cents"),
-        expr(fdiv("n_joint_u * 1000 * 1000000", "(1000 - lvl) * n"))
+        expr(Spark.truncDivLong("n_joint_u * 1000 * 1000000",
+          "(1000 - lvl) * n"))
           .as("lambda_upper_e6"),
-        expr(fdiv("n_joint_l * 1000 * 1000000", "lvl * n"))
+        expr(Spark.truncDivLong("n_joint_l * 1000 * 1000000", "lvl * n"))
           .as("lambda_lower_e6"))
       .orderBy(col("level_pm"))
   }
@@ -3526,12 +3479,6 @@ object AuditQueries {
     */
   val q429FixedEffects: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cells = Tables.orders(s, dir)
       .join(broadcast(Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_nationkey"))),
@@ -3551,29 +3498,34 @@ object AuditQueries {
         sum(col("t").cast(dec) * col("t")).as("stt"),
         sum(col("t").cast(dec) * col("y")).as("sty"))
       .select(col("nat"), col("ni"), col("st"), col("sy"),
-        expr(sdiv("(ni * sty - st * sy) * 1000000", "ni")).as("wnum_e6"),
-        expr(fdiv("(ni * stt - st * st) * 1000000", "ni")).as("wden_e6"),
-        expr(fdiv("st * 1000000", "ni")).as("tbar_e6"),
-        expr(fdiv("sy * 1000000", "ni")).as("ybar_e6"))
+        expr(Spark.truncDiv("(ni * sty - st * sy) * 1000000", "ni"))
+          .as("wnum_e6"),
+        expr(Spark.truncDiv("(ni * stt - st * st) * 1000000", "ni"))
+          .as("wden_e6"),
+        expr(Spark.truncDiv("st * 1000000", "ni")).as("tbar_e6"),
+        expr(Spark.truncDiv("sy * 1000000", "ni")).as("ybar_e6"))
       .localCheckpoint()
     val within = perNat.agg(count(lit(1)).as("n_nations"),
       sum(col("wnum_e6")).as("wn"), sum(col("wden_e6")).as("wd"))
       .select(col("n_nations"),
-        expr(sdiv("wn * 1000000", "wd")).cast("long").as("beta_within_e6"))
+        expr(Spark.truncDiv("wn * 1000000", "wd"))
+          .cast("long").as("beta_within_e6"))
     val between = perNat.agg(count(lit(1)).cast(dec).as("g"),
       sum(col("tbar_e6")).as("sb"), sum(col("ybar_e6")).as("yb"),
       sum(col("tbar_e6").cast(dec) * col("tbar_e6")).as("sbb"),
       sum(col("tbar_e6").cast(dec) * col("ybar_e6")).as("sby"))
       .select(expr(
         "CASE WHEN g * sbb - sb * sb = 0 THEN NULL ELSE " +
-          sdiv("(g * sby - sb * yb) * 1000000", "g * sbb - sb * sb") + " END")
+          Spark.truncDiv("(g * sby - sb * yb) * 1000000", "g * sbb - sb * sb") +
+            " END")
         .cast("long").as("beta_between_e6"))
     val pooled = pts.agg(count(lit(1)).cast(dec).as("n"),
       sum(col("t")).cast(dec).as("st"), sum(col("y")).cast(dec).as("sy"),
       sum(col("t").cast(dec) * col("t")).as("stt"),
       sum(col("t").cast(dec) * col("y")).as("sty"))
       .select(col("n").cast("long").as("n_cells"),
-        expr(sdiv("(n * sty - st * sy) * 1000000", "n * stt - st * st"))
+        expr(Spark.truncDiv("(n * sty - st * sy) * 1000000",
+          "n * stt - st * st"))
           .cast("long").as("beta_pooled_e6"))
     within.crossJoin(broadcast(between)).crossJoin(broadcast(pooled))
       .select(col("n_nations"), col("n_cells"), col("beta_within_e6"),
@@ -3581,7 +3533,7 @@ object AuditQueries {
   }
 
   val q429Sql: String =
-    """WITH cells AS (
+    s"""WITH cells AS (
       |  SELECT c.c_nationkey AS nat,
       |    year(o.o_orderdate) * 12 + month(o.o_orderdate) AS m,
       |    SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) // 100 AS y
@@ -3597,16 +3549,14 @@ object AuditQueries {
       |  FROM pts GROUP BY nat),
       |staged AS (
       |  SELECT nat,
-      |    CASE WHEN ni * sty - st * sy >= 0 THEN 1 ELSE -1 END *
-      |      (ABS((ni * sty - st * sy) * 1000000) // ni) AS wnum_e6,
+      |    ${Duck.truncDiv("(ni * sty - st * sy) * 1000000", "ni")} AS wnum_e6,
       |    (ni * stt - st * st) * 1000000 // ni AS wden_e6,
       |    st * 1000000 // ni AS tbar_e6,
       |    sy * 1000000 // ni AS ybar_e6
       |  FROM per_nat),
       |within AS (
       |  SELECT CAST(COUNT(*) AS BIGINT) AS n_nations,
-      |    CAST(CASE WHEN SUM(wnum_e6) >= 0 THEN 1 ELSE -1 END *
-      |      (ABS(SUM(wnum_e6) * 1000000) // SUM(wden_e6)) AS BIGINT)
+      |    ${Duck.truncDivLong("SUM(wnum_e6) * 1000000", "SUM(wden_e6)")}
       |      AS beta_within_e6
       |  FROM staged),
       |between0 AS (
@@ -3618,18 +3568,17 @@ object AuditQueries {
       |  FROM staged),
       |between1 AS (
       |  SELECT CAST(CASE WHEN g * sbb - sb * sb = 0 THEN NULL
-      |    ELSE CASE WHEN g * sby - sb * yb >= 0 THEN 1 ELSE -1 END *
-      |      (ABS((g * sby - sb * yb) * 1000000) // (g * sbb - sb * sb)) END
+      |    ELSE ${Duck.truncDiv("(g * sby - sb * yb) * 1000000",
+                    "g * sbb - sb * sb")} END
       |    AS BIGINT) AS beta_between_e6
       |  FROM between0),
       |pooled AS (
       |  SELECT CAST(COUNT(*) AS BIGINT) AS n_cells,
-      |    CAST(CASE WHEN CAST(COUNT(*) AS HUGEINT) * SUM(CAST(t AS HUGEINT) * y)
-      |        - CAST(SUM(t) AS HUGEINT) * SUM(y) >= 0 THEN 1 ELSE -1 END *
-      |      (ABS((CAST(COUNT(*) AS HUGEINT) * SUM(CAST(t AS HUGEINT) * y)
-      |        - CAST(SUM(t) AS HUGEINT) * SUM(y)) * 1000000)
-      |       // (CAST(COUNT(*) AS HUGEINT) * SUM(CAST(t AS HUGEINT) * t)
-      |        - CAST(SUM(t) AS HUGEINT) * SUM(t))) AS BIGINT)
+      |    ${Duck.truncDivLong(
+               "(CAST(COUNT(*) AS HUGEINT) * SUM(CAST(t AS HUGEINT) * y) - " +
+                 "CAST(SUM(t) AS HUGEINT) * SUM(y)) * 1000000",
+               "CAST(COUNT(*) AS HUGEINT) * SUM(CAST(t AS HUGEINT) * t) - " +
+                 "CAST(SUM(t) AS HUGEINT) * SUM(t)")}
       |      AS beta_pooled_e6
       |  FROM pts)
       |SELECT n_nations, n_cells, beta_within_e6, beta_between_e6,
@@ -3661,10 +3610,6 @@ object AuditQueries {
     */
   val q433ShiftShare: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cells = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_partkey"),
         cents(col("l_extendedprice")).as("r"))
@@ -3689,8 +3634,8 @@ object AuditQueries {
     val terms = cells.join(broadcast(byBrand), Seq("brand"))
       .crossJoin(broadcast(grand))
       .select(col("nat"), col("r0"), col("r1"),
-        expr(sdiv("r0 * (g1 - g0) * 1000000", "g0")).as("ns"),
-        expr(sdiv("r0 * (b1 - b0) * 1000000", "b0")).as("bs"))
+        expr(Spark.truncDiv("r0 * (g1 - g0) * 1000000", "g0")).as("ns"),
+        expr(Spark.truncDiv("r0 * (b1 - b0) * 1000000", "b0")).as("bs"))
     terms.groupBy(col("nat"))
       .agg(sum(col("r0")).as("r0c"), sum(col("r1")).as("r1c"),
         sum(col("ns")).as("national"),
@@ -3728,10 +3673,8 @@ object AuditQueries {
       |  SELECT brand, SUM(r0) AS b0, SUM(r1) AS b1 FROM cells GROUP BY 1),
       |terms AS (
       |  SELECT nat, r0, r1,
-      |    CASE WHEN r0 * (g1 - g0) >= 0 THEN 1 ELSE -1 END *
-      |      (ABS(r0 * (g1 - g0) * 1000000) // g0) AS ns,
-      |    CASE WHEN r0 * (b1 - b0) >= 0 THEN 1 ELSE -1 END *
-      |      (ABS(r0 * (b1 - b0) * 1000000) // b0) AS bs
+      |    ${Duck.truncDiv("r0 * (g1 - g0) * 1000000", "g0")} AS ns,
+      |    ${Duck.truncDiv("r0 * (b1 - b0) * 1000000", "b0")} AS bs
       |  FROM cells JOIN by_brand USING (brand) CROSS JOIN grand)
       |SELECT nat AS nation,
       |  CAST(SUM(r0) AS BIGINT) AS rev_pre_cents,
@@ -3915,24 +3858,24 @@ object AuditQueries {
       sum(col("x")).cast(dec).as("sx"), sum(col("y")).cast(dec).as("sy"),
       sum(col("x").cast(dec) * col("x")).as("qxx"),
       sum(col("y").cast(dec) * col("y")).as("qyy"))
-    def d(c: String) = col(c).cast("double")
     stats.filter(col("b") > 0L).crossJoin(broadcast(obs))
       .agg(count(lit(1)).as("n_perm"),
         sum(when(col("s") >= col("s_obs"), 1L).otherwise(0L)).as("n_ge"),
         first(col("s_obs")).as("s_obs"))
       .crossJoin(broadcast(mo))
       .select(col("p").cast("long").as("n_pairs"),
-        ((d("p") * d("s_obs") - d("sx") * d("sy")) /
-          (sqrt(d("p") * d("qxx") - d("sx") * d("sx")) *
-            sqrt(d("p") * d("qyy") - d("sy") * d("sy"))))
+        ((asDouble("p") * asDouble("s_obs") - asDouble("sx") * asDouble("sy")) /
+          (sqrt(asDouble("p") * asDouble("qxx") - asDouble("sx") *
+            asDouble("sx")) *
+            sqrt(asDouble("p") * asDouble("qyy") - asDouble("sy") *
+              asDouble("sy"))))
           .as("mantel_r_d"),
         col("n_perm"), col("n_ge"),
         expr("CAST((1 + n_ge) * 1000000 div (1 + n_perm) AS BIGINT)")
           .as("p_e6"))
   }
 
-  val q435Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
+  val q435Sql: String =
     s"""WITH $BrayCurtisCtes,
       |aov AS (
       |  SELECT c.c_nationkey AS nat,
@@ -3983,14 +3926,16 @@ object AuditQueries {
       |    ANY_VALUE(s_obs) AS s_obs
       |  FROM stats CROSS JOIN obs WHERE b > 0)
       |SELECT CAST(p AS BIGINT) AS n_pairs,
-      |  (${d("p")} * ${d("s_obs")} - ${d("sx")} * ${d("sy")}) /
-      |    (sqrt(${d("p")} * ${d("qxx")} - ${d("sx")} * ${d("sx")}) *
-      |     sqrt(${d("p")} * ${d("qyy")} - ${d("sy")} * ${d("sy")}))
+      |  (${Duck.asDouble("p")} * ${Duck.asDouble("s_obs")} -
+      |    ${Duck.asDouble("sx")} * ${Duck.asDouble("sy")}) /
+      |    (sqrt(${Duck.asDouble("p")} * ${Duck.asDouble("qxx")} -
+      |      ${Duck.asDouble("sx")} * ${Duck.asDouble("sx")}) *
+      |     sqrt(${Duck.asDouble("p")} * ${Duck.asDouble("qyy")} -
+      |       ${Duck.asDouble("sy")} * ${Duck.asDouble("sy")}))
       |    AS mantel_r_d,
       |  n_perm, n_ge,
       |  CAST((1 + n_ge) * 1000000 // (1 + n_perm) AS BIGINT) AS p_e6
       |FROM fin CROSS JOIN mo""".stripMargin
-  }
 
   // ------ q436: ordinal association panel (gamma / Somers' D / tau-c)
 
@@ -4010,10 +3955,6 @@ object AuditQueries {
     */
   val q436OrdinalAssoc: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val ord = Tables.orders(s, dir)
       .select(expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)")
         .as("x"), cents(col("o_totalprice")).as("c"))
@@ -4058,13 +3999,13 @@ object AuditQueries {
         col("tx").cast("long").as("tied_x_only"),
         col("ty").cast("long").as("tied_y_only"),
         col("txy").cast("long").as("tied_both"),
-        expr(sdiv("(cc - dd) * 1000000", "cc + dd")).cast("long")
+        expr(Spark.truncDiv("(cc - dd) * 1000000", "cc + dd")).cast("long")
           .as("gamma_e6"),
-        expr(sdiv("(cc - dd) * 1000000", "cc + dd + ty")).cast("long")
+        expr(Spark.truncDiv("(cc - dd) * 1000000", "cc + dd + ty")).cast("long")
           .as("somers_d_yx_e6"),
-        expr(sdiv("(cc - dd) * 1000000", "cc + dd + tx"))
+        expr(Spark.truncDiv("(cc - dd) * 1000000", "cc + dd + tx"))
           .cast("long").as("somers_d_xy_e6"),
-        expr(sdiv("2 * 5 * (cc - dd) * 1000000", "nn * nn * (5 - 1)"))
+        expr(Spark.truncDiv("2 * 5 * (cc - dd) * 1000000", "nn * nn * (5 - 1)"))
           .cast("long").as("tau_c_e6"))
   }
 
@@ -4114,13 +4055,10 @@ object AuditQueries {
       |  CAST(tx AS BIGINT) AS tied_x_only,
       |  CAST(ty AS BIGINT) AS tied_y_only,
       |  CAST(txy AS BIGINT) AS tied_both,
-      |  CAST(CASE WHEN cc - dd >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((cc - dd) * 1000000) // (cc + dd)) AS BIGINT) AS gamma_e6,
-      |  CAST(CASE WHEN cc - dd >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((cc - dd) * 1000000) // (cc + dd + ty)) AS BIGINT)
+      |  ${Duck.truncDivLong("(cc - dd) * 1000000", "cc + dd")} AS gamma_e6,
+      |  ${Duck.truncDivLong("(cc - dd) * 1000000", "cc + dd + ty")}
       |    AS somers_d_yx_e6,
-      |  CAST(CASE WHEN cc - dd >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((cc - dd) * 1000000) // (cc + dd + tx)) AS BIGINT)
+      |  ${Duck.truncDivLong("(cc - dd) * 1000000", "cc + dd + tx")}
       |    AS somers_d_xy_e6,
       |  CAST(CASE WHEN cc - dd >= 0 THEN 1 ELSE -1 END *
       |    (ABS(2 * 5 * (cc - dd) * 1000000) // (nn * nn * (5 - 1)))
@@ -4289,10 +4227,6 @@ object AuditQueries {
     */
   val q438ChowTest: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cells = Tables.orders(s, dir)
       .groupBy(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
       .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
@@ -4318,19 +4252,19 @@ object AuditQueries {
     val fp = fold(pts, "p")
     val f1 = fold(pts.filter(col("pre") === 1L), "1")
     val f2 = fold(pts.filter(col("pre") === 0L), "2")
-    def d(c: String) = col(c).cast("double")
     def rss(tag: String) =
-      (d(s"dy_$tag") * d(s"dx_$tag") - d(s"c_$tag") * d(s"c_$tag")) /
-        (d(s"n_$tag") * d(s"dx_$tag"))
+      (asDouble(s"dy_$tag") * asDouble(s"dx_$tag") - asDouble(s"c_$tag") *
+        asDouble(s"c_$tag")) /
+        (asDouble(s"n_$tag") * asDouble(s"dx_$tag"))
     val fStat = ((rss("p") - rss("1") - rss("2")) / 2.0) /
-      ((rss("1") + rss("2")) / (d("n_p") - 4.0))
+      ((rss("1") + rss("2")) / (asDouble("n_p") - 4.0))
     fp.crossJoin(broadcast(f1)).crossJoin(broadcast(f2))
       .select(col("n_p").cast("long").as("n_months"),
         col("n_1").cast("long").as("n_pre"),
         col("n_2").cast("long").as("n_post"),
-        expr(sdiv("c_1 * 1000000", "dx_1")).cast("long")
+        expr(Spark.truncDiv("c_1 * 1000000", "dx_1")).cast("long")
           .as("slope_pre_e6"),
-        expr(sdiv("c_2 * 1000000", "dx_2")).cast("long")
+        expr(Spark.truncDiv("c_2 * 1000000", "dx_2")).cast("long")
           .as("slope_post_e6"),
         fStat.as("f_chow_d"),
         when(fStat > ChowCrit5, lit("break_at_1995_01"))
@@ -4338,12 +4272,13 @@ object AuditQueries {
   }
 
   val q438Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     def rss(tag: String) =
-      s"((${d(s"dy_$tag")} * ${d(s"dx_$tag")} - ${d(s"c_$tag")} * " +
-        s"${d(s"c_$tag")}) / (${d(s"n_$tag")} * ${d(s"dx_$tag")}))"
+      s"((${Duck.asDouble(s"dy_$tag")} * ${Duck.asDouble(s"dx_$tag")} - " +
+        s"${Duck.asDouble(s"c_$tag")} * " +
+        s"${Duck.asDouble(s"c_$tag")}) / (${Duck.asDouble(s"n_$tag")} * " +
+          s"${Duck.asDouble(s"dx_$tag")}))"
     val fStat = s"(((${rss("p")} - ${rss("1")} - ${rss("2")}) / 2.0) / " +
-      s"((${rss("1")} + ${rss("2")}) / (${d("n_p")} - 4.0)))"
+      s"((${rss("1")} + ${rss("2")}) / (${Duck.asDouble("n_p")} - 4.0)))"
     def foldSql(tag: String, where: String) =
       s"""f$tag AS (
          |  SELECT CAST(COUNT(*) AS HUGEINT) AS n_$tag,
@@ -4367,10 +4302,8 @@ object AuditQueries {
       |${foldSql("2", "WHERE pre = 0")}
       |SELECT CAST(n_p AS BIGINT) AS n_months,
       |  CAST(n_1 AS BIGINT) AS n_pre, CAST(n_2 AS BIGINT) AS n_post,
-      |  CAST(CASE WHEN c_1 >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(c_1 * 1000000) // dx_1) AS BIGINT) AS slope_pre_e6,
-      |  CAST(CASE WHEN c_2 >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(c_2 * 1000000) // dx_2) AS BIGINT) AS slope_post_e6,
+      |  ${Duck.truncDivLong("c_1 * 1000000", "dx_1")} AS slope_pre_e6,
+      |  ${Duck.truncDivLong("c_2 * 1000000", "dx_2")} AS slope_post_e6,
       |  $fStat AS f_chow_d,
       |  CASE WHEN $fStat > $ChowCrit5 THEN 'break_at_1995_01'
       |    ELSE 'no_break' END AS verdict_5pct
@@ -4639,13 +4572,15 @@ object AuditQueries {
         sum(col("tb").cast(dec) * (col("tb") - 1) * (col("tb") - 2))
           .as("tB"),
         sum(col("tb").cast(dec) * (col("tb") - 1)).as("tC"))
-    def d(c: String) = col(c).cast("double")
-    val aTerm = (d("nn") * (d("nn") - 1.0) * (d("nn") * 2.0 + 5.0) -
-      d("gA") - d("tA")) / 72.0
-    val bTerm = d("gB") * d("tB") /
-      (d("nn") * 36.0 * (d("nn") - 1.0) * (d("nn") - 2.0))
-    val cTerm = d("gC") * d("tC") / (d("nn") * 8.0 * (d("nn") - 1.0))
-    val z = (d("jt2") / 2.0 - (d("nn") * d("nn") - d("sn2")) / 4.0) /
+    val aTerm = (asDouble("nn") * (asDouble("nn") - 1.0) *
+      (asDouble("nn") * 2.0 + 5.0) -
+      asDouble("gA") - asDouble("tA")) / 72.0
+    val bTerm = asDouble("gB") * asDouble("tB") /
+      (asDouble("nn") * 36.0 * (asDouble("nn") - 1.0) * (asDouble("nn") - 2.0))
+    val cTerm = asDouble("gC") * asDouble("tC") /
+      (asDouble("nn") * 8.0 * (asDouble("nn") - 1.0))
+    val z = (asDouble("jt2") / 2.0 - (asDouble("nn") * asDouble("nn") -
+      asDouble("sn2")) / 4.0) /
       sqrt(aTerm + bTerm + cTerm)
     jt.crossJoin(broadcast(gm)).crossJoin(broadcast(tm))
       .select(col("nn").cast("long").as("n_orders"),
@@ -4659,15 +4594,18 @@ object AuditQueries {
 
   val q441Sql: String = {
     val binExpr = (1 to 9).map(i => s"CAST(c > c$i AS INT)").mkString(" + ")
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val aTerm = s"((${d("nn")} * (${d("nn")} - 1.0) * (2.0 * ${d("nn")}" +
-      s" + 5.0) - ${d("gA")} - ${d("tA")}) / 72.0)"
-    val bTerm = s"(${d("gB")} * ${d("tB")} / (36.0 * ${d("nn")} *" +
-      s" (${d("nn")} - 1.0) * (${d("nn")} - 2.0)))"
+    val aTerm = s"((${Duck.asDouble("nn")} * (${Duck.asDouble("nn")} - 1.0) * " +
+      s"(2.0 * ${Duck.asDouble("nn")}" +
+      s" + 5.0) - ${Duck.asDouble("gA")} - ${Duck.asDouble("tA")}) / 72.0)"
+    val bTerm = s"(${Duck.asDouble("gB")} * ${Duck.asDouble("tB")} / (36.0 * " +
+      s"${Duck.asDouble("nn")} *" +
+      s" (${Duck.asDouble("nn")} - 1.0) * (${Duck.asDouble("nn")} - 2.0)))"
     val cTerm =
-      s"(${d("gC")} * ${d("tC")} / (8.0 * ${d("nn")} * (${d("nn")} - 1.0)))"
-    val z = s"((${d("jt2")} / 2.0 - (${d("nn")} * ${d("nn")} -" +
-      s" ${d("sn2")}) / 4.0) / sqrt($aTerm + $bTerm + $cTerm))"
+      s"(${Duck.asDouble("gC")} * ${Duck.asDouble("tC")} / (8.0 * " +
+        s"${Duck.asDouble("nn")} * (${Duck.asDouble("nn")} - 1.0)))"
+    val z = s"((${Duck.asDouble("jt2")} / 2.0 - (${Duck.asDouble("nn")} * " +
+      s"${Duck.asDouble("nn")} -" +
+      s" ${Duck.asDouble("sn2")}) / 4.0) / sqrt($aTerm + $bTerm + $cTerm))"
     s"""WITH ord AS (
       |  SELECT CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS g,
       |    CAST(ROUND(o_totalprice * 100) AS BIGINT) AS c
@@ -4739,8 +4677,6 @@ object AuditQueries {
     */
   val q442KendallW: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val mb = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_partkey"),
         cents(col("l_extendedprice")).as("r"))
@@ -4765,9 +4701,9 @@ object AuditQueries {
         (col("k") * col("q") - col("tot") * col("tot")).as("s_k"))
     fold.select(col("k").cast("long").as("n_brands"),
       col("m").cast("long").as("n_months"),
-      expr(fdiv("12 * s_k * 1000000",
-        "m * m * (k * k * k - k) * k")).cast("long").as("w_e6"),
-      expr(fdiv("12 * s_k * 1000000 * (k - 1)",
+      expr(Spark.truncDiv("12 * s_k * 1000000", "m * m * (k * k * k - k) * k"))
+        .cast("long").as("w_e6"),
+      expr(Spark.truncDiv("12 * s_k * 1000000 * (k - 1)",
         "m * (k * k * k - k) * k")).cast("long").as("chi2_e6"))
   }
 
@@ -4814,12 +4750,6 @@ object AuditQueries {
     */
   val q443CliffsDelta: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val li = Tables.lineitem(s, dir)
       .filter(col("l_returnflag").isin("R", "N"))
       .select((col("l_returnflag") === "R").cast("long").as("a"),
@@ -4850,14 +4780,14 @@ object AuditQueries {
         col("gt").cast("long").as("pairs_gt"),
         col("lt").cast("long").as("pairs_lt"),
         col("ties").cast("long").as("pairs_tied"),
-        expr(sdiv("(gt - lt) * 1000000", "n1 * n2")).cast("long")
+        expr(Spark.truncDiv("(gt - lt) * 1000000", "n1 * n2")).cast("long")
           .as("cliffs_delta_e6"),
-        expr(fdiv("(2 * gt + ties) * 1000000", "2 * n1 * n2"))
+        expr(Spark.truncDiv("(2 * gt + ties) * 1000000", "2 * n1 * n2"))
           .cast("long").as("vargha_delaney_a_e6"))
   }
 
   val q443Sql: String =
-    """WITH li AS (
+    s"""WITH li AS (
       |  SELECT CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS a,
       |    CAST(ROUND(l_quantity) AS BIGINT) AS v,
       |    CAST(COUNT(*) AS BIGINT) AS n
@@ -4882,8 +4812,7 @@ object AuditQueries {
       |  CAST(n2 AS BIGINT) AS n_regular,
       |  CAST(gt AS BIGINT) AS pairs_gt, CAST(lt AS BIGINT) AS pairs_lt,
       |  CAST(ties AS BIGINT) AS pairs_tied,
-      |  CAST(CASE WHEN gt - lt >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((gt - lt) * 1000000) // (n1 * n2)) AS BIGINT)
+      |  ${Duck.truncDivLong("(gt - lt) * 1000000", "n1 * n2")}
       |    AS cliffs_delta_e6,
       |  CAST((2 * gt + ties) * 1000000 // (2 * n1 * n2) AS BIGINT)
       |    AS vargha_delaney_a_e6
@@ -4906,10 +4835,6 @@ object AuditQueries {
     */
   val q448LinCcc: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cells = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_partkey"),
         cents(col("l_extendedprice")).as("r"))
@@ -4933,17 +4858,16 @@ object AuditQueries {
         (col("n") * col("qyy") - col("sy") * col("sy")).as("dy"),
         (col("n") * col("qxy") - col("sx") * col("sy")).as("cxy"),
         ((col("sx") - col("sy")) * (col("sx") - col("sy"))).as("loc2"))
-    def d(c: String) = col(c).cast("double")
     mo.select(col("n").cast("long").as("n_brands"),
-      expr(sdiv("2 * cxy * 1000000", "dx + dy + loc2")).cast("long")
+      expr(Spark.truncDiv("2 * cxy * 1000000", "dx + dy + loc2")).cast("long")
         .as("ccc_e6"),
-      (d("cxy") / (sqrt(d("dx")) * sqrt(d("dy")))).as("pearson_r_d"),
-      expr(sdiv("(sx - sy) * 1000000", "sy")).cast("long")
+      (asDouble("cxy") / (sqrt(asDouble("dx")) *
+        sqrt(asDouble("dy")))).as("pearson_r_d"),
+      expr(Spark.truncDiv("(sx - sy) * 1000000", "sy")).cast("long")
         .as("level_shift_e6"))
   }
 
-  val q448Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
+  val q448Sql: String =
     s"""WITH cells AS (
       |  SELECT p.p_brand AS brand,
       |    CAST(SUM(CASE WHEN o.o_orderdate < DATE '$ShiftShareBreak'
@@ -4972,12 +4896,11 @@ object AuditQueries {
       |  CAST(CASE WHEN cxy >= 0 THEN 1 ELSE -1 END *
       |    (ABS(2 * cxy * 1000000) // (dx + dy + loc2)) AS BIGINT)
       |    AS ccc_e6,
-      |  (${d("cxy")} / (sqrt(${d("dx")}) * sqrt(${d("dy")})))
+      |  (${Duck.asDouble("cxy")} / (sqrt(${Duck.asDouble("dx")}) *
+      |    sqrt(${Duck.asDouble("dy")})))
       |    AS pearson_r_d,
-      |  CAST(CASE WHEN sx - sy >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((sx - sy) * 1000000) // sy) AS BIGINT) AS level_shift_e6
+      |  ${Duck.truncDivLong("(sx - sy) * 1000000", "sy")} AS level_shift_e6
       |FROM mo""".stripMargin
-  }
 
   // ------ q444: Cucconi location-scale omnibus test
 
@@ -5023,14 +4946,15 @@ object AuditQueries {
         sum(col("n").cast(dec) *
           ((col("nn") + 1) * 2 - col("dr")) *
           ((col("nn") + 1) * 2 - col("dr"))).as("v4"))
-    def d(c: String) = col(c).cast("double")
-    val e = d("n2") * (d("nn") + 1.0) * (d("nn") * 2.0 + 1.0) / 6.0
-    val vr = d("m1") * d("n2") * (d("nn") + 1.0) * (d("nn") * 2.0 + 1.0) *
-      (d("nn") * 8.0 + 11.0) / 180.0
-    val uT = (d("u4") / 4.0 - e) / sqrt(vr)
-    val vT = (d("v4") / 4.0 - e) / sqrt(vr)
-    val rho = (d("nn") * d("nn") - 4.0) * 2.0 /
-      ((d("nn") * 2.0 + 1.0) * (d("nn") * 8.0 + 11.0)) - 1.0
+    val e = asDouble("n2") * (asDouble("nn") + 1.0) *
+      (asDouble("nn") * 2.0 + 1.0) / 6.0
+    val vr = asDouble("m1") * asDouble("n2") * (asDouble("nn") + 1.0) *
+      (asDouble("nn") * 2.0 + 1.0) *
+      (asDouble("nn") * 8.0 + 11.0) / 180.0
+    val uT = (asDouble("u4") / 4.0 - e) / sqrt(vr)
+    val vT = (asDouble("v4") / 4.0 - e) / sqrt(vr)
+    val rho = (asDouble("nn") * asDouble("nn") - 4.0) * 2.0 /
+      ((asDouble("nn") * 2.0 + 1.0) * (asDouble("nn") * 8.0 + 11.0)) - 1.0
     val cStat = (uT * uT + vT * vT - rho * uT * vT * 2.0) /
       ((lit(1.0) - rho * rho) * 2.0)
     folds.select(col("m1").cast("long").as("n_regular"),
@@ -5043,15 +4967,18 @@ object AuditQueries {
   }
 
   val q444Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val e = s"(${d("n2")} * (${d("nn")} + 1.0) * (${d("nn")} * 2.0 + 1.0)" +
+    val e = s"(${Duck.asDouble("n2")} * (${Duck.asDouble("nn")} + 1.0) * " +
+      s"(${Duck.asDouble("nn")} * 2.0 + 1.0)" +
       " / 6.0)"
-    val vr = s"(${d("m1")} * ${d("n2")} * (${d("nn")} + 1.0) *" +
-      s" (${d("nn")} * 2.0 + 1.0) * (${d("nn")} * 8.0 + 11.0) / 180.0)"
-    val uT = s"((${d("u4")} / 4.0 - $e) / sqrt($vr))"
-    val vT = s"((${d("v4")} / 4.0 - $e) / sqrt($vr))"
-    val rho = s"((${d("nn")} * ${d("nn")} - 4.0) * 2.0 /" +
-      s" ((${d("nn")} * 2.0 + 1.0) * (${d("nn")} * 8.0 + 11.0)) - 1.0)"
+    val vr = s"(${Duck.asDouble("m1")} * ${Duck.asDouble("n2")} * " +
+      s"(${Duck.asDouble("nn")} + 1.0) *" +
+      s" (${Duck.asDouble("nn")} * 2.0 + 1.0) * (${Duck.asDouble("nn")} * 8.0 " +
+        s"+ 11.0) / 180.0)"
+    val uT = s"((${Duck.asDouble("u4")} / 4.0 - $e) / sqrt($vr))"
+    val vT = s"((${Duck.asDouble("v4")} / 4.0 - $e) / sqrt($vr))"
+    val rho = s"((${Duck.asDouble("nn")} * ${Duck.asDouble("nn")} - 4.0) * 2.0 /" +
+      s" ((${Duck.asDouble("nn")} * 2.0 + 1.0) * (${Duck.asDouble("nn")} * " +
+        s"8.0 + 11.0)) - 1.0)"
     val cS = s"(($uT * $uT + $vT * $vT - $rho * $uT * $vT * 2.0)" +
       s" / ((1.0 - $rho * $rho) * 2.0))"
     s"""WITH li AS (
@@ -5108,10 +5035,6 @@ object AuditQueries {
     */
   val q445CochraneOrcutt: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cells = Tables.orders(s, dir)
       .groupBy(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
       .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
@@ -5133,13 +5056,13 @@ object AuditQueries {
       .select(col("t"), col("y"), col("n"), col("dx"), col("cxy"),
         col("st"), col("sy"),
         (col("y") * 1000000L -
-          expr(sdiv("(sy * dx - cxy * st) * 1000000", "n * dx")) -
-          expr(sdiv("cxy * t * 1000000", "dx"))).as("e"))
+          expr(Spark.truncDiv("(sy * dx - cxy * st) * 1000000", "n * dx")) -
+          expr(Spark.truncDiv("cxy * t * 1000000", "dx"))).as("e"))
       .withColumn("ep", lag(col("e"), 1).over(w))
     val rho = resid.filter(col("ep").isNotNull)
       .agg(sum(col("ep") * col("e")).as("num"),
         sum(col("ep") * col("ep")).as("den"))
-      .select(expr(sdiv("num * 1000000", "den")).as("rho_e6"))
+      .select(expr(Spark.truncDiv("num * 1000000", "den")).as("rho_e6"))
     val trans = pts.crossJoin(broadcast(rho))
       .withColumn("tp", lag(col("t"), 1).over(w))
       .withColumn("yp", lag(col("y"), 1).over(w))
@@ -5156,14 +5079,15 @@ object AuditQueries {
         sum(col("xs") * col("ys")).as("qxy"))
     co.crossJoin(broadcast(mo))
       .select(col("n").cast("long").as("n_months"),
-        expr(sdiv("cxy * 1000000", "dx")).cast("long").as("beta_ols_e6"),
+        expr(Spark.truncDiv("cxy * 1000000", "dx"))
+          .cast("long").as("beta_ols_e6"),
         col("rho_e6").cast("long").as("rho_e6"),
-        expr(sdiv("(m * qxy - sxs * sys) * 1000000",
+        expr(Spark.truncDiv("(m * qxy - sxs * sys) * 1000000",
           "m * qxx - sxs * sxs")).cast("long").as("beta_co_e6"))
   }
 
   val q445Sql: String =
-    """WITH cells AS (
+    s"""WITH cells AS (
       |  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS m,
       |    SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) // 100 AS y
       |  FROM orders GROUP BY 1),
@@ -5180,16 +5104,14 @@ object AuditQueries {
       |resid AS (
       |  SELECT t,
       |    y * 1000000
-      |      - CASE WHEN sy * dx - cxy * st >= 0 THEN 1 ELSE -1 END *
-      |        (ABS((sy * dx - cxy * st) * 1000000) // (n * dx))
-      |      - CASE WHEN cxy * t >= 0 THEN 1 ELSE -1 END *
-      |        (ABS(cxy * t * 1000000) // dx) AS e
+      |      - ${Duck.truncDiv("(sy * dx - cxy * st) * 1000000", "n * dx")}
+      |      - ${Duck.truncDiv("cxy * t * 1000000", "dx")} AS e
       |  FROM pts CROSS JOIN mo),
       |lagged AS (
       |  SELECT e, LAG(e, 1) OVER (ORDER BY t) AS ep FROM resid),
       |rho AS (
-      |  SELECT CASE WHEN SUM(ep * e) >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(SUM(ep * e) * 1000000) // SUM(ep * ep)) AS rho_e6
+      |  SELECT ${Duck.truncDiv("SUM(ep * e) * 1000000", "SUM(ep * ep)")} AS
+      |    rho_e6
       |  FROM lagged WHERE ep IS NOT NULL),
       |trans AS (
       |  SELECT rho_e6,
@@ -5204,12 +5126,10 @@ object AuditQueries {
       |    SUM(xs * xs) AS qxx, SUM(xs * ys) AS qxy
       |  FROM trans GROUP BY rho_e6)
       |SELECT CAST(n AS BIGINT) AS n_months,
-      |  CAST(CASE WHEN cxy >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(cxy * 1000000) // dx) AS BIGINT) AS beta_ols_e6,
+      |  ${Duck.truncDivLong("cxy * 1000000", "dx")} AS beta_ols_e6,
       |  CAST(rho_e6 AS BIGINT) AS rho_e6,
-      |  CAST(CASE WHEN m * qxy - sxs * sys >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((m * qxy - sxs * sys) * 1000000) // (m * qxx - sxs * sxs))
-      |    AS BIGINT) AS beta_co_e6
+      |  ${Duck.truncDivLong("(m * qxy - sxs * sys) * 1000000",
+             "m * qxx - sxs * sxs")} AS beta_co_e6
       |FROM co CROSS JOIN mo""".stripMargin
 
   // ------ q446: Oaxaca–Blinder decomposition of the segment gap
@@ -5229,10 +5149,6 @@ object AuditQueries {
     */
   val q446OaxacaBlinder: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val sized = Tables.lineitem(s, dir)
       .groupBy(col("l_orderkey")).agg(count(lit(1)).as("x"))
       .join(Tables.orders(s, dir).select(col("o_orderkey"),
@@ -5258,22 +5174,24 @@ object AuditQueries {
     a.crossJoin(broadcast(b))
       .select(col("na").cast("long").as("n_building"),
         col("nb").cast("long").as("n_other"),
-        expr(sdiv("ca * 1000000", "da")).cast("long")
+        expr(Spark.truncDiv("ca * 1000000", "da")).cast("long")
           .as("beta_building_e6"),
-        expr(sdiv("cb * 1000000", "db")).cast("long").as("beta_other_e6"),
-        expr(sdiv("(sxa * nb - sxb * na) * 1000000", "na * nb"))
+        expr(Spark.truncDiv("cb * 1000000", "db"))
+          .cast("long").as("beta_other_e6"),
+        expr(Spark.truncDiv("(sxa * nb - sxb * na) * 1000000", "na * nb"))
           .cast("long").as("xbar_gap_e6"),
-        expr(sdiv("(sya * nb - syb * na) * 1000000", "na * nb"))
+        expr(Spark.truncDiv("(sya * nb - syb * na) * 1000000", "na * nb"))
           .cast("long").as("gap_e6c"),
-        expr(sdiv("cb * (sxa * nb - sxb * na) * 1000000", "db * na * nb"))
+        expr(Spark.truncDiv("cb * (sxa * nb - sxb * na) * 1000000",
+          "db * na * nb"))
           .cast("long").as("explained_e6c"),
-        (expr(sdiv("(sya * nb - syb * na) * 1000000", "na * nb")) -
-          expr(sdiv("cb * (sxa * nb - sxb * na) * 1000000",
+        (expr(Spark.truncDiv("(sya * nb - syb * na) * 1000000", "na * nb")) -
+          expr(Spark.truncDiv("cb * (sxa * nb - sxb * na) * 1000000",
             "db * na * nb"))).cast("long").as("unexplained_e6c"))
   }
 
   val q446Sql: String =
-    """WITH sized AS (
+    s"""WITH sized AS (
       |  SELECT o.o_custkey,
       |    CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS y, l.x
       |  FROM (SELECT l_orderkey, CAST(COUNT(*) AS BIGINT) AS x
@@ -5297,23 +5215,17 @@ object AuditQueries {
       |      FROM folds WHERE grp = 0)
       |SELECT CAST(na AS BIGINT) AS n_building,
       |  CAST(nb AS BIGINT) AS n_other,
-      |  CAST(CASE WHEN ca >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(ca * 1000000) // da) AS BIGINT) AS beta_building_e6,
-      |  CAST(CASE WHEN cb >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(cb * 1000000) // db) AS BIGINT) AS beta_other_e6,
-      |  CAST(CASE WHEN sxa * nb - sxb * na >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((sxa * nb - sxb * na) * 1000000) // (na * nb)) AS BIGINT)
+      |  ${Duck.truncDivLong("ca * 1000000", "da")} AS beta_building_e6,
+      |  ${Duck.truncDivLong("cb * 1000000", "db")} AS beta_other_e6,
+      |  ${Duck.truncDivLong("(sxa * nb - sxb * na) * 1000000", "na * nb")}
       |    AS xbar_gap_e6,
-      |  CAST(CASE WHEN sya * nb - syb * na >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((sya * nb - syb * na) * 1000000) // (na * nb)) AS BIGINT)
+      |  ${Duck.truncDivLong("(sya * nb - syb * na) * 1000000", "na * nb")}
       |    AS gap_e6c,
-      |  CAST(CASE WHEN cb * (sxa * nb - sxb * na) >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(cb * (sxa * nb - sxb * na) * 1000000) // (db * na * nb))
-      |    AS BIGINT) AS explained_e6c,
-      |  CAST(CASE WHEN sya * nb - syb * na >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((sya * nb - syb * na) * 1000000) // (na * nb))
-      |   - CASE WHEN cb * (sxa * nb - sxb * na) >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(cb * (sxa * nb - sxb * na) * 1000000) // (db * na * nb))
+      |  ${Duck.truncDivLong("cb * (sxa * nb - sxb * na) * 1000000",
+             "db * na * nb")} AS explained_e6c,
+      |  CAST(${Duck.truncDiv("(sya * nb - syb * na) * 1000000", "na * nb")}
+      |   - ${Duck.truncDiv("cb * (sxa * nb - sxb * na) * 1000000",
+                "db * na * nb")}
       |    AS BIGINT) AS unexplained_e6c
       |FROM a CROSS JOIN b""".stripMargin
 
@@ -5525,12 +5437,6 @@ object AuditQueries {
     */
   val q450WaldIv: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN ($num) * CASE WHEN $den >= 0 THEN 1 ELSE -1 END
-         | >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % abs($den)) / abs($den)
-         |   AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val sized = Tables.lineitem(s, dir)
       .groupBy(col("l_orderkey")).agg(count(lit(1)).as("x"))
       .join(Tables.orders(s, dir).select(col("o_orderkey"),
@@ -5554,19 +5460,22 @@ object AuditQueries {
       .select(col("n"),
         (col("n") * col("qxx") - col("sx") * col("sx")).as("dx"),
         (col("n") * col("qxy") - col("sx") * col("sy")).as("cxy"))
-    def d(c: String) = col(c).cast("double")
     // first-stage F: pooled-variance two-sample t² for x on z
-    val ssw = (d("qxx1") - d("sx1") * d("sx1") / d("n1")) +
-      (d("qxx0") - d("sx0") * d("sx0") / d("n0"))
-    val gap = d("sx1") / d("n1") - d("sx0") / d("n0")
+    val ssw = (asDouble("qxx1") - asDouble("sx1") * asDouble("sx1") /
+      asDouble("n1")) +
+      (asDouble("qxx0") - asDouble("sx0") * asDouble("sx0") / asDouble("n0"))
+    val gap = asDouble("sx1") / asDouble("n1") - asDouble("sx0") /
+      asDouble("n0")
     val fStat = gap * gap /
-      ((ssw / (d("n1") + d("n0") - 2.0)) * (lit(1.0) / d("n1") +
-        lit(1.0) / d("n0")))
+      ((ssw / (asDouble("n1") + asDouble("n0") - 2.0)) *
+        (lit(1.0) / asDouble("n1") +
+        lit(1.0) / asDouble("n0")))
     a.crossJoin(broadcast(b)).crossJoin(broadcast(all))
       .select(col("n1").cast("long").as("n_urgent"),
         col("n0").cast("long").as("n_regular"),
-        expr(sdiv("cxy * 1000000", "dx")).cast("long").as("beta_ols_e6"),
-        expr(sdiv("(sy1 * n0 - sy0 * n1) * 1000000",
+        expr(Spark.truncDiv("cxy * 1000000", "dx"))
+          .cast("long").as("beta_ols_e6"),
+        expr(Spark.truncDiv("(sy1 * n0 - sy0 * n1) * 1000000",
           "sx1 * n0 - sx0 * n1")).cast("long").as("beta_iv_e6"),
         fStat.as("first_stage_f_d"),
         when(fStat > 10.0, lit("instrument_strong"))
@@ -5574,12 +5483,15 @@ object AuditQueries {
   }
 
   val q450Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val ssw = s"((${d("qxx1")} - ${d("sx1")} * ${d("sx1")} / ${d("n1")})" +
-      s" + (${d("qxx0")} - ${d("sx0")} * ${d("sx0")} / ${d("n0")}))"
-    val gap = s"(${d("sx1")} / ${d("n1")} - ${d("sx0")} / ${d("n0")})"
-    val f = s"($gap * $gap / (($ssw / (${d("n1")} + ${d("n0")} - 2.0))" +
-      s" * (1.0 / ${d("n1")} + 1.0 / ${d("n0")})))"
+    val ssw = s"((${Duck.asDouble("qxx1")} - ${Duck.asDouble("sx1")} * " +
+      s"${Duck.asDouble("sx1")} / ${Duck.asDouble("n1")})" +
+      s" + (${Duck.asDouble("qxx0")} - ${Duck.asDouble("sx0")} * " +
+        s"${Duck.asDouble("sx0")} / ${Duck.asDouble("n0")}))"
+    val gap = s"(${Duck.asDouble("sx1")} / ${Duck.asDouble("n1")} - " +
+      s"${Duck.asDouble("sx0")} / ${Duck.asDouble("n0")})"
+    val f = s"($gap * $gap / (($ssw / (${Duck.asDouble("n1")} + " +
+      s"${Duck.asDouble("n0")} - 2.0))" +
+      s" * (1.0 / ${Duck.asDouble("n1")} + 1.0 / ${Duck.asDouble("n0")})))"
     s"""WITH sized AS (
       |  SELECT l.x, CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS y,
       |    CASE WHEN CAST(substring(o.o_orderpriority, 1, 1) AS INT) <= 2
@@ -5606,8 +5518,7 @@ object AuditQueries {
       |  FROM sized)
       |SELECT CAST(n1 AS BIGINT) AS n_urgent,
       |  CAST(n0 AS BIGINT) AS n_regular,
-      |  CAST(CASE WHEN cxy >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(cxy * 1000000) // dx) AS BIGINT) AS beta_ols_e6,
+      |  ${Duck.truncDivLong("cxy * 1000000", "dx")} AS beta_ols_e6,
       |  CAST(CASE WHEN (sy1 * n0 - sy0 * n1) *
       |      CASE WHEN sx1 * n0 - sx0 * n1 >= 0 THEN 1 ELSE -1 END >= 0
       |      THEN 1 ELSE -1 END *
@@ -5637,10 +5548,6 @@ object AuditQueries {
     */
   val q451RegressionDiscontinuity: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val ord = Tables.lineitem(s, dir)
       .groupBy(col("l_orderkey")).agg(count(lit(1)).as("yv"))
       .join(Tables.orders(s, dir).select(col("o_orderkey"),
@@ -5678,20 +5585,21 @@ object AuditQueries {
     l.crossJoin(broadcast(rr))
       .select(col("nl").cast("long").as("n_left"),
         col("nr").cast("long").as("n_right"),
-        expr(sdiv("al * 1000000", "dl")).cast("long")
+        expr(Spark.truncDiv("al * 1000000", "dl")).cast("long")
           .as("alpha_left_e6"),
-        expr(sdiv("ar * 1000000", "dr")).cast("long")
+        expr(Spark.truncDiv("ar * 1000000", "dr")).cast("long")
           .as("alpha_right_e6"),
-        (expr(sdiv("ar * 1000000", "dr")) -
-          expr(sdiv("al * 1000000", "dl"))).cast("long").as("jump_e6"),
-        expr(sdiv("cl * 1000000000", "dl")).cast("long")
+        (expr(Spark.truncDiv("ar * 1000000", "dr")) -
+          expr(Spark.truncDiv("al * 1000000",
+            "dl"))).cast("long").as("jump_e6"),
+        expr(Spark.truncDiv("cl * 1000000000", "dl")).cast("long")
           .as("slope_left_e9"),
-        expr(sdiv("cr * 1000000000", "dr")).cast("long")
+        expr(Spark.truncDiv("cr * 1000000000", "dr")).cast("long")
           .as("slope_right_e9"))
   }
 
   val q451Sql: String =
-    """WITH ord AS (
+    s"""WITH ord AS (
       |  SELECT CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS r, l.yv
       |  FROM (SELECT l_orderkey, CAST(COUNT(*) AS BIGINT) AS yv
       |        FROM lineitem GROUP BY 1) l
@@ -5729,18 +5637,12 @@ object AuditQueries {
       |rr AS (SELECT n AS nr, d AS dr, c AS cr, anum AS ar
       |       FROM folds WHERE side = 1)
       |SELECT CAST(nl AS BIGINT) AS n_left, CAST(nr AS BIGINT) AS n_right,
-      |  CAST(CASE WHEN al >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(al * 1000000) // dl) AS BIGINT) AS alpha_left_e6,
-      |  CAST(CASE WHEN ar >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(ar * 1000000) // dr) AS BIGINT) AS alpha_right_e6,
-      |  CAST(CASE WHEN ar >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(ar * 1000000) // dr)
-      |   - CASE WHEN al >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(al * 1000000) // dl) AS BIGINT) AS jump_e6,
-      |  CAST(CASE WHEN cl >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(cl * 1000000000) // dl) AS BIGINT) AS slope_left_e9,
-      |  CAST(CASE WHEN cr >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(cr * 1000000000) // dr) AS BIGINT) AS slope_right_e9
+      |  ${Duck.truncDivLong("al * 1000000", "dl")} AS alpha_left_e6,
+      |  ${Duck.truncDivLong("ar * 1000000", "dr")} AS alpha_right_e6,
+      |  CAST(${Duck.truncDiv("ar * 1000000", "dr")}
+      |   - ${Duck.truncDiv("al * 1000000", "dl")} AS BIGINT) AS jump_e6,
+      |  ${Duck.truncDivLong("cl * 1000000000", "dl")} AS slope_left_e9,
+      |  ${Duck.truncDivLong("cr * 1000000000", "dr")} AS slope_right_e9
       |FROM l CROSS JOIN rr""".stripMargin
 
   // ------ q452: Wagner–Whitin dynamic lot sizing
@@ -5876,9 +5778,8 @@ object AuditQueries {
 
   val q453Sql: String = {
     val a = HwAlphaE6; val bb = HwBetaE6; val g = HwGammaE6
-    def sd(num: String) =
-      s"CASE WHEN ($num) >= 0 THEN 1 ELSE -1 END * (ABS($num) // 1000000)"
-    val lNew = sd(s"$a * (s.y - w.sv[(s.t - 1) % 12 + 1])" +
+    def downE6(num: String) = Duck.truncDivLong(num, "1000000")
+    val lNew = downE6(s"$a * (s.y - w.sv[(s.t - 1) % 12 + 1])" +
       s" + ${1000000L - a} * (w.l + w.b)")
     s"""WITH RECURSIVE months AS (
       |  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS m,
@@ -5889,22 +5790,21 @@ object AuditQueries {
       |init AS (
       |  SELECT
       |    (SELECT SUM(y) FROM ser WHERE t <= 12) // 12 AS l0,
-      |    CASE WHEN (SELECT SUM(y) FROM ser WHERE t BETWEEN 13 AND 24)
-      |        // 12 - (SELECT SUM(y) FROM ser WHERE t <= 12) // 12 >= 0
-      |      THEN 1 ELSE -1 END *
-      |    (ABS((SELECT SUM(y) FROM ser WHERE t BETWEEN 13 AND 24) // 12
-      |      - (SELECT SUM(y) FROM ser WHERE t <= 12) // 12) // 12) AS b0,
+      |    ${Duck.truncDiv(
+               "(SELECT SUM(y) FROM ser WHERE t BETWEEN 13 AND 24) // 12 - " +
+                 "(SELECT SUM(y) FROM ser WHERE t <= 12) // 12",
+               "12")} AS b0,
       |    (SELECT list(y - ((SELECT SUM(y2.y) FROM ser y2
       |        WHERE y2.t <= 12) // 12) ORDER BY t)
       |     FROM ser WHERE t <= 12) AS s0),
       |walk AS (
       |  SELECT 12 AS t, l0 AS l, b0 AS b, s0 AS sv FROM init
       |  UNION ALL
-      |  SELECT s.t, $lNew, ${sd(s"$bb * (($lNew) - w.l)" +
+      |  SELECT s.t, $lNew, ${downE6(s"$bb * (($lNew) - w.l)" +
           s" + ${1000000L - bb} * w.b")},
       |    list_transform(range(1, 13), i ->
       |      CASE WHEN i = (s.t - 1) % 12 + 1
-      |        THEN ${sd(s"$g * (s.y - ($lNew))" +
+      |        THEN ${downE6(s"$g * (s.y - ($lNew))" +
                s" + ${1000000L - g} * w.sv[(s.t - 1) % 12 + 1]")}
       |        ELSE w.sv[i] END)
       |  FROM walk w
@@ -5971,11 +5871,11 @@ object AuditQueries {
       col("r2").as("ra"))
     val b2 = gsum.select(col("g").as("gb"), col("ng").as("nb"),
       col("r2").as("rb"))
-    def d(c: String) = col(c).cast("double")
-    val meanGap = (d("ra") / (d("na") * 2.0)) - (d("rb") / (d("nb") * 2.0))
-    val varTerm = (d("nn") * (d("nn") + 1.0) / 12.0 -
-      d("t3t") / ((d("nn") - 1.0) * 12.0)) *
-      (lit(1.0) / d("na") + lit(1.0) / d("nb"))
+    val meanGap = (asDouble("ra") / (asDouble("na") * 2.0)) -
+      (asDouble("rb") / (asDouble("nb") * 2.0))
+    val varTerm = (asDouble("nn") * (asDouble("nn") + 1.0) / 12.0 -
+      asDouble("t3t") / ((asDouble("nn") - 1.0) * 12.0)) *
+      (lit(1.0) / asDouble("na") + lit(1.0) / asDouble("nb"))
     val z = meanGap / sqrt(varTerm)
     a.join(b2, col("ga") < col("gb")).crossJoin(broadcast(ties))
       .select(col("ga").as("priority_a"), col("gb").as("priority_b"),
@@ -5988,12 +5888,11 @@ object AuditQueries {
 
   val q454Sql: String = {
     val binExpr = (1 to 9).map(i => s"CAST(c > c$i AS INT)").mkString(" + ")
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val meanGap = s"(${d("ra")} / (${d("na")} * 2.0)" +
-      s" - ${d("rb")} / (${d("nb")} * 2.0))"
-    val varTerm = s"((${d("nn")} * (${d("nn")} + 1.0) / 12.0" +
-      s" - ${d("t3t")} / ((${d("nn")} - 1.0) * 12.0))" +
-      s" * (1.0 / ${d("na")} + 1.0 / ${d("nb")}))"
+    val meanGap = s"(${Duck.asDouble("ra")} / (${Duck.asDouble("na")} * 2.0)" +
+      s" - ${Duck.asDouble("rb")} / (${Duck.asDouble("nb")} * 2.0))"
+    val varTerm = s"((${Duck.asDouble("nn")} * (${Duck.asDouble("nn")} + 1.0) / 12.0" +
+      s" - ${Duck.asDouble("t3t")} / ((${Duck.asDouble("nn")} - 1.0) * 12.0))" +
+      s" * (1.0 / ${Duck.asDouble("na")} + 1.0 / ${Duck.asDouble("nb")}))"
     val z = s"($meanGap / sqrt($varTerm))"
     s"""WITH ord AS (
       |  SELECT CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS g,
@@ -6062,10 +5961,6 @@ object AuditQueries {
     */
   val q456BlandAltman: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cells = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_partkey"),
         cents(col("l_extendedprice")).as("r"))
@@ -6082,17 +5977,18 @@ object AuditQueries {
     val mo = cells.agg(count(lit(1)).cast(dec).as("n"),
       sum(col("d")).cast(dec).as("sd_sum"),
       sum(col("d").cast(dec) * col("d")).as("qdd"))
-    def dd(c: String) = col(c).cast("double")
-    val sdD = sqrt((dd("qdd") - dd("sd_sum") * dd("sd_sum") / dd("n")) /
-      (dd("n") - 1.0))
-    val biasD = dd("sd_sum") / dd("n")
+    val sdD = sqrt((asDouble("qdd") - asDouble("sd_sum") * asDouble("sd_sum") /
+      asDouble("n")) /
+      (asDouble("n") - 1.0))
+    val biasD = asDouble("sd_sum") / asDouble("n")
     val withLim = cells.crossJoin(broadcast(mo))
       .select(col("n"), col("sd_sum"), col("qdd"), col("d"),
-        (abs(dd("d") - biasD) > sdD * 1.96).cast("long").as("outside"))
+        (abs(asDouble("d") - biasD) > sdD * 1.96).cast("long").as("outside"))
     withLim.groupBy(col("n"), col("sd_sum"), col("qdd"))
       .agg(sum(col("outside")).as("n_outside"))
       .select(col("n").cast("long").as("n_brands"),
-        expr(sdiv("sd_sum * 1000000", "n")).cast("long").as("bias_e6"),
+        expr(Spark.truncDiv("sd_sum * 1000000", "n"))
+          .cast("long").as("bias_e6"),
         sdD.as("sd_diff_d"),
         (biasD - sdD * 1.96).as("loa_low_d"),
         (biasD + sdD * 1.96).as("loa_high_d"),
@@ -6100,10 +5996,10 @@ object AuditQueries {
   }
 
   val q456Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val sdD = s"sqrt((${d("qdd")} - ${d("sd_sum")} * ${d("sd_sum")}" +
-      s" / ${d("n")}) / (${d("n")} - 1.0))"
-    val biasD = s"(${d("sd_sum")} / ${d("n")})"
+    val sdD = s"sqrt((${Duck.asDouble("qdd")} - ${Duck.asDouble("sd_sum")} * " +
+      s"${Duck.asDouble("sd_sum")}" +
+      s" / ${Duck.asDouble("n")}) / (${Duck.asDouble("n")} - 1.0))"
+    val biasD = s"(${Duck.asDouble("sd_sum")} / ${Duck.asDouble("n")})"
     s"""WITH cells AS (
       |  SELECT p.p_brand AS brand,
       |    CAST(SUM(CASE WHEN o.o_orderdate < DATE '$ShiftShareBreak'
@@ -6125,12 +6021,11 @@ object AuditQueries {
       |    SUM(CAST(d AS HUGEINT) * d) AS qdd
       |  FROM dd),
       |census AS (
-      |  SELECT SUM(CASE WHEN ABS(${d("d")} - $biasD) > $sdD * 1.96
+      |  SELECT SUM(CASE WHEN ABS(${Duck.asDouble("d")} - $biasD) > $sdD * 1.96
       |    THEN 1 ELSE 0 END) AS n_outside
       |  FROM dd CROSS JOIN mo)
       |SELECT CAST(n AS BIGINT) AS n_brands,
-      |  CAST(CASE WHEN sd_sum >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(sd_sum * 1000000) // n) AS BIGINT) AS bias_e6,
+      |  ${Duck.truncDivLong("sd_sum * 1000000", "n")} AS bias_e6,
       |  $sdD AS sd_diff_d,
       |  ($biasD - $sdD * 1.96) AS loa_low_d,
       |  ($biasD + $sdD * 1.96) AS loa_high_d,
@@ -6154,10 +6049,6 @@ object AuditQueries {
     */
   val q457Deming: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cells = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_partkey"),
         cents(col("l_extendedprice")).as("r"))
@@ -6180,22 +6071,24 @@ object AuditQueries {
         (col("n") * col("qxx") - col("sx") * col("sx")).as("dx"),
         (col("n") * col("qyy") - col("sy") * col("sy")).as("dy"),
         (col("n") * col("qxy") - col("sx") * col("sy")).as("cxy"))
-    def d(c: String) = col(c).cast("double")
-    val beta = (d("dy") - d("dx") +
-      sqrt((d("dy") - d("dx")) * (d("dy") - d("dx")) +
-        d("cxy") * d("cxy") * 4.0)) / (d("cxy") * 2.0)
-    val alpha = (d("sy") - beta * d("sx")) / d("n")
+    val beta = (asDouble("dy") - asDouble("dx") +
+      sqrt((asDouble("dy") - asDouble("dx")) *
+        (asDouble("dy") - asDouble("dx")) +
+        asDouble("cxy") * asDouble("cxy") * 4.0)) / (asDouble("cxy") * 2.0)
+    val alpha = (asDouble("sy") - beta * asDouble("sx")) / asDouble("n")
     mo.select(col("n").cast("long").as("n_brands"),
       beta.as("deming_slope_d"),
       alpha.as("deming_intercept_d"),
-      expr(sdiv("cxy * 1000000", "dx")).cast("long").as("beta_ols_e6"))
+      expr(Spark.truncDiv("cxy * 1000000", "dx"))
+        .cast("long").as("beta_ols_e6"))
   }
 
   val q457Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val beta = s"((${d("dy")} - ${d("dx")} + sqrt((${d("dy")} - " +
-      s"${d("dx")}) * (${d("dy")} - ${d("dx")}) + ${d("cxy")} * " +
-      s"${d("cxy")} * 4.0)) / (${d("cxy")} * 2.0))"
+    val beta = s"((${Duck.asDouble("dy")} - ${Duck.asDouble("dx")} + " +
+      s"sqrt((${Duck.asDouble("dy")} - " +
+      s"${Duck.asDouble("dx")}) * (${Duck.asDouble("dy")} - " +
+        s"${Duck.asDouble("dx")}) + ${Duck.asDouble("cxy")} * " +
+      s"${Duck.asDouble("cxy")} * 4.0)) / (${Duck.asDouble("cxy")} * 2.0))"
     s"""WITH cells AS (
       |  SELECT p.p_brand AS brand,
       |    CAST(SUM(CASE WHEN o.o_orderdate < DATE '$ShiftShareBreak'
@@ -6220,10 +6113,10 @@ object AuditQueries {
       |  FROM cells)
       |SELECT CAST(n AS BIGINT) AS n_brands,
       |  $beta AS deming_slope_d,
-      |  ((${d("sy")} - $beta * ${d("sx")}) / ${d("n")})
+      |  ((${Duck.asDouble("sy")} - $beta * ${Duck.asDouble("sx")}) /
+      |    ${Duck.asDouble("n")})
       |    AS deming_intercept_d,
-      |  CAST(CASE WHEN cxy >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(cxy * 1000000) // dx) AS BIGINT) AS beta_ols_e6
+      |  ${Duck.truncDivLong("cxy * 1000000", "dx")} AS beta_ols_e6
       |FROM mo""".stripMargin
   }
 
@@ -6299,34 +6192,27 @@ object AuditQueries {
       |  FROM ser),
       |ab AS (
       |  SELECT n, dx, cxy,
-      |    CASE WHEN sy * dx - cxy * st >= 0 THEN 1 ELSE -1 END *
-      |      (ABS((sy * dx - cxy * st) * 1000000) // (n * dx)) AS alpha_e6
+      |    ${Duck.truncDiv("(sy * dx - cxy * st) * 1000000", "n * dx")} AS
+      |      alpha_e6
       |  FROM mo),
       |z AS (
       |  SELECT ser.t,
       |    2 * CAST(ser.y AS HUGEINT) * 1000000
-      |      - (ab.alpha_e6 + CASE WHEN ab.cxy * ser.t >= 0
-      |          THEN 1 ELSE -1 END *
-      |          (ABS(ab.cxy * ser.t * 1000000) // ab.dx)) AS zv
+      |      - (ab.alpha_e6 +
+      |        ${Duck.truncDiv("ab.cxy * ser.t * 1000000", "ab.dx")}) AS zv
       |  FROM ser CROSS JOIN ab),
       |walk AS (
       |  SELECT 1 AS t, zv AS l FROM z WHERE t = 1
       |  UNION ALL
       |  SELECT s.t,
-      |    CASE WHEN $a * s.zv + ${1000000L - a} * w.l >= 0
-      |      THEN 1 ELSE -1 END *
-      |    (ABS($a * s.zv + ${1000000L - a} * w.l) // 1000000)
+      |    ${Duck.truncDiv(s"$a * s.zv + ${1000000L - a} * w.l", "1000000")}
       |  FROM walk w JOIN z s ON s.t = w.t + 1),
       |last AS (SELECT l FROM walk ORDER BY t DESC LIMIT 1)
       |SELECT CAST(h.h AS BIGINT) AS horizon,
-      |  CAST(CASE WHEN (ab.alpha_e6 +
-      |      CASE WHEN ab.cxy * (mo2.tl + h.h) >= 0 THEN 1 ELSE -1 END *
-      |      (ABS(ab.cxy * (mo2.tl + h.h) * 1000000) // ab.dx)) + last.l
-      |      >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((ab.alpha_e6 +
-      |      CASE WHEN ab.cxy * (mo2.tl + h.h) >= 0 THEN 1 ELSE -1 END *
-      |      (ABS(ab.cxy * (mo2.tl + h.h) * 1000000) // ab.dx)) + last.l)
-      |      // 2) AS BIGINT) AS forecast_e6
+      |  ${Duck.truncDivLong(
+             "(ab.alpha_e6 + " +
+               s"${Duck.truncDiv("ab.cxy * (mo2.tl + h.h) * 1000000", "ab.dx")}) + last.l",
+             "2")} AS forecast_e6
       |FROM last, ab,
       |  (SELECT CAST(COUNT(*) AS HUGEINT) AS tl FROM ser) mo2,
       |  (SELECT UNNEST(range(1, ${ThetaHorizon + 1})) AS h) h
@@ -6350,8 +6236,6 @@ object AuditQueries {
     */
   val q459Buhlmann: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val panel = Tables.orders(s, dir)
       .join(broadcast(Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_nationkey"))),
@@ -6371,16 +6255,17 @@ object AuditQueries {
     val staged = perNat.crossJoin(broadcast(tot))
       .select(col("nat"), col("mi"), col("syi"), col("g"), col("mm"),
         col("ss"), col("m2"),
-        expr(fdiv("(mi * qyyi - syi * syi) * 1000000", "mi")).as("epv_t"),
-        expr(fdiv("(syi * mm - mi * ss) * (syi * mm - mi * ss) * 1000000",
+        expr(Spark.truncDiv("(mi * qyyi - syi * syi) * 1000000", "mi"))
+          .as("epv_t"),
+        expr(Spark.truncDiv(
+          "(syi * mm - mi * ss) * (syi * mm - mi * ss) * 1000000",
           "mi")).as("bt"))
     val scal = staged.groupBy(col("g"), col("mm"), col("ss"), col("m2"))
       .agg(sum(col("epv_t")).as("sepv"), sum(col("bt")).as("sbt"))
-    def d(c: String) = col(c).cast("double")
-    val epvD = d("sepv") / ((d("mm") - d("g")) * 1e6)
-    val bD = d("sbt") / (d("mm") * d("mm") * 1e6)
-    val vhmD = (bD - (d("g") - 1.0) * epvD) /
-      (d("mm") - d("m2") / d("mm"))
+    val epvD = asDouble("sepv") / ((asDouble("mm") - asDouble("g")) * 1e6)
+    val bD = asDouble("sbt") / (asDouble("mm") * asDouble("mm") * 1e6)
+    val vhmD = (bD - (asDouble("g") - 1.0) * epvD) /
+      (asDouble("mm") - asDouble("m2") / asDouble("mm"))
     val kD = epvD / vhmD
     staged.select(col("nat"), col("mi"), col("syi"), col("mm"), col("ss"))
       .crossJoin(broadcast(scal.select(col("g"), col("mm").as("mm2"),
@@ -6388,22 +6273,25 @@ object AuditQueries {
       .withColumn("k_d", kD.as("k_d"))
       .select(col("nat").as("nation"), col("mi").cast("long")
         .as("n_months"),
-        expr(fdiv("syi * 1000000", "mi")).cast("long").as("own_mean_e6"),
-        (d("mi") / (d("mi") + col("k_d"))).as("z_d"),
-        ((d("mi") / (d("mi") + col("k_d"))) * (d("syi") / d("mi")) +
-          (lit(1.0) - d("mi") / (d("mi") + col("k_d"))) *
-            (d("ss") / d("mm"))).as("premium_d"))
+        expr(Spark.truncDiv("syi * 1000000", "mi"))
+          .cast("long").as("own_mean_e6"),
+        (asDouble("mi") / (asDouble("mi") + col("k_d"))).as("z_d"),
+        ((asDouble("mi") / (asDouble("mi") + col("k_d"))) *
+          (asDouble("syi") / asDouble("mi")) +
+          (lit(1.0) - asDouble("mi") / (asDouble("mi") + col("k_d"))) *
+            (asDouble("ss") / asDouble("mm"))).as("premium_d"))
       .orderBy(col("nation"))
   }
 
   val q459Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val epvD = s"(${d("sepv")} / ((${d("mm2")} - ${d("g")}) * 1e6))"
-    val bD = s"(${d("sbt")} / (${d("mm2")} * ${d("mm2")} * 1e6))"
-    val vhmD = s"(($bD - (${d("g")} - 1.0) * $epvD)" +
-      s" / (${d("mm2")} - ${d("m2")} / ${d("mm2")}))"
+    val epvD = s"(${Duck.asDouble("sepv")} / ((${Duck.asDouble("mm2")} - " +
+      s"${Duck.asDouble("g")}) * 1e6))"
+    val bD = s"(${Duck.asDouble("sbt")} / (${Duck.asDouble("mm2")} * " +
+      s"${Duck.asDouble("mm2")} * 1e6))"
+    val vhmD = s"(($bD - (${Duck.asDouble("g")} - 1.0) * $epvD)" +
+      s" / (${Duck.asDouble("mm2")} - ${Duck.asDouble("m2")} / ${Duck.asDouble("mm2")}))"
     val kD = s"($epvD / $vhmD)"
-    val zD = s"(${d("mi")} / (${d("mi")} + k_d))"
+    val zD = s"(${Duck.asDouble("mi")} / (${Duck.asDouble("mi")} + k_d))"
     s"""WITH panel AS (
       |  SELECT c.c_nationkey AS nat,
       |    year(o.o_orderdate) * 12 + month(o.o_orderdate) AS m,
@@ -6433,8 +6321,9 @@ object AuditQueries {
       |SELECT st.nat AS nation, CAST(st.mi AS BIGINT) AS n_months,
       |  CAST(st.syi * 1000000 // st.mi AS BIGINT) AS own_mean_e6,
       |  $zD AS z_d,
-      |  ($zD * (${d("syi")} / ${d("mi")})
-      |    + (1.0 - $zD) * (${d("ss")} / ${d("mm")})) AS premium_d
+      |  ($zD * (${Duck.asDouble("syi")} / ${Duck.asDouble("mi")})
+      |    + (1.0 - $zD) * (${Duck.asDouble("ss")} / ${Duck.asDouble("mm")})) AS
+      |      premium_d
       |FROM staged st CROSS JOIN kv
       |ORDER BY nation""".stripMargin
   }
@@ -6477,8 +6366,9 @@ object AuditQueries {
     val fold = counts.agg(sum(col("nm")).cast(dec).as("n"),
       sum(col("nm").cast(dec) * col("cos_e6")).as("cc"),
       sum(col("nm").cast(dec) * col("sin_e6")).as("ss"))
-    def d(c: String) = col(c).cast("double")
-    val z = (d("cc") * d("cc") + d("ss") * d("ss")) / (d("n") * 1e12)
+    val z = (asDouble("cc") * asDouble("cc") + asDouble("ss") *
+      asDouble("ss")) /
+      (asDouble("n") * 1e12)
     val peak = counts.crossJoin(broadcast(fold))
       .select(col("mo"),
         (col("cc") * col("cos_e6") + col("ss") * col("sin_e6"))
@@ -6498,9 +6388,9 @@ object AuditQueries {
   val q460Sql: String = {
     val trig = (1 to 12).map(m =>
       s"($m, ${MonthCosE6(m - 1)}, ${MonthSinE6(m - 1)})").mkString(", ")
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val z = s"((${d("cc")} * ${d("cc")} + ${d("ss")} * ${d("ss")})" +
-      s" / (${d("n")} * 1e12))"
+    val z = s"((${Duck.asDouble("cc")} * ${Duck.asDouble("cc")} + " +
+      s"${Duck.asDouble("ss")} * ${Duck.asDouble("ss")})" +
+      s" / (${Duck.asDouble("n")} * 1e12))"
     s"""WITH trig(mo, cos_e6, sin_e6) AS (VALUES $trig),
       |counts AS (
       |  SELECT month(o_orderdate) AS mo, CAST(COUNT(*) AS BIGINT) AS nm
@@ -6548,8 +6438,6 @@ object AuditQueries {
     */
   val q461PowerIndices: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val g = PowerG
     val voters = Tables.lineitem(s, dir)
       .groupBy(col("l_suppkey").cast("long").as("sk"))
@@ -6588,7 +6476,7 @@ object AuditQueries {
         col("w").as("weight"), col("n_swings"),
         expr("CAST(n_swings * 1000000 div tot AS BIGINT)")
           .as("banzhaf_e6"),
-        expr(fdiv(s"ss_num * 1000000", FactTable(g).toLong.toString))
+        expr(Spark.truncDiv(s"ss_num * 1000000", FactTable(g).toLong.toString))
           .cast("long").as("shapley_shubik_e6"))
       .orderBy(col("voter_rank"))
   }
@@ -6661,12 +6549,6 @@ object AuditQueries {
     */
   val q462BornhuetterFerguson: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val cells = Tables.lineitem(s, dir)
       .join(Tables.orders(s, dir).select(col("o_orderkey"),
         year(col("o_orderdate")).as("oy")),
@@ -6697,7 +6579,8 @@ object AuditQueries {
       .groupBy(col("dev"))
       .agg(sum(col("cn").cast("decimal(38,0)")).as("num"),
         sum(col("c").cast("decimal(38,0)")).as("den"))
-      .select(col("dev"), expr(fdiv("num * 1000000", "den")).cast("long")
+      .select(col("dev"), expr(Spark.truncDiv("num * 1000000", "den"))
+        .cast("long")
         .as("f_e6"))
     val fArm = (0 until ClMaxDev).map { k =>
       max(when(col("dev") === k, col("f_e6"))).as(s"f_$k")
@@ -6714,31 +6597,32 @@ object AuditQueries {
     // expected loss ratio from the OLDEST (fully developed) cohort
     val elr = actual.join(base0, Seq("oy"))
       .crossJoin(broadcast(maxY)).filter(col("oy") === col("min_y"))
-      .select(expr(fdiv("actual_ult * 1000000", "c0")).as("elr_e6"))
+      .select(expr(Spark.truncDiv("actual_ult * 1000000", "c0")).as("elr_e6"))
     var proj = latest.crossJoin(broadcast(fRow))
       .withColumn("ult", col("latest_c").cast("decimal(38,0)"))
       .withColumn("cdf", lit(1000000L).cast("decimal(38,0)"))
     for (k <- 0 until ClMaxDev) {
       proj = proj
         .withColumn("ult", when(col("latest_dev") <= k,
-          expr(fdiv(s"ult * f_$k", "1000000"))).otherwise(col("ult")))
+          expr(Spark.truncDiv(s"ult * f_$k", "1000000"))).otherwise(col("ult")))
         .withColumn("cdf", when(col("latest_dev") <= k,
-          expr(fdiv(s"cdf * f_$k", "1000000"))).otherwise(col("cdf")))
+          expr(Spark.truncDiv(s"cdf * f_$k", "1000000"))).otherwise(col("cdf")))
     }
     proj.join(base0, Seq("oy")).join(actual, Seq("oy"))
       .crossJoin(broadcast(elr))
-      .withColumn("prior", expr(fdiv("c0 * elr_e6", "1000000")))
+      .withColumn("prior", expr(Spark.truncDiv("c0 * elr_e6", "1000000")))
       .withColumn("q_e6",
-        lit(1000000L) - expr(fdiv("1000000000000", "cdf")))
+        lit(1000000L) - expr(Spark.truncDiv("1000000000000", "cdf")))
       .withColumn("bf_ult",
-        col("latest_c") + expr(fdiv("prior * q_e6", "1000000")))
+        col("latest_c") + expr(Spark.truncDiv("prior * q_e6", "1000000")))
       .select(col("oy").as("order_year"), col("latest_dev"),
         col("ult").cast("long").as("cl_ult_cents"),
         col("bf_ult").cast("long").as("bf_ult_cents"),
         col("actual_ult").cast("long").as("actual_ult_cents"),
-        expr(sdiv("(ult - actual_ult) * 1000000", "actual_ult"))
+        expr(Spark.truncDivLong("(ult - actual_ult) * 1000000", "actual_ult"))
           .as("cl_err_e6"),
-        expr(sdiv("(bf_ult - actual_ult) * 1000000", "actual_ult"))
+        expr(Spark.truncDivLong("(bf_ult - actual_ult) * 1000000",
+          "actual_ult"))
           .as("bf_err_e6"))
       .orderBy(col("order_year"))
   }
@@ -6809,15 +6693,12 @@ object AuditQueries {
       |    * (1000000 - 1000000000000 // p.cdf) // 1000000 AS BIGINT)
       |    AS bf_ult_cents,
       |  CAST(a.actual_ult AS BIGINT) AS actual_ult_cents,
-      |  CAST(CASE WHEN p.ult - a.actual_ult >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((p.ult - a.actual_ult) * 1000000) // a.actual_ult)
-      |    AS BIGINT) AS cl_err_e6,
-      |  CAST(CASE WHEN p.latest_c + (b.c0 * e.elr_e6 // 1000000)
-      |      * (1000000 - 1000000000000 // p.cdf) // 1000000
-      |      - a.actual_ult >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((p.latest_c + (b.c0 * e.elr_e6 // 1000000)
-      |      * (1000000 - 1000000000000 // p.cdf) // 1000000
-      |      - a.actual_ult) * 1000000) // a.actual_ult) AS BIGINT)
+      |  ${Duck.truncDivLong("(p.ult - a.actual_ult) * 1000000",
+             "a.actual_ult")} AS cl_err_e6,
+      |  ${Duck.truncDivLong(
+             "(p.latest_c + (b.c0 * e.elr_e6 // 1000000) * (1000000 - " +
+               "1000000000000 // p.cdf) // 1000000 - a.actual_ult) * 1000000",
+             "a.actual_ult")}
       |    AS bf_err_e6
       |FROM p${ClMaxDev - 1} p
       |JOIN base0 b USING (oy)
@@ -6945,10 +6826,6 @@ object AuditQueries {
     */
   val q464ConcentrationIndex: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cust = Tables.orders(s, dir)
       .groupBy(col("o_custkey")).agg(
         expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
@@ -6968,7 +6845,7 @@ object AuditQueries {
         .agg(sum(col("cnt")).as("n"), sum(col("sy")).as("ty"),
           sum(col("dr") * col("sy")).as("ydr"))
         .select(col("n"),
-          expr(sdiv("(ydr - (n + 1) * ty) * 1000000", "n * ty"))
+          expr(Spark.truncDiv("(ydr - (n + 1) * ty) * 1000000", "n * ty"))
             .cast("long").as("idx_e6"))
     }
     val ci = index("bal").select(col("n"), col("idx_e6").as("ci_e6"))
@@ -7002,13 +6879,11 @@ object AuditQueries {
       |gi0 AS (${idx("y")}),
       |ci AS (
       |  SELECT n,
-      |    CAST(CASE WHEN ydr - (n + 1) * ty >= 0 THEN 1 ELSE -1 END *
-      |      (ABS((ydr - (n + 1) * ty) * 1000000) // (n * ty)) AS BIGINT)
+      |    ${Duck.truncDivLong("(ydr - (n + 1) * ty) * 1000000", "n * ty")}
       |      AS ci_e6
       |  FROM ci0),
       |gi AS (
-      |  SELECT CAST(CASE WHEN ydr - (n + 1) * ty >= 0 THEN 1 ELSE -1 END *
-      |      (ABS((ydr - (n + 1) * ty) * 1000000) // (n * ty)) AS BIGINT)
+      |  SELECT ${Duck.truncDivLong("(ydr - (n + 1) * ty) * 1000000", "n * ty")}
       |      AS gini_e6
       |  FROM gi0)
       |SELECT CAST(n AS BIGINT) AS n_customers, ci_e6, gini_e6,
@@ -7034,8 +6909,6 @@ object AuditQueries {
     */
   val q465FgtSen: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val cust = Tables.orders(s, dir)
       .groupBy(col("o_custkey")).agg(
         expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
@@ -7057,7 +6930,7 @@ object AuditQueries {
         when(col("y") < col("z"), col("z") - col("y")).otherwise(0L)
           .as("gap"),
         when(col("y") < col("z"),
-          expr(fdiv("(z - y) * (z - y) * 1000000", "z * z")))
+          expr(Spark.truncDiv("(z - y) * (z - y) * 1000000", "z * z")))
           .otherwise(lit(0L).cast(dec)).as("fgt2_t"))
     val agg = terms.groupBy(col("z"))
       .agg(count(lit(1)).cast(dec).as("n"),
@@ -7078,22 +6951,23 @@ object AuditQueries {
           "CAST(((ydr - (qn + 1) * ty) * 1000000 - " +
             "((ydr - (qn + 1) * ty) * 1000000) % (qn * ty)) / (qn * ty)" +
             " AS DECIMAL(38,0))").as("gini_poor_e6"))
-    def d(c: String) = col(c).cast("double")
     agg.crossJoin(broadcast(gp))
       .select(col("n").cast("long").as("n_customers"),
         col("z").cast("long").as("poverty_line_dollars"),
-        expr(fdiv("q * 1000000", "n")).cast("long").as("fgt0_e6"),
-        expr(fdiv("sgap * 1000000", "n * z")).cast("long").as("fgt1_e6"),
-        expr(fdiv("sfgt2", "n")).cast("long").as("fgt2_e6"),
+        expr(Spark.truncDiv("q * 1000000", "n")).cast("long").as("fgt0_e6"),
+        expr(Spark.truncDiv("sgap * 1000000", "n * z"))
+          .cast("long").as("fgt1_e6"),
+        expr(Spark.truncDiv("sfgt2", "n")).cast("long").as("fgt2_e6"),
         col("gini_poor_e6").cast("long").as("gini_poor_e6"),
-        ((d("q") / d("n")) * (d("sgap") / (d("q") * d("z")) +
-          (lit(1.0) - d("sgap") / (d("q") * d("z"))) *
-            (d("gini_poor_e6") / 1e6))).as("sen_index_d"))
+        ((asDouble("q") / asDouble("n")) * (asDouble("sgap") /
+          (asDouble("q") * asDouble("z")) +
+          (lit(1.0) - asDouble("sgap") / (asDouble("q") * asDouble("z"))) *
+            (asDouble("gini_poor_e6") / 1e6))).as("sen_index_d"))
   }
 
   val q465Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val iRatio = s"(${d("sgap")} / (${d("q")} * ${d("z")}))"
+    val iRatio = s"(${Duck.asDouble("sgap")} / (${Duck.asDouble("q")} * " +
+      s"${Duck.asDouble("z")}))"
     s"""WITH cust AS (
       |  SELECT o_custkey,
       |    SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) // 100 AS y
@@ -7147,8 +7021,9 @@ object AuditQueries {
       |  CAST(sgap * 1000000 // (n * z) AS BIGINT) AS fgt1_e6,
       |  CAST(sfgt2 // n AS BIGINT) AS fgt2_e6,
       |  CAST(gini_poor_e6 AS BIGINT) AS gini_poor_e6,
-      |  ((${d("q")} / ${d("n")}) * ($iRatio + (1.0 - $iRatio) *
-      |    (${d("gini_poor_e6")} / 1e6))) AS sen_index_d
+      |  ((${Duck.asDouble("q")} / ${Duck.asDouble("n")}) * ($iRatio + (1.0 -
+      |    $iRatio) *
+      |    (${Duck.asDouble("gini_poor_e6")} / 1e6))) AS sen_index_d
       |FROM agg CROSS JOIN gp""".stripMargin
   }
 
@@ -7182,11 +7057,12 @@ object AuditQueries {
         sum(col("g").cast(dec) * col("rsum")).as("l"),
         sum(col("rsum")).cast(dec).as("tot"))
       .withColumn("b", expr("tot * 2 div (k * (k + 1))"))
-    def d(c: String) = col(c).cast("double")
-    val e = d("b") * d("k") * (d("k") + 1.0) * (d("k") + 1.0) / 4.0
-    val vr = d("b") * d("k") * d("k") * (d("k") + 1.0) *
-      (d("k") * d("k") - 1.0) / 144.0
-    val z = (d("l") - e) / sqrt(vr)
+    val e = asDouble("b") * asDouble("k") * (asDouble("k") + 1.0) *
+      (asDouble("k") + 1.0) / 4.0
+    val vr = asDouble("b") * asDouble("k") * asDouble("k") *
+      (asDouble("k") + 1.0) *
+      (asDouble("k") * asDouble("k") - 1.0) / 144.0
+    val z = (asDouble("l") - e) / sqrt(vr)
     fold.select(col("k").cast("long").as("n_priorities"),
       col("b").cast("long").as("n_blocks"),
       col("l").cast("long").as("page_l"),
@@ -7196,12 +7072,13 @@ object AuditQueries {
   }
 
   val q467Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val e = s"(${d("b")} * ${d("k")} * (${d("k")} + 1.0) *" +
-      s" (${d("k")} + 1.0) / 4.0)"
-    val vr = s"(${d("b")} * ${d("k")} * ${d("k")} * (${d("k")} + 1.0) *" +
-      s" (${d("k")} * ${d("k")} - 1.0) / 144.0)"
-    val z = s"((${d("l")} - $e) / sqrt($vr))"
+    val e = s"(${Duck.asDouble("b")} * ${Duck.asDouble("k")} * " +
+      s"(${Duck.asDouble("k")} + 1.0) *" +
+      s" (${Duck.asDouble("k")} + 1.0) / 4.0)"
+    val vr = s"(${Duck.asDouble("b")} * ${Duck.asDouble("k")} * " +
+      s"${Duck.asDouble("k")} * (${Duck.asDouble("k")} + 1.0) *" +
+      s" (${Duck.asDouble("k")} * ${Duck.asDouble("k")} - 1.0) / 144.0)"
+    val z = s"((${Duck.asDouble("l")} - $e) / sqrt($vr))"
     s"""WITH cells AS (
       |  SELECT month(o_orderdate) AS mo,
       |    CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS g,
@@ -7255,10 +7132,6 @@ object AuditQueries {
     */
   val q468PolyContrasts: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val folds = Tables.orders(s, dir)
       .groupBy(expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)")
         .as("g"))
@@ -7276,13 +7149,13 @@ object AuditQueries {
     }).toDF("contrast", "g", "cg")
     val staged = folds.join(broadcast(contrasts), Seq("g"))
       .groupBy(col("contrast"))
-      .agg(sum(expr(sdiv("cg * sy * 1000000", "ng"))).as("l_e6"),
+      .agg(sum(expr(Spark.truncDiv("cg * sy * 1000000", "ng"))).as("l_e6"),
         sum(expr(
           "CAST((cg * cg * 1000000 - (cg * cg * 1000000) % ng) / ng" +
             " AS DECIMAL(38,0))")).as("den_e6"))
-    def d(c: String) = col(c).cast("double")
-    val ssC = (d("l_e6") / 1e6) * (d("l_e6") / 1e6) / (d("den_e6") / 1e6)
-    val fStat = ssC / ((d("ssw") / (d("n") - 5.0)))
+    val ssC = (asDouble("l_e6") / 1e6) * (asDouble("l_e6") / 1e6) /
+      (asDouble("den_e6") / 1e6)
+    val fStat = ssC / ((asDouble("ssw") / (asDouble("n") - 5.0)))
     staged.crossJoin(broadcast(within))
       .select(col("contrast"), col("l_e6").cast("long").as("l_e6"),
         ssC.as("ss_contrast_d"), fStat.as("f_d"),
@@ -7295,10 +7168,9 @@ object AuditQueries {
     val cvals = Poly5.flatMap { case (nm, cs) =>
       cs.zipWithIndex.map { case (c, i) => s"('$nm', ${i + 1}, $c)" }
     }.mkString(", ")
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val ssC = s"((${d("l_e6")} / 1e6) * (${d("l_e6")} / 1e6)" +
-      s" / (${d("den_e6")} / 1e6))"
-    val f = s"($ssC / ((${d("ssw")} / (${d("n")} - 5.0))))"
+    val ssC = s"((${Duck.asDouble("l_e6")} / 1e6) * (${Duck.asDouble("l_e6")} / 1e6)" +
+      s" / (${Duck.asDouble("den_e6")} / 1e6))"
+    val f = s"($ssC / ((${Duck.asDouble("ssw")} / (${Duck.asDouble("n")} - 5.0))))"
     s"""WITH folds AS (
       |  SELECT CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS g,
       |    CAST(COUNT(*) AS HUGEINT) AS ng,
@@ -7314,8 +7186,7 @@ object AuditQueries {
       |contrasts(contrast, g, cg) AS (VALUES $cvals),
       |staged AS (
       |  SELECT contrast,
-      |    SUM(CASE WHEN cg * sy >= 0 THEN 1 ELSE -1 END *
-      |      (ABS(cg * sy * 1000000) // ng)) AS l_e6,
+      |    SUM(${Duck.truncDiv("cg * sy * 1000000", "ng")}) AS l_e6,
       |    SUM(cg * cg * 1000000 // ng) AS den_e6
       |  FROM folds JOIN contrasts USING (g)
       |  GROUP BY contrast)
@@ -7344,8 +7215,6 @@ object AuditQueries {
     */
   val q466Wolfson: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val cust = Tables.orders(s, dir)
       .groupBy(col("o_custkey")).agg(
         expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
@@ -7373,26 +7242,26 @@ object AuditQueries {
         sum(col("y").cast(dec) * col("take")).as("bh"),
         sum((col("below") * 2 + col("cnt") + 1).cast(dec) *
           (col("y").cast(dec) * col("cnt"))).as("ydr"))
-    def d(c: String) = col(c).cast("double")
-    val giniD = (d("ydr") - (d("n") + 1.0) * d("ty")) / (d("n") * d("ty"))
-    val tD = lit(0.5) - d("bh") / d("ty")
-    val muOverM = d("ty") / d("n") / d("m")
+    val giniD = (asDouble("ydr") - (asDouble("n") + 1.0) * asDouble("ty")) /
+      (asDouble("n") * asDouble("ty"))
+    val tD = lit(0.5) - asDouble("bh") / asDouble("ty")
+    val muOverM = asDouble("ty") / asDouble("n") / asDouble("m")
     val wD = (tD * 2.0 - giniD) * muOverM
     half.crossJoin(broadcast(med))
       .select(col("n").cast("long").as("n_customers"),
         col("m").cast("long").as("median_dollars"),
-        expr(fdiv("bh * 1000000", "ty")).cast("long")
+        expr(Spark.truncDiv("bh * 1000000", "ty")).cast("long")
           .as("bottom_half_share_e6"),
         giniD.as("gini_d"), wD.as("wolfson_w_d"))
   }
 
   val q466Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val gini = s"((${d("ydr")} - (${d("n")} + 1.0) * ${d("ty")})" +
-      s" / (${d("n")} * ${d("ty")}))"
-    val tD = s"(0.5 - ${d("bh")} / ${d("ty")})"
-    val wD = s"(($tD * 2.0 - $gini) * (${d("ty")} / ${d("n")}" +
-      s" / ${d("m")}))"
+    val gini = s"((${Duck.asDouble("ydr")} - (${Duck.asDouble("n")} + 1.0) * " +
+      s"${Duck.asDouble("ty")})" +
+      s" / (${Duck.asDouble("n")} * ${Duck.asDouble("ty")}))"
+    val tD = s"(0.5 - ${Duck.asDouble("bh")} / ${Duck.asDouble("ty")})"
+    val wD = s"(($tD * 2.0 - $gini) * (${Duck.asDouble("ty")} / ${Duck.asDouble("n")}" +
+      s" / ${Duck.asDouble("m")}))"
     s"""WITH cust AS (
       |  SELECT o_custkey,
       |    SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) // 100 AS y
@@ -7442,10 +7311,6 @@ object AuditQueries {
     */
   val q469BassDiffusion: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val firstM = Tables.orders(s, dir)
       .groupBy(col("o_custkey"))
       .agg(min(expr("year(o_orderdate) * 12 + month(o_orderdate)"))
@@ -7479,15 +7344,18 @@ object AuditQueries {
       (col("n") * col("qmy") - col("sm") * col("sy")).as("cmy"),
       col("sx"), col("sm"), col("sy"))
       .withColumn("d2", col("dx") * col("dm") - col("cxm") * col("cxm"))
-    def d(c: String) = col(c).cast("double")
-    val bD = (d("cxy") * d("dm") - d("cmy") * d("cxm")) / d("d2")
-    val cD = (d("cmy") * d("dx") - d("cxy") * d("cxm")) / d("d2")
-    val aD = (d("sy") - bD * d("sx") - cD * d("sm")) / d("n")
+    val bD = (asDouble("cxy") * asDouble("dm") - asDouble("cmy") *
+      asDouble("cxm")) / asDouble("d2")
+    val cD = (asDouble("cmy") * asDouble("dx") - asDouble("cxy") *
+      asDouble("cxm")) / asDouble("d2")
+    val aD = (asDouble("sy") - bD * asDouble("sx") - cD * asDouble("sm")) /
+      asDouble("n")
     val mHat = (-bD - sqrt(bD * bD - cD * aD * 4.0)) / (cD * 2.0)
     cm.select(col("n").cast("long").as("n_months"),
-      expr(sdiv("(cxy * dm - cmy * cxm) * 1000000", "d2")).cast("long")
+      expr(Spark.truncDiv("(cxy * dm - cmy * cxm) * 1000000", "d2"))
+        .cast("long")
         .as("b_e6"),
-      expr(sdiv("(cmy * dx - cxy * cxm) * 1000000000000", "d2"))
+      expr(Spark.truncDiv("(cmy * dx - cxy * cxm) * 1000000000000", "d2"))
         .cast("long").as("c_e12"),
       mHat.as("market_size_d"),
       (aD / mHat).as("p_innovation_d"),
@@ -7495,13 +7363,15 @@ object AuditQueries {
   }
 
   val q469Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val bD = s"((${d("cxy")} * ${d("dm")} - ${d("cmy")} * ${d("cxm")})" +
-      s" / ${d("d2")})"
-    val cD = s"((${d("cmy")} * ${d("dx")} - ${d("cxy")} * ${d("cxm")})" +
-      s" / ${d("d2")})"
-    val aD = s"((${d("sy")} - $bD * ${d("sx")} - $cD * ${d("sm")})" +
-      s" / ${d("n")})"
+    val bD = s"((${Duck.asDouble("cxy")} * ${Duck.asDouble("dm")} - " +
+      s"${Duck.asDouble("cmy")} * ${Duck.asDouble("cxm")})" +
+      s" / ${Duck.asDouble("d2")})"
+    val cD = s"((${Duck.asDouble("cmy")} * ${Duck.asDouble("dx")} - " +
+      s"${Duck.asDouble("cxy")} * ${Duck.asDouble("cxm")})" +
+      s" / ${Duck.asDouble("d2")})"
+    val aD = s"((${Duck.asDouble("sy")} - $bD * ${Duck.asDouble("sx")} - $cD " +
+      s"* ${Duck.asDouble("sm")})" +
+      s" / ${Duck.asDouble("n")})"
     val mHat = s"((-$bD - sqrt($bD * $bD - $cD * $aD * 4.0))" +
       s" / ($cD * 2.0))"
     s"""WITH first_m AS (
@@ -7536,11 +7406,9 @@ object AuditQueries {
       |  FROM mo),
       |cm2 AS (SELECT *, dx * dm - cxm * cxm AS d2 FROM cm)
       |SELECT CAST(n AS BIGINT) AS n_months,
-      |  CAST(CASE WHEN cxy * dm - cmy * cxm >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((cxy * dm - cmy * cxm) * 1000000) // d2) AS BIGINT)
+      |  ${Duck.truncDivLong("(cxy * dm - cmy * cxm) * 1000000", "d2")}
       |    AS b_e6,
-      |  CAST(CASE WHEN cmy * dx - cxy * cxm >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((cmy * dx - cxy * cxm) * 1000000000000) // d2) AS BIGINT)
+      |  ${Duck.truncDivLong("(cmy * dx - cxy * cxm) * 1000000000000", "d2")}
       |    AS c_e12,
       |  $mHat AS market_size_d,
       |  ($aD / $mHat) AS p_innovation_d,
@@ -7598,10 +7466,11 @@ object AuditQueries {
       .distinct()
       .agg(sum((col("c") * col("cj") - col("gt")) *
         (col("c") * col("cj") - col("gt"))).as("qb"))
-    def d(c: String) = col(c).cast("double")
-    val ssNa = d("p") * d("p") / (d("qa") * d("qb"))
-    val ssRes = d("e2") / (d("r") * d("r") * d("c") * d("c"))
-    val dfRes = (d("r") - 1.0) * (d("c") - 1.0) - 1.0
+    val ssNa = asDouble("p") * asDouble("p") / (asDouble("qa") * asDouble("qb"))
+    val ssRes = asDouble("e2") / (asDouble("r") * asDouble("r") *
+      asDouble("c") *
+      asDouble("c"))
+    val dfRes = (asDouble("r") - 1.0) * (asDouble("c") - 1.0) - 1.0
     val fStat = ssNa / ((ssRes - ssNa) / dfRes)
     folded.crossJoin(broadcast(qa)).crossJoin(broadcast(qb))
       .select(col("r").cast("long").as("n_months"),
@@ -7612,12 +7481,13 @@ object AuditQueries {
   }
 
   val q470Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val ssNa = s"(${d("p")} * ${d("p")} / (${d("qa")} * ${d("qb")}))"
-    val ssRes = s"(${d("e2")} / (${d("r")} * ${d("r")} * ${d("c")}" +
-      s" * ${d("c")}))"
+    val ssNa = s"(${Duck.asDouble("p")} * ${Duck.asDouble("p")} / " +
+      s"(${Duck.asDouble("qa")} * ${Duck.asDouble("qb")}))"
+    val ssRes = s"(${Duck.asDouble("e2")} / (${Duck.asDouble("r")} * " +
+      s"${Duck.asDouble("r")} * ${Duck.asDouble("c")}" +
+      s" * ${Duck.asDouble("c")}))"
     val f = s"($ssNa / (($ssRes - $ssNa) /" +
-      s" ((${d("r")} - 1.0) * (${d("c")} - 1.0) - 1.0)))"
+      s" ((${Duck.asDouble("r")} - 1.0) * (${Duck.asDouble("c")} - 1.0) - 1.0)))"
     s"""WITH cells AS (
       |  SELECT month(o_orderdate) AS mo,
       |    CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS g,
@@ -7758,10 +7628,10 @@ object AuditQueries {
       sum(col("d").cast(dec) * col("d")).as("qdd"),
       sum(when(col("d") < SpecLslDays || col("d") > SpecUslDays, 1L)
         .otherwise(0L)).cast(dec).as("oos"))
-    def d(c: String) = col(c).cast("double")
-    val sigma = sqrt((d("qdd") - d("sd") * d("sd") / d("n")) /
-      (d("n") - 1.0))
-    val mu = d("sd") / d("n")
+    val sigma = sqrt((asDouble("qdd") - asDouble("sd") * asDouble("sd") /
+      asDouble("n")) /
+      (asDouble("n") - 1.0))
+    val mu = asDouble("sd") / asDouble("n")
     val cp = lit((SpecUslDays - SpecLslDays).toDouble) / (sigma * 6.0)
     val cpk = least(lit(SpecUslDays.toDouble) - mu,
       mu - SpecLslDays.toDouble) / (sigma * 3.0)
@@ -7775,10 +7645,10 @@ object AuditQueries {
   }
 
   val q472Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val sigma = s"sqrt((${d("qdd")} - ${d("sd")} * ${d("sd")} /" +
-      s" ${d("n")}) / (${d("n")} - 1.0))"
-    val mu = s"(${d("sd")} / ${d("n")})"
+    val sigma = s"sqrt((${Duck.asDouble("qdd")} - ${Duck.asDouble("sd")} * " +
+      s"${Duck.asDouble("sd")} /" +
+      s" ${Duck.asDouble("n")}) / (${Duck.asDouble("n")} - 1.0))"
+    val mu = s"(${Duck.asDouble("sd")} / ${Duck.asDouble("n")})"
     val cp = s"(${(SpecUslDays - SpecLslDays).toDouble} / ($sigma * 6.0))"
     val cpk = s"(LEAST(${SpecUslDays.toDouble} - $mu," +
       s" $mu - ${SpecLslDays.toDouble}) / ($sigma * 3.0))"
@@ -7836,10 +7706,10 @@ object AuditQueries {
     val fold = dd.agg(count(lit(1)).cast(dec).as("m"),
       sum(col("dt")).as("sdt"),
       sum(col("dt") * col("dt")).as("qdt"))
-    def d(c: String) = col(c).cast("double")
-    val dm = (d("sdt") / d("m")) /
-      sqrt((d("qdt") - d("sdt") * d("sdt") / d("m")) /
-        ((d("m") - 1.0) * d("m")))
+    val dm = (asDouble("sdt") / asDouble("m")) /
+      sqrt((asDouble("qdt") - asDouble("sdt") * asDouble("sdt") /
+        asDouble("m")) /
+        ((asDouble("m") - 1.0) * asDouble("m")))
     fold.select(col("m").cast("long").as("n_forecasts"),
       col("sdt").cast("long").as("loss_diff_sum"),
       dm.as("dm_stat_d"),
@@ -7849,10 +7719,10 @@ object AuditQueries {
   }
 
   val q473Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val dm = s"((${d("sdt")} / ${d("m")}) / sqrt((${d("qdt")} -" +
-      s" ${d("sdt")} * ${d("sdt")} / ${d("m")}) /" +
-      s" ((${d("m")} - 1.0) * ${d("m")})))"
+    val dm = s"((${Duck.asDouble("sdt")} / ${Duck.asDouble("m")}) / " +
+      s"sqrt((${Duck.asDouble("qdt")} -" +
+      s" ${Duck.asDouble("sdt")} * ${Duck.asDouble("sdt")} / ${Duck.asDouble("m")}) /" +
+      s" ((${Duck.asDouble("m")} - 1.0) * ${Duck.asDouble("m")})))"
     s"""WITH cells AS (
       |  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS m,
       |    SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) // 100 AS y
@@ -7894,10 +7764,6 @@ object AuditQueries {
     */
   val q474MincerZarnowitz: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cells = Tables.orders(s, dir)
       .groupBy(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
       .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
@@ -7917,24 +7783,27 @@ object AuditQueries {
         (col("n") * col("qff") - col("sf") * col("sf")).as("dx"),
         (col("n") * col("qyy") - col("sy") * col("sy")).as("dy"),
         (col("n") * col("qfy") - col("sf") * col("sy")).as("cxy"))
-    def d(c: String) = col(c).cast("double")
-    val sseU = (d("dy") * d("dx") - d("cxy") * d("cxy")) /
-      (d("n") * d("dx"))
-    val fStat = ((d("sser") - sseU) / 2.0) / (sseU / (d("n") - 2.0))
+    val sseU = (asDouble("dy") * asDouble("dx") - asDouble("cxy") *
+      asDouble("cxy")) /
+      (asDouble("n") * asDouble("dx"))
+    val fStat = ((asDouble("sser") - sseU) / 2.0) /
+      (sseU / (asDouble("n") - 2.0))
     mo.select(col("n").cast("long").as("n_forecasts"),
-      expr(sdiv("(sy * dx - cxy * sf) * 1000000", "n * dx")).cast("long")
+      expr(Spark.truncDiv("(sy * dx - cxy * sf) * 1000000", "n * dx"))
+        .cast("long")
         .as("alpha_e6"),
-      expr(sdiv("cxy * 1000000", "dx")).cast("long").as("beta_e6"),
+      expr(Spark.truncDiv("cxy * 1000000", "dx")).cast("long").as("beta_e6"),
       fStat.as("mz_f_d"),
       when(fStat > 3.13, lit("forecast_irrational"))
         .otherwise(lit("rational")).as("verdict_5pct"))
   }
 
   val q474Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val sseU = s"((${d("dy")} * ${d("dx")} - ${d("cxy")} * ${d("cxy")})" +
-      s" / (${d("n")} * ${d("dx")}))"
-    val f = s"(((${d("sser")} - $sseU) / 2.0) / ($sseU / (${d("n")}" +
+    val sseU = s"((${Duck.asDouble("dy")} * ${Duck.asDouble("dx")} - " +
+      s"${Duck.asDouble("cxy")} * ${Duck.asDouble("cxy")})" +
+      s" / (${Duck.asDouble("n")} * ${Duck.asDouble("dx")}))"
+    val f = s"(((${Duck.asDouble("sser")} - $sseU) / 2.0) / ($sseU / " +
+      s"(${Duck.asDouble("n")}" +
       s" - 2.0)))"
     s"""WITH cells AS (
       |  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS m,
@@ -7953,11 +7822,9 @@ object AuditQueries {
       |    CAST(COUNT(*) AS HUGEINT) * SUM(f * y) - SUM(f) * SUM(y) AS cxy
       |  FROM pts)
       |SELECT CAST(n AS BIGINT) AS n_forecasts,
-      |  CAST(CASE WHEN sy * dx - cxy * sf >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((sy * dx - cxy * sf) * 1000000) // (n * dx)) AS BIGINT)
+      |  ${Duck.truncDivLong("(sy * dx - cxy * sf) * 1000000", "n * dx")}
       |    AS alpha_e6,
-      |  CAST(CASE WHEN cxy >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(cxy * 1000000) // dx) AS BIGINT) AS beta_e6,
+      |  ${Duck.truncDivLong("cxy * 1000000", "dx")} AS beta_e6,
       |  $f AS mz_f_d,
       |  CASE WHEN $f > 3.13 THEN 'forecast_irrational'
       |    ELSE 'rational' END AS verdict_5pct
@@ -8004,19 +7871,19 @@ object AuditQueries {
         (col("y") - col("y12"))).as("ssn"),
         sum((col("y") - col("y1")).cast(dec) * (col("y") - col("y1")))
           .as("ss1"))
-    def d(c: String) = col(c).cast("double")
-    val py = d("nu") / d("m"); val pf = d("nf") / d("m")
-    val pHat = d("h") / d("m")
+    val py = asDouble("nu") / asDouble("m"); val pf = asDouble("nf") /
+      asDouble("m")
+    val pHat = asDouble("h") / asDouble("m")
     val pStar = py * pf + (lit(1.0) - py) * (lit(1.0) - pf)
-    val vHat = pStar * (lit(1.0) - pStar) / d("m")
+    val vHat = pStar * (lit(1.0) - pStar) / asDouble("m")
     val vStar = (py * 2.0 - 1.0) * (py * 2.0 - 1.0) * pf *
-      (lit(1.0) - pf) / d("m") +
+      (lit(1.0) - pf) / asDouble("m") +
       (pf * 2.0 - 1.0) * (pf * 2.0 - 1.0) * py * (lit(1.0) - py) /
-        d("m") +
+        asDouble("m") +
       py * pf * (lit(1.0) - py) * (lit(1.0) - pf) * 4.0 /
-        (d("m") * d("m"))
+        (asDouble("m") * asDouble("m"))
     val ptZ = (pHat - pStar) / sqrt(vHat - vStar)
-    val u2 = sqrt(d("ssn") / d("ss1"))
+    val u2 = sqrt(asDouble("ssn") / asDouble("ss1"))
     ptFold.crossJoin(broadcast(u2Fold))
       .select(col("m").cast("long").as("n_signs"),
         col("h").cast("long").as("n_hits"),
@@ -8026,18 +7893,17 @@ object AuditQueries {
   }
 
   val q475Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val py = s"(${d("nu")} / ${d("m")})"
-    val pf = s"(${d("nf")} / ${d("m")})"
-    val pHat = s"(${d("h")} / ${d("m")})"
+    val py = s"(${Duck.asDouble("nu")} / ${Duck.asDouble("m")})"
+    val pf = s"(${Duck.asDouble("nf")} / ${Duck.asDouble("m")})"
+    val pHat = s"(${Duck.asDouble("h")} / ${Duck.asDouble("m")})"
     val pStar = s"($py * $pf + (1.0 - $py) * (1.0 - $pf))"
-    val vHat = s"($pStar * (1.0 - $pStar) / ${d("m")})"
+    val vHat = s"($pStar * (1.0 - $pStar) / ${Duck.asDouble("m")})"
     val vStar = s"(($py * 2.0 - 1.0) * ($py * 2.0 - 1.0) * $pf *" +
-      s" (1.0 - $pf) / ${d("m")} + ($pf * 2.0 - 1.0) * ($pf * 2.0 - 1.0)" +
-      s" * $py * (1.0 - $py) / ${d("m")} + $py * $pf * (1.0 - $py) *" +
-      s" (1.0 - $pf) * 4.0 / (${d("m")} * ${d("m")}))"
+      s" (1.0 - $pf) / ${Duck.asDouble("m")} + ($pf * 2.0 - 1.0) * ($pf * 2.0 - 1.0)" +
+      s" * $py * (1.0 - $py) / ${Duck.asDouble("m")} + $py * $pf * (1.0 - $py) *" +
+      s" (1.0 - $pf) * 4.0 / (${Duck.asDouble("m")} * ${Duck.asDouble("m")}))"
     val ptZ = s"(($pHat - $pStar) / sqrt($vHat - $vStar))"
-    val u2 = s"sqrt(${d("ssn")} / ${d("ss1")})"
+    val u2 = s"sqrt(${Duck.asDouble("ssn")} / ${Duck.asDouble("ss1")})"
     s"""WITH cells AS (
       |  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS m,
       |    SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) // 100 AS y
@@ -8220,8 +8086,6 @@ object AuditQueries {
     */
   val q477Quade: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val cells = Tables.orders(s, dir)
       .groupBy(expr("month(o_orderdate)").cast("long").as("mo"),
         expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)").as("g"))
@@ -8243,12 +8107,12 @@ object AuditQueries {
       .crossJoin(broadcast(byTreat.agg(
         sum(col("sj") * col("sj")).as("bsum"),
         count(lit(1)).cast(dec).as("k"))))
-      .withColumn("b", expr(fdiv("cells", "k")))
+      .withColumn("b", expr(Spark.truncDiv("cells", "k")))
     fold.select(col("b").cast("long").as("n_blocks"),
       col("k").cast("long").as("n_treatments"),
-      expr(fdiv("(b - 1) * bsum * 1000000", "b * a - bsum"))
+      expr(Spark.truncDiv("(b - 1) * bsum * 1000000", "b * a - bsum"))
         .cast("long").as("quade_f_e6"),
-      when(expr(fdiv("(b - 1) * bsum * 1000000", "b * a - bsum")) >
+      when(expr(Spark.truncDiv("(b - 1) * bsum * 1000000", "b * a - bsum")) >
         2580000L, lit("priorities_differ"))
         .otherwise(lit("homogeneous")).as("verdict_5pct"))
   }
@@ -8309,8 +8173,6 @@ object AuditQueries {
     */
   val q478DistanceCorrelation: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val cells = Tables.lineitem(s, dir)
       .groupBy(expr("CAST(ROUND(l_quantity) AS BIGINT)").as("x"),
         expr("CAST(ROUND(l_discount * 100) AS BIGINT)").as("y"))
@@ -8328,8 +8190,8 @@ object AuditQueries {
         sum(col("nb").cast(dec) * abs(col("ya") - col("yb"))).as("say"))
       .crossJoin(broadcast(nTot))
       .select(col("xa"), col("ya"),
-        expr(fdiv("sax * 1000000", "nn")).as("abar"),
-        expr(fdiv("say * 1000000", "nn")).as("bbar"))
+        expr(Spark.truncDiv("sax * 1000000", "nn")).as("abar"),
+        expr(Spark.truncDiv("say * 1000000", "nn")).as("bbar"))
       .localCheckpoint()
     val grand2 = rowm.join(cells, col("xa") === col("x") &&
       col("ya") === col("y"))
@@ -8339,8 +8201,8 @@ object AuditQueries {
         sum(col("n").cast(dec) * col("abar")).as("sna"),
         sum(col("n").cast(dec) * col("bbar")).as("snb"))
       .select(col("nn"),
-        expr(fdiv("sna", "nn")).as("agbar"),
-        expr(fdiv("snb", "nn")).as("bgbar"))
+        expr(Spark.truncDiv("sna", "nn")).as("agbar"),
+        expr(Spark.truncDiv("snb", "nn")).as("bgbar"))
     val la = rowm.select(col("xa"), col("ya"), col("abar").as("abar_a"),
       col("bbar").as("bbar_a"))
     val lb = rowm.select(col("xa").as("xb"), col("ya").as("yb"),
@@ -8357,16 +8219,15 @@ object AuditQueries {
       sum(col("w") * col("ac") * col("bc")).as("vxy"),
       sum(col("w") * col("ac") * col("ac")).as("vxx"),
       sum(col("w") * col("bc") * col("bc")).as("vyy"))
-    def d(c: String) = col(c).cast("double")
-    val dcor = d("vxy") / sqrt(d("vxx") * d("vyy"))
+    val dcor = asDouble("vxy") / sqrt(asDouble("vxx") * asDouble("vyy"))
     folds.crossJoin(broadcast(nTot))
       .select(col("nn").cast("long").as("n_lines"),
         dcor.as("dcor_d"),
-        (d("vxy") / (d("nn") * d("nn") * 1e12)).as("dcov2_d"))
+        (asDouble("vxy") / (asDouble("nn") * asDouble("nn") *
+          1e12)).as("dcov2_d"))
   }
 
-  val q478Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
+  val q478Sql: String =
     s"""WITH cells AS (
       |  SELECT CAST(ROUND(l_quantity) AS BIGINT) AS x,
       |    CAST(ROUND(l_discount * 100) AS BIGINT) AS y,
@@ -8405,10 +8266,11 @@ object AuditQueries {
       |    SUM(w * bc * bc) AS vyy
       |  FROM paired)
       |SELECT CAST(nn AS BIGINT) AS n_lines,
-      |  (${d("vxy")} / sqrt(${d("vxx")} * ${d("vyy")})) AS dcor_d,
-      |  (${d("vxy")} / (${d("nn")} * ${d("nn")} * 1e12)) AS dcov2_d
+      |  (${Duck.asDouble("vxy")} / sqrt(${Duck.asDouble("vxx")} *
+      |    ${Duck.asDouble("vyy")})) AS dcor_d,
+      |  (${Duck.asDouble("vxy")} / (${Duck.asDouble("nn")} *
+      |    ${Duck.asDouble("nn")} * 1e12)) AS dcov2_d
       |FROM folds CROSS JOIN nt""".stripMargin
-  }
 
   // ------ q479: PERMANOVA over the Bray–Curtis nation matrix
 
@@ -8430,8 +8292,6 @@ object AuditQueries {
     */
   val q479Permanova: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val d1 = brayCurtisPairs(s, dir)
       .select(col("na"), col("nb"),
         (col("bc_e6").cast(dec) * col("bc_e6")).as("d2"))
@@ -8472,16 +8332,15 @@ object AuditQueries {
       .join(broadcast(nG.select(col("rg").as("ra"), col("nr"))),
         Seq("ra"))
       .groupBy(col("b"))
-      .agg(sum(expr(fdiv("sd2 * 1000000", "nr"))).as("w"))
+      .agg(sum(expr(Spark.truncDiv("sd2 * 1000000", "nr"))).as("w"))
       .localCheckpoint()
     val tot = d1.crossJoin(broadcast(nAll))
       .agg(first(col("n")).cast(dec).as("n"),
         first(col("g")).cast(dec).as("g"),
-        expr(fdiv("SUM(d2) * 1000000", "first(n)")).as("t"))
+        expr(Spark.truncDiv("SUM(d2) * 1000000", "first(n)")).as("t"))
     val obs = within.filter(col("b") === 0L).select(col("w").as("w_obs"))
-    def d(c: String) = col(c).cast("double")
-    val fStat = ((d("t") - d("w_obs")) / (d("g") - 1.0)) /
-      (d("w_obs") / (d("n") - d("g")))
+    val fStat = ((asDouble("t") - asDouble("w_obs")) / (asDouble("g") - 1.0)) /
+      (asDouble("w_obs") / (asDouble("n") - asDouble("g")))
     within.filter(col("b") > 0L).crossJoin(broadcast(obs))
       .agg(count(lit(1)).as("n_perm"),
         sum(when(col("w") <= col("w_obs"), 1L).otherwise(0L)).as("n_le"),
@@ -8496,9 +8355,9 @@ object AuditQueries {
   }
 
   val q479Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val fStat = s"(((${d("t")} - ${d("w_obs")}) / (${d("g")} - 1.0))" +
-      s" / (${d("w_obs")} / (${d("n")} - ${d("g")})))"
+    val fStat = s"(((${Duck.asDouble("t")} - ${Duck.asDouble("w_obs")}) / " +
+      s"(${Duck.asDouble("g")} - 1.0))" +
+      s" / (${Duck.asDouble("w_obs")} / (${Duck.asDouble("n")} - ${Duck.asDouble("g")})))"
     s"""WITH $BrayCurtisCtes,
       |d1 AS (
       |  SELECT na, nb, CAST(bc_e6 AS HUGEINT) * bc_e6 AS d2 FROM bc),
@@ -8666,7 +8525,6 @@ object AuditQueries {
       .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))" +
         " div COUNT(*)").as("y"))
       .localCheckpoint()
-    def d(c: String) = col(c).cast("double")
     var active = panel
     var outRows: Seq[DataFrame] = Seq.empty
     for (k <- 1 to 3) {
@@ -8677,9 +8535,10 @@ object AuditQueries {
         .withColumn("dev",
           abs(col("y").cast(dec) * col("n") - col("sy")))
         .orderBy(col("dev").desc, col("nat")).limit(1)
-      val sD = sqrt((d("qyy") - d("sy") * d("sy") / d("n")) /
-        (d("n") - 1.0))
-      val rD = (d("dev") / d("n")) / sD
+      val sD = sqrt((asDouble("qyy") - asDouble("sy") * asDouble("sy") /
+        asDouble("n")) /
+        (asDouble("n") - 1.0))
+      val rD = (asDouble("dev") / asDouble("n")) / sD
       val lam = EsdLambdas(k - 1)
       outRows = outRows :+ cand.select(lit(k.toLong).as("round"),
         col("nat").as("nation"), col("y").as("aov"),
@@ -8695,11 +8554,11 @@ object AuditQueries {
   }
 
   val q481Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     def round(k: Int, from: String): String = {
       val lam = EsdLambdas(k - 1)
-      val sD = s"sqrt((${d("qyy")} - ${d("sy")} * ${d("sy")} /" +
-        s" ${d("n")}) / (${d("n")} - 1.0))"
+      val sD = s"sqrt((${Duck.asDouble("qyy")} - ${Duck.asDouble("sy")} * " +
+        s"${Duck.asDouble("sy")} /" +
+        s" ${Duck.asDouble("n")}) / (${Duck.asDouble("n")} - 1.0))"
       s"""mo$k AS (
          |  SELECT CAST(COUNT(*) AS HUGEINT) AS n,
          |    CAST(SUM(y) AS HUGEINT) AS sy,
@@ -8713,9 +8572,11 @@ object AuditQueries {
          |  ORDER BY dev DESC, a.nat LIMIT 1),
          |out$k AS (
          |  SELECT round, nat AS nation, y AS aov,
-         |    ((${d("dev")} / ${d("n")}) / $sD) AS r_stat_d,
+         |    ((${Duck.asDouble("dev")} / ${Duck.asDouble("n")}) / $sD) AS
+         |      r_stat_d,
          |    CAST('$lam' AS DOUBLE) AS lambda_d,
-         |    CASE WHEN (${d("dev")} / ${d("n")}) / $sD > $lam
+         |    CASE WHEN (${Duck.asDouble("dev")} / ${Duck.asDouble("n")}) / $sD
+         |      > $lam
          |      THEN 1 ELSE 0 END AS is_outlier
          |  FROM cand$k),
          |act${k + 1} AS (
@@ -8895,17 +8756,18 @@ object AuditQueries {
             .as(s"ws$grp"))
     }
     val f1 = groupFold(1L); val f0 = groupFold(0L)
-    def d(c: String) = col(c).cast("double")
-    def h(g: String, n: String) = d(n) - d(g) * 2.0
-    val tm1 = d("mid1") / h("g1", "n1")
-    val tm0 = d("mid0") / h("g0", "n0")
-    val sw1 = (d("wss1") - d("ws1") * d("ws1") / d("n1")) /
-      (d("n1") - 1.0)
-    val sw0 = (d("wss0") - d("ws0") * d("ws0") / d("n0")) /
-      (d("n0") - 1.0)
-    val d1 = sw1 * (d("n1") - 1.0) /
+    def h(g: String, n: String) = asDouble(n) - asDouble(g) * 2.0
+    val tm1 = asDouble("mid1") / h("g1", "n1")
+    val tm0 = asDouble("mid0") / h("g0", "n0")
+    val sw1 = (asDouble("wss1") - asDouble("ws1") * asDouble("ws1") /
+      asDouble("n1")) /
+      (asDouble("n1") - 1.0)
+    val sw0 = (asDouble("wss0") - asDouble("ws0") * asDouble("ws0") /
+      asDouble("n0")) /
+      (asDouble("n0") - 1.0)
+    val d1 = sw1 * (asDouble("n1") - 1.0) /
       (h("g1", "n1") * (h("g1", "n1") - 1.0))
-    val d0 = sw0 * (d("n0") - 1.0) /
+    val d0 = sw0 * (asDouble("n0") - 1.0) /
       (h("g0", "n0") * (h("g0", "n0") - 1.0))
     val t = (tm1 - tm0) / sqrt(d1 + d0)
     f1.crossJoin(broadcast(f0))
@@ -8919,8 +8781,7 @@ object AuditQueries {
   }
 
   val q483Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    def h(g: String, n: String) = s"(${d(n)} - ${d(g)} * 2.0)"
+    def h(g: String, n: String) = s"(${Duck.asDouble(n)} - ${Duck.asDouble(g)} * 2.0)"
     def gf(grp: Int) =
       s"""cum$grp AS (
          |  SELECT v, n,
@@ -8955,15 +8816,17 @@ object AuditQueries {
          |      + ANY_VALUE(CAST(trim AS HUGEINT)) * ANY_VALUE(b.vhi)
          |      AS ws$grp
          |  FROM cum${grp}t CROSS JOIN bounds$grp b)""".stripMargin
-    val tm1 = s"(${d("mid1")} / ${h("g1", "n1")})"
-    val tm0 = s"(${d("mid0")} / ${h("g0", "n0")})"
-    val sw1 = s"((${d("wss1")} - ${d("ws1")} * ${d("ws1")} /" +
-      s" ${d("n1")}) / (${d("n1")} - 1.0))"
-    val sw0 = s"((${d("wss0")} - ${d("ws0")} * ${d("ws0")} /" +
-      s" ${d("n0")}) / (${d("n0")} - 1.0))"
-    val d1 = s"($sw1 * (${d("n1")} - 1.0) / (${h("g1", "n1")} *" +
+    val tm1 = s"(${Duck.asDouble("mid1")} / ${h("g1", "n1")})"
+    val tm0 = s"(${Duck.asDouble("mid0")} / ${h("g0", "n0")})"
+    val sw1 = s"((${Duck.asDouble("wss1")} - ${Duck.asDouble("ws1")} * " +
+      s"${Duck.asDouble("ws1")} /" +
+      s" ${Duck.asDouble("n1")}) / (${Duck.asDouble("n1")} - 1.0))"
+    val sw0 = s"((${Duck.asDouble("wss0")} - ${Duck.asDouble("ws0")} * " +
+      s"${Duck.asDouble("ws0")} /" +
+      s" ${Duck.asDouble("n0")}) / (${Duck.asDouble("n0")} - 1.0))"
+    val d1 = s"($sw1 * (${Duck.asDouble("n1")} - 1.0) / (${h("g1", "n1")} *" +
       s" (${h("g1", "n1")} - 1.0)))"
-    val d0 = s"($sw0 * (${d("n0")} - 1.0) / (${h("g0", "n0")} *" +
+    val d0 = s"($sw0 * (${Duck.asDouble("n0")} - 1.0) / (${h("g0", "n0")} *" +
       s" (${h("g0", "n0")} - 1.0)))"
     val t = s"(($tm1 - $tm0) / sqrt($d1 + $d0))"
     s"""WITH li AS (
@@ -9005,8 +8868,6 @@ object AuditQueries {
     */
   val q388TwoWayAnova: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir)
       .select(col("o_orderpriority").as("a"), col("o_orderstatus").as("b"),
         cents(col("o_totalprice")).as("c"))
@@ -9018,34 +8879,35 @@ object AuditQueries {
       sum(col("ss")).as("sst"),
       countDistinct(col("a")).cast(dec).as("ka"),
       countDistinct(col("b")).cast(dec).as("kb"))
-    val tCells = cells.agg(sum(expr(fdiv("s * s", "n"))).as("tc"))
+    val tCells = cells.agg(sum(expr(Spark.truncDiv("s * s", "n"))).as("tc"))
     val tA = cells.groupBy(col("a"))
       .agg(sum(col("n")).as("n"), sum(col("s")).as("s"))
-      .agg(sum(expr(fdiv("s * s", "n"))).as("ta"))
+      .agg(sum(expr(Spark.truncDiv("s * s", "n"))).as("ta"))
     val tB = cells.groupBy(col("b"))
       .agg(sum(col("n")).as("n"), sum(col("s")).as("s"))
-      .agg(sum(expr(fdiv("s * s", "n"))).as("tb"))
+      .agg(sum(expr(Spark.truncDiv("s * s", "n"))).as("tb"))
     grand.crossJoin(broadcast(tCells)).crossJoin(broadcast(tA))
       .crossJoin(broadcast(tB))
       .select(col("nn"), col("ka"), col("kb"),
-        (col("ta") - expr(fdiv("st * st", "nn"))).as("ss_a"),
-        (col("tb") - expr(fdiv("st * st", "nn"))).as("ss_b"),
-        (col("tc") - expr(fdiv("st * st", "nn"))).as("ss_cells"),
+        (col("ta") - expr(Spark.truncDiv("st * st", "nn"))).as("ss_a"),
+        (col("tb") - expr(Spark.truncDiv("st * st", "nn"))).as("ss_b"),
+        (col("tc") - expr(Spark.truncDiv("st * st", "nn"))).as("ss_cells"),
         (col("sst") - col("tc")).as("ss_w"))
       .select(col("nn").cast("long").as("n_rows"),
-        expr(fdiv("ss_a", "ka - 1")).cast("long").as("ms_a_c2"),
-        expr(fdiv("ss_b", "kb - 1")).cast("long").as("ms_b_c2"),
-        expr(fdiv("ss_cells - ss_a - ss_b", "(ka - 1) * (kb - 1)"))
+        expr(Spark.truncDiv("ss_a", "ka - 1")).cast("long").as("ms_a_c2"),
+        expr(Spark.truncDiv("ss_b", "kb - 1")).cast("long").as("ms_b_c2"),
+        expr(Spark.truncDiv("ss_cells - ss_a - ss_b", "(ka - 1) * (kb - 1)"))
           .cast("long").as("ms_ab_c2"),
-        expr(fdiv("ss_w", "nn - ka * kb")).cast("long").as("ms_w_c2"),
-        (expr(fdiv("ss_a", "ka - 1")).cast("double") /
-          expr(fdiv("ss_w", "nn - ka * kb")).cast("double")).as("f_a_d"),
-        (expr(fdiv("ss_b", "kb - 1")).cast("double") /
-          expr(fdiv("ss_w", "nn - ka * kb")).cast("double")).as("f_b_d"))
+        expr(Spark.truncDiv("ss_w", "nn - ka * kb")).cast("long").as("ms_w_c2"),
+        (expr(Spark.truncDiv("ss_a", "ka - 1")).cast("double") /
+          expr(Spark.truncDiv("ss_w", "nn - ka * kb")).cast("double")).as(
+            "f_a_d"),
+        (expr(Spark.truncDiv("ss_b", "kb - 1")).cast("double") /
+          expr(Spark.truncDiv("ss_w", "nn - ka * kb")).cast("double")).as(
+            "f_b_d"))
   }
 
-  val q388Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
+  val q388Sql: String =
     s"""WITH o AS (
       |  SELECT o_orderpriority AS a, o_orderstatus AS b,
       |    CAST(ROUND(o_totalprice*100) AS BIGINT) AS c
@@ -9077,10 +8939,11 @@ object AuditQueries {
       |  CAST((ss_cells - ss_a - ss_b) // ((ka - 1) * (kb - 1)) AS BIGINT)
       |    AS ms_ab_c2,
       |  CAST(ss_w // (nn - ka * kb) AS BIGINT) AS ms_w_c2,
-      |  ${d("ss_a // (ka - 1)")} / ${d("ss_w // (nn - ka * kb)")} AS f_a_d,
-      |  ${d("ss_b // (kb - 1)")} / ${d("ss_w // (nn - ka * kb)")} AS f_b_d
+      |  ${Duck.asDouble("ss_a // (ka - 1)")} /
+      |    ${Duck.asDouble("ss_w // (nn - ka * kb)")} AS f_a_d,
+      |  ${Duck.asDouble("ss_b // (kb - 1)")} /
+      |    ${Duck.asDouble("ss_w // (nn - ka * kb)")} AS f_b_d
       |FROM sss""".stripMargin
-  }
 
   // --------------- q390: birthday-bound hash-collision audit
 
@@ -9101,21 +8964,21 @@ object AuditQueries {
     */
   val q390HashBirthday: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val h = graft.functions.Text.portableHash(col("o_orderkey").cast("string"))
     val buckets = Tables.orders(s, dir)
       .select((h % BirthdayM).as("m"))
       .groupBy(col("m")).agg(count(lit(1)).as("c"))
     buckets.agg(sum(col("c")).cast(dec).as("n"),
         count(lit(1)).as("n_buckets"),
-        sum(expr(fdiv("CAST(c AS DECIMAL(38,0)) * (c - 1)", "2"))).as("obs"))
+        sum(expr(Spark.truncDiv("CAST(c AS DECIMAL(38,0)) * (c - 1)",
+          "2"))).as("obs"))
       .select(col("n").cast("long").as("n_keys"),
         col("n_buckets").cast("long").as("n_buckets"),
         col("obs").cast("long").as("obs_pairs"),
-        expr(fdiv("n * (n - 1) * 1000000", s"2 * $BirthdayM")).cast("long")
+        expr(Spark.truncDiv("n * (n - 1) * 1000000",
+          s"2 * $BirthdayM")).cast("long")
           .as("expected_pairs_e6"),
-        expr(fdiv(s"obs * 2 * $BirthdayM * 1000000", "n * (n - 1)"))
+        expr(Spark.truncDiv(s"obs * 2 * $BirthdayM * 1000000", "n * (n - 1)"))
           .cast("long").as("ratio_e6"))
   }
 
@@ -9159,7 +9022,6 @@ object AuditQueries {
     * two TakeOrdered top-Ks — never a global sort.
     */
   val q383TrendingParts: Q = (s, dir) => {
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
     val li = Tables.lineitem(s, dir)
       .select(col("l_partkey").as("part"),
         expr("unix_millis(l_shipdate) div 86400000").as("day"))
@@ -9170,7 +9032,8 @@ object AuditQueries {
       .agg(sum(when(col("day") < col("midday"), 1L).otherwise(0L)).as("c0"),
         sum(when(col("day") >= col("midday"), 1L).otherwise(0L)).as("c1"))
       .select(col("part"), col("c0"), col("c1"),
-        (expr(l2("c1 + 1")) - expr(l2("c0 + 1"))).as("score_e6"))
+        (expr(Spark.log2e6("c1 + 1")) - expr(Spark.log2e6("c0 + 1"))).as(
+          "score_e6"))
       .localCheckpoint()
     val up = wide.orderBy(col("score_e6").desc, col("part"))
       .limit(TrendTopK).withColumn("direction", lit("up"))
@@ -9182,8 +9045,7 @@ object AuditQueries {
       .orderBy(col("direction").desc, col("score_e6").desc, col("part"))
   }
 
-  val q383Sql: String = {
-    def l2(x: String) = graft.functions.Text.log2e6DuckSql(x)
+  val q383Sql: String =
     s"""WITH li AS (
       |  SELECT l_partkey AS part,
       |    CAST(epoch_ms(l_shipdate) AS BIGINT) // 86400000 AS day
@@ -9198,7 +9060,7 @@ object AuditQueries {
       |  FROM li CROSS JOIN mid GROUP BY part),
       |scored AS (
       |  SELECT part, c0, c1,
-      |    ${l2("c1 + 1")} - ${l2("c0 + 1")} AS score_e6
+      |    ${Duck.log2e6("c1 + 1")} - ${Duck.log2e6("c0 + 1")} AS score_e6
       |  FROM wide),
       |up AS (SELECT 'up' AS direction, part, c0, c1, score_e6
       |  FROM scored ORDER BY score_e6 DESC, part LIMIT $TrendTopK),
@@ -9206,7 +9068,6 @@ object AuditQueries {
       |  FROM scored ORDER BY score_e6 ASC, part LIMIT $TrendTopK)
       |SELECT * FROM (SELECT * FROM up UNION ALL SELECT * FROM down)
       |ORDER BY direction DESC, score_e6 DESC, part""".stripMargin
-  }
 
   // ------------ q384: rank-biased overlap of pre/post leaderboards
 
@@ -9321,11 +9182,6 @@ object AuditQueries {
     */
   val q381Lmdi: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val li = Tables.lineitem(s, dir)
       .select(col("l_returnflag").as("flag"),
         expr("unix_millis(l_shipdate) div 86400000").as("day"),
@@ -9343,34 +9199,34 @@ object AuditQueries {
         .select(col("flag"), col("vv").as("v0"), col("qq").as("q0")),
         Seq("flag"))
       // ln ratios in e6 nats: ln2 * (log2 a - log2 b), single-term args
-      .withColumn("lnv", expr(sdiv(
-        s"(${l2("CAST(v1 AS BIGINT)")} - ${l2("CAST(v0 AS BIGINT)")}) * 693147",
+      .withColumn("lnv", expr(Spark.truncDiv(
+        s"(${Spark.log2e6("CAST(v1 AS BIGINT)")} - " +
+          s"${Spark.log2e6("CAST(v0 AS BIGINT)")}) * 693147",
         "1000000")))
-      .withColumn("lnq", expr(sdiv(
-        s"(${l2("CAST(q1 AS BIGINT)")} - ${l2("CAST(q0 AS BIGINT)")}) * 693147",
+      .withColumn("lnq", expr(Spark.truncDiv(
+        s"(${Spark.log2e6("CAST(q1 AS BIGINT)")} - " +
+          s"${Spark.log2e6("CAST(q0 AS BIGINT)")}) * 693147",
         "1000000")))
       .withColumn("lnp", col("lnv") - col("lnq"))
       // log-mean weight L(v1, v0), e0 cents; LUT resolution can zero the
       // denominator while v1 != v0 — take the a = b limit there
       .withColumn("lw", when(col("lnv") === 0L, col("v1")).otherwise(
-        expr(sdiv("(v1 - v0) * 1000000", "lnv"))))
+        expr(Spark.truncDiv("(v1 - v0) * 1000000", "lnv"))))
     wide.select(col("flag"),
         col("v0").cast("long").as("v0_c"), col("v1").cast("long").as("v1_c"),
         (col("v1") - col("v0")).cast("long").as("dv_c"),
-        expr(sdiv("lw * lnq", "1000000")).cast("long").as("eff_qty_c"),
-        expr(sdiv("lw * lnp", "1000000")).cast("long").as("eff_price_c"),
+        expr(Spark.truncDiv("lw * lnq", "1000000")).cast("long").as(
+          "eff_qty_c"),
+        expr(Spark.truncDiv("lw * lnp", "1000000")).cast("long").as(
+          "eff_price_c"),
         ((col("v1") - col("v0")) -
-          expr(sdiv("lw * lnq", "1000000")).cast(dec) -
-          expr(sdiv("lw * lnp", "1000000")).cast(dec)).cast("long")
+          expr(Spark.truncDiv("lw * lnq", "1000000")).cast(dec) -
+          expr(Spark.truncDiv("lw * lnp", "1000000")).cast(dec)).cast("long")
           .as("residual_c"))
       .orderBy(col("flag"))
   }
 
-  val q381Sql: String = {
-    def l2(x: String) = graft.functions.Text.log2e6DuckSql(x)
-    def sd(num: String, den: String) =
-      s"""CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | (ABS($num) // ($den))""".stripMargin.replace("\n", " ")
+  val q381Sql: String =
     s"""WITH li AS (
       |  SELECT l_returnflag AS flag,
       |    CAST(epoch_ms(l_shipdate) AS BIGINT) // 86400000 AS day,
@@ -9388,23 +9244,28 @@ object AuditQueries {
       |    AND a.t = 1 AND b.t = 0),
       |lns AS (
       |  SELECT flag, v0, v1,
-      |    ${sd(s"(${l2("CAST(v1 AS BIGINT)")} - ${l2("CAST(v0 AS BIGINT)")}) * 693147", "1000000")} AS lnv,
-      |    ${sd(s"(${l2("CAST(q1 AS BIGINT)")} - ${l2("CAST(q0 AS BIGINT)")}) * 693147", "1000000")} AS lnq
+      |    ${Duck.truncDiv(
+               s"(${Duck.log2e6("CAST(v1 AS BIGINT)")} - " +
+                 s"${Duck.log2e6("CAST(v0 AS BIGINT)")}) * 693147",
+               "1000000")} AS lnv,
+      |    ${Duck.truncDiv(
+               s"(${Duck.log2e6("CAST(q1 AS BIGINT)")} - " +
+                 s"${Duck.log2e6("CAST(q0 AS BIGINT)")}) * 693147",
+               "1000000")} AS lnq
       |  FROM wide),
       |lw AS (
       |  SELECT flag, v0, v1, lnq, lnv - lnq AS lnp,
       |    CASE WHEN lnv = 0 THEN v1
-      |      ELSE ${sd("(v1 - v0) * 1000000", "lnv")} END AS lw
+      |      ELSE ${Duck.truncDiv("(v1 - v0) * 1000000", "lnv")} END AS lw
       |  FROM lns)
       |SELECT flag, CAST(v0 AS BIGINT) AS v0_c, CAST(v1 AS BIGINT) AS v1_c,
       |  CAST(v1 - v0 AS BIGINT) AS dv_c,
-      |  CAST(${sd("lw * lnq", "1000000")} AS BIGINT) AS eff_qty_c,
-      |  CAST(${sd("lw * lnp", "1000000")} AS BIGINT) AS eff_price_c,
-      |  CAST((v1 - v0) - (${sd("lw * lnq", "1000000")})
-      |    - (${sd("lw * lnp", "1000000")}) AS BIGINT) AS residual_c
+      |  CAST(${Duck.truncDiv("lw * lnq", "1000000")} AS BIGINT) AS eff_qty_c,
+      |  CAST(${Duck.truncDiv("lw * lnp", "1000000")} AS BIGINT) AS eff_price_c,
+      |  CAST((v1 - v0) - (${Duck.truncDiv("lw * lnq", "1000000")})
+      |    - (${Duck.truncDiv("lw * lnp", "1000000")}) AS BIGINT) AS residual_c
       |FROM lw
       |ORDER BY flag""".stripMargin
-  }
 
   // -------- q382: compaction planner — next-fit-decreasing bin pack
 
@@ -9498,8 +9359,6 @@ object AuditQueries {
   val q376Wasserstein: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir)
       .filter(col("o_orderpriority").isin(MwArmA, MwArmB))
       .select((col("o_orderpriority") === MwArmA).cast("long").as("a"),
@@ -9530,7 +9389,8 @@ object AuditQueries {
       .agg(sum(col("term")).as("st"))
       .select(col("na").cast("long").as("n1"),
         col("nb").cast("long").as("n2"),
-        expr(fdiv(s"st * $W1Bucket", "na * nb")).cast("long").as("w1_c"))
+        expr(Spark.truncDiv(s"st * $W1Bucket", "na * nb"))
+          .cast("long").as("w1_c"))
   }
 
   val q376Sql: String =
@@ -9602,8 +9462,7 @@ object AuditQueries {
       (t1 * t1 * col("nn").cast("double") / den).as("z2_d"))
   }
 
-  val q377Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
+  val q377Sql: String =
     s"""WITH o AS (
       |  SELECT o_orderpriority AS g,
       |    CAST(ROUND(o_totalprice*100) AS BIGINT) AS c
@@ -9621,11 +9480,12 @@ object AuditQueries {
       |      CAST(substr(g, 1, 1) AS BIGINT)) AS HUGEINT) AS sw2n
       |  FROM o CROSS JOIN med)
       |SELECT CAST(nn AS BIGINT) AS n_rows, CAST(aa AS BIGINT) AS n_above,
-      |  ${d("nn * swa - aa * swn")} * ${d("nn * swa - aa * swn")} *
-      |    ${d("nn")} /
-      |    (${d("aa * (nn - aa)")} * ${d("nn * sw2n - swn * swn")}) AS z2_d
+      |  ${Duck.asDouble("nn * swa - aa * swn")} *
+      |    ${Duck.asDouble("nn * swa - aa * swn")} *
+      |    ${Duck.asDouble("nn")} /
+      |    (${Duck.asDouble("aa * (nn - aa)")} *
+      |      ${Duck.asDouble("nn * sw2n - swn * swn")}) AS z2_d
       |FROM folded""".stripMargin
-  }
 
   // ------- q374: rendezvous (HRW) placement audit with node removal
 
@@ -9647,8 +9507,6 @@ object AuditQueries {
     */
   val q374HrwPlacement: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     def score(i: Int) = graft.functions.Text.portableHash(
       concat(col("p_partkey").cast("string"), lit(s":$i")))
     val scored = Tables.part(s, dir).select(
@@ -9677,7 +9535,8 @@ object AuditQueries {
         col("n_after").cast("long").as("n_after"),
         (col("n_after") - col("n_before")).cast("long").as("n_gained"),
         col("n_non7_moved").cast("long").as("n_non7_moved"),
-        expr(fdiv("CAST(n_after - n_before AS DECIMAL(38,0)) * 1000000",
+        expr(Spark.truncDiv(
+          "CAST(n_after - n_before AS DECIMAL(38,0)) * 1000000",
           "n_total")).cast("long").as("gained_share_e6"))
       .orderBy(col("node"))
   }
@@ -9846,13 +9705,6 @@ object AuditQueries {
     */
   val q371PriceElasticity: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val pp = Tables.lineitem(s, dir)
       .groupBy(col("l_partkey"))
       .agg(sum(cents(col("l_extendedprice"))).as("sc"),
@@ -9860,9 +9712,9 @@ object AuditQueries {
         sum(expr("CAST(ROUND(l_quantity) AS BIGINT)")).as("q"))
       .select(
         expr("CAST(" +
-          l2(s"CAST(${fdiv("CAST(sc AS DECIMAL(38,0))", "nl")} AS BIGINT)") +
+          Spark.log2e6(s"CAST(${Spark.truncDiv("CAST(sc AS DECIMAL(38,0))", "nl")} AS BIGINT)") +
           " AS DECIMAL(38,0))").as("x"),
-        expr(s"CAST(${l2("q")} AS DECIMAL(38,0))").as("y"))
+        expr(s"CAST(${Spark.log2e6("q")} AS DECIMAL(38,0))").as("y"))
     val sums = pp.agg(count(lit(1)).cast(dec).as("n"),
       sum(col("x")).as("sx"), sum(col("y")).as("sy"),
       sum(col("x") * col("x")).as("sxx"), sum(col("y") * col("y")).as("syy"),
@@ -9872,15 +9724,15 @@ object AuditQueries {
     val r2 = (c("sxy", "sx", "sy") * c("sxy", "sx", "sy")) /
       (c("sxx", "sx", "sx") * c("syy", "sy", "sy"))
     sums.select(col("n").cast("long").as("n_parts"),
-      expr(sdiv("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx"))
+      expr(Spark.truncDivLong("(n * sxy - sx * sy) * 1000000",
+        "n * sxx - sx * sx"))
         .as("elasticity_e6"),
       r2.as("r2_d"))
   }
 
   val q371Sql: String = {
-    def l2(x: String) = graft.functions.Text.log2e6DuckSql(x)
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    def c(ab: String, a: String, b: String) = d(s"n * $ab - $a * $b")
+    def c(ab: String, a: String, b: String) =
+      Duck.asDouble(s"n * $ab - $a * $b")
     val r2 = s"((${c("sxy", "sx", "sy")} * ${c("sxy", "sx", "sy")}) / " +
       s"(${c("sxx", "sx", "sx")} * ${c("syy", "sy", "sy")}))"
     s"""WITH pp0 AS (
@@ -9890,17 +9742,16 @@ object AuditQueries {
       |    CAST(SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS BIGINT) AS q
       |  FROM lineitem GROUP BY l_partkey),
       |pp AS (
-      |  SELECT CAST(${l2("CAST(avgp AS BIGINT)")} AS HUGEINT) AS x,
-      |    CAST(${l2("q")} AS HUGEINT) AS y
+      |  SELECT CAST(${Duck.log2e6("CAST(avgp AS BIGINT)")} AS HUGEINT) AS x,
+      |    CAST(${Duck.log2e6("q")} AS HUGEINT) AS y
       |  FROM pp0),
       |sums AS (
       |  SELECT CAST(COUNT(*) AS HUGEINT) AS n, SUM(x) AS sx, SUM(y) AS sy,
       |    SUM(x * x) AS sxx, SUM(y * y) AS syy, SUM(x * y) AS sxy
       |  FROM pp)
       |SELECT CAST(n AS BIGINT) AS n_parts,
-      |  CAST(CASE WHEN n * sxy - sx * sy >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((n * sxy - sx * sy) * 1000000) // (n * sxx - sx * sx))
-      |    AS BIGINT) AS elasticity_e6,
+      |  ${Duck.truncDivLong("(n * sxy - sx * sy) * 1000000",
+             "n * sxx - sx * sx")} AS elasticity_e6,
       |  $r2 AS r2_d
       |FROM sums""".stripMargin
   }
@@ -9919,8 +9770,6 @@ object AuditQueries {
     */
   val q372LastDigitAudit: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val cells = Tables.orders(s, dir)
       .select((cents(col("o_totalprice")) % 100).as("dd"))
       .groupBy(col("dd")).agg(count(lit(1)).as("o"))
@@ -9934,12 +9783,15 @@ object AuditQueries {
       .filter(col("o") === col("mx")).agg(max(col("dd")).as("top_pair"))
     folded.crossJoin(broadcast(top))
       .select(col("n").cast("long").as("n_rows"),
-        expr(fdiv("(100 * so2 - n * n) * 1000000", "n")).cast("long")
+        expr(Spark.truncDiv("(100 * so2 - n * n) * 1000000", "n")).cast("long")
           .as("chi2_e6"),
-        expr(fdiv("c00 * 1000000", "n")).cast("long").as("share_00_e6"),
-        expr(fdiv("c99 * 1000000", "n")).cast("long").as("share_99_e6"),
+        expr(Spark.truncDiv("c00 * 1000000", "n"))
+          .cast("long").as("share_00_e6"),
+        expr(Spark.truncDiv("c99 * 1000000", "n"))
+          .cast("long").as("share_99_e6"),
         col("top_pair").cast("long").as("top_pair"),
-        expr(fdiv("mx * 1000000", "n")).cast("long").as("top_share_e6"))
+        expr(Spark.truncDiv("mx * 1000000", "n"))
+          .cast("long").as("top_share_e6"))
   }
 
   val q372Sql: String =
@@ -9980,19 +9832,13 @@ object AuditQueries {
     */
   val q368TukeyPairs: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val byG = Tables.orders(s, dir)
       .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("c"))
       .groupBy(col("g"))
       .agg(count(lit(1)).cast(dec).as("n"), sum(col("c")).cast(dec).as("s"),
         sum(col("c").cast(dec) * col("c")).as("ss"))
       .select(col("g"), col("n"), col("s"), col("ss"),
-        expr(fdiv("n * ss - s * s", "n")).as("w"))
+        expr(Spark.truncDiv("n * ss - s * s", "n")).as("w"))
       .localCheckpoint()
     val msw = byG.agg(sum(col("w")).as("sw"), sum(col("n")).as("nn"),
         count(lit(1)).cast(dec).as("k"))
@@ -10007,15 +9853,15 @@ object AuditQueries {
       (col("sb").cast("double") / col("nb").cast("double"))
     pairs.select(col("g_a"), col("g_b"),
         col("na").cast("long").as("n_a"), col("nb").cast("long").as("n_b"),
-        expr(sdiv("(sa * nb - sb * na) * 1000000", "na * nb")).as("diff_e6"),
+        expr(Spark.truncDivLong("(sa * nb - sb * na) * 1000000", "na * nb"))
+          .as("diff_e6"),
         (abs(diffD) / sqrt(col("msw_d") / lit(2.0) *
           (lit(1.0) / col("na").cast("double") +
             lit(1.0) / col("nb").cast("double")))).as("q_stat_d"))
       .orderBy(col("g_a"), col("g_b"))
   }
 
-  val q368Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
+  val q368Sql: String =
     s"""WITH o AS (
       |  SELECT o_orderpriority AS g,
       |    CAST(ROUND(o_totalprice*100) AS BIGINT) AS c
@@ -10027,22 +9873,23 @@ object AuditQueries {
       |  FROM o GROUP BY g),
       |bw AS (SELECT g, n, s, ss, (n * ss - s * s) // n AS w FROM by_g),
       |msw AS (
-      |  SELECT ${d("SUM(w)")} / ${d("SUM(n) - COUNT(*)")} AS msw_d
+      |  SELECT ${Duck.asDouble("SUM(w)")} /
+      |    ${Duck.asDouble("SUM(n) - COUNT(*)")} AS msw_d
       |  FROM bw),
       |pairs AS (
       |  SELECT a.g AS g_a, b.g AS g_b, a.n AS na, b.n AS nb,
       |    a.s AS sa, b.s AS sb
       |  FROM bw a JOIN bw b ON a.g < b.g)
       |SELECT g_a, g_b, CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-      |  CAST(CASE WHEN sa * nb - sb * na >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((sa * nb - sb * na) * 1000000) // (na * nb)) AS BIGINT)
+      |  ${Duck.truncDivLong("(sa * nb - sb * na) * 1000000", "na * nb")}
       |    AS diff_e6,
-      |  ABS(${d("sa")} / ${d("na")} - ${d("sb")} / ${d("nb")}) /
-      |    sqrt(msw_d / 2.0 * (1.0 / ${d("na")} + 1.0 / ${d("nb")}))
+      |  ABS(${Duck.asDouble("sa")} / ${Duck.asDouble("na")} -
+      |    ${Duck.asDouble("sb")} / ${Duck.asDouble("nb")}) /
+      |    sqrt(msw_d / 2.0 * (1.0 / ${Duck.asDouble("na")} + 1.0 /
+      |      ${Duck.asDouble("nb")}))
       |    AS q_stat_d
       |FROM pairs CROSS JOIN msw
       |ORDER BY g_a, g_b""".stripMargin
-  }
 
   // ------- q354: empirical-Bayes beta-binomial shrinkage of rates
 
@@ -10063,29 +9910,29 @@ object AuditQueries {
     */
   val q354EbShrinkage: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val rates = Tables.lineitem(s, dir)
       .groupBy(col("l_partkey"))
       .agg(count(lit(1)).as("n"),
         sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("x"))
       .select(col("l_partkey"), col("n"), col("x"),
-        expr(fdiv("CAST(x AS DECIMAL(38,0)) * 1000000", "n")).as("p"))
+        expr(Spark.truncDiv("CAST(x AS DECIMAL(38,0)) * 1000000", "n")).as("p"))
       .localCheckpoint()
     val mom = rates
       .agg(count(lit(1)).cast(dec).as("cnt"),
         sum(col("p")).as("sp"), sum(col("p") * col("p")).as("spp"))
-      .select(expr(fdiv("sp", "cnt")).as("m_e6"),
-        expr(fdiv("cnt * spp - sp * sp", "cnt * (cnt - 1)")).as("v_e12"))
+      .select(expr(Spark.truncDiv("sp", "cnt")).as("m_e6"),
+        expr(Spark.truncDiv("cnt * spp - sp * sp", "cnt * (cnt - 1)"))
+          .as("v_e12"))
       .select(col("m_e6"),
-        (expr(fdiv("m_e6 * (1000000 - m_e6) * 1000000", "v_e12")) -
+        (expr(Spark.truncDiv("m_e6 * (1000000 - m_e6) * 1000000", "v_e12")) -
           lit(1000000).cast(dec)).as("k_e6"))
       .select(col("m_e6"), col("k_e6"),
-        expr(fdiv("m_e6 * k_e6", "1000000")).as("alpha_e6"))
+        expr(Spark.truncDiv("m_e6 * k_e6", "1000000")).as("alpha_e6"))
     rates.crossJoin(broadcast(mom))
       .select(col("l_partkey").as("part"), col("n"), col("x"),
         col("p").cast("long").as("raw_e6"),
-        expr(fdiv("(CAST(x AS DECIMAL(38,0)) * 1000000 + alpha_e6) * 1000000",
+        expr(Spark.truncDiv(
+          "(CAST(x AS DECIMAL(38,0)) * 1000000 + alpha_e6) * 1000000",
           "CAST(n AS DECIMAL(38,0)) * 1000000 + k_e6")).cast("long")
           .as("shrunk_e6"),
         col("k_e6").cast("long").as("prior_k_e6"))
@@ -10148,8 +9995,6 @@ object AuditQueries {
     */
   val q352CramerVonMises: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir)
       .filter(col("o_orderpriority").isin(MwArmA, MwArmB))
       .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("c"))
@@ -10167,7 +10012,7 @@ object AuditQueries {
         (col("t") * col("a") * col("a") -
           lit(2).cast(dec) * col("a") * col("t") * (col("t") + 1) +
           lit(4).cast(dec) *
-            expr(fdiv("t * (t + 1) * (2 * t + 1)", "6"))).as("u4"),
+            expr(Spark.truncDiv("t * (t + 1) * (2 * t + 1)", "6"))).as("u4"),
         col("t"))
       .groupBy(col("g"))
       .agg(sum(col("u4")).as("u4"), sum(col("t")).as("n_g"))
@@ -10177,9 +10022,9 @@ object AuditQueries {
         max(when(col("g") === MwArmA, col("u4"))).as("u41"),
         max(when(col("g") === MwArmB, col("u4"))).as("u42"))
       .select(col("n").cast("long").as("n1"), col("m").cast("long").as("n2"),
-        (expr(fdiv("u41 * 1000000", "4 * m * (n + m)")) +
-          expr(fdiv("u42 * 1000000", "4 * n * (n + m)")) -
-          expr(fdiv("(4 * n * m - 1) * 1000000", "6 * (n + m)")))
+        (expr(Spark.truncDiv("u41 * 1000000", "4 * m * (n + m)")) +
+          expr(Spark.truncDiv("u42 * 1000000", "4 * n * (n + m)")) -
+          expr(Spark.truncDiv("(4 * n * m - 1) * 1000000", "6 * (n + m)")))
           .cast("long").as("t_e6"))
   }
 
@@ -10244,8 +10089,6 @@ object AuditQueries {
     */
   val q485NeymanAllocation: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val B = SampleBudget
     val o = Tables.orders(s, dir).select(col("o_orderpriority").as("g"),
       expr("CAST(ROUND(o_totalprice*100) AS BIGINT) div 100000").as("x"))
@@ -10255,7 +10098,7 @@ object AuditQueries {
         sum(col("x").cast(dec) * col("x")).as("sxx"))
       .select(col("g"), col("nh").cast("long").as("nh"),
         expr("CAST(FLOOR(SQRT(CAST(" +
-          fdiv("nh * sxx - sx * sx", "10000") +
+          Spark.truncDiv("nh * sxx - sx * sx", "10000") +
           " AS DOUBLE))) AS BIGINT)").as("w"))
       .localCheckpoint()
     val tot = per.agg(sum(col("w")).as("wt"), sum(col("nh")).as("nt"))
@@ -10342,8 +10185,6 @@ object AuditQueries {
     */
   val q486BreslowDay: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir).select(col("o_custkey"),
       expr("CAST(substring(o_orderpriority, 1, 1) AS INT) <= 2")
         .cast("long").as("e"),
@@ -10365,12 +10206,12 @@ object AuditQueries {
         sum((lit(1L) - col("e")) * (lit(1L) - col("y"))).as("d"))
       .localCheckpoint()
     val mh = cells.agg(
-      sum(expr(fdiv("CAST(a AS DECIMAL(38,0)) * d * 1000000",
+      sum(expr(Spark.truncDiv("CAST(a AS DECIMAL(38,0)) * d * 1000000",
         "a + b + cc + d"))).as("num_e6"),
-      sum(expr(fdiv("CAST(b AS DECIMAL(38,0)) * cc * 1000000",
+      sum(expr(Spark.truncDiv("CAST(b AS DECIMAL(38,0)) * cc * 1000000",
         "a + b + cc + d"))).as("den_e6"))
       .select(expr("CASE WHEN den_e6 = 0 THEN NULL ELSE " +
-        fdiv("num_e6 * 1000000", "den_e6") + " END")
+        Spark.truncDiv("num_e6 * 1000000", "den_e6") + " END")
         .cast("long").as("or_e6"))
     val terms = cells.crossJoin(broadcast(mh))
       .withColumn("n", col("a") + col("b") + col("cc") + col("d"))
@@ -10481,12 +10322,7 @@ object AuditQueries {
     * pass → 5-bin rollup → metadata folds.
     */
   val q487WoeIv: Q = (s, dir) => {
-    import graft.functions.Text
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val o = Tables.orders(s, dir).select(col("o_custkey"),
       cents(col("o_totalprice")).as("c"))
     val thr = o.agg(expr("SUM(c) div COUNT(*)").as("t"))
@@ -10504,12 +10340,12 @@ object AuditQueries {
       .withColumn("bx", col("bb") * col("gt"))
       .withColumn("woe_e6", expr(
         "CASE WHEN gx = 0 OR bx = 0 THEN NULL ELSE " +
-          sdiv(s"(${Text.log2e6SparkSql("gx")} - " +
-            s"${Text.log2e6SparkSql("bx")}) * 693147", "1000000") +
+          Spark.truncDiv(s"(${Spark.log2e6("gx")} - " +
+            s"${Spark.log2e6("bx")}) * 693147", "1000000") +
           " END").cast("long"))
       .withColumn("iv_term_e6", expr(
         "CASE WHEN woe_e6 IS NULL THEN NULL ELSE " +
-          sdiv("(gx - bx) * CAST(woe_e6 AS DECIMAL(38,0))",
+          Spark.truncDiv("(gx - bx) * CAST(woe_e6 AS DECIMAL(38,0))",
             "CAST(gt AS DECIMAL(38,0)) * bt") + " END").cast("long"))
       .localCheckpoint()
     val iv = staged.agg(sum(col("iv_term_e6")).as("iv_total_e6"))
@@ -10520,8 +10356,7 @@ object AuditQueries {
       .orderBy(col("segment"))
   }
 
-  val q487Sql: String = {
-    import graft.functions.Text
+  val q487Sql: String =
     s"""WITH o AS (
       |  SELECT o_custkey, CAST(ROUND(o_totalprice*100) AS BIGINT) AS c
       |  FROM orders),
@@ -10540,11 +10375,9 @@ object AuditQueries {
       |woe AS (
       |  SELECT seg, gb, bb, gx, bx, gt, bt,
       |    CASE WHEN gx = 0 OR bx = 0 THEN NULL ELSE
-      |      CAST(CASE WHEN ${Text.log2e6DuckSql("gx")}
-      |          - ${Text.log2e6DuckSql("bx")} >= 0 THEN 1 ELSE -1 END *
-      |        (ABS((${Text.log2e6DuckSql("gx")}
-      |          - ${Text.log2e6DuckSql("bx")}) * 693147) // 1000000)
-      |        AS BIGINT) END AS woe_e6
+      |      ${Duck.truncDivLong(
+                 s"(${Duck.log2e6("gx")} - ${Duck.log2e6("bx")}) * 693147",
+                 "1000000")} END AS woe_e6
       |  FROM staged),
       |terms AS (
       |  SELECT seg, gb, bb, woe_e6,
@@ -10560,7 +10393,6 @@ object AuditQueries {
       |  iv_term_e6, iv_total_e6
       |FROM terms CROSS JOIN iv
       |ORDER BY segment""".stripMargin
-  }
 
   // ------ q488: count-data overdispersion diagnostics
 
@@ -10581,8 +10413,6 @@ object AuditQueries {
     */
   val q488Overdispersion: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val y = Tables.orders(s, dir)
       .groupBy(col("o_custkey")).agg(count(lit(1)).as("y"))
     val m = y.agg(count(lit(1)).cast(dec).as("n"),
@@ -10591,8 +10421,9 @@ object AuditQueries {
       .withColumn("num", col("n") * col("syy") - col("sy") * col("sy"))
     m.select(col("n").cast("long").as("n_customers"),
       col("sy").cast("long").as("n_orders"),
-      expr(fdiv("sy * 1000000", "n")).cast("long").as("mean_y_e6"),
-      expr(fdiv("num * 1000000", "sy")).cast("long").as("disp_index_e6"),
+      expr(Spark.truncDiv("sy * 1000000", "n")).cast("long").as("mean_y_e6"),
+      expr(Spark.truncDiv("num * 1000000", "sy"))
+        .cast("long").as("disp_index_e6"),
       ((col("num").cast("double") / col("sy").cast("double") -
         (col("n").cast("double") - 1.0)) /
         sqrt((col("n").cast("double") - 1.0) * 2.0)).as("z_fisher_d"),
@@ -10670,8 +10501,6 @@ object AuditQueries {
     */
   val q489SampleSize: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val ud = Tables.events(s, dir)
       .select(col("user_id"), expr("unix_millis(ts) div 86400000").as("day"),
         (col("event_type") === "purchase").cast("long").as("p"))
@@ -10687,8 +10516,8 @@ object AuditQueries {
       .withColumn("p0", col("a").cast("double") / col("b").cast("double"))
       .withColumn("p1", col("p0") * (lit(1.0) + col("lift_pct") / 100.0))
       .select(col("lift_pct"),
-        expr(fdiv("a * 1000000", "b")).cast("long").as("p0_e6"),
-        expr(fdiv("a * (100 + lift_pct) * 1000000", "b * 100"))
+        expr(Spark.truncDiv("a * 1000000", "b")).cast("long").as("p0_e6"),
+        expr(Spark.truncDiv("a * (100 + lift_pct) * 1000000", "b * 100"))
           .cast("long").as("p1_e6"),
         expr(s"""CASE WHEN p1 >= 1.0 THEN NULL ELSE
           | CAST(CEIL(($za * SQRT(2.0 * ((p0 + p1) / 2.0)
@@ -10765,8 +10594,6 @@ object AuditQueries {
     */
   val q490BrownForsythe: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir).select(col("o_orderpriority").as("g"),
       expr("CAST(ROUND(o_totalprice*100) AS BIGINT) div 100").as("x"))
     val byV = o.groupBy(col("g"), col("x")).agg(count(lit(1)).as("cnt"))
@@ -10782,25 +10609,28 @@ object AuditQueries {
       .agg(sum(col("cnt")).cast(dec).as("n"),
         sum(col("z").cast(dec) * col("cnt")).as("sz"),
         sum(col("z").cast(dec) * col("z") * col("cnt")).as("szz"))
-      .withColumn("t_g", expr(fdiv("sz * sz * 1000000", "n")))
+      .withColumn("t_g", expr(Spark.truncDiv("sz * sz * 1000000", "n")))
       .localCheckpoint()
     val roll = zRoll.agg(count(lit(1)).cast(dec).as("k"),
       sum(col("n")).as("nn"), sum(col("sz")).as("s_all"),
       sum(col("szz")).as("q_all"), sum(col("t_g")).as("t_all"))
       .select(col("k"), col("nn"),
-        expr(s"CAST(t_all - ${fdiv("s_all * s_all * 1000000", "nn")}" +
+        expr(s"CAST(t_all - ${Spark.truncDiv("s_all * s_all * 1000000", "nn")}" +
           " AS DECIMAL(38,0))").as("ssb_e6"),
         (expr("q_all * 1000000") - col("t_all")).as("ssw_e6"))
       .select(col("k").cast("long").as("k_groups"),
         col("nn").cast("long").as("n_total"),
-        expr("CASE WHEN " + fdiv("ssw_e6", "nn - k") + " = 0 THEN NULL " +
-          "ELSE " + fdiv(fdiv("ssb_e6", "k - 1") + " * 1000000",
-            fdiv("ssw_e6", "nn - k")) + " END").cast("long").as("f_e6"))
+        expr("CASE WHEN " + Spark.truncDiv("ssw_e6", "nn - k") +
+          " = 0 THEN NULL " +
+          "ELSE " + Spark.truncDiv(Spark.truncDiv("ssb_e6", "k - 1") +
+            " * 1000000",
+            Spark.truncDiv("ssw_e6", "nn - k")) +
+              " END").cast("long").as("f_e6"))
     zRoll.crossJoin(broadcast(roll))
       .join(med, "g")
       .select(col("g").as("priority"), col("n").cast("long").as("n_g"),
         col("med").as("median_c2"),
-        expr(fdiv("sz * 1000000", "n")).cast("long").as("zbar_e6"),
+        expr(Spark.truncDiv("sz * 1000000", "n")).cast("long").as("zbar_e6"),
         col("k_groups"), col("n_total"), col("f_e6"))
       .orderBy(col("priority"))
   }
@@ -10868,8 +10698,6 @@ object AuditQueries {
     */
   val q491WinRatio: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val reg = Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_nationkey"))
       .join(broadcast(Tables.nation(s, dir)
@@ -10920,7 +10748,7 @@ object AuditQueries {
         (col("l1") + col("lt")).cast("long").as("losses"),
         col("tt").cast("long").as("ties"),
         expr("CASE WHEN l1 + lt = 0 THEN NULL ELSE " +
-          fdiv("(w1 + gt) * 1000000", "l1 + lt") + " END")
+          Spark.truncDiv("(w1 + gt) * 1000000", "l1 + lt") + " END")
           .cast("long").as("win_ratio_e6"))
   }
 
@@ -10999,12 +10827,7 @@ object AuditQueries {
     * metadata mass joins + 1-row OLS fold.
     */
   val q492GravityModel: Q = (s, dir) => {
-    import graft.functions.Text
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val sup = Tables.supplier(s, dir)
       .select(col("s_suppkey"), col("s_nationkey").as("sn"))
     val cus = Tables.customer(s, dir)
@@ -11024,8 +10847,8 @@ object AuditQueries {
     val pts = flows.join(mOut, "sn").join(mIn, "cn")
       .filter(col("f") >= 1L && col("m") >= 1L && col("w") >= 1L)
       .withColumn("mw", col("m") * col("w"))
-      .select(expr(Text.log2e6SparkSql("mw")).cast(dec).as("x"),
-        expr(Text.log2e6SparkSql("f")).cast(dec).as("y"))
+      .select(expr(Spark.log2e6("mw")).cast(dec).as("x"),
+        expr(Spark.log2e6("f")).cast(dec).as("y"))
     val mo = pts.agg(count(lit(1)).cast(dec).as("n"),
       sum(col("x")).as("sx"), sum(col("y")).as("sy"),
       sum(col("x") * col("x")).as("sxx"),
@@ -11035,22 +10858,17 @@ object AuditQueries {
       (col("n") * col(ab) - col(a) * col(b)).cast("double")
     mo.select(col("n").cast("long").as("n_lanes"),
       expr("CASE WHEN n * sxx - sx * sx = 0 THEN NULL ELSE " +
-        sdiv("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx") +
+        Spark.truncDiv("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx") +
         " END").cast("long").as("beta_e6"),
-      expr(sdiv("sy - " +
+      expr(Spark.truncDiv("sy - " +
         "CASE WHEN n * sxx - sx * sx = 0 THEN 0 ELSE " +
-        sdiv("(n * sxy - sx * sy) * sx", "n * sxx - sx * sx") +
+        Spark.truncDiv("(n * sxy - sx * sy) * sx", "n * sxx - sx * sx") +
         " END", "n")).cast("long").as("alpha_l2e6"),
       ((c("sxy", "sx", "sy") * c("sxy", "sx", "sy")) /
         (c("sxx", "sx", "sx") * c("syy", "sy", "sy"))).as("r2_d"))
   }
 
-  val q492Sql: String = {
-    import graft.functions.Text
-    def sd(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | (ABS($num) // ($den)) AS HUGEINT)""".stripMargin
-        .replace("\n", " ")
+  val q492Sql: String =
     s"""WITH flows AS (
       |  SELECT s_nationkey AS sn, c_nationkey AS cn,
       |    SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)) // 100000 AS f
@@ -11062,8 +10880,8 @@ object AuditQueries {
       |m_out AS (SELECT sn, SUM(f) AS m FROM flows GROUP BY sn),
       |m_in AS (SELECT cn, SUM(f) AS w FROM flows GROUP BY cn),
       |pts AS (
-      |  SELECT ${Text.log2e6DuckSql("m * w")} AS x,
-      |    ${Text.log2e6DuckSql("f")} AS y
+      |  SELECT ${Duck.log2e6("m * w")} AS x,
+      |    ${Duck.log2e6("f")} AS y
       |  FROM flows JOIN m_out USING (sn) JOIN m_in USING (cn)
       |  WHERE f >= 1 AND m >= 1 AND w >= 1),
       |mo AS (
@@ -11075,18 +10893,18 @@ object AuditQueries {
       |  FROM pts)
       |SELECT CAST(n AS BIGINT) AS n_lanes,
       |  CAST(CASE WHEN n * sxx - sx * sx = 0 THEN NULL ELSE
-      |    ${sd("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx")}
+      |    ${Duck.truncDiv("(n * sxy - sx * sy) * 1000000",
+               "n * sxx - sx * sx")}
       |    END AS BIGINT) AS beta_e6,
-      |  CAST(${sd(
+      |  CAST(${Duck.truncDiv(
         "sy - CASE WHEN n * sxx - sx * sx = 0 THEN 0 ELSE " +
-          sd("(n * sxy - sx * sy) * sx", "n * sxx - sx * sx") + " END",
+          Duck.truncDiv("(n * sxy - sx * sy) * sx", "n * sxx - sx * sx") + " END",
         "n")} AS BIGINT) AS alpha_l2e6,
       |  (CAST(CAST(n * sxy - sx * sy AS VARCHAR) AS DOUBLE)
       |      * CAST(CAST(n * sxy - sx * sy AS VARCHAR) AS DOUBLE))
       |    / (CAST(CAST(n * sxx - sx * sx AS VARCHAR) AS DOUBLE)
       |      * CAST(CAST(n * syy - sy * sy AS VARCHAR) AS DOUBLE)) AS r2_d
       |FROM mo""".stripMargin
-  }
 
   // ------ q493: Kemeny-optimal rank aggregation over a permutation lattice
 
@@ -11341,8 +11159,6 @@ object AuditQueries {
     */
   val q495OcCurve: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val base = Tables.lineitem(s, dir)
       .agg(count(lit(1)).cast(dec).as("b"),
         sum((col("l_returnflag") === "R").cast("long")).cast(dec).as("a"))
@@ -11357,7 +11173,7 @@ object AuditQueries {
       .withColumn("p", col("a").cast("double") / col("b").cast("double"))
       .withColumn("q", lit(1.0) - col("p"))
       .select(lit("measured").as("source"),
-        expr(fdiv("a * 1000", "b")).cast("long").as("p_pm"),
+        expr(Spark.truncDiv("a * 1000", "b")).cast("long").as("p_pm"),
         expr(pAcc).as("p_accept_d"))
     gridRows.unionAll(measured).orderBy(col("source"), col("p_pm"))
   }
@@ -11486,9 +11302,8 @@ object AuditQueries {
       |scored AS (
       |  SELECT lambda_pm,
       |    CASE WHEN n * saa - sa * sa = 0 THEN NULL ELSE
-      |      CAST(CASE WHEN n * say - sa * sy >= 0 THEN 1 ELSE -1 END *
-      |        (ABS((n * say - sa * sy) * 1000000) // (n * saa - sa * sa))
-      |        AS BIGINT) END AS slope_e6,
+      |      ${Duck.truncDivLong("(n * say - sa * sy) * 1000000",
+                 "n * saa - sa * sa")} END AS slope_e6,
       |    CASE WHEN n * saa - sa * sa = 0 OR n * syy - sy * sy = 0
       |      THEN NULL ELSE
       |      CAST((n * say - sa * sy) * (n * say - sa * sy) * 1000000
@@ -11586,7 +11401,6 @@ object AuditQueries {
   }
 
   val q497Sql: String = {
-    import graft.functions.Text
     val rwDefs = (1 to 5).map(k =>
       s"""CASE WHEN SUM(CASE WHEN arm = $k THEN 1 ELSE 0 END) = 0
          | THEN 0 ELSE SUM(CASE WHEN arm = $k THEN h ELSE 0 END)
@@ -11611,7 +11425,7 @@ object AuditQueries {
     // ONCE per step via nested derived tables. 3.2 s standalone.
     // The recursive state still carries `nc`, the choice ALREADY MADE
     // for this step, so updates read a plain column.
-    val lt = s"((${Text.log2e6DuckSql("rk + 1")}) * 693147 // 1000000)"
+    val lt = s"((${Duck.log2e6("rk + 1")}) * 693147 // 1000000)"
     val p20 = 1048576L
     val p40 = 1099511627776L
     val innerP = (1 to 5).map(k =>
@@ -11747,8 +11561,6 @@ object AuditQueries {
     */
   val q501MmdTest: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val li = Tables.lineitem(s, dir)
       .select((col("l_returnflag") === "R").cast("long").as("g"),
         expr("CAST(ROUND(l_quantity) AS BIGINT)").as("u1"),
@@ -11762,11 +11574,11 @@ object AuditQueries {
         sum(col("u2").cast(dec) * col("u2")).as("s22"),
         sum(col("u1").cast(dec) * col("u2")).as("s12"))
       .select(col("g"), col("n").cast("long").as("n"),
-        expr(fdiv("s1 * 1000000", "n")).cast("long").as("m1"),
-        expr(fdiv("s2 * 1000000", "n")).cast("long").as("m2"),
-        expr(fdiv("s11 * 1000000", "n")).cast("long").as("m11"),
-        expr(fdiv("s22 * 1000000", "n")).cast("long").as("m22"),
-        expr(fdiv("s12 * 1000000", "n")).cast("long").as("m12"))
+        expr(Spark.truncDiv("s1 * 1000000", "n")).cast("long").as("m1"),
+        expr(Spark.truncDiv("s2 * 1000000", "n")).cast("long").as("m2"),
+        expr(Spark.truncDiv("s11 * 1000000", "n")).cast("long").as("m11"),
+        expr(Spark.truncDiv("s22 * 1000000", "n")).cast("long").as("m22"),
+        expr(Spark.truncDiv("s12 * 1000000", "n")).cast("long").as("m12"))
     val wide = m.agg(
       sum(when(col("g") === 1L, col("n")).otherwise(0L)).as("n_x"),
       sum(when(col("g") === 0L, col("n")).otherwise(0L)).as("n_y"),
@@ -11859,8 +11671,6 @@ object AuditQueries {
     */
   val q502EnergyDistance: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val li = Tables.lineitem(s, dir)
       .filter(col("l_returnflag").isin("R", "N"))
       .select((col("l_returnflag") === "R").cast("long").as("g"),
@@ -11887,20 +11697,19 @@ object AuditQueries {
       .crossJoin(broadcast(spectrum(0L, 0L, "syy")))
       .select(col("nx").cast("long").as("n_x"),
         col("ny").cast("long").as("n_y"),
-        expr(fdiv("sxy * 1000000", "nx * ny")).cast("long").as("exy_e6"),
-        expr(fdiv("sxx * 1000000", "nx * nx")).cast("long").as("exx_e6"),
-        expr(fdiv("syy * 1000000", "ny * ny")).cast("long").as("eyy_e6"))
+        expr(Spark.truncDiv("sxy * 1000000", "nx * ny"))
+          .cast("long").as("exy_e6"),
+        expr(Spark.truncDiv("sxx * 1000000", "nx * nx"))
+          .cast("long").as("exx_e6"),
+        expr(Spark.truncDiv("syy * 1000000", "ny * ny"))
+          .cast("long").as("eyy_e6"))
       .withColumn("energy_e6",
         lit(2L) * col("exy_e6") - col("exx_e6") - col("eyy_e6"))
-      .withColumn("t_stat_e6", expr(
-        // sign-ABS sdiv device: energy_e6 ~ 0 for identically
-        // distributed groups and can land negative at other scales;
-        // Spark DIV truncates while DuckDB // floors, so divide the
-        // absolute value and re-apply the sign on both sides.
-        """CAST(CASE WHEN energy_e6 >= 0 THEN 1 ELSE -1 END *
-          | (CAST(n_x AS DECIMAL(38,0)) * n_y * abs(energy_e6)
-          |  DIV (CAST(n_x AS DECIMAL(38,0)) + n_y)) AS BIGINT)"""
-          .stripMargin.replace("\n", " ")))
+      // energy_e6 ~ 0 for identically distributed groups and can land
+      // negative at other scales
+      .withColumn("t_stat_e6", expr(Spark.truncDivLong(
+        "CAST(n_x AS DECIMAL(38,0)) * n_y * energy_e6",
+        "CAST(n_x AS DECIMAL(38,0)) + n_y")))
   }
 
   val q502Sql: String =
@@ -11960,12 +11769,6 @@ object AuditQueries {
     */
   val q503MetaAnalysis: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val dim = Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_nationkey"))
       .join(broadcast(Tables.nation(s, dir)
@@ -11988,23 +11791,25 @@ object AuditQueries {
         sum(col("g") * col("q") * col("q")).cast(dec).as("ssx"),
         sum((lit(1L) - col("g")) * col("q") * col("q")).cast(dec).as("ssy"))
       .select(col("r"), col("nx"), col("ny"),
-        (expr(fdiv("sx * 1000000", "nx")) -
-          expr(fdiv("sy * 1000000", "ny"))).as("d_e6"),
-        (expr(fdiv(fdiv("(nx * ssx - sx * sx) * 1000000", "nx * (nx - 1)")
+        (expr(Spark.truncDiv("sx * 1000000", "nx")) -
+          expr(Spark.truncDiv("sy * 1000000", "ny"))).as("d_e6"),
+        (expr(Spark.truncDiv(Spark.truncDiv("(nx * ssx - sx * sx) * 1000000",
+          "nx * (nx - 1)")
           + " * 1000000", "nx")) +
-          expr(fdiv(fdiv("(ny * ssy - sy * sy) * 1000000", "ny * (ny - 1)")
+          expr(Spark.truncDiv(Spark.truncDiv("(ny * ssy - sy * sy) * 1000000",
+            "ny * (ny - 1)")
             + " * 1000000", "ny"))).as("v_e12"))
-      .withColumn("w_fe", expr(fdiv("1000000000000000000", "v_e12")))
+      .withColumn("w_fe", expr(Spark.truncDiv("1000000000000000000", "v_e12")))
       .localCheckpoint()
     val fe = studies.agg(count(lit(1)).cast(dec).as("k"),
       sum(col("w_fe")).as("sw"),
       sum(col("w_fe") * col("d_e6")).as("swd"),
       sum(col("w_fe") * col("w_fe")).as("sww"))
       .select(col("k"), col("sw"), col("sww"),
-        expr(sdiv("swd", "sw")).as("pooled_fe_e6"))
+        expr(Spark.truncDiv("swd", "sw")).as("pooled_fe_e6"))
       .localCheckpoint()
     val q = studies.crossJoin(broadcast(fe))
-      .select(expr(fdiv(
+      .select(expr(Spark.truncDiv(
         "w_fe * (d_e6 - pooled_fe_e6) * (d_e6 - pooled_fe_e6)",
         "1000000000000")).as("qterm"))
       .agg(sum(col("qterm")).as("q_e6"))
@@ -12012,16 +11817,17 @@ object AuditQueries {
       .select(col("k"), col("pooled_fe_e6"), col("q_e6"),
         expr("CASE WHEN q_e6 <= (k - 1) * 1000000 THEN CAST(0 AS " +
           "DECIMAL(38,0)) ELSE " +
-          fdiv("(q_e6 - (k - 1) * 1000000) * 1000000000000",
-            "sw - " + fdiv("sww", "sw")) + " END").as("tau2_e12"),
+          Spark.truncDiv("(q_e6 - (k - 1) * 1000000) * 1000000000000",
+            "sw - " + Spark.truncDiv("sww", "sw")) + " END").as("tau2_e12"),
         expr("CASE WHEN q_e6 = 0 THEN 0 ELSE " +
-          "GREATEST(0, CAST(" + fdiv("(q_e6 - (k - 1) * 1000000) * 1000000",
+          "GREATEST(0, CAST(" + Spark.truncDiv(
+            "(q_e6 - (k - 1) * 1000000) * 1000000",
           "q_e6") + " AS BIGINT)) END").as("i2_e6"))
       .localCheckpoint()
     val re = studies.crossJoin(broadcast(tau))
-      .select(expr(fdiv("1000000000000000000", "v_e12 + tau2_e12"))
+      .select(expr(Spark.truncDiv("1000000000000000000", "v_e12 + tau2_e12"))
         .as("w_re"), col("d_e6"))
-      .agg(expr("CAST(" + sdiv("SUM(w_re * d_e6)", "SUM(w_re)") +
+      .agg(expr("CAST(" + Spark.truncDiv("SUM(w_re * d_e6)", "SUM(w_re)") +
         " AS BIGINT)").as("pooled_re_e6"))
     studies.crossJoin(broadcast(tau)).crossJoin(broadcast(re))
       .select(col("r").as("region"),
@@ -12038,7 +11844,7 @@ object AuditQueries {
   }
 
   val q503Sql: String =
-    """WITH dim AS (
+    s"""WITH dim AS (
       |  SELECT c_custkey, n_regionkey AS r
       |  FROM customer JOIN nation ON c_nationkey = n_nationkey),
       |li AS (
@@ -12073,8 +11879,7 @@ object AuditQueries {
       |fe AS (
       |  SELECT CAST(COUNT(*) AS HUGEINT) AS k, SUM(w_fe) AS sw,
       |    SUM(w_fe * w_fe) AS sww,
-      |    CAST(CASE WHEN SUM(w_fe * d_e6) >= 0 THEN 1 ELSE -1 END *
-      |      (ABS(SUM(w_fe * d_e6)) // SUM(w_fe)) AS HUGEINT)
+      |    ${Duck.truncDiv("SUM(w_fe * d_e6)", "SUM(w_fe)")}
       |      AS pooled_fe_e6
       |  FROM wgt),
       |qq AS (
@@ -12091,8 +11896,7 @@ object AuditQueries {
       |        // q_e6) END AS i2_e6
       |  FROM fe CROSS JOIN qq),
       |re AS (
-      |  SELECT CAST(CASE WHEN SUM(w_re * d_e6) >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(SUM(w_re * d_e6)) // SUM(w_re)) AS BIGINT)
+      |  SELECT ${Duck.truncDivLong("SUM(w_re * d_e6)", "SUM(w_re)")}
       |    AS pooled_re_e6
       |  FROM (
       |    SELECT 1000000000000000000 // (v_e12 + tau2_e12) AS w_re, d_e6
@@ -12403,12 +12207,6 @@ object AuditQueries {
     */
   val q507ClusterRobust: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cells = Tables.orders(s, dir)
       .join(broadcast(Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_nationkey"))),
@@ -12427,9 +12225,10 @@ object AuditQueries {
       sum(col("t").cast(dec) * col("t")).as("stt"),
       sum(col("t").cast(dec) * col("y")).as("sty"))
       .select(col("n"),
-        expr(fdiv("st * 1000000", "n")).as("tbar_e6"),
-        expr(fdiv("sy * 1000000", "n")).as("ybar_e6"),
-        expr(sdiv("(n * sty - st * sy) * 1000000", "n * stt - st * st"))
+        expr(Spark.truncDiv("st * 1000000", "n")).as("tbar_e6"),
+        expr(Spark.truncDiv("sy * 1000000", "n")).as("ybar_e6"),
+        expr(Spark.truncDiv("(n * sty - st * sy) * 1000000",
+          "n * stt - st * st"))
           .as("b_e6"))
       .localCheckpoint()
     val scores = pts.crossJoin(broadcast(glob))
@@ -12441,7 +12240,8 @@ object AuditQueries {
         sum(col("xt") * col("yt")).as("sxy_e12"),
         sum(col("xt") * col("xt")).as("sxx_e12"))
       .select(col("n"), col("b_e6"), col("sxx_e12"),
-        expr(fdiv("sxy_e12 - " + fdiv("b_e6 * sxx_e12", "1000000"),
+        expr(Spark.truncDiv("sxy_e12 - " + Spark.truncDiv("b_e6 * sxx_e12",
+          "1000000"),
           "1000000")).as("s_g_e6"))
     val out = scores.agg(count(lit(1)).cast(dec).as("g"),
       max(col("n")).as("n"), max(col("b_e6")).as("b_e6"),
@@ -12458,7 +12258,7 @@ object AuditQueries {
   }
 
   val q507Sql: String =
-    """WITH cells AS (
+    s"""WITH cells AS (
       |  SELECT c_nationkey AS nat,
       |    year(o_orderdate) * 12 + month(o_orderdate) AS m,
       |    SUM(CAST(ROUND(o_totalprice*100) AS BIGINT) // 100000) AS y
@@ -12471,13 +12271,11 @@ object AuditQueries {
       |  SELECT CAST(COUNT(*) AS HUGEINT) AS n,
       |    CAST(SUM(t) AS HUGEINT) * 1000000 // COUNT(*) AS tbar_e6,
       |    CAST(SUM(y) AS HUGEINT) * 1000000 // COUNT(*) AS ybar_e6,
-      |    CAST(CASE WHEN CAST(COUNT(*) AS HUGEINT)
-      |          * SUM(CAST(t AS HUGEINT) * y)
-      |        - CAST(SUM(t) AS HUGEINT) * SUM(y) >= 0 THEN 1 ELSE -1 END *
-      |      (ABS((CAST(COUNT(*) AS HUGEINT) * SUM(CAST(t AS HUGEINT) * y)
-      |        - CAST(SUM(t) AS HUGEINT) * SUM(y)) * 1000000)
-      |       // (CAST(COUNT(*) AS HUGEINT) * SUM(CAST(t AS HUGEINT) * t)
-      |        - CAST(SUM(t) AS HUGEINT) * SUM(t))) AS HUGEINT) AS b_e6
+      |    ${Duck.truncDiv(
+               "(CAST(COUNT(*) AS HUGEINT) * SUM(CAST(t AS HUGEINT) * y) - " +
+                 "CAST(SUM(t) AS HUGEINT) * SUM(y)) * 1000000",
+               "CAST(COUNT(*) AS HUGEINT) * SUM(CAST(t AS HUGEINT) * t) - " +
+                 "CAST(SUM(t) AS HUGEINT) * SUM(t)")} AS b_e6
       |  FROM pts),
       |scores AS (
       |  SELECT nat, ANY_VALUE(n) AS n, ANY_VALUE(b_e6) AS b_e6,
@@ -12489,13 +12287,10 @@ object AuditQueries {
       |  GROUP BY nat),
       |staged AS (
       |  SELECT n, b_e6, sxx_e12,
-      |    CAST(CASE WHEN sxy_e12 - CAST(CASE WHEN b_e6 * sxx_e12 >= 0
-      |          THEN 1 ELSE -1 END *
-      |          (ABS(b_e6 * sxx_e12) // 1000000) AS HUGEINT) >= 0
+      |    CAST(CASE WHEN sxy_e12 -
+      |      ${Duck.truncDiv("b_e6 * sxx_e12", "1000000")} >= 0
       |        THEN 1 ELSE -1 END *
-      |      (ABS(sxy_e12 - CAST(CASE WHEN b_e6 * sxx_e12 >= 0
-      |          THEN 1 ELSE -1 END *
-      |          (ABS(b_e6 * sxx_e12) // 1000000) AS HUGEINT))
+      |      (ABS(sxy_e12 - ${Duck.truncDiv("b_e6 * sxx_e12", "1000000")})
       |        // 1000000) AS HUGEINT) AS s_g_e6
       |  FROM scores),
       |agg AS (
@@ -12540,8 +12335,9 @@ object AuditQueries {
     * first-ranked arm); ratings move by K·(S − E) with
     * E = 1/(1 + 10^((R_b−R_a)/400)). The power rides the e6-scale
     * exp2 LUT ([[graft.functions.Text.exp2e6ScaledScala]]) and the
-    * update divides through the sign-ABS sdiv, so every rating is the
-    * SAME integer in the fold and the oracle's list-state walk.
+    * update divides through a sign-ABS truncating division, so every
+    * rating is the SAME integer in the fold and the oracle's list-state
+    * walk.
     * Updates are antisymmetric, so Σ ratings = 5·1000 exactly — the
     * in-output conservation certificate (plan-pinned).
     *
@@ -12649,8 +12445,7 @@ object AuditQueries {
       |    $rUpd
       |  FROM (
       |    SELECT t2.*,
-      |      CASE WHEN t2.num >= 0 THEN 1 ELSE -1 END
-      |        * (ABS(t2.num) // 1000000) AS delta
+      |      ${Duck.truncDiv("t2.num", "1000000")} AS delta
       |    FROM (
       |      SELECT tx.*,
       |        $EloK * (tx.s * 1000000 - CASE WHEN tx.dg >= 0
@@ -13513,10 +13308,6 @@ object AuditQueries {
     * metadata arithmetic.
     */
   val q524RegressionDiscontinuity: Q = (s, dir) => {
-    def sdivE(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | (abs($num) div ($den)) AS BIGINT)"""
-        .stripMargin.replace("\n", " ")
     val li = Tables.lineitem(s, dir)
       .select(expr("CAST(ROUND(l_discount*100) AS BIGINT)").as("d100"),
         expr("CAST(ROUND(l_quantity) AS BIGINT)").as("y"))
@@ -13529,9 +13320,9 @@ object AuditQueries {
         sum(col("x") * col("y")).as("sxy"))
       .withColumn("det", expr("n * sxx - sx * sx"))
       .withColumn("slope_e6",
-        expr(sdivE("(n * sxy - sx * sy) * 1000000", "det")))
+        expr(Spark.truncDivLong("(n * sxy - sx * sy) * 1000000", "det")))
       .withColumn("b0_e6",
-        expr(sdivE("(sy * sxx - sx * sxy) * 1000000", "det")))
+        expr(Spark.truncDivLong("(sy * sxx - sx * sxy) * 1000000", "det")))
     val wideRd = mom.agg(
       sum(when(col("side") === 0L, col("n")).otherwise(0L)).as("n_left"),
       sum(when(col("side") === 1L, col("n")).otherwise(0L)).as("n_right"),
@@ -13662,14 +13453,12 @@ object AuditQueries {
         sum(col("gap")).as("sgap"))
       .crossJoin(broadcast(ctrl.agg(count(lit(1)).as("n_controls"))))
       .select(col("n_treated"), col("n_controls"),
-        expr("""CAST(CASE WHEN sdiff >= 0 THEN 1 ELSE -1 END *
-          | (abs(sdiff) * 1000000 div n_treated) AS BIGINT)"""
-          .stripMargin.replace("\n", " ")).as("att_e6"),
+        expr(Spark.truncDivLong("sdiff * 1000000", "n_treated")).as("att_e6"),
         expr("sgap div n_treated").as("mean_gap_c"))
   }
 
   val q525Sql: String =
-    """WITH lc AS (
+    s"""WITH lc AS (
       |  SELECT l_orderkey, COUNT(*) AS y FROM lineitem GROUP BY 1),
       |o AS (
       |  SELECT o_orderkey,
@@ -13827,11 +13616,6 @@ object AuditQueries {
     * scalar ladder.
     */
   val q527Kelly: Q = (s, dir) => {
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
-    def sdivK(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | (abs($num) div ($den)) AS BIGINT)"""
-        .stripMargin.replace("\n", " ")
     // day-over-day lag via the two-level day-bucket device (the day spine
     // funnels >1k rows through a single-task window otherwise)
     val bd = Prefix.lagOver(
@@ -13865,18 +13649,18 @@ object AuditQueries {
       .withColumn("has_edge", (col("f_raw_e6") > 0L).cast("long"))
       .withColumn("fb_e6", expr("f_e6 * b_e6 div 1000000"))
       .withColumn("g_e6", expr(
-        sdivK(s"""p_e6 * (((${l2("1000000 + fb_e6")}) - (${l2("1000000")}))
+        Spark.truncDivLong(
+          s"""p_e6 * (((${Spark.log2e6("1000000 + fb_e6")}) - (${Spark.log2e6("1000000")}))
           | * 693147 div 1000000)
-          | + (1000000 - p_e6) * (((${l2("1000000 - f_e6")})
-          | - (${l2("1000000")})) * 693147 div 1000000)"""
+          | + (1000000 - p_e6) * (((${Spark.log2e6("1000000 - f_e6")})
+          | - (${Spark.log2e6("1000000")})) * 693147 div 1000000)"""
           .stripMargin.replace("\n", " "), "1000000")))
       .select(col("up").as("up_days"), col("down").as("down_days"),
         col("p_e6"), col("b_e6"), col("f_e6"), col("has_edge"),
         col("g_e6"))
   }
 
-  val q527Sql: String = {
-    def l2d(x: String) = graft.functions.Text.log2e6DuckSql(x)
+  val q527Sql: String =
     s"""WITH bd AS (
       |  SELECT d, x, LAG(x) OVER (ORDER BY d) AS px FROM (
       |    SELECT o_orderdate AS d,
@@ -13906,18 +13690,17 @@ object AuditQueries {
       |  SELECT st2.*, f_e6 * b_e6 // 1000000 AS fb_e6 FROM st2),
       |st4 AS (
       |  SELECT st3.*,
-      |    p_e6 * (((${l2d("1000000 + fb_e6")}) - (${l2d("1000000")}))
+      |    p_e6 * (((${Duck.log2e6("1000000 + fb_e6")}) -
+      |      (${Duck.log2e6("1000000")}))
       |      * 693147 // 1000000)
-      |    + (1000000 - p_e6) * (((${l2d("1000000 - f_e6")})
-      |      - (${l2d("1000000")})) * 693147 // 1000000) AS gnum
+      |    + (1000000 - p_e6) * (((${Duck.log2e6("1000000 - f_e6")})
+      |      - (${Duck.log2e6("1000000")})) * 693147 // 1000000) AS gnum
       |  FROM st3)
       |SELECT CAST(up AS BIGINT) AS up_days, CAST(down AS BIGINT) AS down_days,
       |  CAST(p_e6 AS BIGINT) AS p_e6, CAST(b_e6 AS BIGINT) AS b_e6,
       |  CAST(f_e6 AS BIGINT) AS f_e6, CAST(has_edge AS BIGINT) AS has_edge,
-      |  CAST(CASE WHEN gnum >= 0 THEN 1 ELSE -1 END
-      |    * (ABS(gnum) // 1000000) AS BIGINT) AS g_e6
+      |  ${Duck.truncDivLong("gnum", "1000000")} AS g_e6
       |FROM st4""".stripMargin
-  }
 
   // ------ q528: German-tank keyspace estimate from a hash sample
 
@@ -13944,13 +13727,12 @@ object AuditQueries {
       .withColumn("n_hat", expr("m + m div k - 1"))
       .select(col("k").as("sample_k"), col("m").as("sample_max"),
         col("n_hat"), col("true_max"), col("n_total"),
-        expr("""CAST(CASE WHEN n_hat - true_max >= 0 THEN 1 ELSE -1 END *
-          | (abs(n_hat - true_max) * 1000000 div true_max) AS BIGINT)"""
-          .stripMargin.replace("\n", " ")).as("rel_err_e6"))
+        expr(Spark.truncDivLong("(n_hat - true_max) * 1000000", "true_max"))
+          .as("rel_err_e6"))
   }
 
   val q528Sql: String =
-    """WITH o AS (SELECT o_orderkey FROM orders),
+    s"""WITH o AS (SELECT o_orderkey FROM orders),
       |samp AS (
       |  SELECT MAX(o_orderkey) AS m, COUNT(*) AS k FROM o
       |  WHERE CAST(concat('0x', substr(md5(CAST(o_orderkey AS VARCHAR)),
@@ -14070,18 +13852,15 @@ object AuditQueries {
       .withColumn("r10", expr("r8 * r2 div 1000000"))
       .withColumn("r20", expr("r10 * r10 div 1000000"))
       .withColumn("pwin_e6", expr(
-        """CASE WHEN r_e6 = 1000000 THEN 500000
-          | ELSE CAST(CASE WHEN (1000000 - r10) >= 0 THEN 1 ELSE -1 END *
-          |   CASE WHEN (1000000 - r20) >= 0 THEN 1 ELSE -1 END *
-          |   (abs(1000000 - r10) * 1000000 div abs(1000000 - r20))
-          |   AS BIGINT) END""".stripMargin.replace("\n", " ")))
+        s"""CASE WHEN r_e6 = 1000000 THEN 500000 ELSE ${Spark.truncDivLong(
+          "(1000000 - r10) * 1000000", "1000000 - r20")} END"""))
       .select(col("up").as("up_days"), col("down").as("down_days"),
         col("p_e6"), col("r_e6"), col("r10"), col("r20"),
         col("pwin_e6"), (lit(1000000L) - col("pwin_e6")).as("pruin_e6"))
   }
 
   val q530Sql: String =
-    """WITH bd AS (
+    s"""WITH bd AS (
       |  SELECT d, x, LAG(x) OVER (ORDER BY d) AS px FROM (
       |    SELECT o_orderdate AS d,
       |      SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS x
@@ -14110,16 +13889,12 @@ object AuditQueries {
       |SELECT CAST(up AS BIGINT) AS up_days, CAST(down AS BIGINT) AS down_days,
       |  CAST(p_e6 AS BIGINT) AS p_e6, CAST(r_e6 AS BIGINT) AS r_e6,
       |  CAST(r10 AS BIGINT) AS r10, CAST(r20 AS BIGINT) AS r20,
-      |  CAST(CASE WHEN r_e6 = 1000000 THEN 500000
-      |    ELSE CAST(CASE WHEN (1000000 - r10) >= 0 THEN 1 ELSE -1 END *
-      |      CASE WHEN (1000000 - r20) >= 0 THEN 1 ELSE -1 END *
-      |      (ABS(1000000 - r10) * 1000000 // ABS(1000000 - r20))
-      |      AS BIGINT) END AS BIGINT) AS pwin_e6,
-      |  CAST(1000000 - CASE WHEN r_e6 = 1000000 THEN 500000
-      |    ELSE CAST(CASE WHEN (1000000 - r10) >= 0 THEN 1 ELSE -1 END *
-      |      CASE WHEN (1000000 - r20) >= 0 THEN 1 ELSE -1 END *
-      |      (ABS(1000000 - r10) * 1000000 // ABS(1000000 - r20))
-      |      AS BIGINT) END AS BIGINT) AS pruin_e6
+      |  CAST(CASE WHEN r_e6 = 1000000 THEN 500000 ELSE ${Duck.truncDivLong(
+             "(1000000 - r10) * 1000000", "1000000 - r20")} END AS BIGINT)
+      |    AS pwin_e6,
+      |  CAST(1000000 - CASE WHEN r_e6 = 1000000 THEN 500000 ELSE ${Duck
+             .truncDivLong("(1000000 - r10) * 1000000", "1000000 - r20")} END
+      |    AS BIGINT) AS pruin_e6
       |FROM ch""".stripMargin
 
   // ------ q531: bullwhip effect (order-vs-fulfillment variability)
@@ -14243,10 +14018,6 @@ object AuditQueries {
     * 5-row report.
     */
   val q536ForecastReconcile: Q = (s, dir) => {
-    def sdivF(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | (abs($num) div ($den)) AS BIGINT)"""
-        .stripMargin.replace("\n", " ")
     val geo = Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_nationkey").as("nk"))
       .join(broadcast(Tables.nation(s, dir)
@@ -14278,7 +14049,7 @@ object AuditQueries {
           max(col("nn")).as("nn"))
         .withColumn("fc", when(col("nn") === 1, col("lastv"))
           .otherwise(col("lastv") + expr(
-            sdivF("lastv - firstv", "nn - 1"))))
+            Spark.truncDivLong("lastv - firstv", "nn - 1"))))
         .withColumn("fc", greatest(col("fc"), lit(0L)))
     }
     val natTrainDay = train.groupBy(col("rk2"), col("nk"), col("d"))
@@ -14321,7 +14092,7 @@ object AuditQueries {
   }
 
   val q536Sql: String =
-    """WITH geo AS (
+    s"""WITH geo AS (
       |  SELECT c_custkey, c_nationkey AS nk, n_regionkey AS rk2
       |  FROM customer JOIN nation ON c_nationkey = n_nationkey),
       |nd AS (
@@ -14350,8 +14121,8 @@ object AuditQueries {
       |nat_fc AS (
       |  SELECT rk2, nk,
       |    GREATEST(CASE WHEN nn = 1 THEN lastv
-      |      ELSE lastv + CASE WHEN lastv - firstv >= 0 THEN 1 ELSE -1 END
-      |        * (ABS(lastv - firstv) // (nn - 1)) END, 0) AS nat_fc
+      |      ELSE lastv + ${Duck.truncDiv("lastv - firstv", "nn - 1")} END, 0)
+      |        AS nat_fc
       |  FROM nat_ends),
       |rtd AS (SELECT rk2, d, SUM(x) AS x FROM train GROUP BY 1, 2),
       |reg_ends AS (
@@ -14368,8 +14139,8 @@ object AuditQueries {
       |reg_fc AS (
       |  SELECT rk2,
       |    GREATEST(CASE WHEN nn = 1 THEN lastv
-      |      ELSE lastv + CASE WHEN lastv - firstv >= 0 THEN 1 ELSE -1 END
-      |        * (ABS(lastv - firstv) // (nn - 1)) END, 0) AS reg_fc
+      |      ELSE lastv + ${Duck.truncDiv("lastv - firstv", "nn - 1")} END, 0)
+      |        AS reg_fc
       |  FROM reg_ends),
       |bu AS (SELECT rk2, SUM(nat_fc) AS bu_c FROM nat_fc GROUP BY rk2),
       |mass AS (SELECT rk2, nk, SUM(x) AS t FROM train GROUP BY 1, 2),

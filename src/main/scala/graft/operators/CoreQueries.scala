@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Q, Tables}
 import graft.functions.TSql._
 import graft.functions.Text
+import graft.functions.FixedPoint.{Duck, Spark, asDouble}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
@@ -846,13 +847,9 @@ object CoreQueries {
       .withColumn("pre_daily_c", expr(s"pre_rev_c DIV $EventStudyDays"))
       .withColumn("post_daily_c", expr(s"post_rev_c DIV $EventStudyDays"))
       .filter(col("pre_rev_c") > 0)
-      // sign-factored: Spark DIV truncates, DuckDB // floors — they agree
-      // only on non-negative operands, and below-baseline brands go negative
-      .withColumn("lift_e6", expr(
-        """CASE WHEN post_rev_c >= pre_rev_c
-          |  THEN (post_rev_c - pre_rev_c) * 1000000 DIV pre_rev_c
-          |  ELSE -((pre_rev_c - post_rev_c) * 1000000 DIV pre_rev_c)
-          |END""".stripMargin))
+      // below-baseline brands go negative
+      .withColumn("lift_e6", expr(Spark.truncDivLong(
+        "(post_rev_c - pre_rev_c) * 1000000", "pre_rev_c")))
   }
 
   val q198Sql: String =
@@ -878,10 +875,8 @@ object CoreQueries {
       |SELECT p_brand, pre_rev_c, post_rev_c, n_pre_lines, n_post_lines,
       |  CAST(pre_rev_c // $EventStudyDays AS BIGINT) AS pre_daily_c,
       |  CAST(post_rev_c // $EventStudyDays AS BIGINT) AS post_daily_c,
-      |  CAST(CASE WHEN post_rev_c >= pre_rev_c
-      |    THEN (post_rev_c - pre_rev_c) * 1000000 // pre_rev_c
-      |    ELSE -((pre_rev_c - post_rev_c) * 1000000 // pre_rev_c)
-      |  END AS BIGINT) AS lift_e6
+      |  ${Duck.truncDivLong("(post_rev_c - pre_rev_c) * 1000000",
+             "pre_rev_c")} AS lift_e6
       |FROM g WHERE pre_rev_c > 0""".stripMargin
 
   // ------------------------------------------- q214: Mann-Kendall trend
@@ -967,9 +962,7 @@ object CoreQueries {
           struct((y.getField("cnt") - x.getField("cnt")).as("dy"),
             (y.getField("wk") - x.getField("wk")).as("dw"))).as("p"))
       .select(col("o_orderpriority"),
-        expr("""CASE WHEN p.dy >= 0 THEN p.dy * 1000000 DIV p.dw
-               |     ELSE -((-p.dy) * 1000000 DIV p.dw) END""".stripMargin)
-          .as("slope_e6"))
+        expr(Spark.truncDivLong("p.dy * 1000000", "p.dw")).as("slope_e6"))
     slopes.groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_pairs"),
         expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY slope_e6)")
@@ -979,16 +972,14 @@ object CoreQueries {
   }
 
   val q215Sql: String =
-    """WITH w AS (
+    s"""WITH w AS (
       |  SELECT o_orderpriority,
       |    CAST(FLOOR(epoch(o_orderdate)) AS BIGINT) // 604800 AS wk,
       |    COUNT(*) AS cnt
       |  FROM orders GROUP BY 1, 2),
       |sl AS (
       |  SELECT a.o_orderpriority,
-      |    CASE WHEN b.cnt - a.cnt >= 0
-      |         THEN (b.cnt - a.cnt) * 1000000 // (b.wk - a.wk)
-      |         ELSE -((a.cnt - b.cnt) * 1000000 // (b.wk - a.wk)) END
+      |    ${Duck.truncDivLong("(b.cnt - a.cnt) * 1000000", "b.wk - a.wk")}
       |      AS slope_e6
       |  FROM w a JOIN w b
       |    ON a.o_orderpriority = b.o_orderpriority AND a.wk < b.wk)
@@ -2592,11 +2583,10 @@ object CoreQueries {
       .agg(count(lit(1)).cast(dec).as("n"),
         sum(col("rev_c").cast(dec)).as("s0"),
         sum(col("i").cast(dec) * col("rev_c").cast(dec)).as("s1"))
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
     g.select(col("c_nationkey"), col("n").cast("long").as("n_customers"),
       col("s0").cast("long").as("revenue_c"),
-      ((lit(2.0) * d(col("s1")) - d(col("n") + lit(1)) * d(col("s0"))) /
-        (d(col("n")) * d(col("s0")))).as("gini"))
+      ((lit(2.0) * asDouble("s1") - asDouble("n + 1") * asDouble("s0")) /
+        (asDouble("n") * asDouble("s0"))).as("gini"))
   }
 
   val q160Sql: String =
@@ -2867,11 +2857,6 @@ object CoreQueries {
         sum(when(col("p1"), col("r_c")).otherwise(0L)).as("r1"),
         sum(when(!col("p1"), col("q_c")).otherwise(0L)).as("q2"),
         sum(when(!col("p1"), col("r_c")).otherwise(0L)).as("r2"))
-    // sign-factored truncating division (non-negative operands only; the
-    // two engines disagree on negative integer division — q167 note)
-    def sdiv(num: String, den: String) = expr(
-      s"""CASE WHEN $num < 0 THEN -CAST(((-($num)) div ($den)) AS BIGINT)
-         |     ELSE CAST((($num) div ($den)) AS BIGINT) END""".stripMargin)
     val eff = byPart
       .withColumn("delta_c", col("r2") - col("r1"))
       .withColumn("pn",
@@ -2879,9 +2864,11 @@ object CoreQueries {
           col("q2").cast(dec) * col("r1").cast(dec))
       .withColumn("vn", col("r1").cast(dec) * (col("q2") - col("q1")).cast(dec))
       .withColumn("price_eff_c",
-        when(col("q1") > 0L && col("q2") > 0L, sdiv("pn", "q2")).otherwise(0L))
+        when(col("q1") > 0L && col("q2") > 0L,
+          expr(Spark.truncDivLong("pn", "q2"))).otherwise(0L))
       .withColumn("volume_eff_c",
-        when(col("q1") > 0L && col("q2") > 0L, sdiv("vn", "q1"))
+        when(col("q1") > 0L && col("q2") > 0L,
+          expr(Spark.truncDivLong("vn", "q1")))
           .otherwise(col("delta_c")))
       .withColumn("joint_c",
         col("delta_c") - col("price_eff_c") - col("volume_eff_c"))
@@ -3233,13 +3220,16 @@ object CoreQueries {
       (col("n") * col("sx2x2") - col("sx2") * col("sx2")).as("a22"),
       (col("n") * col("sx1y") - col("sx1") * col("sy")).as("b1"),
       (col("n") * col("sx2y") - col("sx2") * col("sy")).as("b2"))
-    def d(c: String) = col(c).cast("double")
-    val det = d("a11") * d("a22") - d("a12") * d("a12")
-    val beta1 = (d("b1") * d("a22") - d("b2") * d("a12")) / det
-    val beta2 = (d("a11") * d("b2") - d("a12") * d("b1")) / det
+    val det = asDouble("a11") * asDouble("a22") - asDouble("a12") *
+      asDouble("a12")
+    val beta1 = (asDouble("b1") * asDouble("a22") - asDouble("b2") *
+      asDouble("a12")) / det
+    val beta2 = (asDouble("a11") * asDouble("b2") - asDouble("a12") *
+      asDouble("b1")) / det
     m.select(col("l_returnflag"), col("n").cast("long").as("n_rows"),
       beta1.as("beta_qty"), beta2.as("beta_disc"),
-      ((d("sy") - beta1 * d("sx1") - beta2 * d("sx2")) / d("n"))
+      ((asDouble("sy") - beta1 * asDouble("sx1") - beta2 * asDouble("sx2")) /
+        asDouble("n"))
         .as("beta_intercept"))
   }
 
@@ -4598,11 +4588,6 @@ object CoreQueries {
     */
   val q281TheilDecomposition: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % $den) / $den AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val li = Tables.lineitem(s, dir)
       .select(col("l_suppkey"), cents(col("l_extendedprice")).as("c"))
     val sup = Tables.supplier(s, dir)
@@ -4620,16 +4605,19 @@ object CoreQueries {
       .select(col("nat"), col("x"), col("x_g"), col("n_g"),
         col("x_all"), col("n_all"), col("k_nations"),
         (col("x").cast(dec) *
-          (expr(l2("x")) + expr(l2("n_all")) - expr(l2("x_all"))))
+          (expr(Spark.log2e6("x")) + expr(Spark.log2e6("n_all")) -
+            expr(Spark.log2e6("x_all"))))
           .as("t_tot"),
         (col("x").cast(dec) *
-          (expr(l2("x")) + expr(l2("n_g")) - expr(l2("x_g"))))
+          (expr(Spark.log2e6("x")) + expr(Spark.log2e6("n_g")) -
+            expr(Spark.log2e6("x_g"))))
           .as("t_win"))
     val natTerms = byNat.crossJoin(broadcast(scal))
       .select(col("k_nations"),
         (col("x_g").cast(dec) *
-          (expr(l2("x_g")) + expr(l2("n_all")) -
-            expr(l2("x_all")) - expr(l2("n_g")))).as("t_btw"))
+          (expr(Spark.log2e6("x_g")) + expr(Spark.log2e6("n_all")) -
+            expr(Spark.log2e6("x_all")) - expr(Spark.log2e6("n_g")))).as(
+              "t_btw"))
       .agg(max(col("k_nations")).as("k_nations"),
         sum(col("t_btw")).as("btw_num"))
     terms
@@ -4637,15 +4625,12 @@ object CoreQueries {
         sum(col("t_tot")).as("tot_num"), sum(col("t_win")).as("win_num"))
       .crossJoin(broadcast(natTerms))
       .select(col("n_suppliers"), col("k_nations"),
-        expr(sdiv("tot_num", "x_all")).as("t_total_e6"),
-        expr(sdiv("btw_num", "x_all")).as("t_between_e6"),
-        expr(sdiv("win_num", "x_all")).as("t_within_e6"))
+        expr(Spark.truncDivLong("tot_num", "x_all")).as("t_total_e6"),
+        expr(Spark.truncDivLong("btw_num", "x_all")).as("t_between_e6"),
+        expr(Spark.truncDivLong("win_num", "x_all")).as("t_within_e6"))
   }
 
-  val q281Sql: String = {
-    def l2(x: String) = graft.functions.Text.log2e6DuckSql(x)
-    def sdiv(num: String, den: String) =
-      s"CAST((CASE WHEN $num >= 0 THEN 1 ELSE -1 END) * (ABS($num) // $den) AS BIGINT)"
+  val q281Sql: String =
     s"""WITH rev AS (
        |  SELECT l_suppkey AS supp, s_nationkey AS nat,
        |    CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)) AS BIGINT)
@@ -4662,14 +4647,17 @@ object CoreQueries {
        |terms AS (
        |  SELECT x_all,
        |    CAST(x AS HUGEINT) *
-       |      (${l2("x")} + ${l2("n_all")} - ${l2("x_all")}) AS t_tot,
+       |      (${Duck.log2e6("x")} + ${Duck.log2e6("n_all")} -
+       |        ${Duck.log2e6("x_all")}) AS t_tot,
        |    CAST(x AS HUGEINT) *
-       |      (${l2("x")} + ${l2("n_g")} - ${l2("x_g")}) AS t_win
+       |      (${Duck.log2e6("x")} + ${Duck.log2e6("n_g")} -
+       |        ${Duck.log2e6("x_g")}) AS t_win
        |  FROM rev JOIN by_nat USING (nat) CROSS JOIN scal),
        |nat_terms AS (
        |  SELECT MAX(k_nations) AS k_nations,
        |    SUM(CAST(x_g AS HUGEINT) *
-       |      (${l2("x_g")} + ${l2("n_all")} - ${l2("x_all")} - ${l2("n_g")}))
+       |      (${Duck.log2e6("x_g")} + ${Duck.log2e6("n_all")} -
+       |        ${Duck.log2e6("x_all")} - ${Duck.log2e6("n_g")}))
        |      AS btw_num
        |  FROM by_nat CROSS JOIN scal),
        |agg AS (
@@ -4678,11 +4666,10 @@ object CoreQueries {
        |  FROM terms)
        |SELECT CAST(n_suppliers AS BIGINT) AS n_suppliers,
        |  CAST(k_nations AS BIGINT) AS k_nations,
-       |  ${sdiv("tot_num", "x_all")} AS t_total_e6,
-       |  ${sdiv("btw_num", "x_all")} AS t_between_e6,
-       |  ${sdiv("win_num", "x_all")} AS t_within_e6
+       |  ${Duck.truncDivLong("tot_num", "x_all")} AS t_total_e6,
+       |  ${Duck.truncDivLong("btw_num", "x_all")} AS t_between_e6,
+       |  ${Duck.truncDivLong("win_num", "x_all")} AS t_within_e6
        |FROM agg CROSS JOIN nat_terms""".stripMargin
-  }
 
   // ------------------------------------------- q305: grouped exact mode
 
@@ -4695,8 +4682,6 @@ object CoreQueries {
     * modal share floors once at e6.
     */
   val q305GroupedMode: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val joined = Tables.orders(s, dir)
       .join(Tables.customer(s, dir),
         col("o_custkey") === col("c_custkey"))
@@ -4709,7 +4694,7 @@ object CoreQueries {
         sum(col("cnt")).as("n_total"))
       .select(col("segment"), col("best.v").as("mode_value"),
         (-col("best.negc")).as("mode_count"), col("n_total"),
-        expr(fdiv("(-best.negc) * 1000000", "n_total")).cast("long")
+        expr(Spark.truncDiv("(-best.negc) * 1000000", "n_total")).cast("long")
           .as("share_e6"))
       .orderBy(col("segment"))
   }
@@ -4739,9 +4724,9 @@ object CoreQueries {
   /** Symbolic Durbin–Levinson unroll shared by both engines: returns
     * (column, expression) steps in dependency order, over e6-integer
     * autocorrelations r1..rK and previously emitted φ columns. Every
-    * division routes through the TRUNCATE-TOWARD-ZERO spelling
-    * sign·(|n| div |d|), the one integer-division semantics both engines
-    * can express identically for arbitrary operand signs.
+    * division routes through `div`, one engine's FixedPoint truncating
+    * division, so both engines compute the same integers for arbitrary
+    * operand signs.
     */
   private def dlSteps(maxLag: Int, div: (String, String) => String)
     : Seq[(String, String)] = {
@@ -4765,10 +4750,9 @@ object CoreQueries {
     * to q270's ACF (an AR(p) process has PACF ≈ 0 past lag p, where the
     * ACF only decays): the Durbin–Levinson recursion unrolled to lag
     * [[PacfMaxLag]] as a symbolic expression chain over q270's e6
-    * autocorrelations. The recursion's divisions are each the
-    * sign·(|n| div |d|) truncating form — the only integer-division
-    * spelling whose semantics both engines share for signed operands — so
-    * every φ_kj is the same integer in both, and the PACF column is
+    * autocorrelations. The recursion's divisions are each FixedPoint's
+    * truncating division (toward zero for any operand signs), so
+    * every φ_kj is the same integer in both engines, and the PACF column is
     * exact. Defined (quantized) arithmetic, mirrored: each e6·e6 product
     * re-quantizes once.
     *
@@ -4776,11 +4760,6 @@ object CoreQueries {
     * frame → a pure expression chain (no further shuffle at all).
     */
   val q321Pacf: Q = (s, dir) => {
-    def sdiv(n: String, d: String) =
-      s"""(CASE WHEN (($n) < 0) != (($d) < 0) THEN -1 ELSE 1 END *
-         | (ABS(CAST(($n) AS DECIMAL(38,0)))
-         |  div ABS(CAST(($d) AS DECIMAL(38,0)))))"""
-        .stripMargin.replace("\n", " ")
     // the ACF frame feeds the pivot AND the final join — checkpoint so
     // q270's corpus co-moment pass runs once
     val acf = q270Acf(s, dir).select(col("lag"), col("acf_e6"))
@@ -4788,7 +4767,7 @@ object CoreQueries {
     val base = acf.groupBy().pivot("lag", 1 to PacfMaxLag)
       .agg(first(col("acf_e6")))
       .select((1 to PacfMaxLag).map(k => col(k.toString).as(s"r$k")): _*)
-    val chained = dlSteps(PacfMaxLag, sdiv).foldLeft(base) {
+    val chained = dlSteps(PacfMaxLag, Spark.truncDivLong).foldLeft(base) {
       case (df, (name, e)) => df.withColumn(name, expr(e))
     }
     val stacked = chained.select(explode(array(
@@ -4801,11 +4780,7 @@ object CoreQueries {
   }
 
   val q321Sql: String = {
-    def sdiv(n: String, d: String) =
-      s"""((CASE WHEN (($n) < 0) != (($d) < 0) THEN -1 ELSE 1 END) *
-         | (ABS(CAST(($n) AS HUGEINT)) // ABS(CAST(($d) AS HUGEINT))))"""
-        .stripMargin.replace("\n", " ")
-    val steps = dlSteps(PacfMaxLag, sdiv)
+    val steps = dlSteps(PacfMaxLag, Duck.truncDiv)
     val chain = steps.zipWithIndex.map { case ((name, e), i) =>
       s"s$i AS (SELECT *, $e AS $name FROM ${if (i == 0) "base" else s"s${i - 1}"})"
     }.mkString(",\n")
@@ -5169,8 +5144,6 @@ object CoreQueries {
   val q508BinAdvisor: Q = (s, dir) => {
     import graft.functions.Text
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir).select(cents(col("o_totalprice")).as("c"))
     val byV = o.groupBy(col("c")).agg(count(lit(1)).as("cnt"))
       .localCheckpoint()
@@ -5188,11 +5161,12 @@ object CoreQueries {
     mom.crossJoin(broadcast(q25)).crossJoin(broadcast(q75))
       .withColumn("iqr", col("p75") - col("p25"))
       .withColumn("cbrt_n", expr(Text.exp2e6SparkSql(
-        s"CAST((${Text.log2e6SparkSql("CAST(n AS BIGINT)")}) div 3" +
+        s"CAST((${Spark.log2e6("CAST(n AS BIGINT)")}) div 3" +
           " AS BIGINT)")))
       .withColumn("sigma", expr(
         "CAST(FLOOR(SQRT(CAST(" +
-          fdiv("n * sxx - sx * sx", "n * n") + " AS DOUBLE))) AS BIGINT)"))
+          Spark.truncDiv("n * sxx - sx * sx", "n * n") +
+            " AS DOUBLE))) AS BIGINT)"))
       .withColumn("w_fd", expr("CASE WHEN cbrt_n = 0 THEN NULL " +
         "ELSE (2 * iqr) div cbrt_n END"))
       .withColumn("w_scott", expr("CASE WHEN cbrt_n = 0 THEN NULL " +
@@ -5204,15 +5178,14 @@ object CoreQueries {
           "ELSE (mx - mn + w_fd - 1) div w_fd END").as("bins_fd"),
         expr("CASE WHEN w_scott = 0 THEN NULL " +
           "ELSE (mx - mn + w_scott - 1) div w_scott END").as("bins_scott"),
-        expr(s"1 + CAST((${Text.log2e6SparkSql("CAST(n AS BIGINT)")})" +
+        expr(s"1 + CAST((${Spark.log2e6("CAST(n AS BIGINT)")})" +
           " div 1000000 + CASE WHEN " +
-          s"(${Text.log2e6SparkSql("CAST(n AS BIGINT)")}) % 1000000 > 0" +
+          s"(${Spark.log2e6("CAST(n AS BIGINT)")}) % 1000000 > 0" +
           " THEN 1 ELSE 0 END AS BIGINT)").as("bins_sturges"))
   }
 
   val q508Sql: String = {
     import graft.functions.Text
-    def l2(x: String) = Text.log2e6DuckSql(x)
     def e2(y: String) = Text.exp2e6DuckSql(y)
     s"""WITH o AS (
       |  SELECT CAST(ROUND(o_totalprice*100) AS BIGINT) AS c FROM orders),
@@ -5238,7 +5211,7 @@ object CoreQueries {
       |  WHERE below + cnt >= (3 * CAST(n AS BIGINT) + 3) // 4),
       |staged AS (
       |  SELECT CAST(n AS BIGINT) AS n, mn, mx, p75 - p25 AS iqr,
-      |    ${e2(s"CAST((${l2("CAST(n AS BIGINT)")}) // 3 AS BIGINT)")}
+      |    ${e2(s"CAST((${Duck.log2e6("CAST(n AS BIGINT)")}) // 3 AS BIGINT)")}
       |      AS cbrt_n,
       |    CAST(FLOOR(SQRT(CAST(CAST(
       |      (n * sxx - sx * sx) // (n * n) AS VARCHAR) AS DOUBLE)))
@@ -5257,8 +5230,8 @@ object CoreQueries {
       |    ELSE (mx - mn + w_fd - 1) // w_fd END AS bins_fd,
       |  CASE WHEN w_scott = 0 THEN NULL
       |    ELSE (mx - mn + w_scott - 1) // w_scott END AS bins_scott,
-      |  1 + CAST((${l2("n")}) // 1000000
-      |    + CASE WHEN (${l2("n")}) % 1000000 > 0 THEN 1 ELSE 0 END
+      |  1 + CAST((${Duck.log2e6("n")}) // 1000000
+      |    + CASE WHEN (${Duck.log2e6("n")}) % 1000000 > 0 THEN 1 ELSE 0 END
       |    AS BIGINT) AS bins_sturges
       |FROM widths""".stripMargin
   }

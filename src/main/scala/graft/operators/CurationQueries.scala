@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.{Q, Tables}
-import graft.functions.{Pii, Text}
+import graft.functions.{FixedPoint, Pii, Text}
+import graft.functions.FixedPoint.{Duck, Spark}
 
 /** Training-data curation operators: the corpus-hygiene passes a large-scale
   * LLM data pipeline runs between raw ingest and tokenization — repetition
@@ -1635,16 +1636,13 @@ object CurationQueries {
         expr("CAST(SUM(flesch_e3) AS BIGINT)").as("sum_flesch_e3"),
         min(col("flesch_e3")).as("min_flesch_e3"),
         max(col("flesch_e3")).as("max_flesch_e3"))
-      // sign-factored: the difficult band's sum can be negative, where
-      // Spark DIV truncates but DuckDB // floors — they agree only on
-      // non-negative operands
+      // the difficult band's sum can be negative
       .withColumn("mean_flesch_e3",
-        expr("""CASE WHEN sum_flesch_e3 >= 0 THEN sum_flesch_e3 DIV n_docs
-               |     ELSE -((-sum_flesch_e3) DIV n_docs) END""".stripMargin))
+        expr(Spark.truncDivLong("sum_flesch_e3", "n_docs")))
   }
 
   val q223Sql: String =
-    """WITH f AS (
+    s"""WITH f AS (
       |  SELECT doc_id, source,
       |    LEN(STRING_SPLIT(text, ' ')) AS words,
       |    GREATEST(LEN(REGEXP_REPLACE(text, '[^.!?]', '', 'g')), 1)
@@ -1665,10 +1663,7 @@ object CurationQueries {
       |  CAST(SUM(flesch_e3) AS BIGINT) AS sum_flesch_e3,
       |  MIN(flesch_e3) AS min_flesch_e3,
       |  MAX(flesch_e3) AS max_flesch_e3,
-      |  CAST(CASE WHEN SUM(flesch_e3) >= 0
-      |       THEN SUM(flesch_e3) // COUNT(*)
-      |       ELSE -((-SUM(flesch_e3)) // COUNT(*)) END AS BIGINT)
-      |    AS mean_flesch_e3
+      |  ${Duck.truncDivLong("SUM(flesch_e3)", "COUNT(*)")} AS mean_flesch_e3
       |FROM sc
       |GROUP BY 1, 2""".stripMargin
 
@@ -1804,8 +1799,6 @@ object CurationQueries {
     */
   val q430BrierDecomposition: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val bins = q226Calibration(s, dir)
       .select(col("n_docs"), col("n_events"), col("mean_phat_e6"))
     val tot = bins.agg(sum(col("n_docs")).cast(dec).as("nn"),
@@ -1813,13 +1806,13 @@ object CurationQueries {
       .withColumn("obar_e6", expr("kk * 1000000 DIV nn"))
     val staged = bins.crossJoin(broadcast(tot))
       .select(col("nn"), col("kk"), col("obar_e6"),
-        expr(fdiv(
+        expr(Spark.truncDiv(
           """(CAST(mean_phat_e6 AS DECIMAL(38,0)) * n_docs
             | - CAST(n_events AS DECIMAL(38,0)) * 1000000) *
             |(CAST(mean_phat_e6 AS DECIMAL(38,0)) * n_docs
             | - CAST(n_events AS DECIMAL(38,0)) * 1000000)"""
             .stripMargin.replace("\n", " "), "n_docs")).as("rel_t"),
-        expr(fdiv(
+        expr(Spark.truncDiv(
           """(CAST(n_events AS DECIMAL(38,0)) * 1000000
             | - CAST(n_docs AS DECIMAL(38,0)) * obar_e6) *
             |(CAST(n_events AS DECIMAL(38,0)) * 1000000
@@ -1829,12 +1822,13 @@ object CurationQueries {
       .agg(sum(col("rel_t")).as("rel_s"), sum(col("res_t")).as("res_s"))
       .select(col("nn").cast("long").as("n_total"),
         col("obar_e6").cast("long").as("base_rate_e6"),
-        expr(fdiv("rel_s", "nn")).cast("long").as("reliability_e12"),
-        expr(fdiv("res_s", "nn")).cast("long").as("resolution_e12"),
-        expr(fdiv("kk * (nn - kk) * 1000000000000", "nn * nn"))
+        expr(Spark.truncDiv("rel_s", "nn")).cast("long").as("reliability_e12"),
+        expr(Spark.truncDiv("res_s", "nn")).cast("long").as("resolution_e12"),
+        expr(Spark.truncDiv("kk * (nn - kk) * 1000000000000", "nn * nn"))
           .cast("long").as("uncertainty_e12"),
-        (expr(fdiv("rel_s", "nn")) - expr(fdiv("res_s", "nn")) +
-          expr(fdiv("kk * (nn - kk) * 1000000000000", "nn * nn")))
+        (expr(Spark.truncDiv("rel_s", "nn")) -
+          expr(Spark.truncDiv("res_s", "nn")) +
+          expr(Spark.truncDiv("kk * (nn - kk) * 1000000000000", "nn * nn")))
           .cast("long").as("brier_binned_e12"))
   }
 
@@ -1891,8 +1885,6 @@ object CurationQueries {
     * corpus-scale; the finish is a 1-row fold.
     */
   val q331LoglossHl: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val bins = q226Calibration(s, dir)
       .select(col("bin"), col("n_docs"), col("n_events"),
         least(greatest(col("mean_phat_e6"), lit(1L)), lit(999999L))
@@ -1901,23 +1893,24 @@ object CurationQueries {
     val terms = bins
       .withColumn("xent_e6",
         col("n_events") * (lit(Log2MillionE6) -
-          expr(Text.log2e6SparkSql("p_e6"))) +
+          expr(Spark.log2e6("p_e6"))) +
         (col("n_docs") - col("n_events")) * (lit(Log2MillionE6) -
-          expr(Text.log2e6SparkSql("q_e6"))))
+          expr(Spark.log2e6("q_e6"))))
       .withColumn("hl_num",
         ((col("n_events") * 1000000L - col("n_docs") * col("p_e6"))
           .cast("decimal(38,0)") *
           (col("n_events") * 1000000L - col("n_docs") * col("p_e6"))))
       .withColumn("hl_den",
-        expr(fdiv("CAST(n_docs AS DECIMAL(38,0)) * p_e6 * q_e6", "1000000")))
-      .withColumn("hl_e6", expr(fdiv("hl_num", "hl_den")))
+        expr(Spark.truncDiv("CAST(n_docs AS DECIMAL(38,0)) * p_e6 * q_e6",
+          "1000000")))
+      .withColumn("hl_e6", expr(Spark.truncDiv("hl_num", "hl_den")))
     terms.agg(sum(col("n_docs")).as("n_total"),
         count(lit(1)).as("n_bins"),
         sum(col("xent_e6").cast("decimal(38,0)")).as("xent_sum"),
         sum(col("hl_e6")).as("hl_sum"))
       .select(col("n_total").cast("long").as("n_total"),
         col("n_bins").cast("long").as("n_bins"),
-        expr(fdiv("xent_sum", "n_total")).cast("long")
+        expr(Spark.truncDiv("xent_sum", "n_total")).cast("long")
           .as("xent2_bits_e6"),
         col("hl_sum").cast("long").as("hl_chi2_e6"))
   }
@@ -1931,9 +1924,9 @@ object CurationQueries {
        |  FROM bins0),
        |terms AS (
        |  SELECT n_docs, n_events,
-       |    n_events * ($Log2MillionE6 - ${Text.log2e6DuckSql("p_e6")})
+       |    n_events * ($Log2MillionE6 - ${Duck.log2e6("p_e6")})
        |      + (n_docs - n_events)
-       |        * ($Log2MillionE6 - ${Text.log2e6DuckSql("q_e6")}) AS xent_e6,
+       |        * ($Log2MillionE6 - ${Duck.log2e6("q_e6")}) AS xent_e6,
        |    (CAST(n_events * 1000000 - n_docs * p_e6 AS HUGEINT)
        |      * (n_events * 1000000 - n_docs * p_e6))
        |      // (CAST(n_docs AS HUGEINT) * p_e6 * q_e6 // 1000000) AS hl_e6
@@ -1967,10 +1960,9 @@ object CurationQueries {
     * 10 rows → 55 intervals → ≤ 220 (i,k,j) triples, all broadcast joins.
     */
   val q336Isotonic: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val rateE12 =
-      fdiv("CAST(n_events AS DECIMAL(38,0)) * 1000000000000", "n_docs")
+      Spark.truncDiv("CAST(n_events AS DECIMAL(38,0)) * 1000000000000",
+        "n_docs")
     // the 10-bin rollup feeds the i/j/k sides and the final report —
     // checkpoint so the corpus scan behind it runs once
     val bins = q226Calibration(s, dir)
@@ -2059,12 +2051,6 @@ object CurationQueries {
     */
   val q343FleissKappa: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val t = Text.tokens(col("text"))
     val nTok = size(t)
     val nChars = length(col("text"))
@@ -2086,9 +2072,12 @@ object CurationQueries {
           (lit(3).cast(dec) * col("nn") - col("s"))).as("b"))
       .select(col("nn").cast("long").as("n_docs"),
         col("s").cast("long").as("s_low"),
-        expr(fdiv("a * 1000000", "6 * nn")).cast("long").as("p_bar_e6"),
-        expr(fdiv("b * 1000000", "9 * nn * nn")).cast("long").as("p_e_e6"),
-        expr(sdiv(s"(3 * nn * ${fdiv("a", "2")} - b) * 1000000",
+        expr(Spark.truncDiv("a * 1000000", "6 * nn"))
+          .cast("long").as("p_bar_e6"),
+        expr(Spark.truncDiv("b * 1000000", "9 * nn * nn"))
+          .cast("long").as("p_e_e6"),
+        expr(Spark.truncDivLong(
+          s"(3 * nn * ${Spark.truncDiv("a", "2")} - b) * 1000000",
           "9 * nn * nn - b")).as("kappa_e6"))
   }
 
@@ -2114,9 +2103,8 @@ object CurationQueries {
        |SELECT CAST(nn AS BIGINT) AS n_docs, CAST(s AS BIGINT) AS s_low,
        |  CAST(a * 1000000 // (6 * nn) AS BIGINT) AS p_bar_e6,
        |  CAST(b * 1000000 // (9 * nn * nn) AS BIGINT) AS p_e_e6,
-       |  CAST(CASE WHEN 3 * nn * (a // 2) - b >= 0 THEN 1 ELSE -1 END *
-       |    (ABS((3 * nn * (a // 2) - b) * 1000000) // (9 * nn * nn - b))
-       |    AS BIGINT) AS kappa_e6
+       |  ${Duck.truncDivLong("(3 * nn * (a // 2) - b) * 1000000",
+              "9 * nn * nn - b")} AS kappa_e6
        |FROM st""".stripMargin
 
   // ----------- q348: G-test (log-likelihood ratio) of lang × source
@@ -2141,11 +2129,6 @@ object CurationQueries {
     */
   val q348GTest: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def l2(x: String) = Text.log2e6SparkSql(x)
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val d = Tables.documents(s, dir).select(col("lang"), col("source"))
     val cells = d.groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("o"))
@@ -2157,8 +2140,9 @@ object CurationQueries {
       .join(broadcast(cols), Seq("source"))
       .crossJoin(broadcast(n))
       .select(col("o"),
-        expr(s"CAST(o AS DECIMAL(38,0)) * (${l2("o")} + ${l2("nn")} - " +
-          s"${l2("rl")} - ${l2("cl")})").as("t"))
+        expr(s"CAST(o AS DECIMAL(38,0)) * (${Spark.log2e6("o")} + " +
+          s"${Spark.log2e6("nn")} - " +
+          s"${Spark.log2e6("rl")} - ${Spark.log2e6("cl")})").as("t"))
     val folded = terms.agg(count(lit(1)).as("n_cells"),
       sum(col("t")).as("gbits"))
     val df = rows.agg(count(lit(1)).as("nr"))
@@ -2168,11 +2152,10 @@ object CurationQueries {
       .select(col("n_cells").cast("long").as("n_cells"),
         col("df").cast("long").as("df"),
         col("gbits").cast("long").as("g_bits_e6"),
-        expr(sdiv("gbits * 1386294", "1000000")).as("g_e6"))
+        expr(Spark.truncDivLong("gbits * 1386294", "1000000")).as("g_e6"))
   }
 
-  val q348Sql: String = {
-    def l2(x: String) = Text.log2e6DuckSql(x)
+  val q348Sql: String =
     s"""WITH d AS (SELECT lang, source FROM documents),
        |cells AS (SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS o
        |  FROM d GROUP BY lang, source),
@@ -2183,7 +2166,8 @@ object CurationQueries {
        |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS nn FROM d),
        |terms AS (
        |  SELECT CAST(o AS HUGEINT) *
-       |    (${l2("o")} + ${l2("nn")} - ${l2("rl")} - ${l2("cl")}) AS t
+       |    (${Duck.log2e6("o")} + ${Duck.log2e6("nn")} - ${Duck.log2e6("rl")} -
+       |      ${Duck.log2e6("cl")}) AS t
        |  FROM cells JOIN rws USING (lang) JOIN cls USING (source)
        |  CROSS JOIN n),
        |folded AS (
@@ -2194,10 +2178,8 @@ object CurationQueries {
        |    ((SELECT COUNT(*) FROM cls) - 1) AS df)
        |SELECT n_cells, CAST(df AS BIGINT) AS df,
        |  CAST(gbits AS BIGINT) AS g_bits_e6,
-       |  CAST(CASE WHEN gbits >= 0 THEN 1 ELSE -1 END *
-       |    (ABS(gbits * 1386294) // 1000000) AS BIGINT) AS g_e6
+       |  ${Duck.truncDivLong("gbits * 1386294", "1000000")} AS g_e6
        |FROM folded CROSS JOIN df""".stripMargin
-  }
 
   // ----------- q385: Spiegelhalter's Z calibration test (doc-level)
 
@@ -2234,8 +2216,7 @@ object CurationQueries {
         sqrt(col("den_e24").cast("double"))).as("z_d"))
   }
 
-  val q385Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
+  val q385Sql: String =
     s"""WITH $q99ScoreCtes,
        |pd AS (
        |  SELECT CASE WHEN d.n_chars >= 300 THEN 1 ELSE 0 END AS resp,
@@ -2249,11 +2230,18 @@ object CurationQueries {
        |      * p * (1000000 - p)) AS den_e24
        |  FROM pd)
        |SELECT n AS n_docs,
-       |  ${d("num_e12")} / sqrt(${d("den_e24")}) AS z_d
+       |  ${Duck.asDouble("num_e12")} / sqrt(${Duck.asDouble("den_e24")}) AS z_d
        |FROM folded""".stripMargin
-  }
 
   // -------- q386: Cox calibration slope/intercept on the logit scale
+
+  /** ln(p / (1 − p))·10⁶ for an e6 probability p, the same integer in
+    * both engines: the log2e6 difference times ln 2 (693147e-6), truncated.
+    */
+  private def logitE6(fx: FixedPoint.Dialect, p: String): String =
+    fx.truncDiv(
+      s"(${fx.log2e6(p)} - ${fx.log2e6(s"1000000 - ($p)")}) * 693147",
+      "1000000")
 
   /** q386: the Cox recalibration line — regress observed bin log-odds on
     * predicted bin log-odds over q226's ten reliability bins: slope 1 /
@@ -2268,57 +2256,43 @@ object CurationQueries {
     */
   val q386CoxCalibration: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def l2(x: String) = Text.log2e6SparkSql(x)
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
-    def logit(p: String) =
-      s"""CAST(CASE WHEN (${l2(p)} - ${l2(s"1000000 - ($p)")}) >= 0 THEN 1
-         | ELSE -1 END * CAST((abs((${l2(p)} - ${l2(s"1000000 - ($p)")})
-         | * 693147) - abs((${l2(p)} - ${l2(s"1000000 - ($p)")}) * 693147)
-         | % 1000000) / 1000000 AS DECIMAL(38,0)) AS DECIMAL(38,0))"""
-        .stripMargin.replace("\n", " ")
     val pts = q226Calibration(s, dir)
       .select(
         expr("GREATEST(LEAST(mean_phat_e6, 999999), 1)").as("pp"),
         expr("GREATEST(LEAST(event_rate_e6, 999999), 1)").as("oo"))
-      .select(expr(logit("pp")).as("x"), expr(logit("oo")).as("y"))
+      .select(expr(logitE6(Spark, "pp")).as("x"),
+        expr(logitE6(Spark, "oo")).as("y"))
     val sums = pts.agg(count(lit(1)).cast(dec).as("n"),
       sum(col("x")).as("sx"), sum(col("y")).as("sy"),
       sum(col("x") * col("x")).as("sxx"), sum(col("x") * col("y")).as("sxy"))
     sums.select(col("n").cast("long").as("n_bins"),
-      expr(sdiv("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx"))
+      expr(Spark.truncDivLong("(n * sxy - sx * sy) * 1000000",
+        "n * sxx - sx * sx"))
         .as("slope_e6"),
       // x/y already carry e6, so the intercept ratio is e6 without a
       // further scale factor (the slope ratio is dimensionless and needs it)
-      expr(sdiv("sy * sxx - sx * sxy", "n * sxx - sx * sx"))
+      expr(Spark.truncDivLong("sy * sxx - sx * sxy", "n * sxx - sx * sx"))
         .as("intercept_ln_e6"))
   }
 
-  val q386Sql: String = {
-    def l2(x: String) = Text.log2e6DuckSql(x)
-    def sd(num: String, den: String) =
-      s"""CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | (ABS($num) // ($den))""".stripMargin.replace("\n", " ")
-    def logit(p: String) =
-      s"(${sd(s"(${l2(p)} - ${l2(s"1000000 - ($p)")}) * 693147", "1000000")})"
+  val q386Sql: String =
     s"""WITH bins AS ($q226Sql),
        |pts AS (
-       |  SELECT ${logit("GREATEST(LEAST(mean_phat_e6, 999999), 1)")} AS x,
-       |    ${logit("GREATEST(LEAST(event_rate_e6, 999999), 1)")} AS y
+       |  SELECT ${logitE6(Duck, "GREATEST(LEAST(mean_phat_e6, 999999), 1)")} AS
+       |    x,
+       |    ${logitE6(Duck, "GREATEST(LEAST(event_rate_e6, 999999), 1)")} AS y
        |  FROM bins),
        |sums AS (
        |  SELECT CAST(COUNT(*) AS HUGEINT) AS n, SUM(x) AS sx, SUM(y) AS sy,
        |    SUM(x * x) AS sxx, SUM(x * y) AS sxy
        |  FROM pts)
        |SELECT CAST(n AS BIGINT) AS n_bins,
-       |  CAST(${sd("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx")}
+       |  CAST(${Duck.truncDiv("(n * sxy - sx * sy) * 1000000",
+                   "n * sxx - sx * sx")}
        |    AS BIGINT) AS slope_e6,
-       |  CAST(${sd("sy * sxx - sx * sxy", "n * sxx - sx * sx")}
+       |  CAST(${Duck.truncDiv("sy * sxx - sx * sxy", "n * sxx - sx * sx")}
        |    AS BIGINT) AS intercept_ln_e6
        |FROM sums""".stripMargin
-  }
 
   // ------ q498: general-α mixture weights via the portable exp2 LUT
 
@@ -2341,8 +2315,6 @@ object CurationQueries {
     */
   val q498MixtureWeights: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val toks = Tables.documents(s, dir)
       .select(col("source"), Text.tokenCount(col("text")).as("tk"))
       .groupBy(col("source")).agg(sum(col("tk")).as("t_s"))
@@ -2351,16 +2323,16 @@ object CurationQueries {
       .toDF("alpha_pm")
     val weighted = alphas.crossJoin(toks)
       .withColumn("w", expr(Text.exp2e6SparkSql(
-        s"CAST(alpha_pm * (${Text.log2e6SparkSql("t_s")}) div 1000" +
+        s"CAST(alpha_pm * (${Spark.log2e6("t_s")}) div 1000" +
           " AS BIGINT)")))
       .localCheckpoint()
     val tot = weighted.groupBy(col("alpha_pm"))
       .agg(sum(col("w")).as("wt"),
         sum(col("w").cast(dec) *
-          expr(Text.log2e6SparkSql("w"))).as("swl"))
+          expr(Spark.log2e6("w"))).as("swl"))
       .withColumn("h_e6",
-        expr(Text.log2e6SparkSql("wt")).cast(dec) -
-          expr(fdiv("swl", "wt")))
+        expr(Spark.log2e6("wt")).cast(dec) -
+          expr(Spark.truncDiv("swl", "wt")))
       .select(col("alpha_pm"), col("wt"),
         expr(Text.exp2e6SparkSql("CAST(h_e6 AS BIGINT)"))
           .as("eff_sources"))
@@ -2384,7 +2356,6 @@ object CurationQueries {
 
   val q498Sql: String = {
     val rungs = MixAlphaPm.map(a => s"($a)").mkString(", ")
-    def l2(x: String) = Text.log2e6DuckSql(x)
     def e2(y: String) = Text.exp2e6DuckSql(y)
     s"""WITH toks AS (
       |  SELECT source,
@@ -2393,16 +2364,16 @@ object CurationQueries {
       |alphas(alpha_pm) AS (VALUES $rungs),
       |weighted AS (
       |  SELECT CAST(alpha_pm AS BIGINT) AS alpha_pm, source, t_s,
-      |    ${e2(s"CAST(alpha_pm * (${l2("t_s")}) // 1000 AS BIGINT)")}
+      |    ${e2(s"CAST(alpha_pm * (${Duck.log2e6("t_s")}) // 1000 AS BIGINT)")}
       |      AS w
       |  FROM alphas CROSS JOIN toks),
       |tot AS (
       |  SELECT alpha_pm, SUM(w) AS wt,
-      |    SUM(CAST(w AS HUGEINT) * (${l2("w")})) AS swl
+      |    SUM(CAST(w AS HUGEINT) * (${Duck.log2e6("w")})) AS swl
       |  FROM weighted GROUP BY alpha_pm),
       |hh AS (
       |  SELECT alpha_pm, wt,
-      |    CAST((${l2("wt")}) - swl // wt AS BIGINT) AS h_e6
+      |    CAST((${Duck.log2e6("wt")}) - swl // wt AS BIGINT) AS h_e6
       |  FROM tot),
       |eff AS (
       |  SELECT alpha_pm, wt, ${e2("h_e6")} AS eff_sources FROM hh),
@@ -2449,24 +2420,21 @@ object CurationQueries {
     */
   val q499CharEntropy: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     Tables.documents(s, dir)
       .select(col("doc_id"), explode(split(col("text"), "")).as("ch"))
       .groupBy(col("doc_id"), col("ch")).agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).as("n"),
         sum(col("c").cast(dec) *
-          expr(Text.log2e6SparkSql("c"))).as("sl"))
+          expr(Spark.log2e6("c"))).as("sl"))
       .select(col("doc_id"), col("n").as("n_chars"),
-        (expr(Text.log2e6SparkSql("n")).cast(dec) -
-          expr(fdiv("sl", "n"))).cast("long").as("entropy_e6"))
+        (expr(Spark.log2e6("n")).cast(dec) -
+          expr(Spark.truncDiv("sl", "n"))).cast("long").as("entropy_e6"))
       .withColumn("is_suspect",
         (col("entropy_e6") < CharEntropySuspectE6).cast("long"))
   }
 
-  val q499Sql: String = {
-    def l2(x: String) = Text.log2e6DuckSql(x)
+  val q499Sql: String =
     s"""WITH chars AS (
       |  SELECT doc_id, UNNEST(STRING_SPLIT(text, '')) AS ch
       |  FROM documents),
@@ -2475,14 +2443,13 @@ object CurationQueries {
       |  FROM chars GROUP BY 1, 2),
       |docs AS (
       |  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n,
-      |    SUM(CAST(c AS HUGEINT) * (${l2("c")})) AS sl
+      |    SUM(CAST(c AS HUGEINT) * (${Duck.log2e6("c")})) AS sl
       |  FROM cc GROUP BY doc_id)
       |SELECT doc_id, n AS n_chars,
-      |  CAST((${l2("n")}) - sl // n AS BIGINT) AS entropy_e6,
-      |  CAST(CASE WHEN (${l2("n")}) - sl // n < $CharEntropySuspectE6
+      |  CAST((${Duck.log2e6("n")}) - sl // n AS BIGINT) AS entropy_e6,
+      |  CAST(CASE WHEN (${Duck.log2e6("n")}) - sl // n < $CharEntropySuspectE6
       |    THEN 1 ELSE 0 END AS BIGINT) AS is_suspect
       |FROM docs""".stripMargin
-  }
 
   // ------ q506: submodular greedy max-coverage data selection
 
@@ -2636,10 +2603,6 @@ object CurationQueries {
     * Scale: one customer-dimension pass, nation-bounded rollup.
     */
   val q559RandomizedResponse: Q = (s, dir) => {
-    def sdivQ(num: String, den: String) =
-      s"""CASE WHEN $num >= 0 THEN ($num) div ($den)
-         | ELSE -((-($num)) div ($den)) END"""
-        .stripMargin.replace("\n", " ")
     Tables.customer(s, dir)
       .select(col("c_nationkey").cast("long").as("nk"),
         (col("c_mktsegment") === "BUILDING").cast("long").as("t"),
@@ -2654,7 +2617,7 @@ object CurationQueries {
       .select(col("nk").as("nation"), col("n"), col("true_cnt"),
         col("reported_cnt"),
         expr("true_cnt * 1000000 div n").as("true_e6"),
-        expr(sdivQ("(4 * reported_cnt - n) * 1000000", "2 * n"))
+        expr(Spark.truncDivLong("(4 * reported_cnt - n) * 1000000", "2 * n"))
           .as("est_e6"))
       .withColumn("err_e6", col("est_e6") - col("true_e6"))
       .withColumn("epsilon_e6", lit(1098612L)) // ln 3, plan-time literal
@@ -2662,7 +2625,7 @@ object CurationQueries {
   }
 
   val q559Sql: String =
-    """WITH survey AS (
+    s"""WITH survey AS (
       |  SELECT CAST(c_nationkey AS BIGINT) AS nk,
       |    CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS t,
       |    CASE WHEN CAST(('0x' || substr(md5('rr|' ||
@@ -2680,13 +2643,9 @@ object CurationQueries {
       |  CAST(true_cnt AS BIGINT) AS true_cnt,
       |  CAST(reported_cnt AS BIGINT) AS reported_cnt,
       |  CAST(true_cnt * 1000000 // n AS BIGINT) AS true_e6,
-      |  CAST(CASE WHEN 4 * reported_cnt - n >= 0
-      |    THEN (4 * reported_cnt - n) * 1000000 // (2 * n)
-      |    ELSE -((-((4 * reported_cnt - n) * 1000000)) // (2 * n)) END
-      |    AS BIGINT) AS est_e6,
-      |  CAST(CASE WHEN 4 * reported_cnt - n >= 0
-      |    THEN (4 * reported_cnt - n) * 1000000 // (2 * n)
-      |    ELSE -((-((4 * reported_cnt - n) * 1000000)) // (2 * n)) END
+      |  ${Duck.truncDivLong("(4 * reported_cnt - n) * 1000000", "2 * n")}
+      |    AS est_e6,
+      |  CAST(${Duck.truncDivLong("(4 * reported_cnt - n) * 1000000", "2 * n")}
       |    - true_cnt * 1000000 // n AS BIGINT) AS err_e6,
       |  CAST(1098612 AS BIGINT) AS epsilon_e6
       |FROM agg
@@ -3145,11 +3104,6 @@ object CurationQueries {
     * broadcast scalars.
     */
   val q585DomainReweight: Q = (s, dir) => {
-    def sdivE6(num: String, den: String) =
-      s"""CASE WHEN $num >= 0
-         |  THEN CAST(CAST($num AS DECIMAL(38,0)) * 1000000 DIV $den AS BIGINT)
-         |  ELSE -CAST(CAST(-($num) AS DECIMAL(38,0)) * 1000000 DIV $den AS BIGINT)
-         |END""".stripMargin
     // single documents scan: q99ScoreCol inlined, no doc_id self-join (r9)
     val scored = Tables.documents(s, dir)
       .select(col("source"), q99ScoreCol.as("score"),
@@ -3161,12 +3115,14 @@ object CurationQueries {
     val glob = bySrc.agg(sum(col("n_docs")).as("g_docs"),
       sum(col("n_tokens")).as("g_tokens"), sum(col("sum_score")).as("g_score"))
     val st = bySrc.crossJoin(broadcast(glob))
-      .withColumn("mean_s_e6", expr(sdivE6("sum_score", "n_docs")))
-      .withColumn("mean_g_e6", expr(sdivE6("g_score", "g_docs")))
-      .withColumn("w0_e6", expr(sdivE6("n_tokens", "g_tokens")))
+      .withColumn("mean_s_e6", expr(Spark.truncDivLong(
+        "CAST(sum_score AS DECIMAL(38,0)) * 1000000", "n_docs")))
+      .withColumn("mean_g_e6", expr(Spark.truncDivLong(
+        "CAST(g_score AS DECIMAL(38,0)) * 1000000", "g_docs")))
+      .withColumn("w0_e6", expr(Spark.truncDivLong(
+        "CAST(n_tokens AS DECIMAL(38,0)) * 1000000", "g_tokens")))
       .withColumn("delta_e6", col("mean_s_e6") - col("mean_g_e6"))
-      .withColumn("step_e6", expr("CASE WHEN delta_e6 >= 0 " +
-        "THEN delta_e6 div 10000 ELSE -((-delta_e6) div 10000) END"))
+      .withColumn("step_e6", expr(Spark.truncDivLong("delta_e6", "10000")))
       .withColumn("mult_e6",
         least(greatest(lit(0L), lit(1000000L) + col("step_e6")),
           lit(5000000L)))
@@ -3175,7 +3131,8 @@ object CurationQueries {
     st.crossJoin(broadcast(totRaw))
       .select(col("source"), col("n_docs"), col("n_tokens"), col("w0_e6"),
         col("mean_s_e6"), col("delta_e6"), col("mult_e6"),
-        expr(sdivE6("raw", "t_raw")).as("w1_e6"))
+        expr(Spark.truncDivLong("CAST(raw AS DECIMAL(38,0)) * 1000000",
+          "t_raw")).as("w1_e6"))
       .orderBy(col("source"))
   }
 
@@ -3210,9 +3167,8 @@ object CurationQueries {
        |  FROM bs CROSS JOIN g),
        |up AS (
        |  SELECT *,
-       |    LEAST(GREATEST(0, 1000000 + CASE WHEN mean_s_e6 - mean_g_e6 >= 0
-       |      THEN (mean_s_e6 - mean_g_e6) // 10000
-       |      ELSE -((-(mean_s_e6 - mean_g_e6)) // 10000) END), 5000000)
+       |    LEAST(GREATEST(0, 1000000 +
+       |      ${Duck.truncDivLong("mean_s_e6 - mean_g_e6", "10000")}), 5000000)
        |      AS mult_e6
        |  FROM st),
        |r AS (SELECT *, w0_e6 * mult_e6 AS raw FROM up)
@@ -3266,12 +3222,9 @@ object CurationQueries {
           |  + CAST((n_neither + n_only_b) AS DECIMAL(38,0)) * (n_neither + n_only_a))
           |  * 1000000 DIV (CAST(n_docs AS DECIMAL(38,0)) * n_docs)
           |  AS BIGINT)""".stripMargin))
-      .withColumn("kappa_e6", expr(
-        """CASE WHEN pe_e6 = 1000000 THEN NULL
-          |  WHEN po_e6 >= pe_e6
-          |    THEN (po_e6 - pe_e6) * 1000000 div (1000000 - pe_e6)
-          |  ELSE -((-(po_e6 - pe_e6)) * 1000000 div (1000000 - pe_e6))
-          |END""".stripMargin))
+      // NULL when pe_e6 = 10^6 (zero denominator)
+      .withColumn("kappa_e6", expr(Spark.truncDivLong(
+        "(po_e6 - pe_e6) * 1000000", "1000000 - pe_e6")))
       .select(col("n_docs"), col("n_both"), col("n_only_a"),
         col("n_only_b"), col("n_neither"), col("jaccard_e6"),
         col("po_e6"), col("pe_e6"), col("kappa_e6"))
@@ -3500,11 +3453,6 @@ object CurationQueries {
     * everything else is nonnegative integer arithmetic.
     */
   val q595LengthBias: Q = (s, dir) => {
-    def sdivE6(num: String, den: String) =
-      s"""CASE WHEN $num >= 0
-         |  THEN CAST(CAST($num AS DECIMAL(38,0)) * 1000000 DIV $den AS BIGINT)
-         |  ELSE -CAST(CAST(-($num) AS DECIMAL(38,0)) * 1000000 DIV $den AS BIGINT)
-         |END""".stripMargin
     // single documents scan: q99ScoreCol inlined, no doc_id self-join (r9)
     val scored = Tables.documents(s, dir)
       .select(q99ScoreCol.as("score"),
@@ -3521,7 +3469,8 @@ object CurationQueries {
         sum(col("score")).as("sum_score"),
         sum(when(col("score") >= 0, 1L).otherwise(0L)).as("n_keep"))
       .select(col("len_band"), col("n_docs"),
-        expr(sdivE6("sum_score", "n_docs")).as("mean_score_e6"),
+        expr(Spark.truncDivLong("CAST(sum_score AS DECIMAL(38,0)) * 1000000",
+          "n_docs")).as("mean_score_e6"),
         expr("n_keep * 1000000 div n_docs").as("keep_rate_e6"))
       .orderBy(col("len_band"))
   }
@@ -3566,11 +3515,6 @@ object CurationQueries {
     */
   val q597QualityEpochs: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    def sdivE6(num: String, den: String) =
-      s"""CASE WHEN $num >= 0
-         |  THEN CAST(CAST($num AS DECIMAL(38,0)) * 1000000 DIV $den AS BIGINT)
-         |  ELSE -CAST(CAST(-($num) AS DECIMAL(38,0)) * 1000000 DIV $den AS BIGINT)
-         |END""".stripMargin
     // single documents scan: q99ScoreCol inlined, no doc_id self-join (r9)
     val bySrc = Tables.documents(s, dir)
       .select(col("source"), q99ScoreCol.as("score"),
@@ -3578,7 +3522,8 @@ object CurationQueries {
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
         sum(col("score")).as("sum_score"))
-      .withColumn("mean_score_e6", expr(sdivE6("sum_score", "n_docs")))
+      .withColumn("mean_score_e6", expr(Spark.truncDivLong(
+        "CAST(sum_score AS DECIMAL(38,0)) * 1000000", "n_docs")))
     val ranked = bySrc.withColumn("rnk", row_number().over(
       Window.orderBy(col("mean_score_e6").desc, col("source"))))
       .localCheckpoint() // |sources| rows; feeds scalars AND the projection
@@ -3657,11 +3602,6 @@ object CurationQueries {
     * DECIMAL-staged mean; one corpus pass; 10-row report.
     */
   val q598QualityDrift: Q = (s, dir) => {
-    def sdivE6(num: String, den: String) =
-      s"""CASE WHEN $num >= 0
-         |  THEN CAST(CAST($num AS DECIMAL(38,0)) * 1000000 DIV $den AS BIGINT)
-         |  ELSE -CAST(CAST(-($num) AS DECIMAL(38,0)) * 1000000 DIV $den AS BIGINT)
-         |END""".stripMargin
     val d = Tables.documents(s, dir)
     val width = d.agg(expr("CAST(max(doc_id) AS BIGINT) div 10 + 1").as("w"))
     // single documents scan: q99ScoreCol inlined, no doc_id self-join (r9)
@@ -3673,7 +3613,8 @@ object CurationQueries {
         sum(col("score")).as("sum_score"),
         sum(when(col("score") >= 0, 1L).otherwise(0L)).as("n_keep"))
       .select(col("batch"), col("n_docs"), col("n_tokens"),
-        expr(sdivE6("sum_score", "n_docs")).as("mean_score_e6"),
+        expr(Spark.truncDivLong("CAST(sum_score AS DECIMAL(38,0)) * 1000000",
+          "n_docs")).as("mean_score_e6"),
         expr("n_keep * 1000000 div n_docs").as("keep_rate_e6"))
       .orderBy(col("batch"))
   }

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Q, Tables}
 import graft.functions.TSql._
 import graft.functions.Text
+import graft.functions.FixedPoint.{Duck, Spark}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -134,11 +135,9 @@ object EstimatorQueries {
     actual.join(est, "rid")
       .select(col("rid"), col("lo"), col("hi"), col("est_rows"),
         col("actual_rows"),
-        expr("""CASE WHEN actual_rows = 0 THEN NULL
-          | WHEN est_rows - actual_rows >= 0
-          | THEN (est_rows - actual_rows) * 1000000 div actual_rows
-          | ELSE -((actual_rows - est_rows) * 1000000 div actual_rows)
-          | END""".stripMargin.replace("\n", " ")).as("err_e6"))
+        // NULL when actual_rows = 0 (zero denominator)
+        expr(Spark.truncDivLong("(est_rows - actual_rows) * 1000000",
+          "actual_rows")).as("err_e6"))
       .orderBy(col("rid"))
   }
 
@@ -171,11 +170,8 @@ object EstimatorQueries {
        |  GROUP BY 1, 2, 3)
        |SELECT rid, lo, hi, CAST(est_rows AS BIGINT) AS est_rows,
        |  CAST(actual_rows AS BIGINT) AS actual_rows,
-       |  CAST(CASE WHEN actual_rows = 0 THEN NULL
-       |    WHEN est_rows - actual_rows >= 0
-       |    THEN (est_rows - actual_rows) * 1000000 // actual_rows
-       |    ELSE -((actual_rows - est_rows) * 1000000 // actual_rows)
-       |    END AS BIGINT) AS err_e6
+       |  ${Duck.truncDivLong("(est_rows - actual_rows) * 1000000",
+              "actual_rows")} AS err_e6
        |FROM actual JOIN est USING (rid)
        |ORDER BY rid""".stripMargin
 

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Q, Tables}
 import graft.functions.TSql._
 import graft.functions.Text
+import graft.functions.FixedPoint.{Duck, Spark, asDouble}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -2768,18 +2769,16 @@ object EventQueries {
     val seasonal = t.groupBy(col("dow"))
       .agg(sum(col("detr7").cast(dec)).as("s_sum"),
         count(col("detr7")).as("s_n"))
-    // truncating division with non-negative operands only (see Scaladoc)
-    def sdiv(num: String, den: String): org.apache.spark.sql.Column = expr(
-      s"""CAST(CASE WHEN $num < 0 THEN -((-($num)) div ($den))
-         |     ELSE ($num) div ($den) END AS BIGINT)""".stripMargin)
     t.join(broadcast(seasonal), "dow")
       .withColumn("t7e", col("t7").cast(dec) * lit(1000000L))
       .withColumn("de", col("detr7").cast(dec) * lit(1000000L))
       .withColumn("se", col("s_sum") * lit(1000000L))
       .withColumn("sden", (lit(7L) * col("s_n")).cast(dec))
-      .withColumn("trend_e6", sdiv("t7e", "7"))
-      .withColumn("seasonal_e6", when(col("s_n") > 0L, sdiv("se", "sden")))
-      .withColumn("remainder_e6", sdiv("de", "7") - col("seasonal_e6"))
+      .withColumn("trend_e6", expr(Spark.truncDivLong("t7e", "7")))
+      .withColumn("seasonal_e6", when(col("s_n") > 0L,
+        expr(Spark.truncDivLong("se", "sden"))))
+      .withColumn("remainder_e6", expr(Spark.truncDivLong("de", "7")) -
+        col("seasonal_e6"))
       .select(col("day"), col("dow"), col("v_c"), col("trend_e6"),
         col("seasonal_e6"), col("remainder_e6"))
   }
@@ -4076,8 +4075,6 @@ object EventQueries {
     */
   val q292LogRank: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
       .select(col("user_id"), col("event_type"),
         expr("unix_millis(ts) div 86400000").as("day"))
@@ -4115,11 +4112,13 @@ object EventQueries {
       .filter(col("nt") > 1L)
     val terms = risk
       .withColumn("e1_e6",
-        expr(fdiv("CAST(dt AS DECIMAL(38,0)) * n1 * 1000000", "nt")))
+        expr(Spark.truncDiv("CAST(dt AS DECIMAL(38,0)) * n1 * 1000000", "nt")))
       .withColumn("v1_e6",
-        expr(fdiv("CAST(n1 AS DECIMAL(38,0)) * n2 * 1000000", "nt * nt")))
+        expr(Spark.truncDiv("CAST(n1 AS DECIMAL(38,0)) * n2 * 1000000",
+          "nt * nt")))
       .withColumn("v_e6",
-        expr(fdiv("CAST(dt AS DECIMAL(38,0)) * (nt - dt) * v1_e6", "nt - 1")))
+        expr(Spark.truncDiv("CAST(dt AS DECIMAL(38,0)) * (nt - dt) * v1_e6",
+          "nt - 1")))
     // arm totals come from the UNFILTERED day rollup — the terms frame
     // keeps only conversion days
     val totals = byDay.agg(sum(col("out1")).cast("long").as("n_a"),
@@ -4408,7 +4407,6 @@ object EventQueries {
     */
   val q280EntropyRate: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
     val e = Tables.events(s, dir)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
@@ -4424,7 +4422,8 @@ object EventQueries {
     val terms = trans
       .withColumn("n_c", sum(col("n_ct")).over(totals))
       .withColumn("term",
-        col("n_ct").cast(dec) * (expr(l2("n_c")) - expr(l2("n_ct"))))
+        col("n_ct").cast(dec) * (expr(Spark.log2e6("n_c")) -
+          expr(Spark.log2e6("n_ct"))))
       .localCheckpoint()
     val perState = terms.groupBy(col("cur"))
       .agg(max(col("n_c")).as("n_trans"), sum(col("term")).as("num"))
@@ -4441,8 +4440,7 @@ object EventQueries {
     perState.unionAll(overall).orderBy(col("state"))
   }
 
-  val q280Sql: String = {
-    def l2(x: String) = graft.functions.Text.log2e6DuckSql(x)
+  val q280Sql: String =
     s"""WITH seq AS (
        |  SELECT event_type AS cur,
        |    LEAD(event_type) OVER (
@@ -4456,7 +4454,8 @@ object EventQueries {
        |  FROM trans GROUP BY cur),
        |terms AS (
        |  SELECT cur, n_ct, n_c,
-       |    CAST(n_ct AS HUGEINT) * (${l2("n_c")} - ${l2("n_ct")}) AS term
+       |    CAST(n_ct AS HUGEINT) * (${Duck.log2e6("n_c")} -
+       |      ${Duck.log2e6("n_ct")}) AS term
        |  FROM trans JOIN totals USING (cur)),
        |per_state AS (
        |  SELECT cur AS state, MAX(n_c) AS n_trans,
@@ -4470,7 +4469,6 @@ object EventQueries {
        |  CAST(h AS BIGINT) AS h_bits_e6
        |FROM (SELECT * FROM per_state UNION ALL SELECT * FROM overall)
        |ORDER BY state""".stripMargin
-  }
 
   // ---------------------------- q296: forecast-error panel (seasonal naive)
 
@@ -4498,8 +4496,6 @@ object EventQueries {
     */
   val q296ForecastEval: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
       .select(expr("unix_millis(ts) div 86400000").as("day"))
     // metadata rollup consumed by bounds AND the spine join — checkpoint
@@ -4518,9 +4514,9 @@ object EventQueries {
     val terms = lagged.select(col("a"), col("f"), col("prev"),
       when(col("f").isNotNull, abs(col("a") - col("f"))).as("ae"),
       when(col("f").isNotNull && col("a") > 0,
-        expr(fdiv("ABS(a - f) * 1000000", "a"))).as("ape_e6"),
+        expr(Spark.truncDiv("ABS(a - f) * 1000000", "a"))).as("ape_e6"),
       when(col("f").isNotNull && (col("a") + col("f")) > 0,
-        expr(fdiv("2000000 * ABS(a - f)", "a + f"))).as("sape_e6"),
+        expr(Spark.truncDiv("2000000 * ABS(a - f)", "a + f"))).as("sape_e6"),
       when(col("prev").isNotNull, abs(col("a") - col("prev"))).as("nae"))
     terms.agg(
         count(col("ae")).cast(dec).as("n_f"),
@@ -4532,13 +4528,14 @@ object EventQueries {
         count(col("nae")).cast(dec).as("n_n"),
         sum(col("nae")).cast(dec).as("s_nae"))
       .select(col("n_f").cast("long").as("n_forecast"),
-        expr(fdiv("s_ae * 1000000", "n_f")).cast("long").as("mae_e6"),
-        expr(fdiv("s_ape", "n_p")).cast("long").as("mape_e6"),
-        expr(fdiv("s_sape", "n_s")).cast("long").as("smape_e6"),
+        expr(Spark.truncDiv("s_ae * 1000000", "n_f")).cast("long").as("mae_e6"),
+        expr(Spark.truncDiv("s_ape", "n_p")).cast("long").as("mape_e6"),
+        expr(Spark.truncDiv("s_sape", "n_s")).cast("long").as("smape_e6"),
         // a constant series has zero naive error — MASE is undefined
         // there, and an unguarded division would raise under ANSI mode
         when(col("s_nae") > 0,
-          expr(fdiv("s_ae * n_n * 1000000", "s_nae * n_f"))).cast("long")
+          expr(Spark.truncDiv("s_ae * n_n * 1000000",
+            "s_nae * n_f"))).cast("long")
           .as("mase_e6"))
   }
 
@@ -4608,8 +4605,6 @@ object EventQueries {
     */
   val q297PrCurve: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
     // label = q127's conversion (purchase total ≥ ConvThresholdC) — chosen
     // there so both classes are non-empty at every SF; bare "ever
@@ -4633,15 +4628,16 @@ object EventQueries {
           desc = true, includeCurrent = true, materialize = false),
         "score", Nil, "neg", "cn", desc = true, includeCurrent = true)
       .crossJoin(broadcast(tot))
-      .withColumn("prec_e6", expr(fdiv("cp * 1000000", "cp + cn")))
-      .withColumn("f1_e6", expr(fdiv("2 * cp * 1000000", "cp + cn + n_pos")))
+      .withColumn("prec_e6", expr(Spark.truncDiv("cp * 1000000", "cp + cn")))
+      .withColumn("f1_e6", expr(Spark.truncDiv("2 * cp * 1000000",
+        "cp + cn + n_pos")))
     cum.agg(max(col("n_pos")).cast(dec).as("np"),
         max(col("n_neg")).as("n_neg"),
         sum(col("pos").cast(dec) * col("prec_e6")).as("ap_num"),
         max(struct(col("f1_e6").as("f1"), col("score").as("sc"))).as("best"))
       .select(col("np").cast("long").as("n_pos"),
         col("n_neg").cast("long").as("n_neg"),
-        expr(fdiv("ap_num", "np")).cast("long").as("ap_e6"),
+        expr(Spark.truncDiv("ap_num", "np")).cast("long").as("ap_e6"),
         col("best.f1").cast("long").as("best_f1_e6"),
         col("best.sc").cast("long").as("best_f1_at_score"))
   }
@@ -4702,8 +4698,6 @@ object EventQueries {
     */
   val q298DiffInDiff: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), cents(col("value")).as("v"),
@@ -4718,7 +4712,7 @@ object EventQueries {
       .groupBy(col("treated"), col("post"))
       .agg(count(lit(1)).cast(dec).as("n"), sum(col("v")).cast(dec).as("sv"))
       .select(col("treated"), col("post"), col("n"),
-        expr(fdiv("sv * 1000000", "n")).as("m_e6"))
+        expr(Spark.truncDiv("sv * 1000000", "n")).as("m_e6"))
     cells.agg(
         sum(when(col("treated") === 1 && col("post") === 0, col("n"))).cast("long").as("n_t_pre"),
         sum(when(col("treated") === 1 && col("post") === 1, col("n"))).cast("long").as("n_t_post"),
@@ -4886,8 +4880,6 @@ object EventQueries {
     * rollup.
     */
   val q301NelsonAalen: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
       .select(col("user_id"), col("event_type"),
         expr("unix_millis(ts) div 86400000").as("day"))
@@ -4912,8 +4904,8 @@ object EventQueries {
       .withColumn("n", sum(col("out")).over(whole) -
         coalesce(sum(col("out")).over(below), lit(0L)))
       .filter(col("d") > 0L)
-      .withColumn("h_inc_e6", expr(fdiv("d * 1000000", "n")))
-      .withColumn("v_inc_e6", expr(fdiv("d * 1000000", "n * n")))
+      .withColumn("h_inc_e6", expr(Spark.truncDiv("d * 1000000", "n")))
+      .withColumn("v_inc_e6", expr(Spark.truncDiv("d * 1000000", "n * n")))
       .select(col("t"), col("d"), col("n"),
         sum(col("h_inc_e6")).over(run).cast("long").as("h_e6"),
         sum(col("v_inc_e6")).over(run).cast("long").as("var_e6"))
@@ -4975,8 +4967,6 @@ object EventQueries {
     * Exact integers; confidence floors once at e6.
     */
   val q302SeqPatterns: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val firsts = Tables.events(s, dir)
       .select(col("user_id"), col("event_type"),
         expr("unix_millis(ts)").as("ms"))
@@ -4993,7 +4983,8 @@ object EventQueries {
         sum(when(col("ta") < col("tb"), 1L).otherwise(0L)).as("n_seq"))
       .filter(col("n_seq") >= SeqMinSupport)
       .select(col("a"), col("b"), col("n_seq"), col("n_both"),
-        expr(fdiv("n_seq * 1000000", "n_both")).cast("long").as("conf_e6"))
+        expr(Spark.truncDiv("n_seq * 1000000", "n_both"))
+          .cast("long").as("conf_e6"))
       .orderBy(col("a"), col("b"))
   }
 
@@ -5048,8 +5039,6 @@ object EventQueries {
     */
   val q304CemAtt: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val perUser = Tables.events(s, dir)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_ev"),
@@ -5067,8 +5056,8 @@ object EventQueries {
         sum((lit(1L) - col("t")) * col("y")).cast(dec).as("sy_c"))
     val matched = strata.filter(col("n_t") > 0 && col("n_c") > 0)
       .select(col("n_t"), col("n_c"),
-        (col("n_t") * (expr(fdiv("sy_t * 1000000", "n_t")) -
-          expr(fdiv("sy_c * 1000000", "n_c")))).as("w_gap_e6"))
+        (col("n_t") * (expr(Spark.truncDiv("sy_t * 1000000", "n_t")) -
+          expr(Spark.truncDiv("sy_c * 1000000", "n_c")))).as("w_gap_e6"))
     val naive = strata.agg(sum(col("n_t")).as("nt_all"),
       sum(col("n_c")).as("nc_all"), sum(col("sy_t")).as("syt_all"),
       sum(col("sy_c")).as("syc_all"))
@@ -5081,11 +5070,11 @@ object EventQueries {
         // the weighted gap sum can be negative — sign-factor the floor
         // division so both engines floor the magnitude identically
         (when(col("gap_sum_e6") < 0,
-          -expr(fdiv("-gap_sum_e6", "n_t_matched")))
-          .otherwise(expr(fdiv("gap_sum_e6", "n_t_matched"))))
+          -expr(Spark.truncDiv("-gap_sum_e6", "n_t_matched")))
+          .otherwise(expr(Spark.truncDiv("gap_sum_e6", "n_t_matched"))))
           .cast("long").as("att_e6"),
-        (expr(fdiv("syt_all * 1000000", "nt_all")) -
-          expr(fdiv("syc_all * 1000000", "nc_all"))).cast("long")
+        (expr(Spark.truncDiv("syt_all * 1000000", "nt_all")) -
+          expr(Spark.truncDiv("syc_all * 1000000", "nc_all"))).cast("long")
           .as("naive_gap_e6"))
   }
 
@@ -5137,11 +5126,6 @@ object EventQueries {
     * day-of-week rollup all run over metadata-sized frames.
     */
   val q306SeasonalDecomp: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CASE WHEN $num < 0 THEN -(${fdiv(s"-($num)", den)})
-         |     ELSE ${fdiv(num, den)} END""".stripMargin.replace("\n", " ")
     val e = Tables.events(s, dir)
       .select(expr("unix_millis(ts) div 86400000").as("day"))
     // metadata rollup consumed by bounds AND the spine join — checkpoint
@@ -5159,13 +5143,13 @@ object EventQueries {
       .withColumn("n7", count(lit(1)).over(W))
       .withColumn("s7", sum(col("a")).over(W))
       .filter(col("n7") === 7)
-      .withColumn("trend_e6", expr(fdiv("s7 * 1000000", "7")))
+      .withColumn("trend_e6", expr(Spark.truncDiv("s7 * 1000000", "7")))
       .withColumn("detr_e6", col("a") * 1000000L - col("trend_e6"))
       .withColumn("dow", expr("day % 7"))
       .localCheckpoint() // consumed by the seasonal rollup AND the join
     val seasonal = trended.groupBy(col("dow"))
       .agg(sum(col("detr_e6")).as("sd"), count(lit(1)).as("nd"))
-      .select(col("dow"), expr(sdiv("sd", "nd")).as("seasonal_e6"))
+      .select(col("dow"), expr(Spark.truncDiv("sd", "nd")).as("seasonal_e6"))
     trended.join(broadcast(seasonal), Seq("dow"))
       .select(col("day"), col("a"),
         col("trend_e6").cast("long").as("trend_e6"),
@@ -5232,8 +5216,6 @@ object EventQueries {
     */
   val q308IpsOffPolicy: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val W = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ms"), col("event_id"))
     val logged = Tables.events(s, dir)
@@ -5255,14 +5237,15 @@ object EventQueries {
     // exact e6-floored rate with action-name tiebreak
     val pol = cells
       .select(col("x"), col("a"),
-        expr(fdiv("r_ax * 1000000", "n_ax")).cast("long").as("rate_e6"))
+        expr(Spark.truncDiv("r_ax * 1000000", "n_ax"))
+          .cast("long").as("rate_e6"))
       .groupBy(col("x"))
       .agg(min(struct((-col("rate_e6")).as("nr"), col("a").as("a"))).as("best"))
       .select(col("x"), col("best.a").as("pi_a"))
     val contrib = cells.join(broadcast(pol), Seq("x"))
       .filter(col("a") === col("pi_a"))
       .join(broadcast(perX), Seq("x"))
-      .select(expr(fdiv("r_ax * n_x * 1000000", "n_ax")).as("c_e6"))
+      .select(expr(Spark.truncDiv("r_ax * n_x * 1000000", "n_ax")).as("c_e6"))
     // totals fold from the cell rollup — recomputing them from `logged`
     // would replay the corpus lead pass a second time
     val totals = cells.agg(sum(col("n_ax")).cast(dec).as("n_all"),
@@ -5270,9 +5253,9 @@ object EventQueries {
     contrib.agg(sum(col("c_e6")).as("c_sum"))
       .crossJoin(broadcast(totals))
       .select(col("n_all").cast("long").as("n_logged"),
-        expr(fdiv("r_all * 1000000", "n_all")).cast("long")
+        expr(Spark.truncDiv("r_all * 1000000", "n_all")).cast("long")
           .as("v_logging_e6"),
-        expr(fdiv("c_sum", "n_all")).cast("long").as("v_ips_e6"))
+        expr(Spark.truncDiv("c_sum", "n_all")).cast("long").as("v_ips_e6"))
   }
 
   val q308Sql: String =
@@ -5353,8 +5336,6 @@ object EventQueries {
     */
   def xmrFromDays(byDay: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val W = org.apache.spark.sql.expressions.Window.orderBy(col("day"))
     val mr = byDay.withColumn("prev", lag(col("x"), 1).over(W))
       .withColumn("mrng", abs(col("x") - col("prev")))
@@ -5363,13 +5344,15 @@ object EventQueries {
         sum(col("x")).cast(dec).as("sx"),
         sum(col("mrng")).cast(dec).as("smr"))
       .select(col("n"),
-        expr(fdiv("sx * 1000000", "n")).as("xbar_e6"),
+        expr(Spark.truncDiv("sx * 1000000", "n")).as("xbar_e6"),
         // a single-day series has no moving range (n−1 = 0 would raise)
-        expr(s"CASE WHEN n > 1 THEN ${fdiv("smr * 1000000", "n - 1")} END")
+        expr(s"CASE WHEN n > 1 THEN ${Spark.truncDiv("smr * 1000000", "n - 1")} END")
           .as("mrbar_e6"))
       .select(col("n"), col("xbar_e6"), col("mrbar_e6"),
-        (col("xbar_e6") + expr(fdiv("266 * mrbar_e6", "100"))).as("ucl_e6"),
-        (col("xbar_e6") - expr(fdiv("266 * mrbar_e6", "100"))).as("lcl_e6"))
+        (col("xbar_e6") + expr(Spark.truncDiv("266 * mrbar_e6",
+          "100"))).as("ucl_e6"),
+        (col("xbar_e6") - expr(Spark.truncDiv("266 * mrbar_e6",
+          "100"))).as("lcl_e6"))
     val flagged = mr.crossJoin(broadcast(scal))
       .withColumn("side",
         when(col("x") * 1000000L > col("xbar_e6"), 1L)
@@ -5564,8 +5547,6 @@ object EventQueries {
     */
   val q318AlsStep: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val r = Tables.events(s, dir)
       .groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("r"))
@@ -5573,7 +5554,8 @@ object EventQueries {
     val nTypes = 5L
     // with v0 = 1 (real) on every type, u = Σr·v0/Σv0² = Σr/5; e4-scaled
     val u = r.groupBy(col("user_id"))
-      .agg(expr(fdiv(s"SUM(r) * CAST(10000 AS DECIMAL(38,0))", s"$nTypes"))
+      .agg(expr(Spark.truncDiv(s"SUM(r) * CAST(10000 AS DECIMAL(38,0))",
+        s"$nTypes"))
         .as("u_e4"))
     val su2 = u.agg(sum((col("u_e4") * col("u_e4")).cast(dec)).as("su2"))
     val perItem = r.join(u, Seq("user_id"))
@@ -5583,15 +5565,15 @@ object EventQueries {
           (col("r").cast(dec) * 100000000L)).as("sr8_2"),
         sum(col("r").cast(dec) * col("u_e4")).as("sru"))
     perItem.crossJoin(broadcast(su2))
-      .withColumn("v1_e4", expr(fdiv("sru * 100000000", "su2")))
+      .withColumn("v1_e4", expr(Spark.truncDiv("sru * 100000000", "su2")))
       .select(col("event_type"), col("n_users_present"),
         lit(10000L).as("v0_e4"), col("v1_e4").cast("long").as("v1_e4"),
         // constants pre-folded: 2·v0·1e8 = 2e12 (an INT literal product
         // would overflow before widening), v0² = 1e8
-        expr(fdiv(
+        expr(Spark.truncDiv(
           "sr8_2 - CAST(2000000000000 AS DECIMAL(38,0)) * sru + 100000000 * su2",
           "100000000")).cast("long").as("sse_before_e8"),
-        expr(fdiv(
+        expr(Spark.truncDiv(
           "sr8_2 - 2 * v1_e4 * CAST(100000000 AS DECIMAL(38,0)) * sru + v1_e4 * v1_e4 * su2",
           "100000000")).cast("long").as("sse_after_e8"))
       .orderBy(col("event_type"))
@@ -5649,8 +5631,6 @@ object EventQueries {
     */
   val q319Periodogram: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     def trigCase(p: Int, fn: Double => Double): String =
       (0 until p).map(k =>
         s"WHEN ${k}L THEN ${Math.round(fn(2 * Math.PI * k / p) * 1e6)}L")
@@ -5685,9 +5665,11 @@ object EventQueries {
       .select(col("n").cast("long").as("n_days"),
         // a constant series has zero variance — the spectrum share is
         // undefined, not zero; NULL in both engines
-        when(col("sxx") > 0, expr(fdiv("(sc7 * sc7 + ss7 * ss7) * 2000000",
+        when(col("sxx") > 0, expr(Spark.truncDiv(
+          "(sc7 * sc7 + ss7 * ss7) * 2000000",
           "n * 1000000000000 * sxx"))).cast("long").as("share_p7_e6"),
-        when(col("sxx") > 0, expr(fdiv("(sc5 * sc5 + ss5 * ss5) * 2000000",
+        when(col("sxx") > 0, expr(Spark.truncDiv(
+          "(sc5 * sc5 + ss5 * ss5) * 2000000",
           "n * 1000000000000 * sxx"))).cast("long").as("share_p5_e6"))
   }
 
@@ -5747,8 +5729,6 @@ object EventQueries {
     */
   val q325Psi: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(cents(col("value")).as("v"),
@@ -5782,13 +5762,13 @@ object EventQueries {
       sum(col("n_post")).cast(dec).as("t_post"))
     val scored = bins.crossJoin(broadcast(totals))
       .withColumn("s_pre_e6", greatest(lit(1L).cast(dec),
-        expr(fdiv("n_pre * 1000000", "t_pre"))))
+        expr(Spark.truncDiv("n_pre * 1000000", "t_pre"))))
       .withColumn("s_post_e6", greatest(lit(1L).cast(dec),
-        expr(fdiv("n_post * 1000000", "t_post"))))
-      .withColumn("psi2_bin_e6", expr(fdiv(
+        expr(Spark.truncDiv("n_post * 1000000", "t_post"))))
+      .withColumn("psi2_bin_e6", expr(Spark.truncDiv(
         s"ABS(s_post_e6 - s_pre_e6) * ABS(" +
-          Text.log2e6SparkSql("CAST(s_post_e6 AS BIGINT)") + " - " +
-          Text.log2e6SparkSql("CAST(s_pre_e6 AS BIGINT)") + ")",
+          Spark.log2e6("CAST(s_post_e6 AS BIGINT)") + " - " +
+          Spark.log2e6("CAST(s_pre_e6 AS BIGINT)") + ")",
         "1000000")))
     scored.select(col("bin"), col("n_pre"), col("n_post"),
         col("s_pre_e6").cast("long").as("s_pre_e6"),
@@ -5848,8 +5828,8 @@ object EventQueries {
        |psi AS (
        |  SELECT bin, n_pre, n_post, s_pre_e6, s_post_e6,
        |    ABS(s_post_e6 - s_pre_e6) * ABS(
-       |      ${Text.log2e6DuckSql("CAST(s_post_e6 AS BIGINT)")} -
-       |      ${Text.log2e6DuckSql("CAST(s_pre_e6 AS BIGINT)")})
+       |      ${Duck.log2e6("CAST(s_post_e6 AS BIGINT)")} -
+       |      ${Duck.log2e6("CAST(s_pre_e6 AS BIGINT)")})
        |      // 1000000 AS psi2_bin_e6
        |  FROM scored)
        |SELECT CAST(bin AS BIGINT) AS bin, n_pre, n_post,
@@ -5879,8 +5859,6 @@ object EventQueries {
     */
   val q329Mobility: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), cents(col("value")).as("v"),
@@ -5927,7 +5905,7 @@ object EventQueries {
       .agg(count(lit(1)).as("n_users"))
     val rows = cellsM.groupBy(col("pre_bin")).agg(sum(col("n_users")).as("rn"))
     val scored = cellsM.join(broadcast(rows), Seq("pre_bin"))
-      .withColumn("p_e6", expr(fdiv("n_users * 1000000", "rn")))
+      .withColumn("p_e6", expr(Spark.truncDiv("n_users * 1000000", "rn")))
     val trace = scored.filter(col("pre_bin") === col("post_bin"))
       .agg(sum(col("p_e6")).as("tr_e6"), sum(lit(0L)).as("z"))
     val total = scored.agg(sum(col("n_users")).as("n_all"))
@@ -5936,7 +5914,8 @@ object EventQueries {
       .unionByName(trace.crossJoin(broadcast(total))
         .select(lit(-1L).as("pre_bin"), lit(-1L).as("post_bin"),
           col("n_all").as("n_users"),
-          expr(fdiv("(5000000 - tr_e6) * 1000000", "4000000")).cast("long")
+          expr(Spark.truncDiv("(5000000 - tr_e6) * 1000000", "4000000"))
+            .cast("long")
             .as("p_e6")))
       .orderBy(col("pre_bin"), col("post_bin"))
   }
@@ -6020,8 +5999,6 @@ object EventQueries {
     */
   val q330Conformal: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
       .select(expr("unix_millis(ts) div 86400000").as("day"))
     val byDay = e.groupBy(col("day")).agg(count(lit(1)).as("a"))
@@ -6034,7 +6011,7 @@ object EventQueries {
       .localCheckpoint() // consumed by the calibration means AND the scoring
     val dowMeans = marked.filter(col("is_test") === 0L)
       .groupBy(col("dow"))
-      .agg(expr(fdiv("SUM(a) * 1000000", "COUNT(1)")).as("mu_e6"))
+      .agg(expr(Spark.truncDiv("SUM(a) * 1000000", "COUNT(1)")).as("mu_e6"))
     val scoredAll = marked.join(broadcast(dowMeans), Seq("dow"))
       .select(col("day"), col("is_test"),
         abs(col("a") * 1000000L - col("mu_e6")).as("score"))
@@ -6059,7 +6036,8 @@ object EventQueries {
       .agg(max(col("n_cal")).cast("long").as("n_cal"),
         count(lit(1)).as("n_test"),
         max(col("qhat_e6")).cast("long").as("qhat_e6"),
-        expr(fdiv("SUM(CAST(score <= qhat_e6 AS INT)) * 1000000", "COUNT(1)"))
+        expr(Spark.truncDiv("SUM(CAST(score <= qhat_e6 AS INT)) * 1000000",
+          "COUNT(1)"))
           .cast("long").as("coverage_e6"))
       .withColumn("nominal_e6", lit(ConformalNominalE6))
   }
@@ -6245,12 +6223,6 @@ object EventQueries {
     */
   val q334DoublyRobust: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(n: String, d: String) =
-      s"""(CASE WHEN (($n) < 0) != (($d) < 0) THEN -1 ELSE 1 END *
-         | (ABS(CAST(($n) AS DECIMAL(38,0)))
-         |  div ABS(CAST(($d) AS DECIMAL(38,0)))))"""
         .stripMargin.replace("\n", " ")
     val W = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ms"), col("event_id"))
@@ -6279,7 +6251,7 @@ object EventQueries {
       .localCheckpoint() // both halves, per-x totals, argmax and fold read it
     val model = cellsAll.filter(col("is_model") === 1L)
       .select(col("x"), col("a"),
-        expr(fdiv("r_ax * 1000000", "n_ax")).as("rhat_e6"))
+        expr(Spark.truncDiv("r_ax * 1000000", "n_ax")).as("rhat_e6"))
     // eval-half cells: counts, rewards, propensity denominator
     val cells = cellsAll.filter(col("is_model") === 0L)
       .select(col("x"), col("a"), col("n_ax"), col("r_ax"))
@@ -6301,8 +6273,9 @@ object EventQueries {
     // correction + IPS terms live on the matched cells only
     val corr = joined.filter(col("a") === col("pi_a"))
       .select(col("x"),
-        expr(fdiv("r_ax * n_x * 1000000", "n_ax")).as("ips_e6"),
-        expr(sdiv("(r_ax * 1000000 - CAST(n_ax AS DECIMAL(38,0)) * rhat_e6)" +
+        expr(Spark.truncDiv("r_ax * n_x * 1000000", "n_ax")).as("ips_e6"),
+        expr(Spark.truncDivLong(
+          "(r_ax * 1000000 - CAST(n_ax AS DECIMAL(38,0)) * rhat_e6)" +
           " * n_x", "n_ax")).as("corr_e6"))
     val totals = cells.agg(sum(col("n_ax")).cast(dec).as("n_all"))
     dmTerm.join(corr, Seq("x"))
@@ -6310,9 +6283,10 @@ object EventQueries {
         sum(col("corr_e6")).as("corr_sum"))
       .crossJoin(broadcast(totals))
       .select(col("n_all").cast("long").as("n_eval"),
-        expr(fdiv("dm_sum", "n_all")).cast("long").as("v_dm_e6"),
-        expr(fdiv("ips_sum", "n_all")).cast("long").as("v_ips_e6"),
-        expr(sdiv("dm_sum + corr_sum", "n_all")).cast("long").as("v_dr_e6"))
+        expr(Spark.truncDiv("dm_sum", "n_all")).cast("long").as("v_dm_e6"),
+        expr(Spark.truncDiv("ips_sum", "n_all")).cast("long").as("v_ips_e6"),
+        expr(Spark.truncDivLong("dm_sum + corr_sum", "n_all"))
+          .cast("long").as("v_dr_e6"))
   }
 
   val q334Sql: String =
@@ -6478,8 +6452,6 @@ object EventQueries {
     */
   val q337SignedRank: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), cents(col("value")).as("v"),
@@ -6506,16 +6478,16 @@ object EventQueries {
       .agg(sum(col("pos").cast(dec) * col("dd")).as("w2"))
     w.crossJoin(broadcast(scalars))
       .select(col("n1"), col("ties"), col("w2"),
-        abs(col("w2") - expr(fdiv("n1 * (n1 + 1)", "2"))).as("a2"),
+        abs(col("w2") - expr(Spark.truncDiv("n1 * (n1 + 1)", "2"))).as("a2"),
         (lit(2).cast(dec) * col("n1") * (col("n1") + lit(1)) *
           (lit(2).cast(dec) * col("n1") + lit(1)) - col("ties")).as("dd0"))
       .select(col("n1"), col("ties"), col("w2"), col("a2"),
-        expr(fdiv("a2 * 1000000", "n1")).as("t1_e6"),
-        expr(fdiv("dd0", "n1")).as("dn"))
+        expr(Spark.truncDiv("a2 * 1000000", "n1")).as("t1_e6"),
+        expr(Spark.truncDiv("dd0", "n1")).as("dn"))
       .select(col("n1").cast("long").as("n_pairs"),
         col("w2").cast("long").as("w_plus_2"),
         col("ties").cast("long").as("ties_t"),
-        expr(fdiv("t1_e6 * a2 * 12", "dn")).cast("long").as("z2_e6"))
+        expr(Spark.truncDiv("t1_e6 * a2 * 12", "dn")).cast("long").as("z2_e6"))
   }
 
   val q337Sql: String =
@@ -6583,8 +6555,6 @@ object EventQueries {
     */
   val q339CochranQ: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     def flag(t: String) =
       max(when(col("event_type") === t, 1L).otherwise(0L))
     val f = Tables.events(s, dir)
@@ -6608,7 +6578,7 @@ object EventQueries {
         col("cv").cast("long").as("c_view"),
         col("cc").cast("long").as("c_click"),
         col("cp").cast("long").as("c_purchase"),
-        expr(fdiv("(3 * (cv*cv + cc*cc + cp*cp) - nn*nn) * 2000000",
+        expr(Spark.truncDiv("(3 * (cv*cv + cc*cc + cp*cp) - nn*nn) * 2000000",
           "3 * nn - r2")).cast("long").as("q_e6"))
   }
 
@@ -6660,8 +6630,6 @@ object EventQueries {
     */
   val q340JackknifeRatio: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val bd = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -6672,21 +6640,23 @@ object EventQueries {
     val tot = bd.agg(sum(col("y")).as("sy"), sum(col("x")).as("sx"),
       count(lit(1)).cast(dec).as("g"))
     val loo = bd.crossJoin(broadcast(tot))
-      .select(expr(fdiv("(sy - y) * 1000000000000", "sx - x")).as("r"))
+      .select(expr(Spark.truncDiv("(sy - y) * 1000000000000", "sx - x"))
+        .as("r"))
       .localCheckpoint()
     val mean = loo.agg(sum(col("r")).as("sr"), count(lit(1)).cast(dec).as("g2"))
-      .select(expr(fdiv("sr", "g2")).as("mean_r"))
+      .select(expr(Spark.truncDiv("sr", "g2")).as("mean_r"))
     val dev = loo.crossJoin(broadcast(mean))
       .agg(sum((col("r") - col("mean_r")) * (col("r") - col("mean_r")))
         .as("ss"), max(col("mean_r")).as("mean_r"))
     dev.crossJoin(broadcast(tot))
       .select(col("g").cast("long").as("n_days"),
-        expr(fdiv("sy * 1000000000000", "sx")).cast("long").as("ratio_e12"),
+        expr(Spark.truncDiv("sy * 1000000000000", "sx"))
+          .cast("long").as("ratio_e12"),
         col("mean_r").cast("long").as("loo_mean_e12"),
         ((col("g") - lit(1)) * (col("mean_r") -
-          expr(fdiv("sy * 1000000000000", "sx")))).cast("long")
+          expr(Spark.truncDiv("sy * 1000000000000", "sx")))).cast("long")
           .as("jk_bias_e12"),
-        expr("CAST(FLOOR(SQRT(CAST(" + fdiv("ss * (g - 1)", "g") +
+        expr("CAST(FLOOR(SQRT(CAST(" + Spark.truncDiv("ss * (g - 1)", "g") +
           " AS DOUBLE))) AS BIGINT)").as("jk_se_e12"))
   }
 
@@ -6745,8 +6715,6 @@ object EventQueries {
   val q342CIndex: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val u = Tables.events(s, dir)
       .select(col("user_id"), expr("unix_millis(ts) div 86400000").as("day"),
         col("event_type"))
@@ -6787,7 +6755,7 @@ object EventQueries {
       .select(col("conc").cast("long").as("conc"),
         col("tied").cast("long").as("tied"),
         col("disc").cast("long").as("disc"),
-        expr(fdiv("(2 * conc + tied) * 1000000",
+        expr(Spark.truncDiv("(2 * conc + tied) * 1000000",
           "2 * (conc + tied + disc)")).cast("long").as("c_e6"))
   }
 
@@ -6855,8 +6823,6 @@ object EventQueries {
   val q379ChatterjeeXi: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -6874,7 +6840,7 @@ object EventQueries {
           .otherwise(0L)).cast(dec).as("s2"))
       .select(col("n").cast("long").as("n_days"),
         col("s2").cast("long").as("sum_abs_dr2"),
-        (lit(1000000L) - expr(fdiv("s2 * 3 * 1000000",
+        (lit(1000000L) - expr(Spark.truncDiv("s2 * 3 * 1000000",
           "2 * (n * n - 1)")).cast("long")).as("xi_e6"))
   }
 
@@ -6921,10 +6887,6 @@ object EventQueries {
   val q387YuleWalker: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -6935,7 +6897,8 @@ object EventQueries {
       count(lit(1)).cast(dec).as("n"))
     val w = Window.orderBy(col("day"))
     val gs = byDay.crossJoin(broadcast(tot))
-      .select(col("day"), col("n"), expr(sdiv("x * n - sx", "n")).as("d0"))
+      .select(col("day"), col("n"), expr(Spark.truncDiv("x * n - sx", "n"))
+        .as("d0"))
       .withColumn("d1", lag(col("d0"), 1).over(w))
       .withColumn("d2", lag(col("d0"), 2).over(w))
       .agg(max(col("n")).as("n"),
@@ -6944,29 +6907,29 @@ object EventQueries {
           .otherwise(lit(0).cast(dec))).as("s1"),
         sum(when(col("d2").isNotNull, col("d0") * col("d2"))
           .otherwise(lit(0).cast(dec))).as("s2"))
-      .select(col("n"), expr(sdiv("s0", "n")).as("g0"),
-        expr(sdiv("s1", "n")).as("g1"), expr(sdiv("s2", "n")).as("g2"))
+      .select(col("n"), expr(Spark.truncDiv("s0", "n")).as("g0"),
+        expr(Spark.truncDiv("s1", "n")).as("g1"),
+          expr(Spark.truncDiv("s2", "n")).as("g2"))
     gs.select(col("n").cast("long").as("n_days"),
-        expr(sdiv("(g1 * g0 - g1 * g2) * 1000000", "g0 * g0 - g1 * g1"))
+        expr(Spark.truncDiv("(g1 * g0 - g1 * g2) * 1000000",
+          "g0 * g0 - g1 * g1"))
           .cast("long").as("phi1_e6"),
-        expr(sdiv("(g2 * g0 - g1 * g1) * 1000000", "g0 * g0 - g1 * g1"))
+        expr(Spark.truncDiv("(g2 * g0 - g1 * g1) * 1000000",
+          "g0 * g0 - g1 * g1"))
           .cast("long").as("phi2_e6"))
       .withColumn("stationary",
         (col("phi2_e6") + abs(col("phi1_e6")) < 1000000L &&
           abs(col("phi2_e6")) < 1000000L).cast("long"))
   }
 
-  val q387Sql: String = {
-    def sd(num: String, den: String) =
-      s"""CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | (ABS($num) // ($den))""".stripMargin.replace("\n", " ")
+  val q387Sql: String =
     s"""WITH bd AS (
       |  SELECT CAST(epoch_ms(ts) AS BIGINT) // 86400000 AS day,
       |    CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS HUGEINT) AS x
       |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
       |tot AS (SELECT SUM(x) AS sx, CAST(COUNT(*) AS HUGEINT) AS n FROM bd),
       |devs AS (
-      |  SELECT day, n, ${sd("x * n - sx", "n")} AS d0
+      |  SELECT day, n, ${Duck.truncDiv("x * n - sx", "n")} AS d0
       |  FROM bd CROSS JOIN tot),
       |lagged AS (
       |  SELECT day, n, d0,
@@ -6979,21 +6942,23 @@ object EventQueries {
       |    SUM(CASE WHEN d2 IS NOT NULL THEN d0 * d2 ELSE 0 END) AS s2
       |  FROM lagged),
       |gs AS (
-      |  SELECT n, ${sd("s0", "n")} AS g0, ${sd("s1", "n")} AS g1,
-      |    ${sd("s2", "n")} AS g2
+      |  SELECT n, ${Duck.truncDiv("s0", "n")} AS g0,
+      |    ${Duck.truncDiv("s1", "n")} AS g1,
+      |    ${Duck.truncDiv("s2", "n")} AS g2
       |  FROM sums),
       |fit AS (
       |  SELECT CAST(n AS BIGINT) AS n_days,
-      |    CAST(${sd("(g1 * g0 - g1 * g2) * 1000000", "g0 * g0 - g1 * g1")}
+      |    CAST(${Duck.truncDiv("(g1 * g0 - g1 * g2) * 1000000",
+                    "g0 * g0 - g1 * g1")}
       |      AS BIGINT) AS phi1_e6,
-      |    CAST(${sd("(g2 * g0 - g1 * g1) * 1000000", "g0 * g0 - g1 * g1")}
+      |    CAST(${Duck.truncDiv("(g2 * g0 - g1 * g1) * 1000000",
+                    "g0 * g0 - g1 * g1")}
       |      AS BIGINT) AS phi2_e6
       |  FROM gs)
       |SELECT n_days, phi1_e6, phi2_e6,
       |  CASE WHEN phi2_e6 + ABS(phi1_e6) < 1000000
       |    AND ABS(phi2_e6) < 1000000 THEN 1 ELSE 0 END AS stationary
       |FROM fit""".stripMargin
-  }
 
   // ------------- q380: Ljung–Box omnibus autocorrelation test
 
@@ -7018,12 +6983,6 @@ object EventQueries {
   val q380LjungBox: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -7033,7 +6992,8 @@ object EventQueries {
     val tot = byDay.agg(sum(col("x")).as("sx"),
       count(lit(1)).cast(dec).as("n"))
     val devs = byDay.crossJoin(broadcast(tot))
-      .select(col("day"), col("n"), expr(sdiv("x * n - sx", "n")).as("d0"))
+      .select(col("day"), col("n"), expr(Spark.truncDiv("x * n - sx", "n"))
+        .as("d0"))
     val w = Window.orderBy(col("day"))
     val lagged = (1 to LbLags).foldLeft(devs) { (df, l) =>
       df.withColumn(s"d$l", lag(col("d0"), l).over(w))
@@ -7047,17 +7007,15 @@ object EventQueries {
     // ρ̂_k²·e12 = (|γ_k|·e6/γ0)² staged as two floors; the k-th term then
     // scales by n(n+2)/(n−k) with one more floor
     val terms = (1 to LbLags).map { k =>
-      val rho2 = fdiv(fdiv(s"abs(g$k) * 1000000", "g0") + s" * ${fdiv(s"abs(g$k) * 1000000", "g0")}", "1000000")
-      expr(fdiv(s"$rho2 * n * (n + 2)", s"n - $k"))
+      val rho2 = Spark.truncDiv(Spark.truncDiv(s"abs(g$k) * 1000000", "g0") +
+        s" * ${Spark.truncDiv(s"abs(g$k) * 1000000", "g0")}", "1000000")
+      expr(Spark.truncDiv(s"$rho2 * n * (n + 2)", s"n - $k"))
     }.reduce(_ + _)
     gs.select(col("n").cast("long").as("n_days"),
       terms.cast("long").as("q_lb_e6"))
   }
 
   val q380Sql: String = {
-    def sd(num: String, den: String) =
-      s"""CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | (ABS($num) // ($den))""".stripMargin.replace("\n", " ")
     val lagCols = (1 to LbLags)
       .map(l => s"LAG(d0, $l) OVER (ORDER BY day) AS d$l")
       .mkString(",\n      |    ")
@@ -7074,7 +7032,7 @@ object EventQueries {
       |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
       |tot AS (SELECT SUM(x) AS sx, CAST(COUNT(*) AS HUGEINT) AS n FROM bd),
       |devs AS (
-      |  SELECT day, n, ${sd("x * n - sx", "n")} AS d0
+      |  SELECT day, n, ${Duck.truncDiv("x * n - sx", "n")} AS d0
       |  FROM bd CROSS JOIN tot),
       |lagged AS (
       |  SELECT day, n, d0,
@@ -7111,10 +7069,6 @@ object EventQueries {
     */
   val q378WeightedKappa: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val e = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), cents(col("value")).as("v"),
@@ -7155,11 +7109,12 @@ object EventQueries {
     swo.crossJoin(broadcast(swrc))
       .select(col("n").cast("long").as("n_users"),
         col("swo").cast("long").as("sum_w_obs"),
-        expr(sdiv("(swrc - n * swo) * 1000000", "swrc")).as("kappa_e6"))
+        expr(Spark.truncDivLong("(swrc - n * swo) * 1000000", "swrc"))
+          .as("kappa_e6"))
   }
 
   val q378Sql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT user_id, CAST(ROUND(value*100) AS BIGINT) AS v,
       |    CAST(epoch_ms(ts) AS BIGINT) // 86400000 AS day
       |  FROM events WHERE event_type = 'purchase'),
@@ -7200,8 +7155,7 @@ object EventQueries {
       |  SELECT SUM(r * c * (i - j) * (i - j)) AS swrc
       |  FROM ri CROSS JOIN cj)
       |SELECT CAST(n AS BIGINT) AS n_users, CAST(swo AS BIGINT) AS sum_w_obs,
-      |  CAST(CASE WHEN swrc - n * swo >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((swrc - n * swo) * 1000000) // swrc) AS BIGINT) AS kappa_e6
+      |  ${Duck.truncDivLong("(swrc - n * swo) * 1000000", "swrc")} AS kappa_e6
       |FROM swo CROSS JOIN swrc""".stripMargin
 
   // -------- q373: Kaplan–Meier with Greenwood confidence band
@@ -7386,8 +7340,6 @@ object EventQueries {
     */
   val q369IccDeff: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val byU = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), cents(col("value")).as("c"))
@@ -7397,10 +7349,10 @@ object EventQueries {
     val folded = byU.agg(sum(col("n")).as("nn"),
         count(lit(1)).cast(dec).as("g"),
         sum(col("s")).as("stot"), sum(col("ss")).as("sstot"),
-        sum(expr(fdiv("s * s", "n"))).as("tg"),
+        sum(expr(Spark.truncDiv("s * s", "n"))).as("tg"),
         sum(col("n") * col("n")).as("n2"))
       .select(col("nn"), col("g"),
-        (col("tg") - expr(fdiv("stot * stot", "nn"))).as("ssb"),
+        (col("tg") - expr(Spark.truncDiv("stot * stot", "nn"))).as("ssb"),
         (col("sstot") - col("tg")).as("ssw"), col("n2"))
     val msb = col("ssb").cast("double") / (col("g") - 1).cast("double")
     val msw = col("ssw").cast("double") /
@@ -7418,12 +7370,12 @@ object EventQueries {
   }
 
   val q369Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val msb = s"(${d("ssb")} / ${d("g - 1")})"
-    val msw = s"(${d("ssw")} / ${d("nn - g")})"
-    val k0 = s"((${d("nn")} - ${d("n2")} / ${d("nn")}) / ${d("g - 1")})"
+    val msb = s"(${Duck.asDouble("ssb")} / ${Duck.asDouble("g - 1")})"
+    val msw = s"(${Duck.asDouble("ssw")} / ${Duck.asDouble("nn - g")})"
+    val k0 = s"((${Duck.asDouble("nn")} - ${Duck.asDouble("n2")} / " +
+      s"${Duck.asDouble("nn")}) / ${Duck.asDouble("g - 1")})"
     val icc = s"(($msb - $msw) / ($msb + ($k0 - 1.0) * $msw))"
-    val deff = s"(1.0 + (${d("nn")} / ${d("g")} - 1.0) * $icc)"
+    val deff = s"(1.0 + (${Duck.asDouble("nn")} / ${Duck.asDouble("g")} - 1.0) * $icc)"
     s"""WITH by_u AS (
       |  SELECT user_id, CAST(COUNT(*) AS HUGEINT) AS n,
       |    CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS HUGEINT) AS s,
@@ -7441,7 +7393,7 @@ object EventQueries {
       |  FROM folded)
       |SELECT CAST(nn AS BIGINT) AS n_obs, CAST(g AS BIGINT) AS n_users,
       |  $icc AS icc_d, $deff AS deff_d,
-      |  ${d("nn")} / $deff AS ess_d
+      |  ${Duck.asDouble("nn")} / $deff AS ess_d
       |FROM co""".stripMargin
   }
 
@@ -7458,8 +7410,6 @@ object EventQueries {
     */
   val q370SignTest: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), cents(col("value")).as("v"),
@@ -7476,7 +7426,7 @@ object EventQueries {
         sum(when(col("d") > 0L, 1L).otherwise(0L)).cast(dec).as("sp"))
       .select(col("n").cast("long").as("n_pairs"),
         col("sp").cast("long").as("n_pos"),
-        expr(fdiv("(2 * sp - n) * (2 * sp - n) * 1000000", "n"))
+        expr(Spark.truncDiv("(2 * sp - n) * (2 * sp - n) * 1000000", "n"))
           .cast("long").as("z2_e6"))
   }
 
@@ -7513,10 +7463,6 @@ object EventQueries {
     */
   val q361BreuschPagan: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -7536,7 +7482,7 @@ object EventQueries {
         (col("n") * col("sxy") - col("sx") * col("sy")).as("num_b"))
     val aux = xd.crossJoin(broadcast(sums))
       .select(col("x"),
-        expr(sdiv("dd * y - num_a - num_b * x", "dd")).as("rc"))
+        expr(Spark.truncDiv("dd * y - num_a - num_b * x", "dd")).as("rc"))
       .select(col("x"), (col("rc") * col("rc")).as("z"))
       .agg(count(lit(1)).cast(dec).as("n"),
         sum(col("x")).as("sx"), sum(col("z")).as("sz"),
@@ -7551,8 +7497,8 @@ object EventQueries {
   }
 
   val q361Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    def c(ab: String, a: String, b: String) = d(s"n * $ab - $a * $b")
+    def c(ab: String, a: String, b: String) =
+      Duck.asDouble(s"n * $ab - $a * $b")
     val r2 = s"((${c("sxz", "sx", "sz")} * ${c("sxz", "sx", "sz")}) / " +
       s"(${c("sxx", "sx", "sx")} * ${c("szz", "sz", "sz")}))"
     s"""WITH bd AS (
@@ -7572,8 +7518,7 @@ object EventQueries {
       |  FROM sums),
       |r AS (
       |  SELECT x,
-      |    CASE WHEN dd * y - num_a - num_b * x >= 0 THEN 1 ELSE -1 END *
-      |      (ABS(dd * y - num_a - num_b * x) // dd) AS rc
+      |    ${Duck.truncDiv("dd * y - num_a - num_b * x", "dd")} AS rc
       |  FROM xd CROSS JOIN co),
       |aux AS (
       |  SELECT CAST(COUNT(*) AS HUGEINT) AS n, SUM(x) AS sx,
@@ -7581,7 +7526,7 @@ object EventQueries {
       |    SUM(rc * rc * rc * rc) AS szz, SUM(x * rc * rc) AS sxz
       |  FROM r)
       |SELECT CAST(n AS BIGINT) AS n_days, $r2 AS r2_aux,
-      |  ${d("n")} * $r2 AS bp_lm
+      |  ${Duck.asDouble("n")} * $r2 AS bp_lm
       |FROM aux""".stripMargin
   }
 
@@ -7601,10 +7546,6 @@ object EventQueries {
     */
   val q362JarqueBera: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -7614,7 +7555,7 @@ object EventQueries {
     val tot = byDay.agg(sum(col("x")).as("sx"),
       count(lit(1)).cast(dec).as("n"))
     val moms = byDay.crossJoin(broadcast(tot))
-      .select(expr(sdiv("x * n - sx", "n")).as("d"))
+      .select(expr(Spark.truncDiv("x * n - sx", "n")).as("d"))
       .agg(count(lit(1)).cast(dec).as("n"),
         sum(col("d") * col("d")).as("s2"),
         sum(col("d") * col("d") * col("d")).as("s3"),
@@ -7631,10 +7572,9 @@ object EventQueries {
   }
 
   val q362Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val m2 = s"(${d("s2")} / ${d("n")})"
-    val m3 = s"(${d("s3")} / ${d("n")})"
-    val m4 = s"(${d("s4")} / ${d("n")})"
+    val m2 = s"(${Duck.asDouble("s2")} / ${Duck.asDouble("n")})"
+    val m3 = s"(${Duck.asDouble("s3")} / ${Duck.asDouble("n")})"
+    val m4 = s"(${Duck.asDouble("s4")} / ${Duck.asDouble("n")})"
     val skew = s"($m3 / ($m2 * sqrt($m2)))"
     val exk = s"($m4 / ($m2 * $m2) - 3.0)"
     s"""WITH bd AS (
@@ -7643,15 +7583,15 @@ object EventQueries {
       |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
       |tot AS (SELECT SUM(x) AS sx, CAST(COUNT(*) AS HUGEINT) AS n FROM bd),
       |devs AS (
-      |  SELECT CASE WHEN x * n - sx >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(x * n - sx) // n) AS d
+      |  SELECT ${Duck.truncDiv("x * n - sx", "n")} AS d
       |  FROM bd CROSS JOIN tot),
       |moms AS (
       |  SELECT CAST(COUNT(*) AS HUGEINT) AS n, SUM(d * d) AS s2,
       |    SUM(d * d * d) AS s3, SUM(d * d * d * d) AS s4
       |  FROM devs)
       |SELECT CAST(n AS BIGINT) AS n_days, $skew AS skew_d, $exk AS exkurt_d,
-      |  ${d("n")} / 6.0 * ($skew * $skew + $exk * $exk / 4.0) AS jb_d
+      |  ${Duck.asDouble("n")} / 6.0 * ($skew * $skew + $exk * $exk / 4.0) AS
+      |    jb_d
       |FROM moms""".stripMargin
   }
 
@@ -7670,10 +7610,6 @@ object EventQueries {
   val q363ArchLm: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val w = Window.orderBy(col("day"))
     val diffs = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
@@ -7687,7 +7623,7 @@ object EventQueries {
     val tot = diffs.agg(sum(col("r")).as("sr"),
       count(lit(1)).cast(dec).as("n"))
     val zs = diffs.crossJoin(broadcast(tot))
-      .select(col("day"), expr(sdiv("r * n - sr", "n")).as("e"))
+      .select(col("day"), expr(Spark.truncDiv("r * n - sr", "n")).as("e"))
       .select(col("day"), (col("e") * col("e")).as("z"))
       .withColumn("zp", lag(col("z"), 1).over(w))
       .filter(col("zp").isNotNull)
@@ -7704,8 +7640,8 @@ object EventQueries {
   }
 
   val q363Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    def c(ab: String, a: String, b: String) = d(s"n * $ab - $a * $b")
+    def c(ab: String, a: String, b: String) =
+      Duck.asDouble(s"n * $ab - $a * $b")
     val r2 = s"((${c("sxy", "sx", "sy")} * ${c("sxy", "sx", "sy")}) / " +
       s"(${c("sxx", "sx", "sx")} * ${c("syy", "sy", "sy")}))"
     s"""WITH bd AS (
@@ -7719,8 +7655,7 @@ object EventQueries {
       |  FROM diffs),
       |es AS (
       |  SELECT day,
-      |    CASE WHEN r * n - sr >= 0 THEN 1 ELSE -1 END *
-      |      (ABS(r * n - sr) // n) AS e
+      |    ${Duck.truncDiv("r * n - sr", "n")} AS e
       |  FROM diffs CROSS JOIN tot),
       |zs0 AS (
       |  SELECT day, e * e AS z,
@@ -7733,7 +7668,7 @@ object EventQueries {
       |    SUM(z * zp) AS sxy
       |  FROM zs)
       |SELECT CAST(n AS BIGINT) AS n_pairs, $r2 AS r2_aux,
-      |  ${d("n")} * $r2 AS arch_lm
+      |  ${Duck.asDouble("n")} * $r2 AS arch_lm
       |FROM sums""".stripMargin
   }
 
@@ -7788,9 +7723,8 @@ object EventQueries {
   }
 
   val q364Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     def varSel(src: String, c: String) =
-      s"""(SELECT ${d(s"n * ss - s * s")} / ${d("n * (n - 1)")} AS v,
+      s"""(SELECT ${Duck.asDouble(s"n * ss - s * s")} / ${Duck.asDouble("n * (n - 1)")} AS v,
          | CAST(n AS BIGINT) AS n FROM (
          | SELECT CAST(COUNT(*) AS HUGEINT) AS n, SUM($c) AS s,
          |   SUM($c * $c) AS ss FROM $src))""".stripMargin.replace("\n", " ")
@@ -7944,10 +7878,6 @@ object EventQueries {
   val q358NeweyWest: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -7958,7 +7888,7 @@ object EventQueries {
       count(lit(1)).cast(dec).as("n"))
     val devs = byDay.crossJoin(broadcast(tot))
       .select(col("day"), col("n"),
-        expr(sdiv("x * n - sx", "n")).as("d0"))
+        expr(Spark.truncDiv("x * n - sx", "n")).as("d0"))
     val w = Window.orderBy(col("day"))
     val lagged = (1 to NwLags).foldLeft(devs) { (df, l) =>
       df.withColumn(s"d$l", lag(col("d0"), l).over(w))
@@ -7972,18 +7902,15 @@ object EventQueries {
     val nwNum = (s"6 * g0 + 2 * (" +
       (1 to NwLags).map(l => s"${6 - l} * g$l").mkString(" + ") + ")")
     gs.select(col("n").cast("long").as("n_days"),
-        expr(sdiv("g0", "n")).cast("long").as("gamma0_c2"),
-        expr(sdiv(nwNum, "6 * n")).cast("long").as("nw_c2"),
-        expr(sdiv(sdiv(nwNum, "6 * n") + " * 1000000",
-          sdiv("g0", "n"))).cast("long").as("vif_e6"))
+        expr(Spark.truncDiv("g0", "n")).cast("long").as("gamma0_c2"),
+        expr(Spark.truncDiv(nwNum, "6 * n")).cast("long").as("nw_c2"),
+        expr(Spark.truncDiv(Spark.truncDiv(nwNum, "6 * n") + " * 1000000",
+          Spark.truncDiv("g0", "n"))).cast("long").as("vif_e6"))
   }
 
   val q358Sql: String = {
     val nwNum = "6 * g0 + 2 * (" +
       (1 to NwLags).map(l => s"${6 - l} * g$l").mkString(" + ") + ")"
-    def sd(num: String, den: String) =
-      s"""CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | (ABS($num) // ($den))""".stripMargin.replace("\n", " ")
     val lagCols = (1 to NwLags)
       .map(l => s"LAG(d0, $l) OVER (ORDER BY day) AS d$l").mkString(",\n      |    ")
     val gCols = (1 to NwLags)
@@ -7995,7 +7922,7 @@ object EventQueries {
       |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
       |tot AS (SELECT SUM(x) AS sx, CAST(COUNT(*) AS HUGEINT) AS n FROM bd),
       |devs AS (
-      |  SELECT day, n, ${sd("x * n - sx", "n")} AS d0
+      |  SELECT day, n, ${Duck.truncDiv("x * n - sx", "n")} AS d0
       |  FROM bd CROSS JOIN tot),
       |lagged AS (
       |  SELECT day, n, d0,
@@ -8006,9 +7933,10 @@ object EventQueries {
       |    $gCols
       |  FROM lagged)
       |SELECT CAST(n AS BIGINT) AS n_days,
-      |  CAST(${sd("g0", "n")} AS BIGINT) AS gamma0_c2,
-      |  CAST(${sd(nwNum, "6 * n")} AS BIGINT) AS nw_c2,
-      |  CAST(${sd(s"(${sd(nwNum, "6 * n")}) * 1000000", sd("g0", "n"))}
+      |  CAST(${Duck.truncDiv("g0", "n")} AS BIGINT) AS gamma0_c2,
+      |  CAST(${Duck.truncDiv(nwNum, "6 * n")} AS BIGINT) AS nw_c2,
+      |  CAST(${Duck.truncDiv(s"(${Duck.truncDiv(nwNum, "6 * n")}) * 1000000",
+                                     Duck.truncDiv("g0", "n"))}
       |    AS BIGINT) AS vif_e6
       |FROM gs""".stripMargin
   }
@@ -8033,8 +7961,6 @@ object EventQueries {
   val q359BowkerSymmetry: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val trans = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"),
@@ -8052,14 +7978,14 @@ object EventQueries {
         col("n").cast(dec).as("n_fwd"),
         coalesce(col("n_rev"), lit(0L)).cast(dec).as("n_rev"))
     val chi = pairs.agg(sum(
-      expr(fdiv("(n_fwd - n_rev) * (n_fwd - n_rev) * 1000000",
+      expr(Spark.truncDiv("(n_fwd - n_rev) * (n_fwd - n_rev) * 1000000",
         "n_fwd + n_rev"))).as("chi2"),
       count(lit(1)).as("df"))
     pairs.crossJoin(broadcast(chi))
       .select(col("from_type"), col("to_type"),
         col("n_fwd").cast("long").as("n_fwd"),
         col("n_rev").cast("long").as("n_rev"),
-        expr(fdiv("(n_fwd - n_rev) * (n_fwd - n_rev) * 1000000",
+        expr(Spark.truncDiv("(n_fwd - n_rev) * (n_fwd - n_rev) * 1000000",
           "n_fwd + n_rev")).cast("long").as("term_e6"),
         col("chi2").cast("long").as("chi2_e6"),
         col("df").cast("long").as("df"))
@@ -8118,13 +8044,6 @@ object EventQueries {
     */
   val q360KupiecPof: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val l2pE6 = math.round(KupiecLog2P * 1e6)
     val l2qE6 = math.round(KupiecLog2Q * 1e6)
     val byDay = Tables.events(s, dir)
@@ -8152,19 +8071,20 @@ object EventQueries {
         expr(s"""CASE
           | WHEN xx = 0 THEN -(n * $l2qE6)
           | WHEN xx = n THEN -(n * $l2pE6)
-          | ELSE xx * (${l2("CAST(xx AS BIGINT)")} - ${l2("CAST(n AS BIGINT)")} - $l2pE6)
-          |   + (n - xx) * (${l2("CAST((n - xx) AS BIGINT)")} - ${l2("CAST(n AS BIGINT)")} - $l2qE6)
+          | ELSE xx * (${Spark.log2e6("CAST(xx AS BIGINT)")} -
+          |   ${Spark.log2e6("CAST(n AS BIGINT)")} - $l2pE6)
+          |   + (n - xx) * (${Spark.log2e6("CAST((n - xx) AS BIGINT)")} -
+          |     ${Spark.log2e6("CAST(n AS BIGINT)")} - $l2qE6)
           | END""".stripMargin.replace("\n", " ")).as("bits_e6"))
       .select(col("n").cast("long").as("n_test"),
         col("xx").cast("long").as("n_breach"),
         col("thr").cast("long").as("floor_c"),
-        expr(fdiv("n * 1000000", KupiecP.toString)).cast("long")
+        expr(Spark.truncDiv("n * 1000000", KupiecP.toString)).cast("long")
           .as("expected_breach_e6"),
-        expr(sdiv("bits_e6 * 1386294", "1000000")).as("lr_e6"))
+        expr(Spark.truncDivLong("bits_e6 * 1386294", "1000000")).as("lr_e6"))
   }
 
   val q360Sql: String = {
-    def l2(x: String) = graft.functions.Text.log2e6DuckSql(x)
     val l2pE6 = math.round(KupiecLog2P * 1e6)
     val l2qE6 = math.round(KupiecLog2Q * 1e6)
     s"""WITH bd AS (
@@ -8191,15 +8111,16 @@ object EventQueries {
       |    CASE
       |      WHEN xx = 0 THEN -(n * $l2qE6)
       |      WHEN xx = n THEN -(n * $l2pE6)
-      |      ELSE xx * (${l2("CAST(xx AS BIGINT)")} - ${l2("CAST(n AS BIGINT)")} - $l2pE6)
-      |        + (n - xx) * (${l2("CAST((n - xx) AS BIGINT)")} - ${l2("CAST(n AS BIGINT)")} - $l2qE6)
+      |      ELSE xx * (${Duck.log2e6("CAST(xx AS BIGINT)")} -
+      |        ${Duck.log2e6("CAST(n AS BIGINT)")} - $l2pE6)
+      |        + (n - xx) * (${Duck.log2e6("CAST((n - xx) AS BIGINT)")} -
+      |          ${Duck.log2e6("CAST(n AS BIGINT)")} - $l2qE6)
       |      END AS bits_e6
       |  FROM test)
       |SELECT CAST(n AS BIGINT) AS n_test, CAST(xx AS BIGINT) AS n_breach,
       |  (SELECT CAST(thr AS BIGINT) FROM thr) AS floor_c,
       |  CAST(n * 1000000 // $KupiecP AS BIGINT) AS expected_breach_e6,
-      |  CAST(CASE WHEN bits_e6 >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(bits_e6 * 1386294) // 1000000) AS BIGINT) AS lr_e6
+      |  ${Duck.truncDivLong("bits_e6 * 1386294", "1000000")} AS lr_e6
       |FROM bits""".stripMargin
   }
 
@@ -8220,8 +8141,6 @@ object EventQueries {
   val q353Drawdown: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -8248,14 +8167,13 @@ object EventQueries {
     folded.select(col("n").cast("long").as("n_days"),
       col("max_x").cast("long").as("max_day_c"),
       col("max_dd").cast("long").as("max_dd_c"),
-      expr(fdiv("max_dd * 1000000", "max_x")).cast("long")
+      expr(Spark.truncDiv("max_dd * 1000000", "max_x")).cast("long")
         .as("dd_share_e6"),
       meanD.as("mean_diff_c"), sdD.as("sd_diff_c"),
       (meanD / sdD).as("sharpe_d"))
   }
 
-  val q353Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
+  val q353Sql: String =
     s"""WITH bd AS (
       |  SELECT CAST(epoch_ms(ts) AS BIGINT) // 86400000 AS day,
       |    SUM(CAST(ROUND(value*100) AS BIGINT)) AS x
@@ -8281,14 +8199,15 @@ object EventQueries {
       |  CAST(max_x AS BIGINT) AS max_day_c,
       |  CAST(max_dd AS BIGINT) AS max_dd_c,
       |  CAST(max_dd * 1000000 // max_x AS BIGINT) AS dd_share_e6,
-      |  ${d("sd1")} / ${d("nd")} AS mean_diff_c,
-      |  sqrt(${d("nd * sd2 - sd1 * sd1")} / ${d("nd * (nd - 1)")})
+      |  ${Duck.asDouble("sd1")} / ${Duck.asDouble("nd")} AS mean_diff_c,
+      |  sqrt(${Duck.asDouble("nd * sd2 - sd1 * sd1")} /
+      |    ${Duck.asDouble("nd * (nd - 1)")})
       |    AS sd_diff_c,
-      |  (${d("sd1")} / ${d("nd")}) /
-      |    sqrt(${d("nd * sd2 - sd1 * sd1")} / ${d("nd * (nd - 1)")})
+      |  (${Duck.asDouble("sd1")} / ${Duck.asDouble("nd")}) /
+      |    sqrt(${Duck.asDouble("nd * sd2 - sd1 * sd1")} /
+      |      ${Duck.asDouble("nd * (nd - 1)")})
       |    AS sharpe_d
       |FROM folded""".stripMargin
-  }
 
   // --------------- q355: Page–Hinkley drift detector on daily revenue
 
@@ -8317,12 +8236,6 @@ object EventQueries {
   val q355PageHinkley: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -8330,7 +8243,7 @@ object EventQueries {
       .groupBy(col("day")).agg(sum(col("v")).cast(dec).as("x"))
       .localCheckpoint()
     val lam = byDay.agg(
-      expr(fdiv(s"SUM(x) * 1000000 * $PhLambdaPct", "COUNT(1) * 100"))
+      expr(Spark.truncDiv(s"SUM(x) * 1000000 * $PhLambdaPct", "COUNT(1) * 100"))
         .as("lambda_e6"))
     val w = Window.orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -8338,7 +8251,7 @@ object EventQueries {
       .withColumn("t", count(lit(1)).over(w).cast(dec))
       .withColumn("c", sum(col("x")).over(w))
       .withColumn("term",
-        expr(sdiv("(x * t - c) * 1000000", "t")) - lit(PhDeltaE6))
+        expr(Spark.truncDiv("(x * t - c) * 1000000", "t")) - lit(PhDeltaE6))
       .withColumn("m", sum(col("term")).over(w))
       .withColumn("mmin", min(col("m")).over(w))
       .withColumn("ph", col("m") - col("mmin"))
@@ -8375,8 +8288,7 @@ object EventQueries {
       |  FROM bd),
       |terms AS (
       |  SELECT day,
-      |    CASE WHEN x * t - c >= 0 THEN 1 ELSE -1 END *
-      |      (ABS((x * t - c) * 1000000) // t) - $PhDeltaE6 AS term
+      |    ${Duck.truncDiv("(x * t - c) * 1000000", "t")} - $PhDeltaE6 AS term
       |  FROM ser),
       |walk AS (
       |  SELECT day,
@@ -8488,8 +8400,6 @@ object EventQueries {
   val q349RunsTest: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -8522,7 +8432,7 @@ object EventQueries {
         col("n1").cast("long").as("n_above"),
         col("n2").cast("long").as("n_below"),
         col("r").cast("long").as("n_runs"),
-        expr(fdiv("a * a * (n - 1) * 1000000", "p2 * (p2 - n)"))
+        expr(Spark.truncDiv("a * a * (n - 1) * 1000000", "p2 * (p2 - n)"))
           .cast("long").as("z2_e6"))
   }
 
@@ -8573,12 +8483,6 @@ object EventQueries {
     */
   val q350OddsRatio: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val hv = graft.functions.Text.portableHash(col("user_id").cast("string"))
     val pu = Tables.events(s, dir)
       .groupBy(col("user_id"), expr("unix_millis(ts) div 86400000").as("day"))
@@ -8598,10 +8502,12 @@ object EventQueries {
         col("b").cast("long").as("n10"),
         col("c").cast("long").as("n01"),
         col("d").cast("long").as("n00"),
-        expr(fdiv("a * d * 1000000", "b * c")).cast("long").as("or_e6"),
-        expr(fdiv("a * (c + d) * 1000000", "c * (a + b)")).cast("long")
+        expr(Spark.truncDiv("a * d * 1000000", "b * c"))
+          .cast("long").as("or_e6"),
+        expr(Spark.truncDiv("a * (c + d) * 1000000", "c * (a + b)"))
+          .cast("long")
           .as("rr_e6"),
-        expr(sdiv("(a * (c + d) - c * (a + b)) * 1000000",
+        expr(Spark.truncDivLong("(a * (c + d) - c * (a + b)) * 1000000",
           "(a + b) * (c + d)")).as("rd_e6"),
         sqrt(lit(1.0) / col("a").cast("double") +
           lit(1.0) / col("b").cast("double") +
@@ -8610,7 +8516,7 @@ object EventQueries {
   }
 
   val q350Sql: String =
-    """WITH pu AS (
+    s"""WITH pu AS (
       |  SELECT
       |    CASE WHEN CAST(concat('0x',
       |      substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) % 2 = 0
@@ -8633,9 +8539,8 @@ object EventQueries {
       |  CAST(c AS BIGINT) AS n01, CAST(d AS BIGINT) AS n00,
       |  CAST(a * d * 1000000 // (b * c) AS BIGINT) AS or_e6,
       |  CAST(a * (c + d) * 1000000 // (c * (a + b)) AS BIGINT) AS rr_e6,
-      |  CAST(CASE WHEN a * (c + d) - c * (a + b) >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((a * (c + d) - c * (a + b)) * 1000000)
-      |      // ((a + b) * (c + d))) AS BIGINT) AS rd_e6,
+      |  ${Duck.truncDivLong("(a * (c + d) - c * (a + b)) * 1000000",
+             "(a + b) * (c + d)")} AS rd_e6,
       |  sqrt(1.0 / CAST(CAST(a AS VARCHAR) AS DOUBLE)
       |    + 1.0 / CAST(CAST(b AS VARCHAR) AS DOUBLE)
       |    + 1.0 / CAST(CAST(c AS VARCHAR) AS DOUBLE)
@@ -8670,8 +8575,6 @@ object EventQueries {
     */
   val q351MantelHaenszel: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val hv = graft.functions.Text.portableHash(col("user_id").cast("string"))
     val ud = Tables.events(s, dir)
       .groupBy(col("user_id"), expr("unix_millis(ts) div 86400000").as("day"))
@@ -8698,15 +8601,16 @@ object EventQueries {
       .select(col("band"), col("a"), col("b"), col("c"), col("d"),
         (col("a") + col("b") + col("c") + col("d")).as("nn"))
     strata.agg(
-        sum(expr(fdiv("a * d * 1000000", "nn"))).as("x_e6"),
-        sum(expr(fdiv("b * c * 1000000", "nn"))).as("y_e6"),
+        sum(expr(Spark.truncDiv("a * d * 1000000", "nn"))).as("x_e6"),
+        sum(expr(Spark.truncDiv("b * c * 1000000", "nn"))).as("y_e6"),
         sum(col("a")).as("sa"), sum(col("b")).as("sb"),
         sum(col("c")).as("sc"), sum(col("d")).as("sd"),
         count(lit(1)).as("n_strata"))
       .select(col("n_strata").cast("long").as("n_strata"),
-        expr(fdiv("sa * sd * 1000000", "sb * sc")).cast("long")
+        expr(Spark.truncDiv("sa * sd * 1000000", "sb * sc")).cast("long")
           .as("crude_or_e6"),
-        expr(fdiv("x_e6 * 1000000", "y_e6")).cast("long").as("mh_or_e6"))
+        expr(Spark.truncDiv("x_e6 * 1000000", "y_e6"))
+          .cast("long").as("mh_or_e6"))
   }
 
   val q351Sql: String =
@@ -8797,9 +8701,9 @@ object EventQueries {
   }
 
   val q345Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val mean = s"${d("sx")} / ${d("n")}"
-    val sd = s"sqrt(${d("n * sxx - sx * sx")} / ${d("n * (n - 1)")})"
+    val mean = s"${Duck.asDouble("sx")} / ${Duck.asDouble("n")}"
+    val sd = s"sqrt(${Duck.asDouble("n * sxx - sx * sx")} / " +
+      s"${Duck.asDouble("n * (n - 1)")})"
     val beta = s"($sd) * $GumbelBetaK"
     val mu = s"($mean) - $GumbelGamma * ($beta)"
     s"""WITH bm AS (
@@ -8840,12 +8744,6 @@ object EventQueries {
   val q344DurbinWatson: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -8865,7 +8763,7 @@ object EventQueries {
         (col("n") * col("sxy") - col("sx") * col("sy")).as("num_b"))
     val r = xd.crossJoin(broadcast(sums))
       .select(col("x"),
-        expr(sdiv("dd * y - num_a - num_b * x", "dd")).as("rc"))
+        expr(Spark.truncDiv("dd * y - num_a - num_b * x", "dd")).as("rc"))
     val lagW = Window.orderBy(col("x"))
     r.withColumn("rp", lag(col("rc"), 1).over(lagW))
       .agg(count(lit(1)).as("n_days"),
@@ -8876,12 +8774,12 @@ object EventQueries {
         sum(when(col("rp").isNotNull, col("rc") * col("rp"))
           .otherwise(lit(0).cast(dec))).as("scr"))
       .select(col("n_days").cast("long").as("n_days"),
-        expr(fdiv("sdd * 1000000", "srr")).cast("long").as("dw_e6"),
-        expr(sdiv("scr * 1000000", "srr")).cast("long").as("rho1_e6"))
+        expr(Spark.truncDiv("sdd * 1000000", "srr")).cast("long").as("dw_e6"),
+        expr(Spark.truncDiv("scr * 1000000", "srr")).cast("long").as("rho1_e6"))
   }
 
   val q344Sql: String =
-    """WITH bd AS (
+    s"""WITH bd AS (
       |  SELECT CAST(epoch_ms(ts) AS BIGINT) // 86400000 AS day,
       |    CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS HUGEINT) AS y
       |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
@@ -8899,8 +8797,7 @@ object EventQueries {
       |  FROM sums),
       |r AS (
       |  SELECT x,
-      |    CASE WHEN dd * y - num_a - num_b * x >= 0 THEN 1 ELSE -1 END *
-      |      (ABS(dd * y - num_a - num_b * x) // dd) AS rc
+      |    ${Duck.truncDiv("dd * y - num_a - num_b * x", "dd")} AS rc
       |  FROM xd CROSS JOIN co),
       |ser AS (
       |  SELECT rc, LAG(rc, 1) OVER (ORDER BY x) AS rp FROM r),
@@ -8913,8 +8810,7 @@ object EventQueries {
       |  FROM ser)
       |SELECT n_days,
       |  CAST(sdd * 1000000 // srr AS BIGINT) AS dw_e6,
-      |  CAST(CASE WHEN scr >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(scr * 1000000) // srr) AS BIGINT) AS rho1_e6
+      |  ${Duck.truncDivLong("scr * 1000000", "srr")} AS rho1_e6
       |FROM agg""".stripMargin
 
   // ------------ q399: Hurst exponent of daily revenue (rescaled range)
@@ -8945,13 +8841,6 @@ object EventQueries {
   val q399Hurst: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -8984,14 +8873,16 @@ object EventQueries {
           .as("rs_e6"))
     val perSize = blocks.groupBy(col("m"))
       .agg(count(lit(1)).as("nblk"), sum(col("rs_e6")).as("srs"))
-      .select(col("m"), expr(fdiv("srs", "nblk")).cast("long").as("avg_rs_e6"))
+      .select(col("m"), expr(Spark.truncDiv("srs", "nblk"))
+        .cast("long").as("avg_rs_e6"))
       .localCheckpoint()
-    val pts = perSize.select(expr(s"CAST(${l2("m")} AS DECIMAL(38,0))").as("lx"),
-      expr(s"CAST(${l2("avg_rs_e6")} AS DECIMAL(38,0))").as("ly"))
+    val pts = perSize.select(expr(
+      s"CAST(${Spark.log2e6("m")} AS DECIMAL(38,0))").as("lx"),
+      expr(s"CAST(${Spark.log2e6("avg_rs_e6")} AS DECIMAL(38,0))").as("ly"))
     val slope = pts.agg(count(lit(1)).cast(dec).as("n"),
       sum(col("lx")).as("sx"), sum(col("ly")).as("sy"),
       sum(col("lx") * col("lx")).as("sxx"), sum(col("lx") * col("ly")).as("sxy"))
-      .select(expr(sdiv("(n * sxy - sx * sy) * 1000000",
+      .select(expr(Spark.truncDivLong("(n * sxy - sx * sy) * 1000000",
         "n * sxx - sx * sx")).as("hurst_e6"))
     val piv = perSize.agg(
       sum(when(col("m") === 5L, col("avg_rs_e6"))).as("rs5_e6"),
@@ -9006,8 +8897,7 @@ object EventQueries {
         col("hurst_e6"))
   }
 
-  val q399Sql: String = {
-    def l2(x: String) = graft.functions.Text.log2e6DuckSql(x)
+  val q399Sql: String =
     s"""WITH bd AS (
       |  SELECT CAST(epoch_ms(ts) AS BIGINT) // 86400000 AS day,
       |    SUM(CAST(ROUND(value*100) AS BIGINT)) // 100 AS x
@@ -9038,15 +8928,13 @@ object EventQueries {
       |  SELECT m, CAST(SUM(rs_e6) // COUNT(*) AS BIGINT) AS avg_rs_e6
       |  FROM blocks GROUP BY m),
       |pts AS (
-      |  SELECT CAST(${l2("m")} AS HUGEINT) AS lx,
-      |    CAST(${l2("avg_rs_e6")} AS HUGEINT) AS ly
+      |  SELECT CAST(${Duck.log2e6("m")} AS HUGEINT) AS lx,
+      |    CAST(${Duck.log2e6("avg_rs_e6")} AS HUGEINT) AS ly
       |  FROM per_size),
       |slope AS (
-      |  SELECT CAST(CASE WHEN COUNT(*) * SUM(lx * ly) - SUM(lx) * SUM(ly)
-      |      >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((COUNT(*) * SUM(lx * ly) - SUM(lx) * SUM(ly)) * 1000000)
-      |     // (COUNT(*) * SUM(lx * lx) - SUM(lx) * SUM(lx)))
-      |    AS BIGINT) AS hurst_e6
+      |  SELECT ${Duck.truncDivLong(
+                    "(COUNT(*) * SUM(lx * ly) - SUM(lx) * SUM(ly)) * 1000000",
+                    "COUNT(*) * SUM(lx * lx) - SUM(lx) * SUM(lx)")} AS hurst_e6
       |  FROM pts),
       |piv AS (
       |  SELECT CAST(SUM(CASE WHEN m = 5 THEN avg_rs_e6 END) AS BIGINT)
@@ -9059,7 +8947,6 @@ object EventQueries {
       |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_days FROM bd)
       |SELECT n_days, rs5_e6, rs10_e6, rs15_e6, hurst_e6
       |FROM n CROSS JOIN piv CROSS JOIN slope""".stripMargin
-  }
 
   // -------------- q400: Holt double-exponential smoothing forecast
 
@@ -9124,28 +9011,14 @@ object EventQueries {
       |  FROM ser WHERE rk = 1
       |  UNION ALL
       |  SELECT s.rk,
-      |    CAST(CASE WHEN $HoltAlphaTenths * s.x
-      |        + (10 - $HoltAlphaTenths) * (h.lev + h.tr) >= 0
-      |      THEN 1 ELSE -1 END *
-      |      (ABS($HoltAlphaTenths * s.x
-      |        + (10 - $HoltAlphaTenths) * (h.lev + h.tr)) // 10)
-      |      AS BIGINT),
-      |    CAST(CASE WHEN $HoltBetaTenths * (
-      |        CAST(CASE WHEN $HoltAlphaTenths * s.x
-      |            + (10 - $HoltAlphaTenths) * (h.lev + h.tr) >= 0
-      |          THEN 1 ELSE -1 END *
-      |          (ABS($HoltAlphaTenths * s.x
-      |            + (10 - $HoltAlphaTenths) * (h.lev + h.tr)) // 10)
-      |          AS BIGINT) - h.lev)
-      |        + (10 - $HoltBetaTenths) * h.tr >= 0 THEN 1 ELSE -1 END *
-      |      (ABS($HoltBetaTenths * (
-      |        CAST(CASE WHEN $HoltAlphaTenths * s.x
-      |            + (10 - $HoltAlphaTenths) * (h.lev + h.tr) >= 0
-      |          THEN 1 ELSE -1 END *
-      |          (ABS($HoltAlphaTenths * s.x
-      |            + (10 - $HoltAlphaTenths) * (h.lev + h.tr)) // 10)
-      |          AS BIGINT) - h.lev)
-      |        + (10 - $HoltBetaTenths) * h.tr) // 10) AS BIGINT),
+      |    ${Duck.truncDivLong(
+               s"$HoltAlphaTenths * s.x + (10 - $HoltAlphaTenths) * (h.lev " +
+                 "+ h.tr)",
+               "10")},
+      |    ${Duck.truncDivLong(
+               s"$HoltBetaTenths * ( " +
+                 s"${Duck.truncDivLong(s"$HoltAlphaTenths * s.x + (10 - $HoltAlphaTenths) * (h.lev + h.tr)", "10")} - h.lev) + (10 - $HoltBetaTenths) * h.tr",
+               "10")},
       |    h.sse + CAST(s.x - (h.lev + h.tr) AS HUGEINT)
       |      * (s.x - (h.lev + h.tr))
       |  FROM holt h JOIN ser s ON s.rk = h.rk + 1),
@@ -9181,12 +9054,6 @@ object EventQueries {
   val q405Granger: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .select(expr("unix_millis(ts) div 86400000").as("day"),
         col("event_type"), cents(col("value")).as("v"))
@@ -9219,8 +9086,9 @@ object EventQueries {
       (col("n") * col("qww") - col("sw") * col("sw")).as("sww"))
       .withColumn("d2", col("suu") * col("svv") - col("suv") * col("suv"))
       .withColumn("rr_e6", expr("CASE WHEN suu = 0 THEN NULL ELSE " +
-        fdiv("(sww * suu - suw * suw) * 1000000", "suu") + " END"))
-      .withColumn("ru_e6", expr("CASE WHEN d2 = 0 THEN NULL ELSE " + fdiv(
+        Spark.truncDiv("(sww * suu - suw * suw) * 1000000", "suu") + " END"))
+      .withColumn("ru_e6", expr("CASE WHEN d2 = 0 THEN NULL ELSE " +
+        Spark.truncDiv(
         """(sww * d2 - suw * (suw * svv - svw * suv)
           | - svw * (svw * suu - suw * suv)) * 1000000"""
           .stripMargin.replace("\n", " "), "d2") + " END"))
@@ -9228,12 +9096,13 @@ object EventQueries {
       col("rr_e6").cast("long").as("rss_restricted_e6"),
       col("ru_e6").cast("long").as("rss_unrestricted_e6"),
       expr("CASE WHEN ru_e6 IS NULL OR ru_e6 = 0 THEN NULL ELSE " +
-        sdiv("(rr_e6 - ru_e6) * (n - 3) * 1000000", "ru_e6") + " END")
+        Spark.truncDivLong("(rr_e6 - ru_e6) * (n - 3) * 1000000", "ru_e6") +
+          " END")
         .as("f_granger_e6"))
   }
 
   val q405Sql: String =
-    """WITH bd AS (
+    s"""WITH bd AS (
       |  SELECT CAST(epoch_ms(ts) AS BIGINT) // 86400000 AS day,
       |    SUM(CASE WHEN event_type = 'purchase'
       |      THEN CAST(ROUND(value*100) AS BIGINT) ELSE 0 END) // 100000
@@ -9497,10 +9366,6 @@ object EventQueries {
     */
   val q410Ccf: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .select(expr("unix_millis(ts) div 86400000").as("day"),
         col("event_type"), cents(col("value")).as("v"))
@@ -9523,7 +9388,7 @@ object EventQueries {
         sum(col("x").cast(dec) * col("y")).as("qxy"))
     mo.select(col("lag").cast("long").as("lag"),
       col("n").cast("long").as("n_pairs"),
-      expr(sdiv("(n * qxy - sx * sy) * 1000000",
+      expr(Spark.truncDivLong("(n * qxy - sx * sy) * 1000000",
         """CAST(FLOOR(SQRT(CAST((n * qxx - sx * sx) * (n * qyy - sy * sy)
           | AS DOUBLE))) AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")))
         .as("rho_e6"))
@@ -9781,9 +9646,7 @@ object EventQueries {
       |  FROM ser WHERE rk = 1
       |  UNION ALL
       |  SELECT s.rk,
-      |    w.m + CAST(CASE WHEN ($kCase) * (s.x - w.m) >= 0
-      |        THEN 1 ELSE -1 END *
-      |      (ABS(($kCase) * (s.x - w.m)) // 1000000) AS BIGINT),
+      |    w.m + ${Duck.truncDivLong(s"($kCase) * (s.x - w.m)", "1000000")},
       |    CAST($kCase AS BIGINT),
       |    w.sse + CAST(s.x - w.m AS HUGEINT) * (s.x - w.m)
       |  FROM walk w
@@ -9818,8 +9681,6 @@ object EventQueries {
     */
   val q417Erlang: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS BIGINT)"
     val wU = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
     val sess = Tables.events(s, dir)
@@ -9837,13 +9698,14 @@ object EventQueries {
       sum(col("en") - col("st")).as("dur_ms"),
       (max(col("en")) - min(col("st"))).as("horizon_ms"))
       .select(col("n_sessions"),
-        expr(fdiv("dur_ms * 1000000", "horizon_ms")).as("a_e6"))
+        expr(Spark.truncDivLong("dur_ms * 1000000", "horizon_ms")).as("a_e6"))
       .withColumn("b_0", lit(1000000L))
     for (c <- 1 to ErlangMaxC) {
       load = load
-        .withColumn(s"ab_$c", expr(fdiv(s"a_e6 * b_${c - 1}", "1000000")))
+        .withColumn(s"ab_$c", expr(Spark.truncDivLong(s"a_e6 * b_${c - 1}",
+          "1000000")))
         .withColumn(s"b_$c",
-          expr(fdiv(s"ab_$c * 1000000", s"$c * 1000000 + ab_$c")))
+          expr(Spark.truncDivLong(s"ab_$c * 1000000", s"$c * 1000000 + ab_$c")))
     }
     val bArm = (1 to ErlangMaxC).foldRight(lit(-1L)) { (c, els) =>
       when(col("c") === c.toLong, col(s"b_$c")).otherwise(els)
@@ -9851,11 +9713,12 @@ object EventQueries {
     load.crossJoin(broadcast(
       s.range(1L, ErlangMaxC + 1L).select(col("id").as("c"))))
       .withColumn("b_e6", bArm)
-      .withColumn("rho_e6", expr(fdiv("a_e6", "c")))
+      .withColumn("rho_e6", expr(Spark.truncDivLong("a_e6", "c")))
       .withColumn("wait_prob_e6",
         when(col("rho_e6") >= 1000000L, lit(-1L))
-          .otherwise(expr(fdiv("b_e6 * 1000000",
-            s"GREATEST(1000000 - ${fdiv("rho_e6 * (1000000 - b_e6)", "1000000")}, 1)"))))
+          .otherwise(expr(Spark.truncDivLong("b_e6 * 1000000",
+            s"GREATEST(1000000 - " +
+              s"${Spark.truncDivLong("rho_e6 * (1000000 - b_e6)", "1000000")}, 1)"))))
       .select(col("c"), col("n_sessions"), col("a_e6"), col("b_e6"),
         col("wait_prob_e6"))
       .orderBy(col("c"))
@@ -9928,8 +9791,6 @@ object EventQueries {
     */
   val q419PermutationTest: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val pu = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .groupBy(col("user_id")).agg(sum(cents(col("value"))).as("y"))
@@ -9951,8 +9812,8 @@ object EventQueries {
           .as("sb"),
         sum(when(col("arm") === 1L, 1L).otherwise(0L)).cast(dec).as("nb"))
       .select(col("b"),
-        abs(expr(fdiv("sa * 1000000", "na")) -
-          expr(fdiv("sb * 1000000", "nb"))).cast("long").as("t_e6"))
+        abs(expr(Spark.truncDiv("sa * 1000000", "na")) -
+          expr(Spark.truncDiv("sb * 1000000", "nb"))).cast("long").as("t_e6"))
       .localCheckpoint()
     val obs = stats.filter(col("b") === 0L)
       .select(col("t_e6").as("t_obs_e6"))
@@ -10027,12 +9888,6 @@ object EventQueries {
   val q420Periodogram: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdivB(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -10059,11 +9914,11 @@ object EventQueries {
           sum((col("n") * col("x") - col("sx")) * col("s6")).as("sproj"))
         .select(lit(p.toLong).as("period"),
           col("n").cast("long").as("n_days"),
-          expr(sdivB("cproj", "n * 1000000")).as("c_units"),
-          expr(sdivB("sproj", "n * 1000000")).as("s_units"),
+          expr(Spark.truncDivLong("cproj", "n * 1000000")).as("c_units"),
+          expr(Spark.truncDivLong("sproj", "n * 1000000")).as("s_units"),
           // R² share of SS at this harmonic: 2(C²+S²)/(n·SS), with
           // cproj = n·10⁶·C and n·SS = n·Σx²−(Σx)²
-          expr(fdiv(
+          expr(Spark.truncDiv(
             "2 * (cproj * cproj + sproj * sproj)",
             "n * n * (n * sxx - sx * sx) * CAST(1000000 AS DECIMAL(38,0))"))
             .cast("long").as("var_share_e6"))
@@ -10076,10 +9931,8 @@ object EventQueries {
       val cosArr = pgCosE6(p).mkString(", ")
       val sinArr = pgSinE6(p).mkString(", ")
       s"""SELECT $p AS period, CAST(n AS BIGINT) AS n_days,
-         |  CAST(CASE WHEN cproj >= 0 THEN 1 ELSE -1 END *
-         |    (ABS(cproj) // (n * 1000000)) AS BIGINT) AS c_units,
-         |  CAST(CASE WHEN sproj >= 0 THEN 1 ELSE -1 END *
-         |    (ABS(sproj) // (n * 1000000)) AS BIGINT) AS s_units,
+         |  ${Duck.truncDivLong("cproj", "n * 1000000")} AS c_units,
+         |  ${Duck.truncDivLong("sproj", "n * 1000000")} AS s_units,
          |  CAST(2 * (cproj * cproj + sproj * sproj)
          |    // (n * n * (n * sxx - sx * sx) * CAST(1000000 AS HUGEINT))
          |    AS BIGINT) AS var_share_e6
@@ -10233,8 +10086,6 @@ object EventQueries {
     */
   val q426Lindley: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS BIGINT)"
     val wS = Window.partitionBy(col("shard"))
       .orderBy(col("ms"), col("event_id"))
     val jobs = Tables.events(s, dir)
@@ -10259,9 +10110,9 @@ object EventQueries {
         sum(col("w")).as("sw"), max(col("w")).as("max_wait_ms"),
         sum(when(col("w") > 0L, 1L).otherwise(0L)).as("n_delayed"))
       .select(col("shard"), col("n_jobs"),
-        expr(fdiv("ssvc * 1000000", "GREATEST(horizon_ms, 1)"))
+        expr(Spark.truncDivLong("ssvc * 1000000", "GREATEST(horizon_ms, 1)"))
           .as("util_e6"),
-        expr(fdiv("sw", "n_jobs")).as("mean_wait_ms"),
+        expr(Spark.truncDivLong("sw", "n_jobs")).as("mean_wait_ms"),
         col("max_wait_ms"), col("n_delayed"))
       .orderBy(col("shard"))
   }
@@ -10316,10 +10167,6 @@ object EventQueries {
     */
   val q428Mediation: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .select(expr("unix_millis(ts) div 86400000").as("day"),
         col("event_type"), cents(col("value")).as("v"))
@@ -10347,37 +10194,54 @@ object EventQueries {
       (col("n") * col("qxy") - col("sx") * col("sy")).as("cxy"),
       (col("n") * col("qmy") - col("sm") * col("sy")).as("cmy"))
       .withColumn("d2", col("dx") * col("dm") - col("cxm") * col("cxm"))
-    def dd(c: String) = col(c).cast("double")
-    val aD = dd("cxm") / dd("dx")
-    val bD = (dd("cmy") * dd("dx") - dd("cxy") * dd("cxm")) / dd("d2")
-    val rssA = (dd("dm") * dd("dx") - dd("cxm") * dd("cxm")) /
-      (dd("n") * dd("dx"))
-    val rssY = (dd("dy") * dd("d2") - dd("cxy") *
-      (dd("cxy") * dd("dm") - dd("cmy") * dd("cxm")) - dd("cmy") *
-      (dd("cmy") * dd("dx") - dd("cxy") * dd("cxm"))) / (dd("n") * dd("d2"))
-    val vA = dd("n") * rssA / ((dd("n") - 2) * dd("dx"))
-    val vB = dd("n") * rssY / (dd("n") - 3) * dd("dx") / dd("d2")
+    val aD = asDouble("cxm") / asDouble("dx")
+    val bD = (asDouble("cmy") * asDouble("dx") - asDouble("cxy") *
+      asDouble("cxm")) / asDouble("d2")
+    val rssA = (asDouble("dm") * asDouble("dx") - asDouble("cxm") *
+      asDouble("cxm")) /
+      (asDouble("n") * asDouble("dx"))
+    val rssY = (asDouble("dy") * asDouble("d2") - asDouble("cxy") *
+      (asDouble("cxy") * asDouble("dm") - asDouble("cmy") * asDouble("cxm")) -
+        asDouble("cmy") *
+      (asDouble("cmy") * asDouble("dx") - asDouble("cxy") * asDouble("cxm"))) /
+        (asDouble("n") * asDouble("d2"))
+    val vA = asDouble("n") * rssA / ((asDouble("n") - 2) * asDouble("dx"))
+    val vB = asDouble("n") * rssY / (asDouble("n") - 3) * asDouble("dx") /
+      asDouble("d2")
     val sobel = aD * bD / sqrt(bD * bD * vA + aD * aD * vB)
     cm.select(col("n").cast("long").as("n_days"),
-      expr(sdiv("cxm * 1000000", "dx")).as("a_e6"),
-      expr(sdiv("(cmy * dx - cxy * cxm) * 1000000", "d2")).as("b_e6"),
-      expr(sdiv("(cxy * dm - cmy * cxm) * 1000000", "d2")).as("cprime_e6"),
-      expr(sdiv("cxy * 1000000", "dx")).as("c_total_e6"),
-      (expr(sdiv("cxy * 1000000", "dx")) -
-        expr(sdiv("(cxy * dm - cmy * cxm) * 1000000", "d2")) -
-        expr(sdiv("cxm * (cmy * dx - cxy * cxm) * 1000000", "dx * d2")))
+      expr(Spark.truncDivLong("cxm * 1000000", "dx")).as("a_e6"),
+      expr(Spark.truncDivLong("(cmy * dx - cxy * cxm) * 1000000", "d2"))
+        .as("b_e6"),
+      expr(Spark.truncDivLong("(cxy * dm - cmy * cxm) * 1000000", "d2"))
+        .as("cprime_e6"),
+      expr(Spark.truncDivLong("cxy * 1000000", "dx")).as("c_total_e6"),
+      (expr(Spark.truncDivLong("cxy * 1000000", "dx")) -
+        expr(Spark.truncDivLong("(cxy * dm - cmy * cxm) * 1000000", "d2")) -
+        expr(Spark.truncDivLong("cxm * (cmy * dx - cxy * cxm) * 1000000",
+          "dx * d2")))
         .as("decomposition_gap_e6"),
       sobel.as("sobel_z_d"))
   }
 
   val q428Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val aD = s"(${d("cxm")} / ${d("dx")})"
-    val bD = s"((${d("cmy")} * ${d("dx")} - ${d("cxy")} * ${d("cxm")}) / ${d("d2")})"
-    val rssA = s"((${d("dm")} * ${d("dx")} - ${d("cxm")} * ${d("cxm")}) / (${d("n")} * ${d("dx")}))"
-    val rssY = s"((${d("dy")} * ${d("d2")} - ${d("cxy")} * (${d("cxy")} * ${d("dm")} - ${d("cmy")} * ${d("cxm")}) - ${d("cmy")} * (${d("cmy")} * ${d("dx")} - ${d("cxy")} * ${d("cxm")})) / (${d("n")} * ${d("d2")}))"
-    val vA = s"(${d("n")} * $rssA / ((${d("n")} - 2) * ${d("dx")}))"
-    val vB = s"(${d("n")} * $rssY / (${d("n")} - 3) * ${d("dx")} / ${d("d2")})"
+    val aD = s"(${Duck.asDouble("cxm")} / ${Duck.asDouble("dx")})"
+    val bD = s"((${Duck.asDouble("cmy")} * ${Duck.asDouble("dx")} - " +
+      s"${Duck.asDouble("cxy")} * ${Duck.asDouble("cxm")}) / ${Duck.asDouble("d2")})"
+    val rssA = s"((${Duck.asDouble("dm")} * ${Duck.asDouble("dx")} - " +
+      s"${Duck.asDouble("cxm")} * ${Duck.asDouble("cxm")}) / " +
+        s"(${Duck.asDouble("n")} * ${Duck.asDouble("dx")}))"
+    val rssY = s"((${Duck.asDouble("dy")} * ${Duck.asDouble("d2")} - " +
+      s"${Duck.asDouble("cxy")} * (${Duck.asDouble("cxy")} * " +
+        s"${Duck.asDouble("dm")} - ${Duck.asDouble("cmy")} * " +
+          s"${Duck.asDouble("cxm")}) - ${Duck.asDouble("cmy")} * " +
+            s"(${Duck.asDouble("cmy")} * ${Duck.asDouble("dx")} - " +
+              s"${Duck.asDouble("cxy")} * ${Duck.asDouble("cxm")})) / " +
+                s"(${Duck.asDouble("n")} * ${Duck.asDouble("d2")}))"
+    val vA = s"(${Duck.asDouble("n")} * $rssA / ((${Duck.asDouble("n")} - 2) " +
+      s"* ${Duck.asDouble("dx")}))"
+    val vB = s"(${Duck.asDouble("n")} * $rssY / (${Duck.asDouble("n")} - 3) * " +
+      s"${Duck.asDouble("dx")} / ${Duck.asDouble("d2")})"
     val sobel = s"($aD * $bD / sqrt($bD * $bD * $vA + $aD * $aD * $vB))"
     s"""WITH bd AS (
       |  SELECT CAST(epoch_ms(ts) AS BIGINT) // 86400000 AS day,
@@ -10405,21 +10269,15 @@ object EventQueries {
       |  FROM mo),
       |cm2 AS (SELECT *, dx * dm - cxm * cxm AS d2 FROM cm)
       |SELECT CAST(n AS BIGINT) AS n_days,
-      |  CAST(CASE WHEN cxm >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(cxm * 1000000) // dx) AS BIGINT) AS a_e6,
-      |  CAST(CASE WHEN cmy * dx - cxy * cxm >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((cmy * dx - cxy * cxm) * 1000000) // d2) AS BIGINT) AS b_e6,
-      |  CAST(CASE WHEN cxy * dm - cmy * cxm >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((cxy * dm - cmy * cxm) * 1000000) // d2) AS BIGINT)
+      |  ${Duck.truncDivLong("cxm * 1000000", "dx")} AS a_e6,
+      |  ${Duck.truncDivLong("(cmy * dx - cxy * cxm) * 1000000", "d2")} AS b_e6,
+      |  ${Duck.truncDivLong("(cxy * dm - cmy * cxm) * 1000000", "d2")}
       |    AS cprime_e6,
-      |  CAST(CASE WHEN cxy >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(cxy * 1000000) // dx) AS BIGINT) AS c_total_e6,
-      |  CAST(CASE WHEN cxy >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(cxy * 1000000) // dx)
-      |   - CASE WHEN cxy * dm - cmy * cxm >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((cxy * dm - cmy * cxm) * 1000000) // d2)
-      |   - CASE WHEN cxm * (cmy * dx - cxy * cxm) >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(cxm * (cmy * dx - cxy * cxm) * 1000000) // (dx * d2))
+      |  ${Duck.truncDivLong("cxy * 1000000", "dx")} AS c_total_e6,
+      |  CAST(${Duck.truncDiv("cxy * 1000000", "dx")}
+      |   - ${Duck.truncDiv("(cxy * dm - cmy * cxm) * 1000000", "d2")}
+      |   - ${Duck.truncDiv("cxm * (cmy * dx - cxy * cxm) * 1000000",
+                "dx * d2")}
       |    AS BIGINT) AS decomposition_gap_e6,
       |  $sobel AS sobel_z_d
       |FROM cm2""".stripMargin
@@ -10450,8 +10308,6 @@ object EventQueries {
   val q431Kpss: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -10484,10 +10340,10 @@ object EventQueries {
     folded
       .withColumn("d", expr(s"$lp1 * a + $dSum"))
       .select(col("n").cast("long").as("n_days"),
-        expr(fdiv(s"sp2 * $lp1 * 1000000", "n * d")).cast("long")
+        expr(Spark.truncDiv(s"sp2 * $lp1 * 1000000", "n * d")).cast("long")
           .as("kpss_eta_e6"),
-        expr(fdiv("a", "n * n * n")).cast("long").as("gamma0_cents2"),
-        when(expr(fdiv(s"sp2 * $lp1 * 1000000", "n * d")) > 463000L,
+        expr(Spark.truncDiv("a", "n * n * n")).cast("long").as("gamma0_cents2"),
+        when(expr(Spark.truncDiv(s"sp2 * $lp1 * 1000000", "n * d")) > 463000L,
           lit("reject_level_stationarity")).otherwise(lit("consistent"))
           .as("verdict_5pct"))
   }
@@ -10548,10 +10404,6 @@ object EventQueries {
   val q432EngleGranger: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .select(expr("unix_millis(ts) div 86400000").as("day"),
         col("event_type"), cents(col("value")).as("v"))
@@ -10572,8 +10424,8 @@ object EventQueries {
       .select(col("day"), col("n"), col("dx"), col("cxy"), col("sx"),
         col("sy"),
         (col("y") * 1000000L -
-          expr(sdiv("(sy * dx - cxy * sx) * 1000000", "n * dx")) -
-          expr(sdiv("cxy * x * 1000000", "dx"))).as("u"))
+          expr(Spark.truncDiv("(sy * dx - cxy * sx) * 1000000", "n * dx")) -
+          expr(Spark.truncDiv("cxy * x * 1000000", "dx"))).as("u"))
       .withColumn("up", lag(col("u"), 1).over(w))
     val fold = resid.groupBy(col("n"), col("dx"), col("cxy"), col("sx"),
       col("sy"))
@@ -10584,26 +10436,27 @@ object EventQueries {
         sum(when(col("up").isNotNull,
           (col("u") - col("up")) * (col("u") - col("up")))
           .otherwise(lit(0).cast(dec))).as("sdd"))
-    def dd(c: String) = col(c).cast("double")
     val m = col("n").cast("double") - 1.0
-    val tStat = (dd("num") / dd("den")) /
-      sqrt((dd("sdd") - dd("num") * dd("num") / dd("den")) /
-        ((m - 1.0) * dd("den")))
+    val tStat = (asDouble("num") / asDouble("den")) /
+      sqrt((asDouble("sdd") - asDouble("num") * asDouble("num") /
+        asDouble("den")) /
+        ((m - 1.0) * asDouble("den")))
     fold.select(col("n").cast("long").as("n_days"),
-      expr(sdiv("cxy * 1000000", "dx")).cast("long").as("beta_e6"),
-      expr(sdiv("(sy * dx - cxy * sx) * 1000000", "n * dx")).cast("long")
+      expr(Spark.truncDiv("cxy * 1000000", "dx")).cast("long").as("beta_e6"),
+      expr(Spark.truncDiv("(sy * dx - cxy * sx) * 1000000", "n * dx"))
+        .cast("long")
         .as("alpha_e6"),
-      expr(sdiv("num * 1000000", "den")).cast("long").as("rho_e6"),
+      expr(Spark.truncDiv("num * 1000000", "den")).cast("long").as("rho_e6"),
       tStat.as("adf_t_d"),
       when(tStat < -3.37, lit("cointegrated_5pct"))
         .otherwise(lit("no_cointegration")).as("verdict"))
   }
 
   val q432Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val tStat = s"((${d("num")} / ${d("den")}) / " +
-      s"sqrt((${d("sdd")} - ${d("num")} * ${d("num")} / ${d("den")}) / " +
-      s"((${d("n")} - 1.0 - 1.0) * ${d("den")})))"
+    val tStat = s"((${Duck.asDouble("num")} / ${Duck.asDouble("den")}) / " +
+      s"sqrt((${Duck.asDouble("sdd")} - ${Duck.asDouble("num")} * " +
+        s"${Duck.asDouble("num")} / ${Duck.asDouble("den")}) / " +
+      s"((${Duck.asDouble("n")} - 1.0 - 1.0) * ${Duck.asDouble("den")})))"
     s"""WITH bd AS (
       |  SELECT CAST(epoch_ms(ts) AS BIGINT) // 86400000 AS day,
       |    CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
@@ -10621,10 +10474,8 @@ object EventQueries {
       |resid AS (
       |  SELECT day, n, dx, cxy, sx, sy,
       |    y * 1000000
-      |      - CASE WHEN sy * dx - cxy * sx >= 0 THEN 1 ELSE -1 END *
-      |        (ABS((sy * dx - cxy * sx) * 1000000) // (n * dx))
-      |      - CASE WHEN cxy * x >= 0 THEN 1 ELSE -1 END *
-      |        (ABS(cxy * x * 1000000) // dx) AS u
+      |      - ${Duck.truncDiv("(sy * dx - cxy * sx) * 1000000", "n * dx")}
+      |      - ${Duck.truncDiv("cxy * x * 1000000", "dx")} AS u
       |  FROM bd CROSS JOIN mo),
       |lagged AS (
       |  SELECT n, dx, cxy, sx, sy, u, LAG(u, 1) OVER (ORDER BY day) AS up
@@ -10638,13 +10489,10 @@ object EventQueries {
       |      AS sdd
       |  FROM lagged GROUP BY 1, 2, 3, 4, 5)
       |SELECT CAST(n AS BIGINT) AS n_days,
-      |  CAST(CASE WHEN cxy >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(cxy * 1000000) // dx) AS BIGINT) AS beta_e6,
-      |  CAST(CASE WHEN sy * dx - cxy * sx >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((sy * dx - cxy * sx) * 1000000) // (n * dx)) AS BIGINT)
+      |  ${Duck.truncDivLong("cxy * 1000000", "dx")} AS beta_e6,
+      |  ${Duck.truncDivLong("(sy * dx - cxy * sx) * 1000000", "n * dx")}
       |    AS alpha_e6,
-      |  CAST(CASE WHEN num >= 0 THEN 1 ELSE -1 END *
-      |    (ABS(num * 1000000) // den) AS BIGINT) AS rho_e6,
+      |  ${Duck.truncDivLong("num * 1000000", "den")} AS rho_e6,
       |  $tStat AS adf_t_d,
       |  CASE WHEN $tStat < -3.37 THEN 'cointegrated_5pct'
       |    ELSE 'no_cointegration' END AS verdict

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Q, Tables}
 import graft.functions.TSql
+import graft.functions.FixedPoint.{Duck, Spark}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -641,9 +642,7 @@ object FunctionQueries {
     // blocked pair comparison stages are CPU-dense on byte-small keys
     // (measured 3.75 -> 1.60 s at a 64k coalescing floor); inert at scale
     graft.Tuning.cpuDenseShuffles(s)
-    import graft.functions.{Pairs, Text}
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
+    import graft.functions.Pairs
     val c = Tables.customer(s, dir).select(col("c_custkey"),
       substring(col("c_name"), 1, 16).as("blk"),
       col("c_nationkey").cast("long").as("nat"),
@@ -653,13 +652,13 @@ object FunctionQueries {
     def uOf(field: String) = c.groupBy(col(field)).agg(count(lit(1)).as("f"))
       .agg(sum(col("f").cast("decimal(38,0)") * col("f")).as("sf2"),
         sum(col("f")).cast("decimal(38,0)").as("n"))
-      .select(expr(fdiv("sf2 * 1000000000000", "n * n")).cast("long")
+      .select(expr(Spark.truncDiv("sf2 * 1000000000000", "n * n")).cast("long")
         .as(s"u_$field"))
     val us = uOf("nat").crossJoin(uOf("seg")).crossJoin(uOf("bb"))
-    def wa(u: String) = expr(Text.log2e6SparkSql("900000000000")) -
-      expr(Text.log2e6SparkSql(u))
-    def wd(u: String) = expr(Text.log2e6SparkSql("100000000000")) -
-      expr(Text.log2e6SparkSql(s"1000000000000 - $u"))
+    def wa(u: String) = expr(Spark.log2e6("900000000000")) -
+      expr(Spark.log2e6(u))
+    def wd(u: String) = expr(Spark.log2e6("100000000000")) -
+      expr(Spark.log2e6(s"1000000000000 - $u"))
     val pairs = c.groupBy(col("blk"))
       .agg(sort_array(collect_list(struct(col("c_custkey").as("k"),
         col("nat").as("nat"), col("seg").as("seg"), col("bb").as("bb"))))
@@ -687,16 +686,15 @@ object FunctionQueries {
   }
 
   val q315Sql: String = {
-    import graft.functions.Text
     def u(field: String, alias: String) =
       s"""(SELECT CAST(SUM(CAST(f AS HUGEINT) * f) * 1000000000000
          |   // (SUM(CAST(f AS HUGEINT)) * SUM(CAST(f AS HUGEINT))) AS BIGINT)
          | FROM (SELECT COUNT(*) AS f FROM base GROUP BY $field)) AS $alias"""
         .stripMargin.replace("\n", " ")
-    def wa(uc: String) = s"(${Text.log2e6DuckSql("900000000000")} - " +
-      s"${Text.log2e6DuckSql(uc)})"
-    def wd(uc: String) = s"(${Text.log2e6DuckSql("100000000000")} - " +
-      s"${Text.log2e6DuckSql(s"1000000000000 - $uc")})"
+    def wa(uc: String) = s"(${Duck.log2e6("900000000000")} - " +
+      s"${Duck.log2e6(uc)})"
+    def wd(uc: String) = s"(${Duck.log2e6("100000000000")} - " +
+      s"${Duck.log2e6(s"1000000000000 - $uc")})"
     s"""WITH base AS (
        |  SELECT c_custkey, substr(c_name, 1, 16) AS blk,
        |    CAST(c_nationkey AS BIGINT) AS nat, c_mktsegment AS seg,

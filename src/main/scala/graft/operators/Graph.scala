@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.FixedPoint.Spark
 
 /** Iterative graph analytics on DataFrames — the Pregel-style shapes
   * (PageRank here, connected components in [[NearDup]]) a relational engine
@@ -149,8 +150,6 @@ object Graph {
     */
   def hitsInt(edges: DataFrame, iters: Int = 2): (DataFrame, DataFrame) = {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = edges.toDF("hub", "auth").localCheckpoint()
     var hubs = e.select(col("hub")).distinct()
       .withColumn("h", lit(1000000000000L))
@@ -163,18 +162,18 @@ object Graph {
     // CHECKPOINT job itself via observe() (bounded metadata: one decimal
     // scalar), so a half-step is ONE Spark job instead of checkpoint +
     // separate total aggregation — half the per-round job count (r9,
-    // guide §2.6 round-cost reduction). The literal total is cast back to
-    // DECIMAL(38,0), so the floor-division expression is typed exactly as
-    // the old broadcast-scalar cross join and the fixed-point values are
-    // bit-identical (oracle-pinned).
+    // guide §2.6 round-cost reduction). The total is spliced back as a
+    // typed DECIMAL(38,0) literal (FixedPoint's literal renderer rejects
+    // anything but an exact integer), so the floor-division expression is
+    // typed exactly as the old broadcast-scalar cross join and the
+    // fixed-point values are bit-identical (oracle-pinned).
     def normalized(raw: DataFrame, key: String, rawCol: String,
         out: String): DataFrame = {
       val obs = org.apache.spark.sql.Observation()
       val ck = raw.observe(obs, sum(col(rawCol)).as("tot")).localCheckpoint()
-      val tot = Option(obs.get("tot")).map(_.toString).getOrElse("NULL")
       ck.select(col(key),
-        expr(fdiv(s"$rawCol * 1000000000000",
-          s"CAST($tot AS DECIMAL(38,0))")).cast("long").as(out))
+        expr(Spark.truncDiv(s"$rawCol * 1000000000000",
+          Spark.literal(obs.get("tot")))).cast("long").as(out))
     }
     for (_ <- 1 to iters) {
       val araw = e.join(hubs, "hub").groupBy(col("auth"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.functions.FixedPoint.{Duck, Spark}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1390,10 +1391,6 @@ object GraphQueries {
     */
   val q341Modularity: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val brands = Tables.part(s, dir)
       .select(col("p_partkey"), col("p_brand"))
     val e = copurchaseEdges(s, dir)
@@ -1415,7 +1412,8 @@ object GraphQueries {
       .select(col("c").as("brand"),
         col("mc").cast("long").as("m_in"),
         col("dc").cast("long").as("d_sum"),
-        expr(sdiv("(4 * m * mc - dc * dc) * 1000000000000", "4 * m * m"))
+        expr(Spark.truncDivLong("(4 * m * mc - dc * dc) * 1000000000000",
+          "4 * m * m"))
           .as("contrib_e12"))
       .orderBy(col("brand"))
   }
@@ -1440,9 +1438,8 @@ object GraphQueries {
       |m AS (SELECT SUM(dc) // 2 AS m FROM by_c)
       |SELECT c AS brand, CAST(mc AS BIGINT) AS m_in,
       |  CAST(dc AS BIGINT) AS d_sum,
-      |  CAST(CASE WHEN 4 * m * mc - dc * dc >= 0 THEN 1 ELSE -1 END *
-      |    (ABS((4 * m * mc - dc * dc) * 1000000000000) // (4 * m * m))
-      |    AS BIGINT) AS contrib_e12
+      |  ${Duck.truncDivLong("(4 * m * mc - dc * dc) * 1000000000000",
+             "4 * m * m")} AS contrib_e12
       |FROM by_c CROSS JOIN m
       |ORDER BY brand""".stripMargin
 
@@ -1466,8 +1463,6 @@ object GraphQueries {
     */
   val q394RichClub: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val edges = copurchaseEdges(s, dir)
       .select(col("part_a"), col("part_b")).localCheckpoint()
     val deg = edges.select(col("part_a").as("p"))
@@ -1485,7 +1480,8 @@ object GraphQueries {
         .select(lit(k.toLong).as("k"), col("n_k").cast("long").as("n_nodes"),
           col("e_k").cast("long").as("n_edges"),
           when(col("n_k") >= 2,
-            expr(fdiv("e_k * 2 * 1000000", "n_k * (n_k - 1)")).cast("long"))
+            expr(Spark.truncDiv("e_k * 2 * 1000000", "n_k * (n_k - 1)"))
+              .cast("long"))
             .otherwise(lit(null)).as("phi_e6"))
     }
     rungs.reduce(_ unionAll _).orderBy(col("k"))
@@ -1546,8 +1542,6 @@ object GraphQueries {
     * keyed joins; TakeOrdered(20) tail. No cartesians, no global sort.
     */
   val q415Betweenness: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS BIGINT)"
     // both orientations IN PLACE (Pairs.bothOrientations): the union-of-
     // flipped-projections idiom re-ran the whole co-purchase pipeline once
     // per branch inside this checkpoint job (r9)
@@ -1595,7 +1589,8 @@ object GraphQueries {
         .join(und, col("part") === col("src"))
         .join(w, col("seed") === col("wseed") && col("dst") === col("wpart"))
         .select(col("seed"), col("part"),
-          expr(fdiv("sigma * (1000000 + wdelta)", "wsigma")).as("term"))
+          expr(Spark.truncDivLong("sigma * (1000000 + wdelta)", "wsigma"))
+            .as("term"))
         .groupBy(col("seed"), col("part"))
         .agg(sum(col("term")).as("delta"))
         .localCheckpoint()

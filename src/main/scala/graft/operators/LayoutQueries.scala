@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Q, Tables}
 import graft.functions.TSql._
 import graft.functions.Text
+import graft.functions.FixedPoint.Spark
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -462,15 +463,6 @@ object LayoutQueries {
 
   // ------------------- q541: historical VaR / CVaR on daily revenue moves
 
-  /** Sign-safe floor division: both engines floor |num| then re-apply the
-    * sign, so negative sums divide identically (Spark `div` truncates
-    * toward zero, DuckDB `//` floors — the repo's standard sdiv device).
-    */
-  private def sdiv(num: String, den: String): String =
-    s"""CASE WHEN $num >= 0 THEN $num div ($den)
-       | ELSE -(abs($num) div ($den)) END"""
-      .stripMargin.replace("\n", " ")
-
   /** q541: historical value-at-risk and expected shortfall of day-over-day
     * revenue changes — the risk readout a warehouse's finance mart serves.
     * The empirical method exactly: for confidence α, the tail is the m =
@@ -504,7 +496,7 @@ object LayoutQueries {
       .groupBy(col("alpha"))
       .agg(max(col("n")).as("n_days"), max(col("m")).as("m"),
         max(col("delta")).as("var_c"), sum(col("delta")).as("sum_tail"))
-      .withColumn("cvar_c", expr(sdiv("sum_tail", "m")))
+      .withColumn("cvar_c", expr(Spark.truncDivLong("sum_tail", "m")))
       .drop("sum_tail")
       .orderBy(col("alpha"))
   }
@@ -764,16 +756,12 @@ object LayoutQueries {
     * capacity table is a 3-row broadcast.
     */
   val q549ResultCacheAdvisor: Q = (s, dir) => {
-    // sign-safe bucketing (the q541 sdiv device): Spark div truncates
-    // toward zero while DuckDB // floors, so a negative cents value would
-    // bucket differently — factor the sign on BOTH sides instead of
-    // relying on events.value staying non-negative
+    // truncating bucketing, sign-safe in both engines, instead of relying
+    // on events.value staying non-negative
     val sigs = Tables.events(s, dir)
       .select(concat(col("event_type"), lit("|"),
-        coalesce(expr("""CASE WHEN round(value * 100, 0) >= 0
-          | THEN CAST(round(value * 100, 0) AS BIGINT) div 2000
-          | ELSE -(abs(CAST(round(value * 100, 0) AS BIGINT)) div 2000)
-          | END""".stripMargin.replace("\n", " "))
+        coalesce(expr(Spark.truncDivLong(
+          "CAST(round(value * 100, 0) AS BIGINT)", "2000"))
           .cast("string"), lit("x"))).as("sig"))
       .groupBy(col("sig")).agg(count(lit(1)).as("cnt"))
       .withColumn("rk", row_number().over(
@@ -1034,17 +1022,15 @@ object LayoutQueries {
     // Staged e8 reduction, DECIMAL-PRESERVING: Spark `div` returns LONG
     // even on DECIMAL operands, so the old `x div 1e6` ladder crashed with
     // ARITHMETIC_OVERFLOW once the reduced factor passed 9.2e18 (~sf0.5;
-    // round-6 advice). The fdiv device divides inside DECIMAL(38,0), and
-    // R² = Sk·Sd (1e8 on the numerator, 1e8 per variance factor) keeps the
-    // staged ratio exact: worst case (|ρ|=1) at sf1 the squared numerator
+    // round-6 advice). FixedPoint's truncDiv divides inside DECIMAL(38,0),
+    // and R² = Sk·Sd (1e8 on the numerator, 1e8 per variance factor) keeps
+    // the staged ratio exact: worst case (|ρ|=1) at sf1 the squared numerator
     // term is ~2e35 and the denominator product ~2e29, both inside 38
     // digits with >100× headroom; sign is factored so truncation is
     // symmetric. Oracle mirrors the identical staging over HUGEINT.
-    def fdiv8(a: String) =
-      s"CAST((($a) - ($a) % 100000000) / 100000000 AS DECIMAL(38,0))"
-    val vkR = fdiv8("n * skk - sk * sk")
-    val vdR = fdiv8("n * sdd - sd * sd")
-    val nmR = fdiv8("abs(n * skd - sk * sd)")
+    val vkR = Spark.truncDiv("n * skk - sk * sk", "100000000")
+    val vdR = Spark.truncDiv("n * sdd - sd * sd", "100000000")
+    val nmR = Spark.truncDiv("abs(n * skd - sk * sd)", "100000000")
     val mo = base.agg(count(lit(1)).cast("decimal(38,0)").as("n"),
       sum(col("ok")).cast("decimal(38,0)").as("sk"),
       sum(col("d")).cast("decimal(38,0)").as("sd"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Q, Tables}
 import graft.functions.{Pairs, Vectors}
+import graft.functions.FixedPoint.{Duck, Spark}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -96,12 +97,9 @@ object SimilarityQueries {
       .localCheckpoint()
     val gd = ld.groupBy(col("d"))
       .agg(sum(col("s")).as("gs"), sum(col("n")).as("gn"))
-    def sdiv(num: String, den: String) = expr(
-      s"""CASE WHEN $num < 0 THEN -CAST(((-($num)) div ($den)) AS BIGINT)
-         |     ELSE CAST((($num) div ($den)) AS BIGINT) END""".stripMargin)
     val cent = ld.join(gd, "d")
-      .withColumn("c_ld", sdiv("s", "n"))
-      .withColumn("c_gd", sdiv("gs", "gn"))
+      .withColumn("c_ld", expr(Spark.truncDivLong("s", "n")))
+      .withColumn("c_gd", expr(Spark.truncDivLong("gs", "gn")))
       .withColumn("diff", col("c_ld") - col("c_gd"))
       .withColumn("term",
         col("ss") - (lit(2L) * col("c_ld")).cast(dec) * col("s").cast(dec) +
@@ -1022,11 +1020,8 @@ object SimilarityQueries {
       .groupBy(col("cid"), col("d"))
       .agg(count(lit(1)).as("n"), sum(col("q")).as("s"),
         sum((col("q") * col("q")).cast(dec)).as("ss"))
-    def sdiv(num: String, den: String) =
-      s"""CASE WHEN $num < 0 THEN -CAST(((-($num)) div ($den)) AS BIGINT)
-         |     ELSE CAST((($num) div ($den)) AS BIGINT) END""".stripMargin
     roll.join(broadcast(cent0), Seq("cid", "d"))
-      .withColumn("c1", expr(sdiv("s", "n")))
+      .withColumn("c1", expr(Spark.truncDivLong("s", "n")))
       .withColumn("sse0", col("ss") -
         (lit(2L) * col("c0")).cast(dec) * col("s").cast(dec) +
         col("n").cast(dec) * col("c0").cast(dec) * col("c0").cast(dec))
@@ -1110,8 +1105,6 @@ object SimilarityQueries {
     */
   val q303Silhouette: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val qv = Tables.embeddings(s, dir)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "x")))
       .select(col("vec_id"), col("d"),
@@ -1132,11 +1125,13 @@ object SimilarityQueries {
         col("ds")(1).getField("dist").as("b"))
     val scored = two.select(col("cid"),
       when(col("b") > 0,
-        expr(fdiv("(b - a) * 1000000", "CASE WHEN a > b THEN a ELSE b END")))
+        expr(Spark.truncDiv("(b - a) * 1000000",
+          "CASE WHEN a > b THEN a ELSE b END")))
         .otherwise(lit(0L).cast(dec)).as("s_e6"))
     scored.groupBy(col("cid"))
       .agg(count(lit(1)).as("n_vecs"),
-        expr(fdiv("SUM(s_e6)", "COUNT(1)")).cast("long").as("mean_sil_e6"),
+        expr(Spark.truncDiv("SUM(s_e6)", "COUNT(1)")).cast("long").as(
+          "mean_sil_e6"),
         min(col("s_e6")).cast("long").as("min_sil_e6"))
       .orderBy(col("cid"))
   }
@@ -1203,8 +1198,6 @@ object SimilarityQueries {
     * textbook two-round distributed DBSCAN.
     */
   val q299DbscanCensus: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val pts = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"),
         round(element_at(col("embedding"), 1).cast("double") * 10000, 0)
@@ -1257,7 +1250,7 @@ object SimilarityQueries {
         sum(coalesce(col("border"), lit(0L))).as("n_border"))
       .select(col("label"), col("n_points"), col("n_core"), col("n_border"),
         (col("n_points") - col("n_core") - col("n_border")).as("n_noise"),
-        expr(fdiv("n_core * 1000000", "n_points")).cast("long")
+        expr(Spark.truncDiv("n_core * 1000000", "n_points")).cast("long")
           .as("core_ppm"))
       .orderBy(col("label"))
   }
@@ -1332,10 +1325,6 @@ object SimilarityQueries {
     */
   val q324AdjustedRand: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(n: String, d: String) =
-      s"""(CASE WHEN (($n) < 0) != (($d) < 0) THEN -1 ELSE 1 END *
-         | (ABS(CAST(($n) AS DECIMAL(38,0)))
-         |  div ABS(CAST(($d) AS DECIMAL(38,0)))))"""
         .stripMargin.replace("\n", " ")
     val qv = Tables.embeddings(s, dir)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "x")))
@@ -1378,19 +1367,15 @@ object SimilarityQueries {
         expr("CAST((n * (n - 1)) div 2 AS DECIMAL(38,0))"))
       .select(col("n").cast("long").as("n_vecs"),
         col("k_clusters"), col("n_labels"),
-        (lit(1000000L) + expr(sdiv(
+        (lit(1000000L) + expr(Spark.truncDivLong(
           "(2 * s_ij - s_a - s_b) * 1000000", "c_pairs"))).cast("long")
           .as("rand_e6"),
-        expr(sdiv("2 * (c_pairs * s_ij - s_a * s_b) * 1000000",
+        expr(Spark.truncDivLong("2 * (c_pairs * s_ij - s_a * s_b) * 1000000",
           "c_pairs * (s_a + s_b) - 2 * s_a * s_b")).cast("long")
           .as("ari_e6"))
   }
 
-  val q324Sql: String = {
-    def sdiv(n: String, d: String) =
-      s"""((CASE WHEN (($n) < 0) != (($d) < 0) THEN -1 ELSE 1 END) *
-         | (ABS(CAST(($n) AS HUGEINT)) // ABS(CAST(($d) AS HUGEINT))))"""
-        .stripMargin.replace("\n", " ")
+  val q324Sql: String =
     s"""WITH qv AS (
        |  SELECT vec_id, GENERATE_SUBSCRIPTS(embedding, 1) AS d,
        |    CAST(ROUND(UNNEST(CAST(embedding AS DOUBLE[])) * 10000) AS BIGINT)
@@ -1435,12 +1420,12 @@ object SimilarityQueries {
        |SELECT CAST(n AS BIGINT) AS n_vecs,
        |  CAST(k_clusters AS BIGINT) AS k_clusters,
        |  CAST(n_labels AS BIGINT) AS n_labels,
-       |  CAST(1000000 + ${sdiv("(2 * s_ij - s_a - s_b) * 1000000", "c_pairs")}
+       |  CAST(1000000 +
+       |    ${Duck.truncDiv("(2 * s_ij - s_a - s_b) * 1000000", "c_pairs")}
        |    AS BIGINT) AS rand_e6,
-       |  CAST(${sdiv("2 * (c_pairs * s_ij - s_a * s_b) * 1000000",
+       |  CAST(${Duck.truncDiv("2 * (c_pairs * s_ij - s_a * s_b) * 1000000",
           "c_pairs * (s_a + s_b) - 2 * s_a * s_b")} AS BIGINT) AS ari_e6
        |FROM fin""".stripMargin
-  }
 
   // --------------------- q326: Moran's I spatial autocorrelation
 
@@ -1466,13 +1451,7 @@ object SimilarityQueries {
     */
   val q326MoransI: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(n: String, d: String) =
-      s"""(CASE WHEN (($n) < 0) != (($d) < 0) THEN -1 ELSE 1 END *
-         | (ABS(CAST(($n) AS DECIMAL(38,0)))
-         |  div ABS(CAST(($d) AS DECIMAL(38,0)))))"""
         .stripMargin.replace("\n", " ")
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val cells = Tables.embeddings(s, dir)
       .select(
         expr(s"(CAST(ROUND(CAST(element_at(embedding, 1) AS DOUBLE) * 10000)" +
@@ -1514,9 +1493,11 @@ object SimilarityQueries {
         // a constant lattice (s_xx = 0) has no spatial structure to
         // measure — NULL, not a division error
         when(col("s_xx") > 0,
-          expr(sdiv("n * s_cross * 1000000", "w_pairs * s_xx"))).cast("long")
+          expr(Spark.truncDivLong("n * s_cross * 1000000",
+            "w_pairs * s_xx"))).cast("long")
           .as("morans_i_e6"),
-        (-expr(fdiv("1000000", "n - 1"))).cast("long").as("expected_i_e6"))
+        (-expr(Spark.truncDiv("1000000", "n - 1"))).cast("long").as(
+          "expected_i_e6"))
   }
 
   val q326Sql: String =
@@ -1581,8 +1562,6 @@ object SimilarityQueries {
     */
   val q365Isotropy: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val pd = Tables.embeddings(s, dir)
       .select(posexplode(col("embedding")).as(Seq("d", "x")))
       .select(col("d"),
@@ -1591,7 +1570,7 @@ object SimilarityQueries {
       .agg(count(lit(1)).cast(dec).as("n"), sum(col("q")).cast(dec).as("s"),
         sum((col("q") * col("q")).cast(dec)).as("ss"))
       .select(col("d"), col("n"), col("s"), col("ss"),
-        expr(fdiv("n * ss - s * s", "n * n")).as("vn"))
+        expr(Spark.truncDiv("n * ss - s * s", "n * n")).as("vn"))
       .localCheckpoint()
     val folded = pd.agg(max(col("n")).as("n"),
       count(lit(1)).as("n_dims"),
@@ -1604,9 +1583,12 @@ object SimilarityQueries {
     folded.crossJoin(broadcast(topDim))
       .select(col("n").cast("long").as("n_vecs"),
         col("n_dims").cast("long").as("n_dims"),
-        expr(fdiv("s2 * 1000000", "n * sss")).cast("long").as("aniso_e6"),
-        expr(fdiv("sv * sv * 1000000", "sv2")).cast("long").as("pr_e6"),
-        expr(fdiv("mx * 1000000", "sv")).cast("long").as("top_share_e6"),
+        expr(Spark.truncDiv("s2 * 1000000", "n * sss"))
+          .cast("long").as("aniso_e6"),
+        expr(Spark.truncDiv("sv * sv * 1000000", "sv2"))
+          .cast("long").as("pr_e6"),
+        expr(Spark.truncDiv("mx * 1000000", "sv"))
+          .cast("long").as("top_share_e6"),
         col("top_dim").cast("long").as("top_dim"))
   }
 
@@ -1701,10 +1683,10 @@ object SimilarityQueries {
   }
 
   val q366Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val va = s"(${d("na * ssa - sa * sa")} / ${d("na * na")})"
-    val vb = s"(${d("nb * ssb - sb * sb")} / ${d("nb * nb")})"
-    val smd = s"((${d("sa")} / ${d("na")} - ${d("sb")} / ${d("nb")}) / " +
+    val va = s"(${Duck.asDouble("na * ssa - sa * sa")} / ${Duck.asDouble("na * na")})"
+    val vb = s"(${Duck.asDouble("nb * ssb - sb * sb")} / ${Duck.asDouble("nb * nb")})"
+    val smd = s"((${Duck.asDouble("sa")} / ${Duck.asDouble("na")} - " +
+      s"${Duck.asDouble("sb")} / ${Duck.asDouble("nb")}) / " +
       s"sqrt(($va + $vb) / 2.0))"
     s"""WITH qv AS (
       |  SELECT CASE WHEN CAST(concat('0x',
@@ -1773,8 +1755,6 @@ object SimilarityQueries {
     */
   val q411Lof: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS BIGINT)"
     val pts = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"),
         round(element_at(col("embedding"), 1).cast("double") * 10000, 0)
@@ -1819,7 +1799,7 @@ object SimilarityQueries {
       .groupBy(col("vec_id")).agg(sum(col("reach")).as("sreach"))
       .join(kd.select(col("vec_id")), Seq("vec_id"))
       .select(col("vec_id"),
-        expr(fdiv(s"$LofK * 10000000000", "GREATEST(sreach, 1)"))
+        expr(Spark.truncDivLong(s"$LofK * 10000000000", "GREATEST(sreach, 1)"))
           .as("lrd_e8"))
       .localCheckpoint()
     val lof = ranked
@@ -1829,7 +1809,8 @@ object SimilarityQueries {
       .agg(sum(coalesce(col("lrdq"), lit(LofHorizonLrd))).as("slrdq"))
       .join(lrd, Seq("vec_id"))
       .select(col("vec_id"),
-        expr(fdiv("slrdq * 1000000", s"$LofK * lrd_e8")).as("lof_e6"),
+        expr(Spark.truncDivLong("slrdq * 1000000",
+          s"$LofK * lrd_e8")).as("lof_e6"),
         col("lrd_e8"))
     lof.orderBy(col("lof_e6").desc, col("vec_id")).limit(20)
       .join(pts.select(col("vec_id"), col("label")), Seq("vec_id"))
@@ -1916,10 +1897,6 @@ object SimilarityQueries {
   val q425Hubness: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val pts = Tables.embeddings(s, dir)
       .select(col("vec_id"),
         round(element_at(col("embedding"), 1).cast("double") * 10000, 0)
@@ -1960,7 +1937,7 @@ object SimilarityQueries {
       sum(when(col("nk") === 0L, 1L).otherwise(0L)).as("n_orphans"))
     val moms = nk.crossJoin(broadcast(tot))
       .select(col("n"), col("n_orphans"), col("snk"),
-        expr(sdiv("nk * n - snk", "n")).as("d"))
+        expr(Spark.truncDiv("nk * n - snk", "n")).as("d"))
       .groupBy(col("n"), col("n_orphans"), col("snk"))
       .agg(sum(col("d") * col("d")).as("s2"),
         sum(col("d") * col("d") * col("d")).as("s3"))
@@ -1978,9 +1955,8 @@ object SimilarityQueries {
   }
 
   val q425Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val m2 = s"(${d("s2")} / ${d("n")})"
-    val m3 = s"(${d("s3")} / ${d("n")})"
+    val m2 = s"(${Duck.asDouble("s2")} / ${Duck.asDouble("n")})"
+    val m3 = s"(${Duck.asDouble("s3")} / ${Duck.asDouble("n")})"
     s"""WITH pts AS (
        |  SELECT vec_id,
        |    CAST(ROUND(CAST(embedding[1] AS DOUBLE) * 10000) AS BIGINT) AS x,
@@ -2025,8 +2001,7 @@ object SimilarityQueries {
        |    ANY_VALUE(snk) AS snk,
        |    SUM(dd * dd) AS s2, SUM(dd * dd * dd) AS s3
        |  FROM (SELECT n, n_orphans, snk,
-       |          CASE WHEN nk * n - snk >= 0 THEN 1 ELSE -1 END *
-       |            (ABS(nk * n - snk) // n) AS dd
+       |          ${Duck.truncDiv("nk * n - snk", "n")} AS dd
        |        FROM nk CROSS JOIN tot))
        |SELECT CAST(n AS BIGINT) AS n_points, n_orphans, hub_vec_id, max_nk,
        |  CAST(snk * 1000000 // n AS BIGINT) AS mean_nk_e6,
@@ -2278,10 +2253,7 @@ object SimilarityQueries {
     val scales = base.groupBy(col("d"))
       .agg(greatest(max(abs(col("q"))), lit(1L)).as("sc"))
     val quant = base.join(broadcast(scales), "d")
-      .withColumn("v", expr(
-        """CASE WHEN q >= 0 THEN (q * 127) div sc
-          | ELSE -(((-q) * 127) div sc) END"""
-          .stripMargin.replace("\n", " ")))
+      .withColumn("v", expr(Spark.truncDivLong("q * 127", "sc")))
     val probes = quant.filter(col("vec_id") < 10)
       .select(col("vec_id").as("probe_id"), col("d").as("pd"),
         col("q").as("qp"), col("v").as("vp"))
@@ -2316,8 +2288,7 @@ object SimilarityQueries {
        |  SELECT d, GREATEST(MAX(ABS(q)), 1) AS sc FROM base GROUP BY 1),
        |quant AS (
        |  SELECT vec_id, base.d, q,
-       |    CASE WHEN q >= 0 THEN (q * 127) // sc
-       |      ELSE -(((-q) * 127) // sc) END AS v
+       |    ${Duck.truncDivLong("q * 127", "sc")} AS v
        |  FROM base JOIN scales ON base.d = scales.d),
        |probes AS (
        |  SELECT vec_id AS probe_id, d AS pd, q AS qp, v AS vp FROM quant
@@ -2521,11 +2492,9 @@ object SimilarityQueries {
       .withColumn("mnext", lead(col("m"), 1).over(w))
     val terms = ranked.crossJoin(broadcast(nDf))
       .withColumn("term", expr(
-        s"""CASE WHEN mnext IS NULL THEN CAST(0 AS BIGINT)
-           | WHEN m >= mnext THEN
-           |   ((m - mnext) * least(rnk, $K) * 1000000000000) div ($K * rnk)
-           | ELSE -(((mnext - m) * least(rnk, $K) * 1000000000000)
-           |   div ($K * rnk)) END""".stripMargin.replace("\n", " ")))
+        s"""CASE WHEN mnext IS NULL THEN CAST(0 AS BIGINT) ELSE ${Spark
+          .truncDivLong(s"(m - mnext) * least(rnk, $K) * 1000000000000",
+            s"$K * rnk")} END"""))
       .withColumn("base", max(when(col("mnext").isNull,
         expr("m * 1000000000000 div n_train")))
         .over(Window.partitionBy(col("tid"))))
@@ -2711,10 +2680,9 @@ object SimilarityQueries {
         |terms AS (
         |  SELECT tid, vec_id, label, rnk,
         |    CASE WHEN mnext IS NULL THEN 0
-        |      WHEN m >= mnext THEN
-        |        ((m - mnext) * LEAST(rnk, $K) * 1000000000000) // ($K * rnk)
-        |      ELSE -(((mnext - m) * LEAST(rnk, $K) * 1000000000000)
-        |        // ($K * rnk)) END AS term,
+        |      ELSE ${Duck.truncDivLong(
+                 s"(m - mnext) * LEAST(rnk, $K) * 1000000000000",
+                 s"$K * rnk")} END AS term,
         |    MAX(CASE WHEN mnext IS NULL
         |      THEN m * 1000000000000 // n_train END)
         |      OVER (PARTITION BY tid) AS base

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Q, Tables}
 import graft.functions.{Pairs, Text}
+import graft.functions.FixedPoint.{Duck, Spark}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -274,15 +275,19 @@ object TextQueries {
     * where q54's Σdf² candidate blowup bites; both formulations are kept so
     * the engine can pick per workload.
     */
-  /** Max |docs| for which q65's verify joins may broadcast the per-document
-    * ranked-array frame. 2^21 rows of ~30-shingle long arrays is ~500 MB
-    * framed — inside the guide's "a few hundred MB is usually fine" band
-    * and far under the 8 GB broadcast cap; anything larger goes through
-    * shuffle_hash instead. Env-overridable for experiments.
+  /** Byte budget under which q65's verify joins may broadcast the
+    * per-document ranked-array frame: ~500 MB framed, inside the guide's
+    * "a few hundred MB is usually fine" band and far under the 8 GB
+    * broadcast cap; anything larger goes through shuffle_hash instead.
     */
-  val VerifyBroadcastMaxDocs: Long =
-    sys.env.get("SPARK_GRAFT_VERIFY_BCAST_MAX_DOCS")
-      .flatMap(_.toLongOption).getOrElse(1L << 21)
+  private val VerifyBroadcastMaxBytes: Long = 500L << 20
+
+  /** Framed size of the docs frame (doc_id, arr, n_sh) from its row count
+    * and total shingle count: an UnsafeRow of three 8-byte slots plus null
+    * bits, and an array of 8-byte hashes behind a 16-byte header.
+    */
+  private def verifyFrameBytes(nDocs: Long, nShingles: Long): Long =
+    nDocs * 48 + nShingles * 8
 
   /** The q65 verify decoration: attach each candidate side's ranked shingle
     * array + size. `useBroadcast` picks broadcast (small corpora: zero
@@ -323,12 +328,16 @@ object TextQueries {
     // shingle explode + df window + collect_list otherwise re-run per
     // consumer (r8; the exchange is reused but the per-doc aggregation and
     // window are not). |docs| rows of ranked arrays — small at any scale
-    // relative to the shingle stream.
+    // relative to the shingle stream. The checkpoint job also observes the
+    // frame's size for the broadcast gate below, so sizing costs no job.
+    val sizes = org.apache.spark.sql.Observation()
     val docs = kept.groupBy(col("doc_id"))
       .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("ranked"))
       .select(col("doc_id"),
         transform(col("ranked"), r => r.getField("h")).as("arr"),
         size(col("ranked")).as("n_sh"))
+      .observe(sizes, count(lit(1)).as("n_docs"),
+        coalesce(sum(col("n_sh")), lit(0L)).as("n_shingles"))
       .localCheckpoint()
     // exact ⌈3n/10⌉ via floor((3n+9)/10): IEEE division of exact ints is
     // correctly rounded, so the floor is the true integer quotient
@@ -349,12 +358,15 @@ object TextQueries {
     // would OOM the driver at 100 TB (r8 verdict). But the shuffle-only
     // posture measured ~1 s worse locally: the second verify join re-
     // exchanges the pair stream with arr_a already attached (262 MB at
-    // sf0.1 vs 0 broadcast). So the broadcast is GATED on the actual row
-    // count of the (already checkpointed, so the count is a metadata-cheap
-    // job) docs frame: small corpus → broadcast both probes; big corpus →
-    // shuffle_hash, hash-build on the docs side, sort-free at any scale.
+    // sf0.1 vs 0 broadcast). So the broadcast is GATED on the estimated
+    // bytes of the docs frame — rows alone miss that each row carries a
+    // shingle array of unbounded length: small frame → broadcast both
+    // probes; big frame → shuffle_hash, hash-build on the docs side,
+    // sort-free at any scale.
+    val frameBytes = verifyFrameBytes(sizes.get("n_docs").asInstanceOf[Long],
+      sizes.get("n_shingles").asInstanceOf[Long])
     verifyDecorate(cands, docs,
-      useBroadcast = docs.count() <= VerifyBroadcastMaxDocs)
+      useBroadcast = frameBytes <= VerifyBroadcastMaxBytes)
       .select(col("doc_a"), col("doc_b"),
         inter.cast("long").as("n_inter"),
         (col("na") + col("nb") - inter).cast("long").as("n_union"),
@@ -1644,12 +1656,8 @@ object TextQueries {
         expr("""CAST((pe_num * 1000000 - (pe_num * 1000000)
                 |  % (n_docs * n_docs)) / (n_docs * n_docs) AS BIGINT)"""
           .stripMargin).as("pe_e6"),
-        expr("""CAST(CASE WHEN n_docs * n_agree >= pe_num THEN 1 ELSE -1 END
-                | * CAST((abs(n_docs * n_agree - pe_num) * 1000000
-                |    - (abs(n_docs * n_agree - pe_num) * 1000000)
-                |      % (n_docs * n_docs - pe_num))
-                |   / (n_docs * n_docs - pe_num) AS DECIMAL(38,0))
-                | AS BIGINT)""".stripMargin).as("kappa_e6"))
+        expr(Spark.truncDivLong("(n_docs * n_agree - pe_num) * 1000000",
+          "n_docs * n_docs - pe_num")).as("kappa_e6"))
   }
 
   val q273Sql: String = {
@@ -1670,9 +1678,8 @@ object TextQueries {
        |  CAST(n_agree AS BIGINT) AS n_agree,
        |  CAST(n_agree * 1000000 // n_docs AS BIGINT) AS po_e6,
        |  CAST(pe_num * 1000000 // (n_docs * n_docs) AS BIGINT) AS pe_e6,
-       |  CAST((CASE WHEN n_docs * n_agree >= pe_num THEN 1 ELSE -1 END)
-       |    * (ABS(n_docs * n_agree - pe_num) * 1000000
-       |       // (n_docs * n_docs - pe_num)) AS BIGINT) AS kappa_e6
+       |  ${Duck.truncDivLong("(n_docs * n_agree - pe_num) * 1000000",
+              "n_docs * n_docs - pe_num")} AS kappa_e6
        |FROM tot CROSS JOIN pe""".stripMargin
   }
 
@@ -1736,7 +1743,7 @@ object TextQueries {
     val cpCols = NbLangs.map(l =>
       (coalesce(col(s"c_$l"), lit(0L)) + 1L).as(s"cp_$l"))
     val l2Cols = NbLangs.map(l =>
-      expr(Text.log2e6SparkSql(s"cp_$l")).as(s"l2_$l"))
+      expr(Spark.log2e6(s"cp_$l")).as(s"l2_$l"))
     val bCols = count(lit(1)).as("n_toks") +:
       NbLangs.map(l => sum(col(s"l2_$l")).as(s"b_$l"))
     val perDoc = evalToks.join(model, Seq("w"), "left")
@@ -1746,10 +1753,10 @@ object TextQueries {
       .agg(bCols.head, bCols.tail: _*)
     val zvCols = NbLangs.map(l => (col(s"z_$l") + col("v")).as(s"zv_$l"))
     val sCols = NbLangs.map(l =>
-      (col("n_toks") * expr(Text.log2e6SparkSql(s"zv_$l"))
+      (col("n_toks") * expr(Spark.log2e6(s"zv_$l"))
         - col(s"b_$l")
-        + expr(Text.log2e6SparkSql("n_train"))
-        - expr(Text.log2e6SparkSql(s"d_$l"))).as(s"s_$l"))
+        + expr(Spark.log2e6("n_train"))
+        - expr(Spark.log2e6(s"d_$l"))).as(s"s_$l"))
     val scored = perDoc.crossJoin(broadcast(scal)).crossJoin(broadcast(pri))
       .select(Seq(col("doc_id"), col("lang"), col("n_toks"), col("n_train")) ++
         NbLangs.map(l => col(s"b_$l")) ++ NbLangs.map(l => col(s"d_$l")) ++
@@ -1779,12 +1786,12 @@ object TextQueries {
       s"SUM(CASE WHEN lang = '$l' THEN 1 ELSE 0 END) AS d_$l").mkString(",\n    ")
     val coals = NbLangs.map(l => s"COALESCE(c_$l, 0) + 1 AS cp_$l").mkString(", ")
     val l2s = NbLangs.map(l =>
-      s"${Text.log2e6DuckSql(s"cp_$l")} AS l2_$l").mkString(",\n    ")
+      s"${Duck.log2e6(s"cp_$l")} AS l2_$l").mkString(",\n    ")
     val bSel = NbLangs.map(l => s"SUM(l2_$l) AS b_$l").mkString(",\n    ")
     val zvSel = NbLangs.map(l => s"z_$l + v AS zv_$l").mkString(", ")
     val sSel = NbLangs.map(l =>
-      s"n_toks * ${Text.log2e6DuckSql(s"zv_$l")} - b_$l + " +
-        s"${Text.log2e6DuckSql("n_train")} - ${Text.log2e6DuckSql(s"d_$l")} AS s_$l")
+      s"n_toks * ${Duck.log2e6(s"zv_$l")} - b_$l + " +
+        s"${Duck.log2e6("n_train")} - ${Duck.log2e6(s"d_$l")} AS s_$l")
       .mkString(",\n    ")
     val leastArgs = NbLangs.map(l => s"s_$l").mkString(", ")
     val caseArms = NbLangs.map(l =>
@@ -1862,7 +1869,6 @@ object TextQueries {
     */
   val q278SourceEntropy: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def l2(x: String) = Text.log2e6SparkSql(x)
     val sw = Tables.documents(s, dir)
       .select(col("source"), explode(Text.tokens(col("text"))).as("w"))
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c_sw"))
@@ -1872,17 +1878,18 @@ object TextQueries {
     val wTot = sw.groupBy(col("w")).agg(sum(col("c_sw")).as("c_w"))
     val corpus = wTot.agg(sum(col("c_w")).cast("long").as("z_all"))
     val terms = sw.join(wTot, Seq("w")).crossJoin(broadcast(corpus))
-      .withColumn("l2_csw", expr(l2("c_sw")))
+      .withColumn("l2_csw", expr(Spark.log2e6("c_sw")))
       .withColumn("term_h", col("c_sw").cast(dec) * col("l2_csw"))
       .withColumn("term_kl", col("c_sw").cast(dec) *
-        (col("l2_csw") + expr(l2("z_all")) - expr(l2("c_w"))))
+        (col("l2_csw") + expr(Spark.log2e6("z_all")) -
+          expr(Spark.log2e6("c_w"))))
     val perSource = terms.groupBy(col("source"))
       .agg(sum(col("c_sw")).as("z_s"),
         count(lit(1)).as("v_types"),
         sum(col("term_h")).as("h_num"),
         sum(col("term_kl")).as("kl_num0"))
     perSource
-      .withColumn("l2_zs", expr(l2("z_s")))
+      .withColumn("l2_zs", expr(Spark.log2e6("z_s")))
       // KL numerator still owes the −log2(Z_s) per occurrence
       .withColumn("kl_num",
         col("kl_num0") - col("z_s").cast(dec) * col("l2_zs"))
@@ -1891,15 +1898,11 @@ object TextQueries {
         expr("""CAST(l2_zs - CAST((h_num - h_num % z_s) / z_s
                 | AS DECIMAL(38,0)) AS BIGINT)""".stripMargin)
           .as("entropy_e6"),
-        expr("""CAST(CASE WHEN kl_num >= 0 THEN 1 ELSE -1 END *
-                | CAST((abs(kl_num) - abs(kl_num) % z_s) / z_s
-                |   AS DECIMAL(38,0)) AS BIGINT)""".stripMargin)
-          .as("kl_vs_corpus_e6"))
+        expr(Spark.truncDivLong("kl_num", "z_s")).as("kl_vs_corpus_e6"))
       .orderBy(col("source"))
   }
 
-  val q278Sql: String = {
-    def l2(x: String) = Text.log2e6DuckSql(x)
+  val q278Sql: String =
     s"""WITH sw AS (
        |  SELECT source, w, COUNT(*) AS c_sw
        |  FROM (SELECT source, UNNEST(STRING_SPLIT(text, ' ')) AS w
@@ -1910,10 +1913,11 @@ object TextQueries {
        |corpus AS (SELECT CAST(SUM(c_w) AS BIGINT) AS z_all FROM w_tot),
        |terms AS (
        |  SELECT source, c_sw,
-       |    ${l2("c_sw")} AS l2_csw,
-       |    CAST(c_sw AS HUGEINT) * ${l2("c_sw")} AS term_h,
+       |    ${Duck.log2e6("c_sw")} AS l2_csw,
+       |    CAST(c_sw AS HUGEINT) * ${Duck.log2e6("c_sw")} AS term_h,
        |    CAST(c_sw AS HUGEINT) *
-       |      (${l2("c_sw")} + ${l2("z_all")} - ${l2("c_w")}) AS term_kl
+       |      (${Duck.log2e6("c_sw")} + ${Duck.log2e6("z_all")} -
+       |        ${Duck.log2e6("c_w")}) AS term_kl
        |  FROM sw JOIN w_tot USING (w) CROSS JOIN corpus),
        |per_source AS (
        |  SELECT source, CAST(SUM(c_sw) AS BIGINT) AS z_s,
@@ -1922,15 +1926,13 @@ object TextQueries {
        |  FROM terms GROUP BY source),
        |fin AS (
        |  SELECT source, z_s, v_types, h_num,
-       |    ${l2("z_s")} AS l2_zs,
-       |    kl_num0 - CAST(z_s AS HUGEINT) * ${l2("z_s")} AS kl_num
+       |    ${Duck.log2e6("z_s")} AS l2_zs,
+       |    kl_num0 - CAST(z_s AS HUGEINT) * ${Duck.log2e6("z_s")} AS kl_num
        |  FROM per_source)
        |SELECT source, CAST(z_s AS BIGINT) AS z_tokens, v_types,
        |  CAST(l2_zs - h_num // z_s AS BIGINT) AS entropy_e6,
-       |  CAST((CASE WHEN kl_num >= 0 THEN 1 ELSE -1 END)
-       |    * (ABS(kl_num) // z_s) AS BIGINT) AS kl_vs_corpus_e6
+       |  ${Duck.truncDivLong("kl_num", "z_s")} AS kl_vs_corpus_e6
        |FROM fin ORDER BY source""".stripMargin
-  }
 
   // ------------------------------------ q279: word-language MI ranking
 
@@ -1954,7 +1956,6 @@ object TextQueries {
     */
   val q279FeatureMi: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def l2(x: String) = Text.log2e6SparkSql(x)
     val wl = Tables.documents(s, dir)
       .select(col("lang"), explode(Text.tokens(col("text"))).as("w"))
       .groupBy(col("w"), col("lang")).agg(count(lit(1)).as("n_wl"))
@@ -1965,22 +1966,18 @@ object TextQueries {
     wl.join(wTot, Seq("w")).join(broadcast(lTot), Seq("lang"))
       .crossJoin(broadcast(nAll))
       .withColumn("term", col("n_wl").cast(dec) *
-        (expr(l2("n_wl")) + expr(l2("n_all")) -
-          expr(l2("n_w")) - expr(l2("n_l"))))
+        (expr(Spark.log2e6("n_wl")) + expr(Spark.log2e6("n_all")) -
+          expr(Spark.log2e6("n_w")) - expr(Spark.log2e6("n_l"))))
       .groupBy(col("w"))
       .agg(max(col("n_w")).as("n_w"), sum(col("term")).as("num"),
         max(col("n_all")).as("n_all"))
       .select(col("w"), col("n_w").cast("long").as("n_occurrences"),
-        expr("""CAST(CASE WHEN num >= 0 THEN 1 ELSE -1 END *
-                | CAST((abs(num) - abs(num) % n_all) / n_all
-                |   AS DECIMAL(38,0)) AS BIGINT)""".stripMargin)
-          .as("mi_contrib_e6"))
+        expr(Spark.truncDivLong("num", "n_all")).as("mi_contrib_e6"))
       .orderBy(col("mi_contrib_e6").desc, col("w"))
       .limit(MiTopK)
   }
 
-  val q279Sql: String = {
-    def l2(x: String) = Text.log2e6DuckSql(x)
+  val q279Sql: String =
     s"""WITH wl AS (
        |  SELECT w, lang, COUNT(*) AS n_wl
        |  FROM (SELECT lang, UNNEST(STRING_SPLIT(text, ' ')) AS w
@@ -1994,7 +1991,8 @@ object TextQueries {
        |terms AS (
        |  SELECT w, n_w, n_all,
        |    CAST(n_wl AS HUGEINT) *
-       |      (${l2("n_wl")} + ${l2("n_all")} - ${l2("n_w")} - ${l2("n_l")})
+       |      (${Duck.log2e6("n_wl")} + ${Duck.log2e6("n_all")} -
+       |        ${Duck.log2e6("n_w")} - ${Duck.log2e6("n_l")})
        |      AS term
        |  FROM wl JOIN w_tot USING (w) JOIN l_tot USING (lang)
        |  CROSS JOIN n_tot),
@@ -2002,11 +2000,9 @@ object TextQueries {
        |  SELECT w, MAX(n_w) AS n_w, SUM(term) AS num, MAX(n_all) AS n_all
        |  FROM terms GROUP BY w)
        |SELECT w, CAST(n_w AS BIGINT) AS n_occurrences,
-       |  CAST((CASE WHEN num >= 0 THEN 1 ELSE -1 END)
-       |    * (ABS(num) // n_all) AS BIGINT) AS mi_contrib_e6
+       |  ${Duck.truncDivLong("num", "n_all")} AS mi_contrib_e6
        |FROM per_w
        |ORDER BY mi_contrib_e6 DESC, w LIMIT $MiTopK""".stripMargin
-  }
 
   // ------------------------------------------------ q293: BM25 retrieval
 
@@ -2042,8 +2038,6 @@ object TextQueries {
     * heads + one merge), never a global sort.
     */
   val q293Bm25: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     // the tokenized frame feeds BOTH the length projection and the tf
     // rollup — checkpoint so the corpus tokenizes once (the index-build seam)
     val d = Tables.documents(s, dir)
@@ -2059,9 +2053,9 @@ object TextQueries {
       .join(docLen, "doc_id")
       .crossJoin(broadcast(scalars))
       .withColumn("idf_e6",
-        expr(Text.log2e6SparkSql("2 * n_docs + 2")) -
-          expr(Text.log2e6SparkSql("2 * df + 1")))
-      .withColumn("term_score_e6", expr(fdiv(
+        expr(Spark.log2e6("2 * n_docs + 2")) -
+          expr(Spark.log2e6("2 * df + 1")))
+      .withColumn("term_score_e6", expr(Spark.truncDiv(
         "CAST(idf_e6 AS DECIMAL(38,0)) * 22 * tf * t_toks",
         "10 * CAST(t_toks AS DECIMAL(38,0)) * tf + 3 * t_toks + 9 * dl * n_docs")))
     scored.groupBy(col("doc_id"))
@@ -2086,8 +2080,8 @@ object TextQueries {
        |qterms AS (SELECT word, df FROM df ORDER BY df ASC, word LIMIT $Bm25QueryTerms),
        |scored AS (
        |  SELECT tf.doc_id, dl.dl, tf.tf,
-       |    ${Text.log2e6DuckSql("2 * n_docs + 2")} -
-       |      ${Text.log2e6DuckSql("2 * df + 1")} AS idf_e6,
+       |    ${Duck.log2e6("2 * n_docs + 2")} -
+       |      ${Duck.log2e6("2 * df + 1")} AS idf_e6,
        |    CAST(idf_e6 AS HUGEINT) * 22 * tf * t_toks //
        |      (10 * CAST(t_toks AS HUGEINT) * tf + 3 * t_toks + 9 * dl * n_docs)
        |      AS term_score_e6
@@ -2121,8 +2115,6 @@ object TextQueries {
     */
   val q320CaptureRecapture: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     // each detector's pair set is consumed by its count AND the overlap
     // join — checkpoint so neither LSH pipeline runs twice; the two
     // detectors are independent, so materialize them concurrently (r8)
@@ -2134,14 +2126,16 @@ object TextQueries {
     val nb = b.agg(count(lit(1)).as("n_b"))
     na.crossJoin(broadcast(nb)).crossJoin(broadcast(m))
       .select(col("n_a"), col("n_b"), col("m").as("n_both"),
-        (expr(fdiv(
+        (expr(Spark.truncDiv(
           "(CAST(n_a AS DECIMAL(38,0)) + 1) * (CAST(n_b AS DECIMAL(38,0)) + 1)",
           "m + 1")) - 1L).as("est_total"))
       .select(col("n_a"), col("n_b"), col("n_both"),
         col("est_total").cast("long").as("est_total"),
-        expr(fdiv("n_a * 1000000", "est_total")).cast("long").as("cov_a_e6"),
-        expr(fdiv("n_b * 1000000", "est_total")).cast("long").as("cov_b_e6"),
-        expr(fdiv("(n_a + n_b - n_both) * 1000000", "est_total"))
+        expr(Spark.truncDiv("n_a * 1000000", "est_total"))
+          .cast("long").as("cov_a_e6"),
+        expr(Spark.truncDiv("n_b * 1000000", "est_total"))
+          .cast("long").as("cov_b_e6"),
+        expr(Spark.truncDiv("(n_a + n_b - n_both) * 1000000", "est_total"))
           .cast("long").as("cov_union_e6"))
   }
 
@@ -2177,8 +2171,6 @@ object TextQueries {
     * integers. The full-outer pair join IS the pairing.
     */
   val q322McNemar: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val a = q55MinhashLsh(s, dir).select(col("doc_a"), col("doc_b"))
       .withColumn("in_a", lit(1L))
     val b = q56Simhash(s, dir).select(col("doc_a"), col("doc_b"))
@@ -2192,7 +2184,7 @@ object TextQueries {
           .otherwise(0L)).as("n_both"))
       .select(col("b_only"), col("c_only"), col("n_both"),
         when(col("b_only") + col("c_only") > 0,
-          expr(fdiv(
+          expr(Spark.truncDiv(
             "(ABS(b_only - c_only) - 1) * (ABS(b_only - c_only) - 1) * 1000000",
             "b_only + c_only")))
           .otherwise(lit(0L).cast("decimal(38,0)")).cast("long")
@@ -2235,8 +2227,6 @@ object TextQueries {
     * frequencies rollup (≤ max-freq rows) → 1-row fold.
     */
   val q323Chao1: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val tf = Tables.documents(s, dir)
       .select(explode(Text.tokens(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
@@ -2248,10 +2238,12 @@ object TextQueries {
       .select(col("n_tok").cast("long").as("n_tokens"), col("vocab"),
         col("f1"), col("f2"),
         (col("vocab") + when(col("f2") > 0,
-          expr(fdiv("CAST(f1 AS DECIMAL(38,0)) * f1", "2 * f2")))
-          .otherwise(expr(fdiv("CAST(f1 AS DECIMAL(38,0)) * (f1 - 1)", "2"))))
+          expr(Spark.truncDiv("CAST(f1 AS DECIMAL(38,0)) * f1", "2 * f2")))
+          .otherwise(expr(Spark.truncDiv("CAST(f1 AS DECIMAL(38,0)) * (f1 - 1)",
+            "2"))))
           .cast("long").as("chao1_est"),
-        (lit(1000000L) - expr(fdiv("CAST(f1 AS DECIMAL(38,0)) * 1000000",
+        (lit(1000000L) - expr(Spark.truncDiv(
+          "CAST(f1 AS DECIMAL(38,0)) * 1000000",
           "n_tok"))).cast("long").as("gt_coverage_e6"))
   }
 
@@ -2297,27 +2289,27 @@ object TextQueries {
     */
   val q328Raking: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val cells = Tables.documents(s, dir)
       .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("n"))
     val scal = cells.agg(sum(col("n")).cast(dec).as("n_all"),
       countDistinct(col("source")).cast(dec).as("n_src"),
       countDistinct(col("lang")).cast(dec).as("n_lang"))
     val base = cells.crossJoin(broadcast(scal))
-      .withColumn("t_s_e6", expr(fdiv("n_all * 1000000", "n_src")))
-      .withColumn("t_l_e6", expr(fdiv("n_all * 1000000", "n_lang")))
+      .withColumn("t_s_e6", expr(Spark.truncDiv("n_all * 1000000", "n_src")))
+      .withColumn("t_l_e6", expr(Spark.truncDiv("n_all * 1000000", "n_lang")))
       .withColumn("w0", lit(1000000L).cast(dec))
     val rowFac = base.groupBy(col("source"))
-      .agg(expr(fdiv("MAX(t_s_e6) * 1000000", "SUM(n * w0)")).as("f_s_e6"))
+      .agg(expr(Spark.truncDiv("MAX(t_s_e6) * 1000000", "SUM(n * w0)"))
+        .as("f_s_e6"))
     val w1 = base.join(broadcast(rowFac), Seq("source"))
-      .withColumn("w1", expr(fdiv("w0 * f_s_e6", "1000000")))
+      .withColumn("w1", expr(Spark.truncDiv("w0 * f_s_e6", "1000000")))
     val colFac = w1.groupBy(col("lang"))
-      .agg(expr(fdiv("MAX(t_l_e6) * 1000000", "SUM(n * w1)")).as("f_l_e6"))
+      .agg(expr(Spark.truncDiv("MAX(t_l_e6) * 1000000", "SUM(n * w1)"))
+        .as("f_l_e6"))
     val w2 = w1.join(broadcast(colFac), Seq("lang"))
-      .withColumn("w2", expr(fdiv("w1 * f_l_e6", "1000000")))
+      .withColumn("w2", expr(Spark.truncDiv("w1 * f_l_e6", "1000000")))
     val rowErr = w2.groupBy(col("source"))
-      .agg(expr(fdiv("ABS(SUM(n * w2) - MAX(t_s_e6)) * 1000000",
+      .agg(expr(Spark.truncDiv("ABS(SUM(n * w2) - MAX(t_s_e6)) * 1000000",
         "MAX(t_s_e6)")).as("row_err_ppm"))
     w2.join(broadcast(rowErr), Seq("source"))
       .select(col("source"), col("lang"), col("n").as("n_docs"),
@@ -2387,8 +2379,6 @@ object TextQueries {
     */
   val q367TermDispersion: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val tf = Tables.documents(s, dir)
       .select(col("doc_id"), explode(Text.tokens(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
@@ -2411,9 +2401,10 @@ object TextQueries {
     top.join(per, Seq("term")).crossJoin(broadcast(totals))
       .select(col("term"), col("f").cast("long").as("n_total"),
         col("df").cast("long").as("df"),
-        expr(fdiv("(dtot * stf2 - f * f) * 1000000", "dtot * f"))
+        expr(Spark.truncDiv("(dtot * stf2 - f * f) * 1000000", "dtot * f"))
           .cast("long").as("vmr_e6"),
-        expr(fdiv("(adev + (ltot - lpres) * f) * 1000000", "2 * f * ltot"))
+        expr(Spark.truncDiv("(adev + (ltot - lpres) * f) * 1000000",
+          "2 * f * ltot"))
           .cast("long").as("dp_e6"))
       .orderBy(col("n_total").desc, col("term"))
   }
@@ -2476,12 +2467,6 @@ object TextQueries {
     */
   val q395BurrowsDelta: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val tf = Tables.documents(s, dir)
       .select(col("source"), explode(Text.tokens(col("text"))).as("term"))
       .groupBy(col("source"), col("term")).agg(count(lit(1)).as("cnt"))
@@ -2494,26 +2479,27 @@ object TextQueries {
       .crossJoin(broadcast(top))
       .join(tf, Seq("source", "term"), "left")
       .select(col("source"), col("term"),
-        expr(fdiv("CAST(COALESCE(cnt, 0) AS DECIMAL(38,0)) * 1000000000",
+        expr(Spark.truncDiv(
+          "CAST(COALESCE(cnt, 0) AS DECIMAL(38,0)) * 1000000000",
           "tot")).as("sh"))
       .localCheckpoint()
     val stats = grid.groupBy(col("term"))
       .agg(count(lit(1)).cast(dec).as("ns"), sum(col("sh")).as("ssh"),
         sum(col("sh") * col("sh")).as("ssh2"))
-      .select(col("term"), expr(fdiv("ssh", "ns")).as("mean_sh"),
+      .select(col("term"), expr(Spark.truncDiv("ssh", "ns")).as("mean_sh"),
         expr("CAST(FLOOR(SQRT(CAST(" +
-          fdiv("ns * ssh2 - ssh * ssh", "ns * (ns - 1)") +
+          Spark.truncDiv("ns * ssh2 - ssh * ssh", "ns * (ns - 1)") +
           " AS DOUBLE))) AS DECIMAL(38,0))").as("sd_sh"))
     val z = grid.join(broadcast(stats), Seq("term"))
       .select(col("term"), col("source"),
-        expr(sdiv("(sh - mean_sh) * 1000000", "GREATEST(sd_sh, 1)"))
+        expr(Spark.truncDiv("(sh - mean_sh) * 1000000", "GREATEST(sd_sh, 1)"))
           .as("z"))
     z.select(col("term"), col("source").as("src_a"), col("z").as("za"))
       .join(z.select(col("term"), col("source").as("src_b"),
         col("z").as("zb")), Seq("term"))
       .filter(col("src_a") < col("src_b"))
       .groupBy(col("src_a"), col("src_b"))
-      .agg(expr(fdiv(s"SUM(abs(za - zb))", DeltaTopTerms.toString))
+      .agg(expr(Spark.truncDiv(s"SUM(abs(za - zb))", DeltaTopTerms.toString))
         .cast("long").as("delta_e6"))
       .orderBy(col("delta_e6"), col("src_a"), col("src_b"))
       .limit(DeltaTopPairs)
@@ -2548,8 +2534,8 @@ object TextQueries {
       |  FROM stats),
       |z AS (
       |  SELECT g.term, g.source,
-      |    CASE WHEN g.sh - mean_sh >= 0 THEN 1 ELSE -1 END *
-      |      (ABS((g.sh - mean_sh) * 1000000) // GREATEST(sd_sh, 1)) AS z
+      |    ${Duck.truncDiv("(g.sh - mean_sh) * 1000000", "GREATEST(sd_sh, 1)")}
+      |      AS z
       |  FROM grid g JOIN st2 USING (term))
       |SELECT a.source AS src_a, b.source AS src_b,
       |  CAST(SUM(ABS(a.z - b.z)) // $DeltaTopTerms AS BIGINT) AS delta_e6
@@ -2574,8 +2560,6 @@ object TextQueries {
     */
   val q392YulesK: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val tf = Tables.documents(s, dir)
       .select(col("source"), explode(Text.tokens(col("text"))).as("term"))
       .groupBy(col("source"), col("term")).agg(count(lit(1)).as("r"))
@@ -2586,9 +2570,10 @@ object TextQueries {
       .select(col("source"),
         col("nn").cast("long").as("n_tokens"),
         col("vocab").cast("long").as("vocab"),
-        expr(fdiv("(sr2 - nn) * 10000000000", "nn * nn")).cast("long")
+        expr(Spark.truncDiv("(sr2 - nn) * 10000000000", "nn * nn")).cast("long")
           .as("yule_k_e6"),
-        expr(fdiv("(sr2 - nn) * 1000000000", "nn * (nn - 1)")).cast("long")
+        expr(Spark.truncDiv("(sr2 - nn) * 1000000000", "nn * (nn - 1)"))
+          .cast("long")
           .as("simpson_d_e9"))
       .orderBy(col("source"))
   }
@@ -2629,8 +2614,6 @@ object TextQueries {
     */
   val q389GoodTuring: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     // bigram species — every unigram in this corpus repeats, so the
     // unigram n_1..n_5 table is empty; bigrams are also the LM use case
     val tf = Tables.documents(s, dir)
@@ -2654,9 +2637,9 @@ object TextQueries {
       .select(col("r"),
         coalesce(col("n_r"), lit(0L)).as("n_r"),
         when(col("r") === 0L,
-          expr(fdiv("CAST(n_r1 AS DECIMAL(38,0)) * 1000000", "n")))
+          expr(Spark.truncDiv("CAST(n_r1 AS DECIMAL(38,0)) * 1000000", "n")))
           .when(coalesce(col("n_r"), lit(0L)) === 0L, lit(null))
-          .otherwise(expr(fdiv(
+          .otherwise(expr(Spark.truncDiv(
             "(r + 1) * CAST(COALESCE(n_r1, 0) AS DECIMAL(38,0)) * 1000000",
             "n_r"))).cast("long").as("r_star_e6"))
       .orderBy(col("r"))
@@ -2710,11 +2693,6 @@ object TextQueries {
     */
   val q397JensenShannon: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def l2(x: String) = Text.log2e6SparkSql(x)
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val sw = Tables.documents(s, dir)
       .select(col("source"), explode(Text.tokens(col("text"))).as("w"))
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
@@ -2731,16 +2709,18 @@ object TextQueries {
         col("z").as("zb"))), Seq("src_b"))
     val per = pairs
       .withColumn("term_p", col("ca").cast(dec) *
-        (expr(l2("2 * ca * zb")) - expr(l2("ca * zb + cb * za"))))
+        (expr(Spark.log2e6("2 * ca * zb")) -
+          expr(Spark.log2e6("ca * zb + cb * za"))))
       .withColumn("term_q", col("cb").cast(dec) *
-        (expr(l2("2 * cb * za")) - expr(l2("ca * zb + cb * za"))))
+        (expr(Spark.log2e6("2 * cb * za")) -
+          expr(Spark.log2e6("ca * zb + cb * za"))))
       .groupBy(col("src_a"), col("src_b"))
       .agg(first(col("za")).as("za"), first(col("zb")).as("zb"),
         count(lit(1)).as("shared_types"),
         sum(col("ca")).as("sa"), sum(col("cb")).as("sb"),
         sum(col("term_p")).as("tp"), sum(col("term_q")).as("tq"))
     per.select(col("src_a"), col("src_b"), col("shared_types"),
-      expr(sdiv(
+      expr(Spark.truncDivLong(
         """(tp + (za - sa) * CAST(1000000 AS DECIMAL(38,0))) * zb +
           | (tq + (zb - sb) * CAST(1000000 AS DECIMAL(38,0))) * za"""
           .stripMargin.replace("\n", " "),
@@ -2748,8 +2728,7 @@ object TextQueries {
       .orderBy(col("src_a"), col("src_b"))
   }
 
-  val q397Sql: String = {
-    def l2(x: String) = Text.log2e6DuckSql(x)
+  val q397Sql: String =
     s"""WITH sw AS (
        |  SELECT source, w, CAST(COUNT(*) AS BIGINT) AS c
        |  FROM (SELECT source, UNNEST(STRING_SPLIT(text, ' ')) AS w
@@ -2768,19 +2747,18 @@ object TextQueries {
        |    COUNT(*) AS shared_types,
        |    CAST(SUM(ca) AS HUGEINT) AS sa, CAST(SUM(cb) AS HUGEINT) AS sb,
        |    SUM(CAST(ca AS HUGEINT) *
-       |      (${l2("2 * ca * zb")} - ${l2("ca * zb + cb * za")})) AS tp,
+       |      (${Duck.log2e6("2 * ca * zb")} -
+       |        ${Duck.log2e6("ca * zb + cb * za")})) AS tp,
        |    SUM(CAST(cb AS HUGEINT) *
-       |      (${l2("2 * cb * za")} - ${l2("ca * zb + cb * za")})) AS tq
+       |      (${Duck.log2e6("2 * cb * za")} -
+       |        ${Duck.log2e6("ca * zb + cb * za")})) AS tq
        |  FROM pairs GROUP BY src_a, src_b)
        |SELECT src_a, src_b, shared_types,
-       |  CAST(CASE WHEN (tp + (za - sa) * CAST(1000000 AS HUGEINT)) * zb +
-       |      (tq + (zb - sb) * CAST(1000000 AS HUGEINT)) * za >= 0
-       |    THEN 1 ELSE -1 END *
-       |    (ABS((tp + (za - sa) * CAST(1000000 AS HUGEINT)) * zb +
-       |      (tq + (zb - sb) * CAST(1000000 AS HUGEINT)) * za)
-       |     // (2 * CAST(za AS HUGEINT) * zb)) AS BIGINT) AS jsd_e6
+       |  ${Duck.truncDivLong(
+              "(tp + (za - sa) * CAST(1000000 AS HUGEINT)) * zb + (tq + " +
+                "(zb - sb) * CAST(1000000 AS HUGEINT)) * za",
+              "2 * CAST(za AS HUGEINT) * zb")} AS jsd_e6
        |FROM per ORDER BY src_a, src_b""".stripMargin
-  }
 
   // ------- q398: Hellinger / Bhattacharyya distance between sources
 
@@ -2878,10 +2856,6 @@ object TextQueries {
     */
   val q401Krippendorff: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val langs = Seq("en", "fr", "es", "de", "zh")
     val toks = Text.tokens(col("text"))
     def occHits(l: String): org.apache.spark.sql.Column =
@@ -2930,7 +2904,7 @@ object TextQueries {
       .select(col("n_units").cast("long").as("n_units"),
         col("n2").cast("long").as("n2_coincidence"),
         col("d_o2").cast("long").as("d_o_x2"),
-        (lit(1000000L) - expr(sdiv("d_o2 * (n2 - 2) * 1000000",
+        (lit(1000000L) - expr(Spark.truncDivLong("d_o2 * (n2 - 2) * 1000000",
           "n2 * n2 - s2"))).as("alpha_e6"))
   }
 
@@ -2987,8 +2961,8 @@ object TextQueries {
        |  SELECT SUM(n2c) AS n2, SUM(n2c * n2c) AS s2 FROM marg)
        |SELECT n_units, CAST(n2 AS BIGINT) AS n2_coincidence,
        |  CAST(d_o2 AS BIGINT) AS d_o_x2,
-       |  1000000 - CAST(CASE WHEN d_o2 * (n2 - 2) >= 0 THEN 1 ELSE -1 END *
-       |    (ABS(d_o2 * (n2 - 2) * 1000000) // (n2 * n2 - s2)) AS BIGINT)
+       |  1000000 - ${Duck.truncDivLong("d_o2 * (n2 - 2) * 1000000",
+                        "n2 * n2 - s2")}
        |    AS alpha_e6
        |FROM fin CROSS JOIN dis CROSS JOIN units""".stripMargin
   }
@@ -3016,10 +2990,6 @@ object TextQueries {
     */
   val q402Cronbach: Q = (s, dir) => {
     val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val toks = Text.tokens(col("text"))
     val items = Tables.documents(s, dir).select(
       col("n_chars").cast("long").as("i1"),
@@ -3035,14 +3005,14 @@ object TextQueries {
       sum(col("t")).as("st"), sum(col("t").cast(dec) * col("t")).as("qt"))
     m.select(col("n").cast("long").as("n_docs"),
       lit(4L).as("k_items"),
-      (lit(1333333L) - expr(sdiv(
+      (lit(1333333L) - expr(Spark.truncDivLong(
         """((n * q1 - s1 * s1) + (n * q2 - s2 * s2) + (n * q3 - s3 * s3)
           | + (n * q4 - s4 * s4)) * 1333333""".stripMargin.replace("\n", " "),
         "n * qt - st * st"))).as("alpha_e6"))
   }
 
   val q402Sql: String =
-    """WITH items AS (
+    s"""WITH items AS (
       |  SELECT n_chars AS i1,
       |    LEN(STRING_SPLIT(text, ' ')) * 10 AS i2,
       |    LEN(LIST_DISTINCT(STRING_SPLIT(text, ' '))) * 20 AS i3,
@@ -3064,12 +3034,10 @@ object TextQueries {
       |    SUM(CAST(t AS HUGEINT) * t) AS qt
       |  FROM wt)
       |SELECT CAST(n AS BIGINT) AS n_docs, CAST(4 AS BIGINT) AS k_items,
-      |  1333333 - CAST(CASE WHEN (n * q1 - s1 * s1) + (n * q2 - s2 * s2)
-      |      + (n * q3 - s3 * s3) + (n * q4 - s4 * s4) >= 0
-      |      THEN 1 ELSE -1 END *
-      |    (ABS(((n * q1 - s1 * s1) + (n * q2 - s2 * s2) + (n * q3 - s3 * s3)
-      |      + (n * q4 - s4 * s4)) * 1333333) // (n * qt - st * st))
-      |    AS BIGINT) AS alpha_e6
+      |  1333333 - ${Duck.truncDivLong(
+                       "((n * q1 - s1 * s1) + (n * q2 - s2 * s2) + (n * q3 " +
+                         "- s3 * s3) + (n * q4 - s4 * s4)) * 1333333",
+                       "n * qt - st * st")} AS alpha_e6
       |FROM m""".stripMargin
 
   // --------- q424: RAKE keyphrase extraction over the corpus
@@ -3098,8 +3066,6 @@ object TextQueries {
     */
   val q424Rake: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS BIGINT)"
     val stops = Text.stopwords("en")
     val toks = Tables.documents(s, dir)
       .select(col("doc_id"), posexplode(Text.tokens(col("text")))
@@ -3123,7 +3089,8 @@ object TextQueries {
         Seq("doc_id", "pid"))
     val wordStats = phraseWords.groupBy(col("w"))
       .agg(count(lit(1)).as("freq"), sum(col("len")).as("deg"))
-      .withColumn("wscore_e6", expr(fdiv("deg * 1000000", "freq")))
+      .withColumn("wscore_e6", expr(Spark.truncDivLong("deg * 1000000",
+        "freq")))
     val phraseScores = phraseWords.join(wordStats, Seq("w"))
       .groupBy(col("doc_id"), col("pid"))
       .agg(sum(col("wscore_e6")).as("score_e6"))

@@ -154,12 +154,44 @@ class PropertySpec extends SparkSpec {
   }
 
   test("Spark div matches BigInt truncation toward zero for any sign") {
-    // the sign-factored division contract q167/q175/q177 build on
-    forAll(Gen.zip(Gen.choose(-1000000000000L, 1000000000000L),
-      Gen.choose(1L, 999999L)), n = 40) { case (num, den) =>
-      val got = evalOne(expr(s"CAST($num div $den AS BIGINT)"))
-      assert(got === (BigInt(num) / BigInt(den)).toLong, s"$num div $den")
+    // FixedPoint's Spark rendering of both divisions against BigInt `/`
+    // (truncation toward zero): any operand signs, zero remainders, zero
+    // denominators and quotients past either result type, with DECIMAL and
+    // BIGINT operands alike
+    import graft.functions.FixedPoint.Spark
+    val decLimit = BigInt(10).pow(32) // Spark divides in DECIMAL(38,6)
+    def quotient(sql: String): Option[BigInt] = Option(evalOne(expr(sql)))
+      .map {
+        case b: java.math.BigDecimal => BigInt(b.toBigIntegerExact)
+        case l: java.lang.Long => BigInt(l.longValue)
+      }
+    def check(n: BigInt, d: BigInt): Unit = {
+      val q = if (d == 0) None else Some(n / d)
+      val operands = Seq(s"CAST($n AS DECIMAL(38,0))" -> s"CAST($d AS DECIMAL(38,0))") ++
+        (if (n.isValidLong && d.isValidLong)
+          Seq(s"CAST($n AS BIGINT)" -> s"CAST($d AS BIGINT)") else Nil)
+      operands.foreach { case (ns, ds) =>
+        assert(quotient(Spark.truncDiv(ns, ds)) === q.filter(_.abs < decLimit),
+          s"truncDiv($ns, $ds)")
+        assert(quotient(Spark.truncDivLong(ns, ds)) === q.filter(_.isValidLong),
+          s"truncDivLong($ns, $ds)")
+      }
     }
+    forAll(Gen.zip(Gen.choose(-1000000000000L, 1000000000000L),
+      Gen.choose(-999999L, 999999L)), n = 40) { case (num, den) =>
+      check(BigInt(num), BigInt(den))
+      // the inline `div` the remaining integer quotients still use
+      if (den != 0) assert(evalOne(expr(s"CAST($num div $den AS BIGINT)")) ===
+        (BigInt(num) / BigInt(den)).toLong, s"$num div $den")
+    }
+    val big = BigInt(10).pow(37)
+    Seq[(BigInt, BigInt)](
+      (-7, 2), (7, -2), (-7, -2), (-6, 3), (6, -3), (0, -5), // signs, exact
+      (5, 0), (-5, 0), (0, 0),                             // zero divisor
+      (BigInt(Long.MaxValue) * 4, 2), (BigInt(Long.MinValue), 1),
+      (BigInt(Long.MinValue) - 1, 1),                      // BIGINT edge
+      (big, 1), (-big, 100), (big, big - 1))               // DECIMAL edge
+      .foreach { case (n, d) => check(n, d) }
   }
 
   test("rank-sum AUC identity equals pairwise counting on random labels") {

@@ -16,6 +16,11 @@ object TestSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // unpartitioned windows are deliberate in many queries; their per-plan
+    // "No Partition Defined" warning would otherwise bury the test output
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     s
   }
 }
